@@ -118,7 +118,7 @@ def run_probe(
         def step(b: int) -> tuple[float, float]:
             df = _batch_docs(spark, b, rows).select("k", "v")
             t0 = time.monotonic()
-            ru.process_batch(df, b)
+            ru.process(df, b)
             t1 = time.monotonic()
             out = ru.read()
             out.count() if out is not None else 0

@@ -119,7 +119,7 @@ def run(batches: int, compact_every: int, state_root: str) -> dict:
         dd.process(docs, b).count()
         times["ingest_dedup"].append(time.monotonic() - t0)
         t0 = time.monotonic()
-        ru.process_batch(kv, b)
+        ru.process(kv, b)
         ru.read().count()  # the merge-on-read an operator pays per batch
         times["rollup"].append(time.monotonic() - t0)
         t0 = time.monotonic()

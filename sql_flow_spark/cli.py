@@ -37,7 +37,6 @@ tables:                        # optional managed window tables
         aggregates: ["count(*) AS n"]
       sink: {type: console}
 pipeline:
-  batch_size: 1000
   on_error:
     policy: RAISE              # RAISE | IGNORE | DLQ
     # dlq: {type: files, path: /tmp/dlq, format: parquet}

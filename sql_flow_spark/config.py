@@ -300,8 +300,6 @@ class PipelineConf:
     source: SourceConf
     handler: HandlerConf
     sink: SinkConf
-    batch_size: int = 1000
-    flush_interval_seconds: int = 30
     on_error: ErrorPolicyConf = field(default_factory=ErrorPolicyConf)
     dedupe: Optional[DedupeConf] = None
     ingest_dedup: Optional[IngestDedupConf] = None
@@ -432,8 +430,6 @@ def new_from_dict(conf: dict) -> Conf:
                 durable=handler_d.get("durable", True),
             ),
             sink=_sink_from_dict(p["sink"]),
-            batch_size=p.get("batch_size", 1000),
-            flush_interval_seconds=p.get("flush_interval_seconds", 30),
             on_error=ErrorPolicyConf(
                 policy=(on_error_d.get("policy") or Policy.RAISE).upper(),
                 dlq=dlq,

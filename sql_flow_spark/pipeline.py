@@ -1,7 +1,7 @@
-"""Pipeline engine: config -> source -> handler SQL -> sink.
+"""Pipeline engine: config -> source -> handler SQL -> sink, plus legs.
 
 Reference architecture (sqlflow/pipeline.py SQLFlow.consume_loop):
-buffer batch_size messages, run handler SQL, write sink, repeat —
+buffer a batch of messages, run handler SQL, write sink, repeat —
 with RAISE/IGNORE/DLQ error policies and managed windowed tables.
 
 Spark-native mapping:
@@ -15,17 +15,34 @@ Spark-native mapping:
   checkpointing — the hand-rolled commit logic in the reference's
   consume_loop is exactly what Structured Streaming provides.
 
-Error policies run per micro-batch: RAISE fails the query, IGNORE
-skips the batch, DLQ writes the error envelope to the DLQ sink
-(reference: pipeline.py:205-238).
+Both modes run ONE dispatch body (``_dispatch``) per batch; ``invoke``
+is batch 0. It runs, in order:
+
+1. the main leg: handler SQL, then its sink;
+2. every leg in ``Pipeline.legs``: first the SQL fan-out legs
+   (``fanout:`` in the config, each its own handler and sink), then
+   the monitoring legs — drift_monitor, ingest_dedup, curation_gate,
+   heavy_hitters, rollup, ann_index — built from ``pipeline.*`` by
+   ``monitors_from_conf``. A leg is any object with a ``name`` and a
+   ``process(df, batch_id)`` method (``Leg``); all of them read the
+   same source batch.
+
+Error semantics (reference: pipeline.py:205-238), one policy for every
+leg: RAISE re-raises (fails the query), IGNORE counts the error and
+goes on, DLQ counts it and writes the error envelope to the DLQ sink
+with ``phase`` = the failing leg (``handler.invoke``, ``leg.<name>``
+for a fan-out leg, the config key for a monitoring leg) and
+``message`` = ``batch`` or ``micro-batch <id>``. A main-handler
+failure skips the rest of that batch; a leg failure skips only that
+leg. Main-sink errors are not policy-handled: they propagate.
 """
 
 from __future__ import annotations
 
 import logging
 import tempfile
-from dataclasses import dataclass, field
-from typing import Optional
+from dataclasses import dataclass
+from typing import Optional, Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,7 +50,8 @@ from sql_flow_spark import config as cfg
 from sql_flow_spark.handlers import Handler, new_handler_from_conf
 from sql_flow_spark.serde import JSONSerde
 from sql_flow_spark.sinks import DLQSink, NoopSink, Sink, new_sink_from_conf
-from sql_flow_spark.sources import MemorySource, new_source_from_conf
+from sql_flow_spark.sources import new_source_from_conf
+from sql_flow_spark.streaming import foreach_batch_query
 from sql_flow_spark.udf import init_udfs
 
 logger = logging.getLogger(__name__)
@@ -45,6 +63,32 @@ class Stats:
     num_errors: int = 0
 
 
+class Leg(Protocol):
+    """One step after the main handler->sink, run on every batch.
+    ``name`` is the DLQ ``phase`` of its failures."""
+
+    name: str
+
+    def process(self, df: DataFrame, batch_id: int) -> object: ...
+
+
+class SQLLeg:
+    """A fan-out leg: its own handler SQL over the shared batch, its
+    result into its own sink."""
+
+    def __init__(self, spark: SparkSession, name: str, handler: Handler, sink: Sink):
+        self.spark = spark
+        self.name = f"leg.{name}"
+        self.handler = handler
+        self.sink = sink
+
+    def process(self, df: DataFrame, batch_id: int) -> None:
+        result = self.handler.invoke(self.spark, df)
+        if result is not None:
+            self.sink.write_table(result)
+            self.sink.flush()
+
+
 class Pipeline:
     def __init__(
         self,
@@ -54,109 +98,23 @@ class Pipeline:
         sink: Sink,
         error_policy: str = cfg.Policy.RAISE,
         dlq_sink: Optional[Sink] = None,
-        batch_size: int = 1000,
         legs: Optional[list[tuple[str, Handler, Sink]]] = None,
         dedupe: Optional[cfg.DedupeConf] = None,
-        ingest_dedup: Optional[cfg.IngestDedupConf] = None,
-        curation_gate: Optional[cfg.CurationGateConf] = None,
-        drift_monitor: Optional[cfg.DriftMonitorConf] = None,
-        heavy_hitters: Optional[cfg.HeavyHittersConf] = None,
-        rollup: Optional[cfg.RollupConf] = None,
-        ann_index: Optional[cfg.AnnIndexConf] = None,
+        monitors: Optional[list[Leg]] = None,
     ):
+        """``legs`` are (name, handler, sink) fan-out triples;
+        ``monitors`` are leg objects, run after them in list order."""
         self.spark = spark
         self.source = source
         self.handler = handler
         self.sink = sink
         self.error_policy = error_policy
         self.dlq = DLQSink(dlq_sink or NoopSink(), spark)
-        self.batch_size = batch_size
-        # fan-out legs: extra (name, handler, sink) run on the SAME
-        # batch/micro-batch — one source read serves every leg
-        self.legs = legs or []
         self.dedupe = dedupe
         self.stats = Stats()
-        # corpus ingest dedup leg (config pipeline.ingest_dedup):
-        # scored per micro-batch AFTER the handler legs, on the raw
-        # source batch — the handler result and the dedup verdicts are
-        # independent outputs of one source read.
-        self.ingest_dedup = None
-        if ingest_dedup is not None:
-            from sql_flow_spark.streaming.ingest_dedup import IngestDedup
-
-            self.ingest_dedup = IngestDedup(
-                spark,
-                index_dir=ingest_dedup.index_dir,
-                id_col=ingest_dedup.id_column,
-                text_col=ingest_dedup.text_column,
-                out_dir=ingest_dedup.out_dir,
-            )
-        # curation gate leg (config pipeline.curation_gate): the batch
-        # curation_pipeline verdict per micro-batch, dup check backed
-        # by the same fingerprint-index discipline as ingest_dedup.
-        self.curation_gate = None
-        if curation_gate is not None:
-            from sql_flow_spark.streaming.curation_gate import CurationGate
-
-            # None thresholds = the batch gate's defaults (resolved
-            # inside CurationGate — the single source of truth)
-            self.curation_gate = CurationGate(
-                spark,
-                index_dir=curation_gate.index_dir,
-                id_col=curation_gate.id_column,
-                text_col=curation_gate.text_column,
-                out_dir=curation_gate.out_dir,
-                quality_min=curation_gate.quality_min,
-                rep_max=curation_gate.rep_max,
-            )
-        # drift monitor leg (config pipeline.drift_monitor): fences
-        # fitted ONCE here on the reference dataset (a bounded
-        # groups x 9 driver dict), then scored per micro-batch.
-        self.drift_monitor = drift_monitor
-        self._drift_fences = None
-        self._drift_sink = None
-        if drift_monitor is not None:
-            from sql_flow_spark.streaming.drift import reference_fences
-
-            ref = spark.read.format(drift_monitor.reference_format).load(
-                drift_monitor.reference_path
-            )
-            self._drift_fences = reference_fences(
-                ref, drift_monitor.group_column, drift_monitor.value_column
-            )
-            if drift_monitor.sink is not None:
-                self._drift_sink = new_sink_from_conf(drift_monitor.sink, spark)
-        # heavy-hitters leg (config pipeline.heavy_hitters): MG state
-        # folded per micro-batch, certain hitters logged at WARNING.
-        self._heavy_hitters = None
-        if heavy_hitters is not None:
-            from sql_flow_spark.streaming.heavy_hitters import (
-                StreamingHeavyHitters,
-            )
-
-            self._heavy_hitters = StreamingHeavyHitters(
-                spark,
-                state_dir=heavy_hitters.state_dir,
-                key_col=heavy_hitters.key_column,
-                k=heavy_hitters.k,
-            )
-        # rollup leg (config pipeline.rollup): maintained per-key
-        # aggregate table, partials per micro-batch (streaming/rollup.py)
-        self._rollup = None
-        if rollup is not None:
-            from sql_flow_spark.streaming.rollup import StreamingRollup
-
-            self._rollup = StreamingRollup(
-                spark,
-                table_dir=rollup.table_dir,
-                keys=rollup.keys,
-                aggs=rollup.aggs,
-            )
-        # ANN index leg (config pipeline.ann_index): first batch
-        # builds (or an existing index loads), later batches append
-        # assign-only; optional scheduled recall audit.
-        self._ann_conf = ann_index
-        self._ann = None
+        self.legs: list[Leg] = [
+            SQLLeg(spark, name, h, s) for name, h, s in legs or []
+        ] + list(monitors or [])
 
     def _apply_dedupe(self, df: DataFrame, streaming: bool) -> DataFrame:
         """Source-side exactly-once per key (config ``pipeline.dedupe``,
@@ -177,332 +135,43 @@ class Pipeline:
             )
         return df.dropDuplicates(self.dedupe.keys)
 
-    # ------------------------------------------------------ batch mode
-
-    def invoke(self, batch_df: Optional[DataFrame] = None) -> Optional[DataFrame]:
-        """Run one batch through handler+sink (reference: lifecycle.py
-        invoke), then through every fan-out leg. Returns the main
-        handler result."""
-        df = batch_df if batch_df is not None else self.source.read(self.spark)
-        df = self._apply_dedupe(df, streaming=False)
+    def _dispatch(self, df: DataFrame, batch_id: int, ctx: str) -> Optional[DataFrame]:
+        """The one per-batch body shared by ``invoke`` and the
+        foreachBatch path: main leg, then every leg, each under the
+        error policy (module docstring). Returns the main handler
+        result, None when it failed."""
         try:
             result = self.handler.invoke(self.spark, df)
         except Exception as e:
-            self.stats.num_errors += 1
-            if self.error_policy == cfg.Policy.RAISE:
-                raise
-            if self.error_policy == cfg.Policy.DLQ:
-                self.dlq.write_error(str(e), "handler invocation failed", "handler.invoke")
+            self._on_error(e, ctx, "handler.invoke")
             return None
         if result is not None:
             self.sink.write_table(result)
             self.sink.flush()
             self.stats.num_batches += 1
-        self._run_legs(df, "batch")
-        # one-shot invoke scores as batch 0 (same idempotent slot
-        # every run — `dev invoke` is a test harness, not ingest);
-        # every monitoring leg runs under the same error policy as the
-        # micro-batch path (ADVICE r8: invoke used to abort on a leg
-        # failure even under IGNORE/DLQ)
-        if self.drift_monitor is not None:
-            self._guarded_leg(
-                "batch", "drift_monitor", lambda: self._score_drift(df, 0)
-            )
-        if self.ingest_dedup is not None:
-            self._guarded_leg(
-                "batch", "ingest_dedup",
-                lambda: self.ingest_dedup.process(df, 0),
-            )
-        if self.curation_gate is not None:
-            self._guarded_leg(
-                "batch", "curation_gate",
-                lambda: self.curation_gate.process(df, 0),
-            )
-        if self._heavy_hitters is not None:
-            self._guarded_leg(
-                "batch", "heavy_hitters",
-                lambda: self._report_heavy_hitters(df, 0),
-            )
-        if self._rollup is not None:
-            self._guarded_leg(
-                "batch", "rollup", lambda: self._rollup.process_batch(df, 0)
-            )
-        if self._ann_conf is not None:
-            self._guarded_leg(
-                "batch", "ann_index", lambda: self._ann_index_step(df, 0)
-            )
+        for leg in self.legs:
+            try:
+                leg.process(df, batch_id)
+            except Exception as e:
+                self._on_error(e, ctx, leg.name)
         return result
 
-    def _ann_generation(self) -> tuple[str, int]:
-        """(active index dir, generation). Without rebuild_on_drift
-        the configured index_dir IS the index; with it, index_dir is a
-        generation root — ``g<N>`` subdirs plus a CURRENT pointer file
-        (atomic rename on rotation, absent = generation 0)."""
-        import os
+    def _on_error(self, e: Exception, ctx: str, phase: str) -> None:
+        self.stats.num_errors += 1
+        logger.error("%s failed on %s: %s", phase, ctx, e)
+        if self.error_policy == cfg.Policy.RAISE:
+            raise e
+        if self.error_policy == cfg.Policy.DLQ:
+            self.dlq.write_error(str(e), ctx, phase)
 
-        c = self._ann_conf
-        if not c.rebuild_on_drift:
-            return c.index_dir, 0
-        cur = os.path.join(c.index_dir, "CURRENT")
-        gen = 0
-        if os.path.exists(cur):
-            with open(cur) as f:
-                gen = int(f.read().strip())
-        return os.path.join(c.index_dir, f"g{gen}"), gen
-
-    def _ann_rotate(self, batch_id: int, psi: float) -> None:
-        """Blue/green retrain into the next generation: rebuild the
-        quantizers on everything indexed so far (IncrementalIVF.
-        rebuild), then atomically bump CURRENT. The old generation
-        stays on disk for in-flight readers; appends continue into the
-        new one. Restart safety: a crash between rebuild and the
-        pointer rename just leaves an unreferenced g<N+1> that the
-        next rotation overwrites idempotently."""
-        import os
-
-        import shutil
-
-        c = self._ann_conf
-        _, gen = self._ann_generation()
-        new_dir = os.path.join(c.index_dir, f"g{gen + 1}")
-        # CURRENT still references g<gen>, so g<gen+1> is unreferenced
-        # by construction — clear any half-written remains of a crashed
-        # prior rotation before seeding (stale b= dirs behind a fresh
-        # seed would double-count at read time)
-        shutil.rmtree(new_dir, ignore_errors=True)
-        self._ann = self._ann.rebuild(new_dir)
-        cur = os.path.join(c.index_dir, "CURRENT")
-        tmp = cur + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(gen + 1))
-        os.replace(tmp, cur)  # COMMIT
-        logger.warning(
-            "ann_index: batch %s occupancy PSI %.3f tripped the act "
-            "level — rebuilt blue/green into generation g%s (g%s left "
-            "on disk for readers)",
-            batch_id, psi, gen + 1, gen,
-        )
-
-    def _ann_index_step(self, df: DataFrame, batch_id: int) -> None:
-        """One micro-batch through the incremental IVF index
-        (streaming/ann_index.py): batch 0 with no index on disk TRAINS
-        and seeds it (the build corpus is that batch); an existing
-        index is loaded once and appended to assign-only. The PSI
-        retrain flag logs at WARNING — or, with rebuild_on_drift,
-        triggers the blue/green generation rotation; the optional
-        scheduled recall audit runs every ``audit_every`` batches."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        from sql_flow_spark.streaming.ann_index import IncrementalIVF
-
-        c = self._ann_conf
-        active_dir, _ = self._ann_generation()
-        vecs = df.select(
-            F.col(c.id_column), F.col(c.embedding_column)
-        )
-        if self._ann is None:
-            if os.path.exists(os.path.join(active_dir, "_meta.json")):
-                self._ann = IncrementalIVF.load(self.spark, active_dir)
-                # the saved meta wins for data-layout fields, but a
-                # column-name mismatch would select one set of names
-                # and read another — fail fast with the real cause
-                # instead of an opaque append-time resolution error;
-                # nprobe is a search-time knob, so the LIVE config
-                # applies (ADVICE r12)
-                if (self._ann.id_col, self._ann.emb_col) != (
-                    c.id_column, c.embedding_column
-                ):
-                    raise ValueError(
-                        f"ann_index at {active_dir} was built with "
-                        f"columns ({self._ann.id_col}, "
-                        f"{self._ann.emb_col}) but pipeline.ann_index "
-                        f"configures ({c.id_column}, "
-                        f"{c.embedding_column}); point index_dir at a "
-                        "fresh directory or fix the column config"
-                    )
-                if (c.pq_k > 0) != self._ann.pq:
-                    logger.warning(
-                        "ann_index: config pq_k=%s but the loaded index "
-                        "was built %s PQ codes — serving follows the "
-                        "index (PQ is fixed at build time; retrain to "
-                        "change it)",
-                        c.pq_k, "with" if self._ann.pq else "without",
-                    )
-                if self._ann.k != c.k:
-                    logger.warning(
-                        "ann_index: config k=%s ignored — the loaded "
-                        "index was trained with k=%s (k is fixed at "
-                        "build time; retrain to change it)",
-                        c.k, self._ann.k,
-                    )
-                if self._ann.nprobe != c.nprobe:
-                    logger.info(
-                        "ann_index: applying config nprobe=%s over the "
-                        "saved %s", c.nprobe, self._ann.nprobe,
-                    )
-                    self._ann.nprobe = c.nprobe
-            else:
-                self._ann = IncrementalIVF.build(
-                    self.spark,
-                    active_dir,
-                    vecs,
-                    id_col=c.id_column,
-                    emb_col=c.embedding_column,
-                    k=c.k,
-                    nprobe=c.nprobe,
-                    pq_k=c.pq_k,
-                    pq_sub_dim=c.pq_sub_dim,
-                )
-                logger.info(
-                    "ann_index: trained + seeded %s from batch %s",
-                    active_dir, batch_id,
-                )
-                self._maybe_ann_audit(batch_id)
-                return
-        verdict = self._ann.append_batch(vecs, batch_id)
-        if verdict.get("needs_retrain"):
-            if c.rebuild_on_drift:
-                self._ann_rotate(batch_id, verdict.get("psi", float("nan")))
-            else:
-                logger.warning(
-                    "ann_index: batch %s occupancy PSI %.3f exceeds the "
-                    "act level — schedule a retrain (frozen centroids no "
-                    "longer fit the ingest distribution)",
-                    batch_id, verdict.get("psi", float("nan")),
-                )
-        self._maybe_ann_audit(batch_id)
-
-    def _maybe_ann_audit(self, batch_id: int) -> None:
-        c = self._ann_conf
-        if not c.audit_every or not c.audit_queries_path:
-            return
-        if batch_id % c.audit_every != 0:
-            return
-        import os
-
-        from pyspark.sql import functions as F
-
-        q = (
-            self.spark.read.format(c.audit_queries_format)
-            .load(c.audit_queries_path)
-            .select(F.col(c.id_column), F.col(c.embedding_column))
-        )
-        # with PQ enabled the audit grades the path actually serving:
-        # ADC + shortlist rerank, not raw-vector search
-        row = self._ann.recall_audit(
-            q, topk=c.audit_topk, pq=self._ann.pq
-        ).collect()[0]
-        if row.n_queries == 0:
-            # bad path/glob or everything filtered: macro/min_recall
-            # are NULL — a monitoring misconfiguration must not crash
-            # the leg (ADVICE r12)
-            logger.warning(
-                "ann_index recall audit at batch %s: query set %s "
-                "produced 0 queries — audit skipped",
-                batch_id, c.audit_queries_path,
-            )
-            return
-        log = (
-            logger.warning
-            if row.macro_recall < c.audit_min_recall
-            else logger.info
-        )
-        log(
-            "ann_index recall audit at batch %s: macro %.3f, min %.3f, "
-            "%s/%s queries perfect (floor %.3f)",
-            batch_id, row.macro_recall, row.min_recall,
-            row.perfect_queries, row.n_queries, c.audit_min_recall,
-        )
-        if c.audit_dir:
-            self.spark.createDataFrame(
-                [(
-                    batch_id, row.n_queries, row.macro_recall,
-                    row.min_recall, row.perfect_queries,
-                )],
-                "batch_id long, n_queries long, macro_recall double, "
-                "min_recall double, perfect_queries long",
-            ).write.mode("overwrite").parquet(
-                os.path.join(c.audit_dir, f"b={batch_id}")
-            )
-
-    def _report_heavy_hitters(self, df: DataFrame, batch_id: int) -> None:
-        result = self._heavy_hitters.fold_batch(df, batch_id)
-        for key, rep in sorted(result["hitters"].items()):
-            log = logger.warning if rep["certain"] else logger.info
-            log(
-                "heavy_hitters: key %r count in [%s, %s] (share >= %.3f%s) "
-                "after batch %s of n=%s",
-                key, rep["count_lo"], rep["count_hi"],
-                rep["share_lo"], ", certain" if rep["certain"] else "",
-                batch_id, result["n"],
-            )
-
-    def _score_drift(self, df: DataFrame, batch_id: int) -> None:
-        """Score one (micro-)batch's value distribution against the
-        frozen reference fences; scores land in the configured sink,
-        drifted groups log at WARNING (the alert path that works with
-        no sink at all)."""
-        from pyspark.sql import functions as F
-
-        from sql_flow_spark.streaming.drift import psi_of_batch
-
-        dm = self.drift_monitor
-        scored = psi_of_batch(
-            df, self._drift_fences, dm.group_column, dm.value_column
-        ).select(
-            "group",
-            "psi",
-            "n",
-            (F.col("psi") > dm.threshold).alias("drifted"),
-            F.lit(batch_id).cast("long").alias("batch_id"),
-        )
-        # ONE batch scan: the score table is groups-sized, so collect
-        # it once and feed both the sink and the alert log from rows.
-        rows = scored.collect()
-        for r in rows:
-            if r["drifted"]:
-                logger.warning(
-                    "drift_monitor: group %r PSI %.3f > %s in batch %s",
-                    r["group"], r["psi"], dm.threshold, batch_id,
-                )
-        if self._drift_sink is not None and rows:
-            self._drift_sink.write_table(
-                self.spark.createDataFrame(rows, scored.schema)
-            )
-            self._drift_sink.flush()
-
-    def _guarded_leg(self, ctx: str, leg: str, fn) -> None:
-        """Run one monitoring leg (drift / ingest_dedup / heavy_hitters
-        / rollup) under the pipeline error policy — shared by the
-        one-shot invoke() and the foreachBatch path so both have the
-        SAME error semantics (IGNORE/DLQ continue; RAISE propagates)."""
-        try:
-            fn()
-        except Exception as e:
-            self.stats.num_errors += 1
-            if self.error_policy == cfg.Policy.RAISE:
-                raise
-            if self.error_policy == cfg.Policy.DLQ:
-                self.dlq.write_error(str(e), ctx, leg)
-
-    def _run_legs(self, df: DataFrame, ctx: str):
-        """Each leg is error-isolated under the pipeline policy: one
-        leg failing routes to DLQ/raise without silently skipping the
-        remaining legs (IGNORE/DLQ continue; RAISE propagates)."""
-        for name, handler, sink in self.legs:
-            try:
-                leg_result = handler.invoke(self.spark, df)
-                if leg_result is not None:
-                    sink.write_table(leg_result)
-                    sink.flush()
-            except Exception as e:
-                self.stats.num_errors += 1
-                if self.error_policy == cfg.Policy.RAISE:
-                    raise
-                if self.error_policy == cfg.Policy.DLQ:
-                    self.dlq.write_error(str(e), f"{ctx} leg {name}", f"leg.{name}")
+    def invoke(self, batch_df: Optional[DataFrame] = None) -> Optional[DataFrame]:
+        """Run one batch through the dispatch body (reference:
+        lifecycle.py invoke). It scores as batch 0: the same idempotent
+        slot every run — `dev invoke` is a test harness, not ingest.
+        Returns the main handler result."""
+        df = batch_df if batch_df is not None else self.source.read(self.spark)
+        df = self._apply_dedupe(df, streaming=False)
+        return self._dispatch(df, 0, "batch")
 
     # -------------------------------------------------- streaming mode
 
@@ -519,54 +188,7 @@ class Pipeline:
             batch_df = batch_df.persist()
             batch_df.count()
         try:
-            try:
-                result = self.handler.invoke(self.spark, batch_df)
-            except Exception as e:
-                self.stats.num_errors += 1
-                logger.error("handler error on batch %s: %s", batch_id, e)
-                if self.error_policy == cfg.Policy.RAISE:
-                    raise
-                if self.error_policy == cfg.Policy.DLQ:
-                    self.dlq.write_error(
-                        str(e), f"batch {batch_id}", "handler.invoke"
-                    )
-                return
-            if result is not None:
-                self.sink.write_table(result)
-                self.sink.flush()
-                self.stats.num_batches += 1
-            self._run_legs(batch_df, f"micro-batch {batch_id}")
-            ctx = f"micro-batch {batch_id}"
-            if self.drift_monitor is not None:
-                self._guarded_leg(
-                    ctx, "drift_monitor",
-                    lambda: self._score_drift(batch_df, batch_id),
-                )
-            if self.ingest_dedup is not None:
-                self._guarded_leg(
-                    ctx, "ingest_dedup",
-                    lambda: self.ingest_dedup.process(batch_df, batch_id),
-                )
-            if self.curation_gate is not None:
-                self._guarded_leg(
-                    ctx, "curation_gate",
-                    lambda: self.curation_gate.process(batch_df, batch_id),
-                )
-            if self._heavy_hitters is not None:
-                self._guarded_leg(
-                    ctx, "heavy_hitters",
-                    lambda: self._report_heavy_hitters(batch_df, batch_id),
-                )
-            if self._rollup is not None:
-                self._guarded_leg(
-                    ctx, "rollup",
-                    lambda: self._rollup.process_batch(batch_df, batch_id),
-                )
-            if self._ann_conf is not None:
-                self._guarded_leg(
-                    ctx, "ann_index",
-                    lambda: self._ann_index_step(batch_df, batch_id),
-                )
+            self._dispatch(batch_df, batch_id, f"micro-batch {batch_id}")
         finally:
             if stateful:
                 batch_df.unpersist()
@@ -595,20 +217,12 @@ class Pipeline:
         stream = self._apply_dedupe(
             self.source.read_stream(self.spark), streaming=True
         )
-        writer = stream.writeStream.foreachBatch(self._foreach_batch)
-        writer = writer.option("checkpointLocation", f"{base}/main")
-        writer = self._trigger(writer, available_now, processing_time)
-        main = writer.start()
+        main = foreach_batch_query(
+            stream, self._foreach_batch, f"{base}/main",
+            available_now, processing_time,
+        )
         main.managed_queries = queries  # type: ignore[attr-defined]
         return main
-
-    @staticmethod
-    def _trigger(writer, available_now: bool, processing_time: str | None):
-        if available_now:
-            return writer.trigger(availableNow=True)
-        if processing_time:
-            return writer.trigger(processingTime=processing_time)
-        return writer
 
     def _start_managed(self, tconf, base_ckpt: str, available_now: bool,
                        processing_time: str | None):
@@ -656,13 +270,12 @@ class Pipeline:
             sink.write_table(batch_df)
             sink.flush()
 
-        writer = (
-            result.writeStream.outputMode("append")
-            .foreachBatch(emit)
-            .queryName(f"managed-{tconf.name}")
-            .option("checkpointLocation", f"{base_ckpt}/managed-{tconf.name}")
+        # foreachBatch writes in append mode, the only mode a
+        # watermarked window emits closed windows in
+        return foreach_batch_query(
+            result, emit, f"{base_ckpt}/managed-{tconf.name}",
+            available_now, processing_time, name=f"managed-{tconf.name}",
         )
-        return self._trigger(writer, available_now, processing_time).start()
 
 
 def init_commands(spark: SparkSession, commands: list[cfg.SQLCommand]):
@@ -671,6 +284,63 @@ def init_commands(spark: SparkSession, commands: list[cfg.SQLCommand]):
     for command in commands:
         logger.info("executing command %s", command.name)
         spark.sql(command.sql)
+
+
+def monitors_from_conf(p: cfg.PipelineConf, spark: SparkSession) -> list[Leg]:
+    """The one place that maps ``pipeline.*`` monitoring blocks to leg
+    objects, in dispatch order. Each leg's module is imported only when
+    its block is set."""
+    monitors: list[Leg] = []
+    if p.drift_monitor is not None:
+        from sql_flow_spark.streaming.drift import DriftMonitor, reference_fences
+
+        dm = p.drift_monitor
+        # fences fitted ONCE here on the reference dataset (a bounded
+        # groups x 9 driver dict), then scored per batch
+        ref = spark.read.format(dm.reference_format).load(dm.reference_path)
+        monitors.append(DriftMonitor(
+            reference_fences(ref, dm.group_column, dm.value_column),
+            dm.group_column, dm.value_column, dm.threshold,
+            new_sink_from_conf(dm.sink, spark) if dm.sink is not None else None,
+        ))
+    if p.ingest_dedup is not None:
+        from sql_flow_spark.streaming.ingest_dedup import IngestDedup
+
+        d = p.ingest_dedup
+        monitors.append(IngestDedup(
+            spark, index_dir=d.index_dir, id_col=d.id_column,
+            text_col=d.text_column, out_dir=d.out_dir,
+        ))
+    if p.curation_gate is not None:
+        from sql_flow_spark.streaming.curation_gate import CurationGate
+
+        g = p.curation_gate
+        # None thresholds = the batch gate's defaults (resolved inside
+        # CurationGate — the single source of truth)
+        monitors.append(CurationGate(
+            spark, index_dir=g.index_dir, id_col=g.id_column,
+            text_col=g.text_column, out_dir=g.out_dir,
+            quality_min=g.quality_min, rep_max=g.rep_max,
+        ))
+    if p.heavy_hitters is not None:
+        from sql_flow_spark.streaming.heavy_hitters import StreamingHeavyHitters
+
+        h = p.heavy_hitters
+        monitors.append(StreamingHeavyHitters(
+            spark, state_dir=h.state_dir, key_col=h.key_column, k=h.k,
+        ))
+    if p.rollup is not None:
+        from sql_flow_spark.streaming.rollup import StreamingRollup
+
+        r = p.rollup
+        monitors.append(StreamingRollup(
+            spark, table_dir=r.table_dir, keys=r.keys, aggs=r.aggs,
+        ))
+    if p.ann_index is not None:
+        from sql_flow_spark.streaming.ann_index import AnnIndexLeg
+
+        monitors.append(AnnIndexLeg(spark, p.ann_index))
+    return monitors
 
 
 def new_pipeline_from_conf(
@@ -698,15 +368,9 @@ def new_pipeline_from_conf(
         sink=sink_override or new_sink_from_conf(p.sink, spark),
         error_policy=p.on_error.policy,
         dlq_sink=dlq_sink,
-        batch_size=p.batch_size,
         legs=legs,
         dedupe=p.dedupe,
-        ingest_dedup=p.ingest_dedup,
-        curation_gate=p.curation_gate,
-        drift_monitor=p.drift_monitor,
-        heavy_hitters=p.heavy_hitters,
-        rollup=p.rollup,
-        ann_index=p.ann_index,
+        monitors=monitors_from_conf(p, spark),
     )
 
 

@@ -16,6 +16,33 @@ from sql_flow_spark.streaming.state import (
     tws_available,
 )
 
+
+def foreach_batch_query(
+    stream,
+    fn,
+    checkpoint_dir: str | None = None,
+    available_now: bool = True,
+    processing_time: str | None = None,
+    name: str | None = None,
+):
+    """Start ``fn(batch_df, batch_id)`` as a foreachBatch query over
+    ``stream``: the one writer recipe shared by the pipeline's main and
+    managed-table queries and every standalone ``attach``.
+    ``available_now`` drains what is there and stops; otherwise
+    ``processing_time`` sets the trigger interval (None = Spark's
+    default trigger)."""
+    writer = stream.writeStream.foreachBatch(fn)
+    if name is not None:
+        writer = writer.queryName(name)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
 __all__ = [
     "TumblingWindow",
     "tumbling_aggregate",
@@ -24,4 +51,5 @@ __all__ = [
     "dedupe_stream",
     "running_aggregate",
     "running_aggregate_ttl",
+    "foreach_batch_query",
 ]

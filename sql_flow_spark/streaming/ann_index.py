@@ -67,6 +67,7 @@ from sql_flow_spark.functions.similarity import (
     safe_cos,
     sq_norm_dec,
 )
+from sql_flow_spark.streaming import foreach_batch_query
 from sql_flow_spark.streaming.compaction import (
     MarkerCommit,
     assert_no_live_writer,
@@ -570,16 +571,10 @@ class IncrementalIVF:
             if on_batch is not None:
                 on_batch(batch_id, verdict)
 
-        writer = (
-            stream.writeStream.foreachBatch(_step)
-            .queryName("ann-index-append")
-            .option("checkpointLocation", checkpoint_dir)
+        return foreach_batch_query(
+            stream, _step, checkpoint_dir, available_now, processing_time,
+            "ann-index-append",
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
 
     # ---------------------------------------------------- compaction
 
@@ -927,3 +922,196 @@ class IncrementalIVF:
             .where(F.col("rank") <= topk)
             .select("qid", "nid", "cosine", "rank")
         )
+
+
+class AnnIndexLeg:
+    """The ``pipeline.ann_index`` leg: maintains an ``IncrementalIVF``
+    from the stream. ``conf`` is an ``AnnIndexConf``.
+
+    Batch 0 with no index on disk TRAINS and seeds it (the build corpus
+    is that batch); an existing index is loaded once and appended to
+    assign-only. The PSI retrain flag logs at WARNING — or, with
+    ``rebuild_on_drift``, triggers the blue/green generation rotation;
+    the optional scheduled recall audit runs every ``audit_every``
+    batches."""
+
+    name = "ann_index"
+
+    def __init__(self, spark: SparkSession, conf):
+        self.spark = spark
+        self.conf = conf
+        self.index: Optional[IncrementalIVF] = None
+
+    def _generation(self) -> tuple[str, int]:
+        """(active index dir, generation). Without rebuild_on_drift
+        the configured index_dir IS the index; with it, index_dir is a
+        generation root — ``g<N>`` subdirs plus a CURRENT pointer file
+        (atomic rename on rotation, absent = generation 0)."""
+        c = self.conf
+        if not c.rebuild_on_drift:
+            return c.index_dir, 0
+        cur = os.path.join(c.index_dir, "CURRENT")
+        gen = 0
+        if os.path.exists(cur):
+            with open(cur) as f:
+                gen = int(f.read().strip())
+        return os.path.join(c.index_dir, f"g{gen}"), gen
+
+    def _rotate(self, batch_id: int, psi: float) -> None:
+        """Blue/green retrain into the next generation: rebuild the
+        quantizers on everything indexed so far (IncrementalIVF.
+        rebuild), then atomically bump CURRENT. The old generation
+        stays on disk for in-flight readers; appends continue into the
+        new one. Restart safety: a crash between rebuild and the
+        pointer rename just leaves an unreferenced g<N+1> that the
+        next rotation overwrites idempotently."""
+        import shutil
+
+        c = self.conf
+        _, gen = self._generation()
+        new_dir = os.path.join(c.index_dir, f"g{gen + 1}")
+        # CURRENT still references g<gen>, so g<gen+1> is unreferenced
+        # by construction — clear any half-written remains of a crashed
+        # prior rotation before seeding (stale b= dirs behind a fresh
+        # seed would double-count at read time)
+        shutil.rmtree(new_dir, ignore_errors=True)
+        self.index = self.index.rebuild(new_dir)
+        cur = os.path.join(c.index_dir, "CURRENT")
+        tmp = cur + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(str(gen + 1))
+        os.replace(tmp, cur)  # COMMIT
+        logger.warning(
+            "ann_index: batch %s occupancy PSI %.3f tripped the act "
+            "level — rebuilt blue/green into generation g%s (g%s left "
+            "on disk for readers)",
+            batch_id, psi, gen + 1, gen,
+        )
+
+    def _load(self, active_dir: str) -> IncrementalIVF:
+        """Load the index on disk, checked against the live config."""
+        c = self.conf
+        idx = IncrementalIVF.load(self.spark, active_dir)
+        # the saved meta wins for data-layout fields, but a
+        # column-name mismatch would select one set of names
+        # and read another — fail fast with the real cause
+        # instead of an opaque append-time resolution error;
+        # nprobe is a search-time knob, so the LIVE config
+        # applies (ADVICE r12)
+        if (idx.id_col, idx.emb_col) != (c.id_column, c.embedding_column):
+            raise ValueError(
+                f"ann_index at {active_dir} was built with "
+                f"columns ({idx.id_col}, {idx.emb_col}) but "
+                f"pipeline.ann_index configures ({c.id_column}, "
+                f"{c.embedding_column}); point index_dir at a "
+                "fresh directory or fix the column config"
+            )
+        if (c.pq_k > 0) != idx.pq:
+            logger.warning(
+                "ann_index: config pq_k=%s but the loaded index "
+                "was built %s PQ codes — serving follows the "
+                "index (PQ is fixed at build time; retrain to "
+                "change it)",
+                c.pq_k, "with" if idx.pq else "without",
+            )
+        if idx.k != c.k:
+            logger.warning(
+                "ann_index: config k=%s ignored — the loaded "
+                "index was trained with k=%s (k is fixed at "
+                "build time; retrain to change it)",
+                c.k, idx.k,
+            )
+        if idx.nprobe != c.nprobe:
+            logger.info(
+                "ann_index: applying config nprobe=%s over the "
+                "saved %s", c.nprobe, idx.nprobe,
+            )
+            idx.nprobe = c.nprobe
+        return idx
+
+    def process(self, df: DataFrame, batch_id: int) -> None:
+        c = self.conf
+        active_dir, _ = self._generation()
+        vecs = df.select(F.col(c.id_column), F.col(c.embedding_column))
+        if self.index is None:
+            if os.path.exists(os.path.join(active_dir, _META)):
+                self.index = self._load(active_dir)
+            else:
+                self.index = IncrementalIVF.build(
+                    self.spark,
+                    active_dir,
+                    vecs,
+                    id_col=c.id_column,
+                    emb_col=c.embedding_column,
+                    k=c.k,
+                    nprobe=c.nprobe,
+                    pq_k=c.pq_k,
+                    pq_sub_dim=c.pq_sub_dim,
+                )
+                logger.info(
+                    "ann_index: trained + seeded %s from batch %s",
+                    active_dir, batch_id,
+                )
+                self._maybe_audit(batch_id)
+                return
+        verdict = self.index.append_batch(vecs, batch_id)
+        if verdict.get("needs_retrain"):
+            if c.rebuild_on_drift:
+                self._rotate(batch_id, verdict.get("psi", float("nan")))
+            else:
+                logger.warning(
+                    "ann_index: batch %s occupancy PSI %.3f exceeds the "
+                    "act level — schedule a retrain (frozen centroids no "
+                    "longer fit the ingest distribution)",
+                    batch_id, verdict.get("psi", float("nan")),
+                )
+        self._maybe_audit(batch_id)
+
+    def _maybe_audit(self, batch_id: int) -> None:
+        c = self.conf
+        if not c.audit_every or not c.audit_queries_path:
+            return
+        if batch_id % c.audit_every != 0:
+            return
+        q = (
+            self.spark.read.format(c.audit_queries_format)
+            .load(c.audit_queries_path)
+            .select(F.col(c.id_column), F.col(c.embedding_column))
+        )
+        # with PQ enabled the audit grades the path actually serving:
+        # ADC + shortlist rerank, not raw-vector search
+        row = self.index.recall_audit(
+            q, topk=c.audit_topk, pq=self.index.pq
+        ).collect()[0]
+        if row.n_queries == 0:
+            # bad path/glob or everything filtered: macro/min_recall
+            # are NULL — a monitoring misconfiguration must not crash
+            # the leg (ADVICE r12)
+            logger.warning(
+                "ann_index recall audit at batch %s: query set %s "
+                "produced 0 queries — audit skipped",
+                batch_id, c.audit_queries_path,
+            )
+            return
+        log = (
+            logger.warning
+            if row.macro_recall < c.audit_min_recall
+            else logger.info
+        )
+        log(
+            "ann_index recall audit at batch %s: macro %.3f, min %.3f, "
+            "%s/%s queries perfect (floor %.3f)",
+            batch_id, row.macro_recall, row.min_recall,
+            row.perfect_queries, row.n_queries, c.audit_min_recall,
+        )
+        if c.audit_dir:
+            self.spark.createDataFrame(
+                [(
+                    batch_id, row.n_queries, row.macro_recall,
+                    row.min_recall, row.perfect_queries,
+                )],
+                "batch_id long, n_queries long, macro_recall double, "
+                "min_recall double, perfect_queries long",
+            ).write.mode("overwrite").parquet(
+                os.path.join(c.audit_dir, f"b={batch_id}")
+            )

@@ -75,6 +75,8 @@ class CurationGate:
     means the batch gate's QUALITY_MIN / REP_MAX, so the two worlds
     agree out of the box and a retune moves every caller."""
 
+    name = "curation_gate"
+
     def __init__(
         self,
         spark: SparkSession,

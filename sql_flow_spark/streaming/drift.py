@@ -25,11 +25,16 @@ rows (only the types-sized score table).
 
 from __future__ import annotations
 
+import logging
 from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from sql_flow_spark.streaming import foreach_batch_query
+
+logger = logging.getLogger(__name__)
 
 # Laplace smoothing matching operators/drift.py psi_drift: +0.5 per
 # bin, +5 per distribution (10 bins).
@@ -116,6 +121,61 @@ def psi_of_batch(
     )
 
 
+class DriftMonitor:
+    """Scores each (micro-)batch against frozen reference fences — the
+    ``pipeline.drift_monitor`` leg and the body of ``monitor_stream``.
+
+    ``process`` returns the types-sized score rows (group, psi, n,
+    drifted, batch_id) ordered by group, each ``drifted`` at
+    ``threshold`` (0.25 = the standard "act" level; psi_drift's
+    docstring has the scale). Drifted groups log at WARNING (the alert
+    path that works with no sink at all); rows also land in ``sink``
+    when one is given."""
+
+    name = "drift_monitor"
+
+    def __init__(
+        self,
+        fences: dict[str, list[float]],
+        group_col: str,
+        value_col: str,
+        threshold: float = 0.25,
+        sink=None,
+    ):
+        self.fences = fences
+        self.group_col = group_col
+        self.value_col = value_col
+        self.threshold = threshold
+        self.sink = sink
+
+    def process(self, df: DataFrame, batch_id: int) -> list:
+        scored = psi_of_batch(
+            df, self.fences, self.group_col, self.value_col
+        ).select(
+            "group",
+            "psi",
+            "n",
+            (F.col("psi") > self.threshold).alias("drifted"),
+            F.lit(batch_id).cast("long").alias("batch_id"),
+        )
+        # ONE batch scan: the score table is groups-sized, so collect
+        # it once and feed the caller, the sink and the alert log from
+        # rows.
+        rows = sorted(scored.collect(), key=lambda r: r["group"])
+        for r in rows:
+            if r["drifted"]:
+                logger.warning(
+                    "drift_monitor: group %r PSI %.3f > %s in batch %s",
+                    r["group"], r["psi"], self.threshold, batch_id,
+                )
+        if self.sink is not None and rows:
+            self.sink.write_table(
+                df.sparkSession.createDataFrame(rows, scored.schema)
+            )
+            self.sink.flush()
+        return rows
+
+
 def monitor_stream(
     stream: DataFrame,
     fences: dict[str, list[float]],
@@ -127,24 +187,15 @@ def monitor_stream(
 ) -> StreamingQuery:
     """Attach a PSI drift monitor to a streaming DataFrame.
 
-    Every micro-batch is scored against the frozen fences;
-    ``on_batch(batch_id, rows)`` receives the types-sized score rows,
-    each with a ``drifted`` flag at ``alert_threshold`` (0.25 = the
-    standard "act" level; psi_drift's docstring has the scale). The
-    returned query runs until stopped — callers own lifecycle."""
+    Every micro-batch is scored by a ``DriftMonitor`` at
+    ``alert_threshold``; ``on_batch(batch_id, rows)`` receives its score
+    rows. The returned query runs until stopped — callers own
+    lifecycle."""
+    monitor = DriftMonitor(fences, group_col, value_col, alert_threshold)
 
     def _score(batch: DataFrame, batch_id: int) -> None:
-        scored = psi_of_batch(batch, fences, group_col, value_col)
-        rows = (
-            scored.withColumn(
-                "drifted", (F.col("psi") > alert_threshold).cast("boolean")
-            )
-            .orderBy("group")
-            .collect()
-        )
-        on_batch(batch_id, rows)
+        on_batch(batch_id, monitor.process(batch, batch_id))
 
-    writer = stream.writeStream.foreachBatch(_score).outputMode("append")
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return foreach_batch_query(
+        stream, _score, checkpoint_dir, available_now=False
+    )

@@ -45,6 +45,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sql_flow_spark.streaming import foreach_batch_query
+
 logger = logging.getLogger(__name__)
 
 DEFAULT_K = 63
@@ -111,7 +113,12 @@ class StreamingHeavyHitters:
     Layout: ``state_dir/b=<batch>/`` holds the FULL compacted summary
     as of that batch (plus ``n`` total rows seen) — overwrite-idempotent
     under replay, and the newest ``b=`` partition is the whole state, so
-    recovery reads one directory."""
+    recovery reads one directory.
+
+    As a pipeline leg (``pipeline.heavy_hitters``), ``process`` folds
+    each batch and logs the report."""
+
+    name = "heavy_hitters"
 
     def __init__(
         self,
@@ -267,6 +274,22 @@ class StreamingHeavyHitters:
         }
         return {"n": n, "batch_n": batch_n, "hitters": report}
 
+    def process(self, batch_df: DataFrame, batch_id: int) -> dict:
+        """Fold one batch and log every reported key: certain hitters
+        at WARNING, possible ones at INFO. Returns the fold_batch
+        report."""
+        result = self.fold_batch(batch_df, batch_id)
+        for key, rep in sorted(result["hitters"].items()):
+            log = logger.warning if rep["certain"] else logger.info
+            log(
+                "heavy_hitters: key %r count in [%s, %s] (share >= %.3f%s) "
+                "after batch %s of n=%s",
+                key, rep["count_lo"], rep["count_hi"],
+                rep["share_lo"], ", certain" if rep["certain"] else "",
+                batch_id, result["n"],
+            )
+        return result
+
     def attach(
         self,
         stream: DataFrame,
@@ -284,13 +307,7 @@ class StreamingHeavyHitters:
             if on_batch is not None:
                 on_batch(batch_id, result)
 
-        writer = (
-            stream.writeStream.foreachBatch(_step)
-            .queryName("heavy-hitters")
-            .option("checkpointLocation", checkpoint_dir)
+        return foreach_batch_query(
+            stream, _step, checkpoint_dir, available_now, processing_time,
+            "heavy-hitters",
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()

@@ -47,6 +47,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
 from sql_flow_spark.functions.textops import fingerprint
+from sql_flow_spark.streaming import foreach_batch_query
 from sql_flow_spark.streaming.compaction import (
     MarkerCommit,
     assert_no_live_writer,
@@ -210,16 +211,9 @@ def attach_foreach(
         n = process(batch_df, batch_id).count()
         logger.info("%s batch %s: %s verdicts", name, batch_id, n)
 
-    writer = (
-        stream.writeStream.foreachBatch(_step)
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_query(
+        stream, _step, checkpoint_dir, available_now, processing_time, name
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def score_batch(
@@ -245,6 +239,8 @@ class IngestDedup:
     ``out_dir`` (optional) receives the per-batch verdict log at
     ``out_dir/b=<batch>/`` (same idempotent overwrite contract);
     readable as one partitioned table."""
+
+    name = "ingest_dedup"
 
     def __init__(
         self,

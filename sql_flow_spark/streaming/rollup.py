@@ -29,10 +29,10 @@ with a MARKER-COMMIT protocol:
   keeping it out of the fold makes replay and compaction commute.
   compact() must not run concurrently with a writer — run it between
   triggers or from the `cli compact` maintenance verb while the
-  stream is stopped; this is now ENFORCED advisorily: process_batch
+  stream is stopped; this is now ENFORCED advisorily: ``process``
   heartbeats a writer lease and compact() refuses while a different
   process's lease is fresh (streaming/compaction.py);
-- ``process_batch`` re-reads the marker on every call (one local
+- ``process`` re-reads the marker on every call (one local
   file read, no Spark job) and refuses a batch id at or below the
   watermark — a write readers would silently ignore.
 
@@ -73,6 +73,8 @@ _RESERVED = ("b", _WM_COL)
 class StreamingRollup:
     """Maintained per-key aggregate table. ``aggs`` maps input column
     -> op in {sum, count, min, max, avg}."""
+
+    name = "rollup"
 
     def __init__(
         self,
@@ -134,7 +136,7 @@ class StreamingRollup:
                 exprs.append(F.max(col).alias(name))
         return df.groupBy(*self.keys).agg(*exprs)
 
-    def process_batch(self, df: DataFrame, batch_id: int) -> None:
+    def process(self, df: DataFrame, batch_id: int) -> None:
         """Fold one micro-batch: per-key partials overwrite
         ``b=<batch_id>`` (replay-idempotent). Refuses a batch id at or
         below the compaction watermark — readers would silently ignore

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from sql_flow_spark.sources import FileSource
 from sql_flow_spark.streaming.ann_index import (
     RETRAIN_PSI,
+    AnnIndexLeg,
     IncrementalIVF,
     occupancy_psi,
 )
@@ -459,7 +460,7 @@ def test_pipeline_ann_index_leg_e2e(spark, tmp_path):
         ),
         handler=InferredBatch("SELECT vec_id FROM batch"),
         sink=MemorySink(),
-        ann_index=cfg.AnnIndexConf(
+        monitors=[AnnIndexLeg(spark, cfg.AnnIndexConf(
             index_dir=str(tmp_path / "ivf"),
             k=4,
             nprobe=2,
@@ -467,7 +468,7 @@ def test_pipeline_ann_index_leg_e2e(spark, tmp_path):
             audit_every=1,
             audit_topk=5,
             audit_dir=str(tmp_path / "audits"),
-        ),
+        ))],
     )
     q = pipe.start(available_now=True, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(180)
@@ -546,7 +547,7 @@ def test_pipeline_ann_index_pq_leg_e2e(spark, tmp_path):
         ),
         handler=InferredBatch("SELECT vec_id FROM batch"),
         sink=MemorySink(),
-        ann_index=cfg.AnnIndexConf(
+        monitors=[AnnIndexLeg(spark, cfg.AnnIndexConf(
             index_dir=str(tmp_path / "ivf"),
             k=4,
             nprobe=2,
@@ -556,7 +557,7 @@ def test_pipeline_ann_index_pq_leg_e2e(spark, tmp_path):
             audit_every=1,
             audit_topk=5,
             audit_dir=str(tmp_path / "audits"),
-        ),
+        ))],
     )
     q = pipe.start(available_now=True, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(180)
@@ -599,28 +600,29 @@ def test_pipeline_ann_load_path_honors_live_config(spark, tmp_path):
     )
 
     def _pipe(**ann_kw):
-        return Pipeline(
+        leg = AnnIndexLeg(spark, cfg.AnnIndexConf(index_dir=index_dir, **ann_kw))
+        return leg, Pipeline(
             spark=spark,
             source=MemorySource(),  # invoke(batch) bypasses the read
             handler=InferredBatch("SELECT * FROM batch"),
             sink=MemorySink(),
-            ann_index=cfg.AnnIndexConf(index_dir=index_dir, **ann_kw),
+            monitors=[leg],
         )
 
     # (a) config+batch agree on doc_id but the SAVED index was built
     # on vec_id -> fail fast naming both column sets (previously this
     # surfaced only as an opaque append-time resolution error)
     with pytest.raises(ValueError, match="doc_id"):
-        _pipe(id_column="doc_id").invoke(
+        _pipe(id_column="doc_id")[1].invoke(
             batch.withColumnRenamed("vec_id", "doc_id")
         )
 
     # (b)+(c): nprobe applied from config, k mismatch tolerated
-    pipe = _pipe(k=8, nprobe=3)
+    leg, pipe = _pipe(k=8, nprobe=3)
     pipe.invoke(batch)
-    assert pipe._ann is not None
-    assert pipe._ann.nprobe == 3
-    assert pipe._ann.k == 4  # build-time k wins
+    assert leg.index is not None
+    assert leg.index.nprobe == 3
+    assert leg.index.k == 4  # build-time k wins
 
 
 def test_ann_index_example_config_parses():
@@ -742,9 +744,9 @@ def test_pipeline_rebuild_on_drift_rotates_generation(spark, tmp_path):
             ),
             handler=InferredBatch("SELECT vec_id FROM batch"),
             sink=MemorySink(),
-            ann_index=cfg.AnnIndexConf(
+            monitors=[AnnIndexLeg(spark, cfg.AnnIndexConf(
                 index_dir=root, k=4, nprobe=2, rebuild_on_drift=True
-            ),
+            ))],
         )
 
     q = _pipe().start(

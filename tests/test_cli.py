@@ -133,8 +133,8 @@ pipeline:
 
     spark = get_spark()
     r = StreamingRollup(spark, str(table), ["k"], {"v": "sum"})
-    r.process_batch(spark.createDataFrame([("a", 1)], "k string, v long"), 0)
-    r.process_batch(spark.createDataFrame([("a", 2)], "k string, v long"), 1)
+    r.process(spark.createDataFrame([("a", 1)], "k string, v long"), 0)
+    r.process(spark.createDataFrame([("a", 2)], "k string, v long"), 1)
     # the in-process writes just heartbeated the writer lease, so a
     # foreign-pid compact REFUSES (the r9 concurrency guard) ...
     out = _run_cli("compact", str(config))

@@ -197,7 +197,7 @@ def test_rollup_compact_refuses_live_writer(spark, tmp_path):
         spark, str(tmp_path / "t"), keys=["k"], aggs={"v": "sum"}
     )
     for b in range(3):
-        r.process_batch(
+        r.process(
             spark.createDataFrame([("a", 1)], "k string, v long"), b
         )
     with open(os.path.join(r.table_dir, "_writer.lease"), "w") as f:

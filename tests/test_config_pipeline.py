@@ -137,6 +137,7 @@ def test_ignore_policy_covers_invoke_monitoring_legs(spark, tmp_path):
     from sql_flow_spark.handlers import InferredBatch
     from sql_flow_spark.pipeline import Pipeline
     from sql_flow_spark.sources import FileSource
+    from sql_flow_spark.streaming.heavy_hitters import StreamingHeavyHitters
 
     pipe = Pipeline(
         spark=spark,
@@ -144,10 +145,11 @@ def test_ignore_policy_covers_invoke_monitoring_legs(spark, tmp_path):
         handler=InferredBatch("SELECT * FROM batch"),
         sink=MemorySink(),
         error_policy=_cfg.Policy.IGNORE,
-        heavy_hitters=_cfg.HeavyHittersConf(
+        monitors=[StreamingHeavyHitters(
+            spark,
             state_dir=str(tmp_path / "hh"),
-            key_column="no_such_column",  # the leg will fail
-        ),
+            key_col="no_such_column",  # the leg will fail
+        )],
     )
     batch = spark.createDataFrame([Row(k="a", v=1), Row(k="a", v=2)])
     result = pipe.invoke(batch)
@@ -281,14 +283,20 @@ def test_config_validate_surface():
     assert conf.pipeline.source.type == "files"
     assert conf.pipeline.handler.type == "handlers.InferredBatch"
     assert conf.pipeline.sink.type == "console"
-    assert conf.pipeline.batch_size == 1000
+    # batch_size is accepted for reference compatibility (and ignored)
+    assert cfg.validate_dict(
+        cfg.render_config(os.path.join(EXAMPLES, "basic.agg.yml"))
+    ) == []
 
 
 def test_bluesky_websocket_example_parses():
     conf = cfg.new_from_path(os.path.join(EXAMPLES, "bluesky.websocket.yml"))
     assert conf.pipeline.source.type == "websocket"
     assert conf.pipeline.source.uri.startswith("ws://")
-    assert conf.pipeline.batch_size == 100
+    # batch_size is accepted for reference compatibility (and ignored)
+    assert cfg.validate_dict(
+        cfg.render_config(os.path.join(EXAMPLES, "bluesky.websocket.yml"))
+    ) == []
     from sql_flow_spark.sources import WebsocketSource, new_source_from_conf
 
     src = new_source_from_conf(conf.pipeline.source)
@@ -379,42 +387,114 @@ def test_fanout_pipeline_streaming(spark, tmp_path):
     assert cities == {"New York", "Baltimore"}
 
 
-def test_fanout_leg_error_isolated_with_dlq(spark):
-    """A failing leg routes to the DLQ without killing the other legs
-    under the DLQ policy."""
+@pytest.mark.parametrize("mode", ["invoke", "stream"])
+def test_fanout_leg_error_isolated_with_dlq(spark, tmp_path, mode):
+    """A failing fan-out leg and a failing monitoring leg each route to
+    the DLQ without killing the other legs under the DLQ policy — on
+    the one-shot invoke() path and on the foreachBatch path alike."""
     from sql_flow_spark.pipeline import new_pipeline_from_conf
     from sql_flow_spark.serde import JSONSerde
 
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "a.json").write_text("\n".join(CITY_ROWS) + "\n")
     conf = cfg.new_from_dict(
         {
             "pipeline": {
-                "source": {"type": "files", "path": "/tmp/unused"},
+                "source": {"type": "files", "path": str(in_dir)},
                 "handler": {"sql": "SELECT * FROM batch"},
-                "sink": {"type": "memory", "name": "fanout_err_main"},
+                "sink": {"type": "memory", "name": f"fanout_err_main_{mode}"},
                 "on_error": {
                     "policy": "DLQ",
-                    "dlq": {"type": "memory", "name": "fanout_err_dlq"},
+                    "dlq": {"type": "memory", "name": f"fanout_err_dlq_{mode}"},
+                },
+                "heavy_hitters": {
+                    "state_dir": str(tmp_path / "hh"),
+                    "key_column": "no_such_column",  # the leg will fail
                 },
             },
             "fanout": [
                 {
                     "name": "bad_leg",
                     "handler": {"sql": "SELECT missing_col FROM batch"},
-                    "sink": {"type": "memory", "name": "fanout_err_bad"},
+                    "sink": {"type": "memory", "name": f"fanout_err_bad_{mode}"},
                 },
                 {
                     "name": "good_leg",
                     "handler": {"sql": "SELECT COUNT(*) AS n FROM batch"},
-                    "sink": {"type": "memory", "name": "fanout_err_good"},
+                    "sink": {"type": "memory", "name": f"fanout_err_good_{mode}"},
                 },
             ],
         }
     )
     pipe = new_pipeline_from_conf(conf, spark)
-    pipe.invoke(JSONSerde().to_dataframe(spark, CITY_ROWS))
-    assert spark.table("global_temp.fanout_err_good").first().n == 3
-    dlq = spark.table("global_temp.fanout_err_dlq").collect()
-    assert len(dlq) == 1 and dlq[0].phase == "leg.bad_leg"
+    if mode == "invoke":
+        pipe.invoke(JSONSerde().to_dataframe(spark, CITY_ROWS))
+    else:
+        q = pipe.start(available_now=True, checkpoint_dir=str(tmp_path / "ckpt"))
+        q.awaitTermination(120)
+    assert spark.table(f"global_temp.fanout_err_good_{mode}").first().n == 3
+    dlq = spark.table(f"global_temp.fanout_err_dlq_{mode}").collect()
+    assert {r.phase for r in dlq} == {"leg.bad_leg", "heavy_hitters"}
+    assert pipe.stats.num_errors == 2
+
+
+def test_monitor_legs_from_conf_in_dispatch_order(spark, tmp_path):
+    """Every pipeline.* monitoring block becomes one leg, after the
+    fan-out legs, in the fixed dispatch order, with its config
+    fields mapped onto the leg."""
+    from sql_flow_spark.pipeline import new_pipeline_from_conf
+
+    ref = str(tmp_path / "ref")
+    spark.createDataFrame(
+        [("click", float(v)) for v in range(100)], "g string, v double"
+    ).write.parquet(ref)
+    conf = cfg.new_from_dict(
+        {
+            "pipeline": {
+                "source": {"type": "files", "path": str(tmp_path / "in")},
+                "handler": {"sql": "SELECT * FROM batch"},
+                "sink": {"type": "noop"},
+                "ann_index": {"index_dir": str(tmp_path / "ivf"), "k": 4},
+                "rollup": {
+                    "table_dir": str(tmp_path / "rollup"),
+                    "keys": ["g"],
+                    "aggs": {"v": "sum"},
+                },
+                "heavy_hitters": {
+                    "state_dir": str(tmp_path / "hh"), "key_column": "g", "k": 5,
+                },
+                "curation_gate": {
+                    "index_dir": str(tmp_path / "cg"), "quality_min": 0.3,
+                },
+                "ingest_dedup": {"index_dir": str(tmp_path / "dd")},
+                "drift_monitor": {
+                    "reference_path": ref,
+                    "group_column": "g",
+                    "value_column": "v",
+                    "threshold": 0.4,
+                },
+            },
+            "fanout": [
+                {
+                    "name": "copy",
+                    "handler": {"sql": "SELECT * FROM batch"},
+                    "sink": {"type": "noop"},
+                },
+            ],
+        }
+    )
+    pipe = new_pipeline_from_conf(conf, spark)
+    assert [leg.name for leg in pipe.legs] == [
+        "leg.copy", "drift_monitor", "ingest_dedup", "curation_gate",
+        "heavy_hitters", "rollup", "ann_index",
+    ]
+    _, drift, _, gate, hh, rollup, ann = pipe.legs
+    assert drift.threshold == 0.4 and len(drift.fences["click"]) == 9
+    assert gate.quality_min == 0.3
+    assert hh.k == 5 and hh.key_col == "g"
+    assert rollup.keys == ["g"]
+    assert ann.conf.k == 4 and ann.index is None
 
 
 def test_curation_pipeline_config(spark, tmp_path):

@@ -119,12 +119,13 @@ def test_curation_gate_stream_e2e_and_restart(spark, tmp_path):
             ),
             handler=InferredBatch("SELECT doc_id FROM batch"),
             sink=MemorySink(),
-            curation_gate=cfg.CurationGateConf(
+            monitors=[CurationGate(
+                spark,
                 index_dir=str(tmp_path / "index"),
-                id_column="doc_id",
-                text_column="text",
+                id_col="doc_id",
+                text_col="text",
                 out_dir=str(tmp_path / "verdicts"),
-            ),
+            )],
         )
 
     q = make_pipe().start(

@@ -11,6 +11,7 @@ from sql_flow_spark.handlers import InferredBatch
 from sql_flow_spark.pipeline import Pipeline
 from sql_flow_spark.sinks import MemorySink
 from sql_flow_spark.sources import FileSource
+from sql_flow_spark.streaming.drift import DriftMonitor, reference_fences
 
 REPO = os.path.join(os.path.dirname(__file__), "..")
 
@@ -57,15 +58,16 @@ def test_drift_monitor_config_e2e(spark, tmp_path):
         source=FileSource(in_dir, format="json", max_files_per_trigger=1),
         handler=InferredBatch("SELECT count(*) AS n FROM batch"),
         sink=MemorySink(),
-        drift_monitor=cfg.DriftMonitorConf(
-            reference_path=ref_path,
-            group_column="event_type",
-            value_column="value",
+        monitors=[DriftMonitor(
+            reference_fences(
+                spark.read.parquet(ref_path), "event_type", "value"
+            ),
+            group_col="event_type",
+            value_col="value",
             threshold=0.25,
-        ),
+            sink=score_sink,
+        )],
     )
-    # swap in the memory sink the config path would build
-    pipe._drift_sink = score_sink
     q = pipe.start(available_now=True, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 

@@ -45,12 +45,13 @@ def _make_pipeline(spark, in_dir, tmp_path):
         source=FileSource(str(in_dir), format="json", max_files_per_trigger=1),
         handler=InferredBatch("SELECT doc_id FROM batch"),
         sink=MemorySink(),
-        ingest_dedup=cfg.IngestDedupConf(
+        monitors=[IngestDedup(
+            spark,
             index_dir=str(tmp_path / "index"),
-            id_column="doc_id",
-            text_column="text",
+            id_col="doc_id",
+            text_col="text",
             out_dir=str(tmp_path / "verdicts"),
-        ),
+        )],
     )
 
 

@@ -45,7 +45,6 @@ def test_file_stream_pipeline_foreachbatch(spark, tmp_path):
         source=FileSource(in_dir, format="json", max_files_per_trigger=1),
         handler=InferredBatch("SELECT city, SUM(n) AS total FROM batch GROUP BY city"),
         sink=sink,
-        batch_size=1,
     )
     q = pipe.start(available_now=True, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
@@ -522,7 +521,6 @@ def test_streaming_upsert_sink_end_to_end(spark, tmp_path):
         source=FileSource(in_dir, format="json", max_files_per_trigger=1),
         handler=InferredBatch("SELECT k, v, ts FROM batch"),
         sink=sink,
-        batch_size=1,
     )
     q = pipe.start(available_now=True, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)

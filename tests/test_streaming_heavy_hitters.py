@@ -126,7 +126,6 @@ def test_mg_compact_bound():
 def test_heavy_hitters_config_pipeline_e2e(spark, tmp_path):
     """pipeline.heavy_hitters config wiring: the leg folds per
     micro-batch off the same source read, certain hitters logged."""
-    from sql_flow_spark import config as cfg
     from sql_flow_spark.handlers import InferredBatch
     from sql_flow_spark.pipeline import Pipeline
     from sql_flow_spark.sinks import MemorySink
@@ -136,19 +135,20 @@ def test_heavy_hitters_config_pipeline_e2e(spark, tmp_path):
                  mtime=1_700_000_000)
     _write_jsonl(in_dir, "f2.jsonl", ["hot"] * 30 + [f"u{i}" for i in range(10)],
                  mtime=1_700_000_100)
+    hh = StreamingHeavyHitters(
+        spark, state_dir=str(tmp_path / "state"), key_col="k", k=K
+    )
     pipe = Pipeline(
         spark=spark,
         source=FileSource(in_dir, format="json", max_files_per_trigger=1),
         handler=InferredBatch("SELECT count(*) AS n FROM batch"),
         sink=MemorySink(),
-        heavy_hitters=cfg.HeavyHittersConf(
-            state_dir=str(tmp_path / "state"), key_column="k", k=K
-        ),
+        monitors=[hh],
     )
     q = pipe.start(available_now=True, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     # final state on disk: hot dominates, n accumulated across batches
-    final = pipe._heavy_hitters.fold_batch(
+    final = hh.fold_batch(
         spark.createDataFrame([("hot",)], "k string"), 99
     )
     assert final["n"] == 81

@@ -26,8 +26,8 @@ def _df(spark, rows):
 
 def test_rollup_merges_batches(spark, tmp_path):
     r = _rollup(spark, tmp_path, aggs={"v": "sum", "k": "count", "v2": "avg"})
-    r.process_batch(_df(spark, [("a", 1, 10.0), ("a", 2, 20.0), ("b", 5, 1.0)]), 0)
-    r.process_batch(_df(spark, [("a", 10, 30.0), ("c", 7, 2.0)]), 1)
+    r.process(_df(spark, [("a", 1, 10.0), ("a", 2, 20.0), ("b", 5, 1.0)]), 0)
+    r.process(_df(spark, [("a", 10, 30.0), ("c", 7, 2.0)]), 1)
     out = {row["k"]: row.asDict() for row in r.read().collect()}
     assert out["a"]["v_sum"] == 13 and out["a"]["k_count"] == 3
     assert out["a"]["v2_avg"] == pytest.approx(20.0)
@@ -37,9 +37,9 @@ def test_rollup_merges_batches(spark, tmp_path):
 def test_rollup_replay_is_idempotent(spark, tmp_path):
     r = _rollup(spark, tmp_path)
     batch = _df(spark, [("a", 1, 1.0), ("b", 2, 2.0)])
-    r.process_batch(batch, 0)
+    r.process(batch, 0)
     before = sorted(map(tuple, r.read().collect()))
-    r.process_batch(batch, 0)  # crash-replay of the same batch id
+    r.process(batch, 0)  # crash-replay of the same batch id
     after = sorted(map(tuple, r.read().collect()))
     assert before == after
 
@@ -47,7 +47,7 @@ def test_rollup_replay_is_idempotent(spark, tmp_path):
 def test_rollup_compact_preserves_totals_and_honors_watermark(spark, tmp_path):
     r = _rollup(spark, tmp_path)
     for b in range(3):
-        r.process_batch(_df(spark, [("a", b, float(b)), ("b", 1, 5.0)]), b)
+        r.process(_df(spark, [("a", b, float(b)), ("b", 1, 5.0)]), b)
     before = sorted(map(tuple, r.read().collect()))
     # folds b=0,1 — the newest batch (b=2) is never folded (it is the
     # only one a restarted stream can replay)
@@ -66,7 +66,7 @@ def test_rollup_compact_preserves_totals_and_honors_watermark(spark, tmp_path):
     assert again == after
     # ...and the NEXT compact removes it (cleanup covers everything
     # at/below the watermark, not just what it folded)
-    r.process_batch(_df(spark, [("a", 100, 0.0)]), 3)
+    r.process(_df(spark, [("a", 100, 0.0)]), 3)
     assert r.compact() == 1  # folds b=2; second slot becomes active
     parts = sorted(p for p in os.listdir(r.table_dir) if p.startswith("b="))
     assert parts == [f"b={SEED_SLOTS[1]}", "b=3"]
@@ -80,7 +80,7 @@ def test_rollup_compact_crash_before_marker_is_invisible(spark, tmp_path):
     complete state."""
     r = _rollup(spark, tmp_path)
     for b in range(3):
-        r.process_batch(_df(spark, [("a", 1, 1.0)]), b)
+        r.process(_df(spark, [("a", 1, 1.0)]), b)
     before = sorted(map(tuple, r.read().collect()))
     # simulate the crash: perform the fold write WITHOUT the marker
     partials = r._read_partials()
@@ -103,16 +103,16 @@ def test_rollup_compact_crash_before_marker_is_invisible(spark, tmp_path):
 
 def test_rollup_refuses_write_below_watermark(spark, tmp_path):
     r = _rollup(spark, tmp_path)
-    r.process_batch(_df(spark, [("a", 1, 1.0)]), 0)
-    r.process_batch(_df(spark, [("a", 1, 1.0)]), 1)
+    r.process(_df(spark, [("a", 1, 1.0)]), 0)
+    r.process(_df(spark, [("a", 1, 1.0)]), 1)
     assert r.compact() == 1  # watermark 0
     with pytest.raises(ValueError, match="watermark"):
-        r.process_batch(_df(spark, [("a", 1, 1.0)]), 0)
+        r.process(_df(spark, [("a", 1, 1.0)]), 0)
     # the guard re-reads the marker per call, so OTHER instances (and
     # out-of-process compactions) are seen immediately — no stale cache
     r2 = _rollup(spark, tmp_path)
     with pytest.raises(ValueError, match="watermark"):
-        r2.process_batch(_df(spark, [("a", 1, 1.0)]), 0)
+        r2.process(_df(spark, [("a", 1, 1.0)]), 0)
     marker = json.load(open(os.path.join(r.table_dir, "_watermark.json")))
     assert marker["wm"] == 0 and marker["slot"] in SEED_SLOTS
 
@@ -120,7 +120,7 @@ def test_rollup_refuses_write_below_watermark(spark, tmp_path):
 def test_rollup_compact_noop_cases(spark, tmp_path):
     r = _rollup(spark, tmp_path)
     assert r.compact() == 0  # empty table
-    r.process_batch(_df(spark, [("a", 1, 1.0)]), 0)
+    r.process(_df(spark, [("a", 1, 1.0)]), 0)
     assert r.compact() == 0  # single live batch: nothing safely foldable
 
 
@@ -150,7 +150,6 @@ def _write_jsonl(dirpath, name, rows, mtime=None):
 def test_rollup_config_pipeline_e2e(spark, tmp_path):
     """pipeline.rollup leg: the maintained table accumulates across
     micro-batches off the same source read as the handler."""
-    from sql_flow_spark import config as cfg
     from sql_flow_spark.handlers import InferredBatch
     from sql_flow_spark.pipeline import Pipeline
     from sql_flow_spark.sinks import MemorySink
@@ -167,20 +166,22 @@ def test_rollup_config_pipeline_e2e(spark, tmp_path):
         [{"user_id": "u1", "value": 5}],
         mtime=1_700_000_100,
     )
+    rollup = StreamingRollup(
+        spark,
+        table_dir=str(tmp_path / "table"),
+        keys=["user_id"],
+        aggs={"value": "sum", "user_id": "count"},
+    )
     pipe = Pipeline(
         spark=spark,
         source=FileSource(in_dir, format="json", max_files_per_trigger=1),
         handler=InferredBatch("SELECT count(*) AS n FROM batch"),
         sink=MemorySink(),
-        rollup=cfg.RollupConf(
-            table_dir=str(tmp_path / "table"),
-            keys=["user_id"],
-            aggs={"value": "sum", "user_id": "count"},
-        ),
+        monitors=[rollup],
     )
     q = pipe.start(available_now=True, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
-    out = {row["user_id"]: row.asDict() for row in pipe._rollup.read().collect()}
+    out = {row["user_id"]: row.asDict() for row in rollup.read().collect()}
     assert out["u1"]["value_sum"] == 15 and out["u1"]["user_id_count"] == 2
     assert out["u2"]["value_sum"] == 1
 
