@@ -10,8 +10,9 @@ corpus cardinality). Each iteration is pure JVM: adjacent-pair explode
 with map-side partial sums, a deterministic 1-row argmax broadcast
 back, and the merge applied with a higher-order aggregate fold (greedy
 leftmost non-overlapping, the standard scan). No Python in the row
-path, no driver-side data — the only driver loop is the bounded merge
-count, same posture as every iterative trainer here.
+path, no driver-side data past the driver bound — the only driver
+loop is the bounded merge count, same posture as every iterative
+trainer here.
 
 Registered rows-only (an unrolled SQL oracle would need a list-fold
 DuckDB lacks); instead tests/test_functions.py pins the ENTIRE merge
@@ -24,14 +25,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sql_flow_spark.localdf import bounded_or_distributed, local_df
 from sql_flow_spark.registry import query
 from sql_flow_spark.tables import load_tables
 
 N_MERGES = 8
-# Driver cap for the vocabulary fast path in learn_merges (words):
-# ~tens of MB collected at worst; past it the distributed trainer
-# runs unchanged.
-_BPE_DRIVER_VOCAB_CAP = 65536
 
 
 def _merge_pair(syms: Column, a: Column, b: Column) -> Column:
@@ -63,22 +61,21 @@ def learn_merges(
     Ties on pair count break lexicographically on (left, right) — a
     total order, so the merge table is deterministic on any cluster.
 
-    r14 fast path: BPE training runs on the word-frequency VOCABULARY,
-    which is sublinear in the corpus and bounded in practice — exactly
-    the bounded-trainer shape of the Lloyd family
-    (similarity._pq_train_driver). Under the driver cap the vocab
-    collects once (syms already split by the SAME Spark expression, so
-    no tokenizer can fork) and the pair-count -> argmax -> merge loop
-    runs in pure python: integer counts, (count desc, left, right)
-    ties — python string order equals Spark's UTF8 binary order for
-    valid UTF-8 — and the identical greedy leftmost non-overlapping
-    scan (tests/test_functions.py pins the whole sequence against the
-    pure-python reference). Beyond the cap the distributed
-    iteration ladder below runs unchanged."""
-    from sql_flow_spark.localdf import local_df
-
+    BPE training runs on the word-frequency VOCABULARY, which is
+    sublinear in the corpus and bounded in practice — the
+    bounded-trainer shape of the Lloyd family. The vocab aggregate
+    runs ONCE, into a local checkpoint both paths read. Under the
+    driver bound (localdf.bounded_or_distributed) the vocab collects
+    (syms already split by the SAME Spark expression, so no tokenizer
+    can fork) and the pair-count -> argmax -> merge loop runs in pure
+    python: integer counts, (count desc, left, right) ties — python
+    string order equals Spark's UTF8 binary order for valid UTF-8 —
+    and the identical greedy leftmost non-overlapping scan
+    (tests/test_functions.py pins the whole sequence against the
+    pure-python reference). Past the bound the distributed iteration
+    ladder runs on the checkpointed vocab."""
     spark = docs.sparkSession
-    vocab_lazy = (
+    vocab = (
         docs.select(
             F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word")
         )
@@ -89,10 +86,11 @@ def learn_merges(
             F.regexp_extract_all("word", F.lit("."), 0).alias("syms"),
             "cnt",
         )
+        .localCheckpoint(eager=True)
     )
-    rows = vocab_lazy.limit(_BPE_DRIVER_VOCAB_CAP + 1).collect()
-    if len(rows) <= _BPE_DRIVER_VOCAB_CAP:
-        words = [(list(r["syms"]), int(r["cnt"])) for r in rows]
+
+    def twin(pdf):
+        words = [(list(s), int(c)) for s, c in zip(pdf["syms"], pdf["cnt"])]
         merges = []
         for rank in range(1, n_merges + 1):
             pc: dict[tuple[str, str], int] = {}
@@ -116,13 +114,25 @@ def learn_merges(
                         nxt.append(x)
                 nxt_words.append((nxt, cnt))
             words = nxt_words
-        return local_df(
-            spark,
-            merges,
-            "rank int, left string, right string, merged string,"
-            " pair_count long",
-        )
-    vocab = vocab_lazy.localCheckpoint(eager=True)
+        return _merge_table(spark, merges)
+
+    return bounded_or_distributed(
+        vocab, twin, lambda: _learn_distributed(vocab, n_merges)
+    )
+
+
+def _merge_table(spark: SparkSession, merges: list) -> DataFrame:
+    return local_df(
+        spark,
+        merges,
+        "rank int, left string, right string, merged string, pair_count long",
+    )
+
+
+def _learn_distributed(vocab: DataFrame, n_merges: int) -> DataFrame:
+    """learn_merges' distributed iteration ladder over the checkpointed
+    vocab: per merge one pair-count aggregate, a 1-row argmax collect
+    and the merge fold, re-checkpointed."""
     merges = []
     for rank in range(1, n_merges + 1):
         pairs = (
@@ -174,13 +184,7 @@ def learn_merges(
             ).alias("syms"),
             "cnt",
         ).localCheckpoint(eager=True)
-    from sql_flow_spark.localdf import local_df
-
-    return local_df(
-        spark,
-        merges,
-        "rank int, left string, right string, merged string, pair_count long",
-    )
+    return _merge_table(vocab.sparkSession, merges)
 
 
 @query("bpe_learn_merges")  # iterative list-fold -> no SQL oracle

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sql_flow_spark.localdf import _TwinOverflow, bounded_or_distributed, local_df
 from sql_flow_spark.registry import query
 from sql_flow_spark.tables import load_tables
 
@@ -801,77 +802,63 @@ def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact trajectory; on real embedding corpora with a dominant
     direction the same six steps land the converged vector.
 
-    Scale shape (r14): the power iteration is a bounded-state
-    iterative trainer like the Lloyd family — under the driver bound
-    the corpus collects once and the identical fixed-point trajectory
-    runs in numpy (same floor(term*1e8+0.5) integer sums per step,
-    int64-exact under the _ck guards; the oracle gate arbitrates
-    equality), returning the 64-row loading vector as an Arrow local
-    frame. Beyond the bound (or on null/ragged/wild data) the
-    distributed path below runs unchanged: the exploded (vec_id, dim,
-    val) table is checkpointed ONCE, pre-partitioned on vec_id, and
-    reused by all iterations; per iteration the score groupBy and the
-    join-back REUSE that partitioning (no fact exchange), leaving one
-    small exchange onto the 64-dim key space; v is a 64-row
-    broadcast."""
-    from sql_flow_spark.functions.mat import materialize_once
-    from sql_flow_spark.localdf import local_df
+    Scale shape: under the driver bound (localdf.bounded_or_distributed)
+    the identical fixed-point trajectory runs in numpy (same
+    floor(term*1e8+0.5) integer sums per step, int64-exact under the
+    _ck guards; the oracle gate arbitrates equality), returning the
+    64-row loading vector as an Arrow local frame. Past the bound (or
+    on null/ragged/wild data) the distributed path runs: the exploded
+    (vec_id, dim, val) table is checkpointed ONCE, pre-partitioned on
+    vec_id, and reused by all iterations; per iteration the score
+    groupBy and the join-back REUSE that partitioning (no fact
+    exchange), leaving one small exchange onto the 64-dim key space; v
+    is a 64-row broadcast."""
+    emb = load_tables(spark, sf_dir, ("embeddings",), spread=False)[
+        "embeddings"
+    ]
 
-    t = load_tables(spark, sf_dir, ("embeddings",), spread=False)
-    got = _collect_embeddings(t["embeddings"])
-    if got is not None and got[1].ndim == 2 and got[1].shape[1] == _PI_DIMS:
+    def twin(pdf):
+        got = _probed_embeddings(pdf)
+        if got is None or got[1].shape[1] != _PI_DIMS:
+            return None
         vals = got[1]
-        try:
-            v_np = np.full(_PI_DIMS, 0.125)
-            for _ in range(_PI_ITERS):
-                s = (
-                    _ck(
-                        np.floor(
-                            (vals * v_np[None, :]) * _PI_SCALE + 0.5
-                        ),
-                        _PI_DIMS,
-                    ).astype(np.int64).sum(axis=1)
-                    / _PI_SCALE
-                )
-                w = (
-                    _ck(
-                        np.floor((vals * s[:, None]) * _PI_SCALE + 0.5),
-                        len(vals),
-                    ).astype(np.int64).sum(axis=0)
-                    / _PI_SCALE
-                )
-                nw = _ck(np.floor((w * w) * _PI_SCALE + 0.5), 1)
-                # 64-term norm sum in python ints (arbitrary precision;
-                # float(exact int) is the same correctly-rounded double
-                # the decimal->double cast produces)
-                nrm = np.sqrt(
-                    float(sum(int(x) for x in nw)) / _PI_SCALE
-                )
-                v_np = w / nrm
-            return local_df(
-                spark,
-                [(d, float(v_np[d])) for d in range(_PI_DIMS)],
-                "dim int, loading double",
+        v_np = np.full(_PI_DIMS, 0.125)
+        for _ in range(_PI_ITERS):
+            s = (
+                _ck(
+                    np.floor((vals * v_np[None, :]) * _PI_SCALE + 0.5),
+                    _PI_DIMS,
+                ).astype(np.int64).sum(axis=1)
+                / _PI_SCALE
             )
-        except _TwinOverflow:
-            pass
-    e = materialize_once(
-        t["embeddings"]
-        .select(
-            "vec_id",
-            F.posexplode("embedding").alias("dim", "val"),
+            w = (
+                _ck(
+                    np.floor((vals * s[:, None]) * _PI_SCALE + 0.5),
+                    len(vals),
+                ).astype(np.int64).sum(axis=0)
+                / _PI_SCALE
+            )
+            nw = _ck(np.floor((w * w) * _PI_SCALE + 0.5), 1)
+            # 64-term norm sum in python ints (arbitrary precision;
+            # float(exact int) is the same correctly-rounded double
+            # the decimal->double cast produces)
+            nrm = np.sqrt(float(sum(int(x) for x in nw)) / _PI_SCALE)
+            v_np = w / nrm
+        return local_df(
+            spark,
+            [(d, float(v_np[d])) for d in range(_PI_DIMS)],
+            "dim int, loading double",
         )
-        .select(
-            "vec_id",
-            F.col("dim").cast("int").alias("dim"),
-            F.col("val").cast("double").alias("val"),
-        )
-        # partition count sized by rows/task (r14 — see
-        # _FACT_ROWS_PER_TASK; the r13 core-count pin over-split the
-        # tiny local fact), never AQE's byte-sized single partition:
-        # the iteration aggregates are CPU-bound fixed-point sums
-        .repartition(_fact_parts(t["embeddings"]), "vec_id")
+
+    return bounded_or_distributed(
+        emb.select("vec_id", "embedding"), twin, lambda: _pi_distributed(emb)
     )
+
+
+def _pi_distributed(emb: DataFrame) -> DataFrame:
+    """embedding_top_pc's distributed power iteration."""
+    spark = emb.sparkSession
+    e = _pq_fact(emb, sub_dim=None)
     v = spark.range(_PI_DIMS).select(
         F.col("id").cast("int").alias("dim"), F.lit(0.125).alias("v")
     )
@@ -1478,96 +1465,16 @@ def _lloyd(
     exact-sum/exact-count centroid means) — see kmeans_embeddings for
     the full exactness and scale-shape argument.
 
-    r14 fast path: the flat Lloyd is ``_pq_train_driver`` with ONE
-    subspace (sd = dim), so when the corpus fits the driver bound the
-    whole iteration ladder (iters x 3 distributed jobs) collapses into
-    one bounded collect + numpy on the IDENTICAL fixed-point
-    trajectory; assignments/centroids return as Arrow local frames.
-    Over-cap / null / ragged / non-contiguous-seed / out-of-bound
-    corpora run the unchanged distributed path. The oracle gate
-    (kmeans_embeddings, semdedup_prune) arbitrates equality."""
-    from sql_flow_spark.functions.mat import materialize_once
-    from sql_flow_spark.localdf import local_df
-
-    t = load_tables(spark, sf_dir, ("embeddings",), spread=False)
-    got = _collect_embeddings(t["embeddings"])
-    if got is not None:
-        ids, vals = got
-        seed_ids = list(range(n_clusters))
-        if set(seed_ids) <= set(ids.tolist()) and len(vals):
-            try:
-                a_np, c_np = _pq_train_driver(
-                    ids, vals, n_clusters, vals.shape[1],
-                    iters=iters, seed_ids=seed_ids,
-                )
-            except _TwinOverflow:
-                a_np = None
-            if a_np is not None:
-                assign = local_df(
-                    spark,
-                    [
-                        (int(i), int(cl))
-                        for i, cl in zip(ids.tolist(), a_np[:, 0].tolist())
-                    ],
-                    "vec_id long, cluster int",
-                )
-                book = c_np[0]  # (k, dim); NaN = dead cluster
-                cent = local_df(
-                    spark,
-                    [
-                        (j, d, float(book[j, d]))
-                        for j in range(n_clusters)
-                        for d in range(vals.shape[1])
-                        if book[j, d] == book[j, d]
-                    ],
-                    "cluster int, dim int, c double",
-                )
-                return assign, cent
-    # explicit partition count (rows/task-sized, scale-adaptive — NOT
-    # a local constant; see _fact_parts): with the count left to AQE
-    # the tiny-byte fact coalesces to ONE partition and every
-    # iteration's CPU-bound fixed-point aggregate runs on a single
-    # core (r13: the dist agg measured 0.88 s on 1 task; the bytes are
-    # small but the decimal math is not); the r13 flat core-count pin
-    # over-split it the other way (driver arbiter: kmeans 0.75x)
-    e = materialize_once(
-        t["embeddings"]
-        .select("vec_id", F.posexplode("embedding").alias("dim", "val"))
-        .select(
-            "vec_id",
-            F.col("dim").cast("int").alias("dim"),
-            F.col("val").cast("double").alias("val"),
-        )
-        .repartition(_fact_parts(t["embeddings"]), "vec_id")
-    )
-    cent = e.filter(F.col("vec_id") < n_clusters).select(
-        F.col("vec_id").cast("int").alias("cluster"), "dim",
-        F.col("val").alias("c"),
-    )
-    assign = None
-    wv = Window.partitionBy("vec_id").orderBy("dist", "cluster")
-    for _ in range(iters):
-        diff = F.col("val") - F.col("c")
-        dist = (
-            e.join(F.broadcast(cent), "dim")
-            .groupBy("vec_id", "cluster")
-            .agg(_pi_fsum(diff * diff).alias("dist"))
-        )
-        assign = (
-            dist.withColumn("rn", F.row_number().over(wv))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "cluster")
-        )
-        cent = (
-            e.join(assign, "vec_id")
-            .groupBy("cluster", "dim")
-            .agg(
-                (_pi_fsum(F.col("val")) / F.count("*").cast("double"))
-                .alias("c")
-            )
-            .localCheckpoint(eager=True)
-        )
-    return assign, cent
+    The flat Lloyd is the PQ trainer with ONE subspace (sub ≡ 0) and
+    seeds [0, n_clusters), so it runs through _pq_codebook: the numpy
+    twin under the driver bound, the distributed ladder past it. The
+    oracle gate (kmeans_embeddings, semdedup_prune) arbitrates
+    equality on both paths."""
+    emb = load_tables(spark, sf_dir, ("embeddings",), spread=False)[
+        "embeddings"
+    ]
+    assign, cent = _pq_codebook(emb, n_clusters, sub_dim=None, iters=iters)
+    return assign.drop("sub"), cent
 
 
 @query("kmeans_embeddings", oracle=_km_oracle())
@@ -1582,15 +1489,17 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle (the same iterations unrolled into CTEs) matches
     every assignment and every centroid coordinate bit-for-bit.
 
-    Scale shape: the exploded (vec_id, dim, val) fact is checkpointed
-    ONCE, pre-partitioned on vec_id, and reused by all iterations.
-    Per iteration: centroids (k x dims rows) BROADCAST onto the fact
-    — the distance groupBy lands on (vec_id, cluster), the assignment
-    window and the join-back both reuse the vec_id partitioning, and
-    the centroid update shuffles only onto the tiny (cluster, dim)
-    key space with map-side partials. Each iteration's k x dims
-    centroid table is localCheckpoint-ed, keeping the plan one
-    iteration deep. No collect anywhere; driver traffic is zero."""
+    Scale shape: under the driver bound the trajectory runs in numpy
+    on one bounded probe collect (_lloyd). Past it the exploded
+    (vec_id, dim, val) fact is checkpointed ONCE, pre-partitioned on
+    vec_id, and reused by all iterations. Per iteration: centroids
+    (k x dims rows) BROADCAST onto the fact — the distance groupBy
+    lands on (vec_id, cluster), the assignment window and the
+    join-back both reuse the vec_id partitioning, and the centroid
+    update shuffles only onto the tiny (cluster, dim) key space with
+    map-side partials. Each iteration's k x dims centroid table is
+    localCheckpoint-ed, keeping the plan one iteration deep. Past the
+    bound, driver traffic is at most the probe."""
     assign, cent = _lloyd(spark, sf_dir, _KM_K, _KM_ITERS)
     sizes = assign.groupBy("cluster").agg(F.count("*").alias("n_members"))
     return cent.join(F.broadcast(sizes), "cluster").select(
@@ -1648,41 +1557,81 @@ def _pq_ctes() -> list[str]:
     return ctes
 
 
-def _pq_fact(emb: DataFrame, materialize: bool = True) -> DataFrame:
-    """Exploded (vec_id, dim, sub, val) PQ fact, checkpointed once —
-    every consumer (training iterations, reconstruction/encode joins)
-    reuses the same materialized table instead of re-exploding the
-    corpus. ``materialize=False`` skips the checkpoint AND the
-    repartition for single-consumer plans (the r14 driver-trained
-    audit reads the fact exactly once, fused with the scan)."""
+def _cell_df(spark: SparkSession, centroids: np.ndarray) -> DataFrame:
+    """(cell, dim, cval) coarse-centroid table — k*dim rows, broadcast
+    by its consumers (Arrow local frame: no 32-task Python-RDD scan,
+    see localdf.py)."""
+    return local_df(
+        spark,
+        [
+            (int(c), int(d), float(v))
+            for c, row in enumerate(centroids)
+            for d, v in enumerate(row)
+        ],
+        "cell int, dim int, cval double",
+    )
+
+
+def _pq_fact(
+    emb: DataFrame,
+    sub_dim: int | None = PQ_SUB_DIM,
+    centroids: np.ndarray | None = None,
+    materialize: bool = True,
+) -> DataFrame:
+    """Exploded (vec_id, dim, sub, val) training fact over ``emb``'s
+    (vec_id, embedding), checkpointed once — every iteration of a
+    trainer reuses the same materialized table instead of re-exploding
+    the corpus. ``sub_dim=None`` is one subspace (sub ≡ 0, the flat
+    Lloyd and the power iteration). With ``centroids`` (IVF cells,
+    (k, dim)) ``val`` is the residual x − c_cell to the vector's
+    nearest cell (ivf_assign — the UDF the serving path encodes
+    with), the IVF-PQ training input. ``materialize=False`` skips the
+    checkpoint AND the repartition for single-consumer plans (a
+    reconstruction pass that reads the fact once, fused with the
+    scan)."""
     from sql_flow_spark.functions.mat import materialize_once
 
-    out = emb.select(
-        "vec_id", F.posexplode("embedding").alias("dim", "val")
-    ).select(
+    if centroids is None:
+        out = emb.select(
+            "vec_id", F.posexplode("embedding").alias("dim", "val")
+        )
+    else:
+        cent_df = _cell_df(emb.sparkSession, centroids)
+        out = (
+            emb.select(
+                "vec_id", "embedding",
+                ivf_assign(F.col("embedding"), centroids, 1)[0].alias("cell"),
+            )
+            .select(
+                "vec_id", "cell",
+                F.posexplode("embedding").alias("dim", "rawval"),
+            )
+            .join(F.broadcast(cent_df), ["cell", "dim"])
+            .select(
+                "vec_id", "dim",
+                (F.col("rawval").cast("double") - F.col("cval")).alias("val"),
+            )
+        )
+    out = out.select(
         "vec_id",
         F.col("dim").cast("int").alias("dim"),
-        F.floor(F.col("dim") / F.lit(PQ_SUB_DIM)).cast("int").alias(
-            "sub"
-        ),
+        (
+            F.lit(0) if sub_dim is None
+            else F.floor(F.col("dim") / F.lit(sub_dim)).cast("int")
+        ).alias("sub"),
         F.col("val").cast("double").alias("val"),
     )
     if not materialize:
         return out
-    # partition count sized by rows/task (r14, _FACT_ROWS_PER_TASK
-    # — the r13 core-count pin over-split the tiny local fact),
-    # never AQE's byte-sized single partition: the training
-    # aggregates over this fact are CPU-bound (see _lloyd)
+    # explicit partition count sized by rows/task (_FACT_ROWS_PER_TASK
+    # — scale-adaptive, not a local constant): left to AQE the
+    # tiny-byte fact coalesces to ONE partition and every iteration's
+    # CPU-bound fixed-point aggregate runs on a single core (r13: the
+    # k-means distance agg measured 0.88 s on 1 task); the r13 flat
+    # core-count pin over-split it the other way (kmeans 0.75x)
     return materialize_once(out.repartition(_fact_parts(emb), "vec_id"))
 
 
-# Driver-trainable bound for the iterative-trainer fast paths (rows):
-# the collected sample is rows * dim * 8 bytes (64-dim schema ->
-# 32 MiB at the cap, broadcast-build-side territory) and the trainers'
-# largest temporary is rows * k * sub_dim doubles per subspace.
-# Beyond the cap the distributed trajectory runs unchanged — the same
-# small-side/large-side switch a broadcast join makes.
-_PQ_DRIVER_TRAIN_CAP = 65536
 # Magnitude bound for the driver twins' int64 fixed-point sums: with
 # |val| <= this, every large-cardinality sum of floor(term*SCALE+0.5)
 # terms stays far inside int64 (analysis per call site in the twins'
@@ -1692,20 +1641,14 @@ _PQ_DRIVER_TRAIN_CAP = 65536
 _DRIVER_VAL_BOUND = 100.0
 
 
-def _collect_embeddings(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    cap: int = _PQ_DRIVER_TRAIN_CAP,
-):
-    """Bounded collect of (id, vector) rows for the driver-side
-    trainer twins. Returns (ids int64[n], vals float64[n, dim]) or
-    None when the input is over the cap, empty, null-bearing, ragged,
-    duplicate-id, or out of magnitude bounds — every case the
-    distributed trajectory's SQL semantics handle and the numpy twin
-    deliberately does not."""
-    pdf = df.select(id_col, emb_col).limit(cap + 1).toPandas()
-    if len(pdf) == 0 or len(pdf) > cap:
+def _probed_embeddings(pdf: pd.DataFrame):
+    """Validate a probed (id, vector) frame (bounded_or_distributed's
+    probe) for the driver-side trainer twins. Returns (ids int64[n],
+    vals float64[n, dim]) or None when the frame is empty,
+    null-bearing, ragged, duplicate-id, or out of magnitude bounds —
+    every case the distributed trajectory's SQL semantics handle and
+    the numpy twin deliberately does not."""
+    if len(pdf) == 0:
         return None
     idc, embc = pdf.columns[0], pdf.columns[1]
     if pdf[idc].isna().any():
@@ -1728,15 +1671,6 @@ def _collect_embeddings(
     return ids, vals
 
 
-class _TwinOverflow(Exception):
-    """A driver-twin fixed-point sum left the range where int64 /
-    float64 arithmetic provably reproduces the distributed DECIMAL
-    fold (terms must stay < 2^53 so floor-doubles are exact integers
-    and Spark's shortest-repr double->decimal cast is exact; running
-    sums must stay inside int64). Callers fall back to the
-    distributed trajectory."""
-
-
 def _ck(terms: np.ndarray, count: int) -> np.ndarray:
     """Guard one twin reduction: every |term| < 2^53 and the worst
     running sum < 2^62. Returns the terms for chaining."""
@@ -1752,8 +1686,8 @@ def _pq_train_driver(
     vals: np.ndarray,
     k: int,
     sd: int,
-    iters: int = PQ_ITERS,
-    seed_ids=None,
+    iters: int,
+    seed_ids: list[int],
 ) -> tuple[np.ndarray, np.ndarray]:
     """Driver-side numpy twin of ``_pq_train`` — the IDENTICAL
     fixed-point Lloyd trajectory (same floor(term*1e8+0.5) integer
@@ -1764,11 +1698,11 @@ def _pq_train_driver(
     float64 arithmetic reproduces the DECIMAL fold exactly.
 
     ``ids``: (n,) unique vec ids; ``vals``: (n, dim) the training
-    values (cell residuals for the disk index, raw values for the
-    flat trainers). Seeds default to the ``k`` smallest ids; an
-    explicit ``seed_ids`` list pins cluster j to the row with
-    id == seed_ids[j] (a missing id leaves cluster j DEAD from the
-    start — exactly the distributed trainer's empty seed filter).
+    values (cell residuals for IVF-PQ, raw values for the flat
+    trainers). ``seed_ids`` pins cluster j to the row with
+    id == seed_ids[j] (a missing id, or j >= len(seed_ids), leaves
+    cluster j DEAD from the start — exactly the distributed trainer's
+    empty seed join).
     Returns (assign, book): assign (n, n_sub) codeword ids aligned
     with ``ids``' row order, book (n_sub, k, sd) with NaN rows for
     codewords that lost every member (consistent per (sub, cluster)
@@ -1776,15 +1710,11 @@ def _pq_train_driver(
     rows)."""
     n, dim = vals.shape
     n_sub = dim // sd
-    if seed_ids is None:
-        seed_rows = np.argsort(ids, kind="stable")[:k]
-        c = vals[seed_rows].copy()  # (k, dim); NaN = dead
-    else:
-        pos = {int(v): i for i, v in enumerate(ids)}
-        c = np.full((k, dim), np.nan)
-        for j, sid in enumerate(seed_ids):
-            if int(sid) in pos:
-                c[j] = vals[pos[int(sid)]]
+    pos = {int(v): i for i, v in enumerate(ids)}
+    c = np.full((k, dim), np.nan)  # (k, dim); NaN = dead
+    for j, sid in enumerate(seed_ids):
+        if int(sid) in pos:
+            c[j] = vals[pos[int(sid)]]
     assign = np.zeros((n, n_sub), dtype=np.int64)
     for _ in range(iters):
         for s in range(n_sub):
@@ -1824,51 +1754,29 @@ def _pq_train_driver(
     return assign, book
 
 
-def _pq_train(
-    e: DataFrame,
-    seed_lo: int = 0,
-    k: int = PQ_K,
-    iters: int = PQ_ITERS,
-    seed_ids: "list[int] | None" = None,
-):
+def _pq_train(e: DataFrame, seed_ids: list[int], iters: int):
     """Distributed per-subspace Lloyd training over an exploded
-    (vec_id, dim, sub, val) fact: PQ_ITERS iterations of exact
+    (vec_id, dim, sub, val) fact: ``iters`` iterations of exact
     fixed-point distance sums, (dist, cluster) argmin and
     exact-sum/exact-count centroid updates — kmeans_embeddings'
-    pinned trajectory run independently per subspace. Seeds are the
-    ``k`` vectors with ids [seed_lo, seed_lo + k) (seed_lo=0, k=PQ_K
-    is the audit's first-k rule on the full table; ann_ivfpq_topk
-    passes the first corpus id and its own k so queries never train
-    their own codebook). Returns (assign, cent): one (vec_id, sub,
-    cluster) row per (vector, subspace) and the (cluster, dim, c)
-    codebook.
+    pinned trajectory run independently per subspace. Cluster j is
+    seeded from the vector with id == seed_ids[j]. Returns (assign,
+    cent): one (vec_id, sub, cluster) row per (vector, subspace) and
+    the (cluster, dim, c) codebook.
 
     Scale shape: per iteration the k*64-entry codebook broadcasts onto
     the fact, distance partials land on (vec_id, sub, cluster), the
     argmin window reuses that partitioning and the update shuffles
     map-side partials onto the k*64-key codebook space; codebooks
     localCheckpoint per iteration so plans stay one iteration deep."""
-    if seed_ids is not None:
-        # arbitrary (non-contiguous) seed vectors — the disk-index
-        # path, where ids carry no [lo, lo+k) contract; cluster id =
-        # position in the caller's (sorted, deterministic) list
-        from sql_flow_spark.localdf import local_df
-
-        m = local_df(
-            e.sparkSession,
-            [(int(v), i) for i, v in enumerate(seed_ids)],
-            "vec_id long, cluster int",
-        )
-        cent = e.join(F.broadcast(m), "vec_id").select(
-            "cluster", "dim", F.col("val").alias("c")
-        )
-    else:
-        cent = e.filter(
-            (F.col("vec_id") >= seed_lo) & (F.col("vec_id") < seed_lo + k)
-        ).select(
-            (F.col("vec_id") - seed_lo).cast("int").alias("cluster"), "dim",
-            F.col("val").alias("c"),
-        )
+    m = local_df(
+        e.sparkSession,
+        [(int(v), i) for i, v in enumerate(seed_ids)],
+        "vec_id long, cluster int",
+    )
+    cent = e.join(F.broadcast(m), "vec_id").select(
+        "cluster", "dim", F.col("val").alias("c")
+    )
     assign = None
     wv = Window.partitionBy("vec_id", "sub").orderBy("dist", "cluster")
     for _ in range(iters):
@@ -1893,6 +1801,100 @@ def _pq_train(
             .localCheckpoint(eager=True)
         )
     return assign, cent
+
+
+def _pq_twin(pdf, k, seed_lo, sub_dim, iters, centroids):
+    """The driver half of _pq_codebook over a probed (vec_id,
+    embedding) frame: validation, seeds, IVF residuals (through the
+    same _ivf_assign_np the executor UDF runs, and the same float64
+    subtraction the residual join performs), then _pq_train_driver.
+    Returns (ids, assign, book) or None when the input is not
+    twin-trainable (a seed id absent, dim not a multiple of the
+    subspace width, or anything _probed_embeddings rejects)."""
+    got = _probed_embeddings(pdf)
+    if got is None:
+        return None
+    ids, vals = got
+    sd = sub_dim or vals.shape[1]
+    if seed_lo is None:
+        seeds = sorted(ids.tolist())[:k]
+    else:
+        seeds = list(range(seed_lo, seed_lo + k))
+    if vals.shape[1] % sd or not set(seeds) <= set(ids.tolist()):
+        return None
+    if centroids is not None:
+        vals = vals - centroids[_ivf_assign_np(vals, centroids, 1)[:, 0]]
+    return (ids, *_pq_train_driver(ids, vals, k, sd, iters, seeds))
+
+
+def _pq_dist(emb, k, seed_lo, sub_dim, iters, centroids):
+    """The distributed half of _pq_codebook: the exploded training fact
+    checkpointed once, then _pq_train. Returns (assign, cent)."""
+    e = _pq_fact(emb, sub_dim, centroids)
+    if seed_lo is None:
+        ids = e.select("vec_id").distinct().orderBy("vec_id").limit(k)
+        seeds = [r[0] for r in ids.collect()]
+    else:
+        seeds = list(range(seed_lo, seed_lo + k))
+    return _pq_train(e, seeds, iters)
+
+
+def _pq_codebook(
+    emb: DataFrame,
+    k: int,
+    seed_lo: int | None = 0,
+    sub_dim: int | None = PQ_SUB_DIM,
+    iters: int = PQ_ITERS,
+    centroids: np.ndarray | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Train per-subspace Lloyd codebooks on ``emb``'s (vec_id,
+    embedding) — the one entry of the Lloyd-family trainers (flat
+    k-means with ``sub_dim=None``, the PQ audit, IVF-PQ with
+    ``centroids``). Cluster j is seeded from vec_id seed_lo + j
+    (``seed_lo=None``: the k smallest ids). Under the driver bound
+    (localdf.bounded_or_distributed) the numpy twin runs on the one
+    bounded probe; past it, or on input the twin declines, the
+    distributed ladder runs. Both paths walk the identical fixed-point
+    trajectory and return the distributed schema: (assign, cent) —
+    one (vec_id, sub, cluster) row per (vector, subspace), and the
+    (cluster, dim, c) codebook without the rows of codewords that
+    lost every member. The twin's assign carries a broadcast hint: it
+    is driver-built and bounded by the cap, but near the cap it
+    outgrows the planner's auto-broadcast threshold."""
+
+    def twin(pdf):
+        got = _pq_twin(pdf, k, seed_lo, sub_dim, iters, centroids)
+        if got is None:
+            return None
+        ids, a_np, book = got
+        n_sub, _, sd = book.shape
+        assign = local_df(
+            emb.sparkSession,
+            [
+                (int(i), s, int(a_np[r, s]))
+                for r, i in enumerate(ids.tolist())
+                for s in range(n_sub)
+            ],
+            "vec_id long, sub int, cluster int",
+        )
+        cent = local_df(
+            emb.sparkSession,
+            [
+                (j, s * sd + d, float(book[s, j, d]))
+                for s in range(n_sub)
+                for j in range(k)
+                for d in range(sd)
+                if book[s, j, d] == book[s, j, d]
+            ],
+            "cluster int, dim int, c double",
+        )
+        return F.broadcast(assign), cent
+
+    return bounded_or_distributed(
+        emb.select("vec_id", "embedding"),
+        twin,
+        lambda: _pq_dist(emb, k, seed_lo, sub_dim, iters, centroids),
+    )
 
 
 def _pq_oracle() -> str:
@@ -1938,67 +1940,19 @@ def pq_quantization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-pointed and DECIMAL-summed (the embedding_quantization
     recipe), and max |err| compares identical doubles.
 
-    Scale shape (r14): TRAINING is a bounded-input job — when the
-    corpus fits the driver bound it collects once and runs the
-    identical fixed-point trajectory in numpy (_pq_train_driver; the
-    oracle gate arbitrates equality), with the distributed
-    iteration ladder below the bound's fallback; RECONSTRUCTION stays
-    distributed — one exploded pass over the corpus with the
-    codeword/assignment tables broadcast, the label rollup the only
-    label-sized output. In the distributed fallback the exploded fact
-    is checkpointed ONCE and reused by every iteration AND the
-    reconstruction join; per iteration the (8 sub x 4 k x 8 dims)
-    codebook BROADCASTS onto the fact, the distance agg lands on
-    (vec_id, sub, cluster), the argmin window and the join-back reuse
-    the vec_id partitioning, and the codebook update shuffles
-    map-side partials onto the 256-key (cluster, dim) space."""
-    from sql_flow_spark.localdf import local_df
-
-    t = load_tables(spark, sf_dir, ("embeddings",))
-    emb = t["embeddings"]
-    fast = None
-    got = _collect_embeddings(emb)
-    if got is not None:
-        ids, vals = got
-        seed_ids = list(range(PQ_K))
-        if (
-            len(vals)
-            and vals.shape[1] % PQ_SUB_DIM == 0
-            and set(seed_ids) <= set(ids.tolist())
-        ):
-            try:
-                fast = _pq_train_driver(
-                    ids, vals, PQ_K, PQ_SUB_DIM, seed_ids=seed_ids
-                )
-            except _TwinOverflow:
-                fast = None
-    if fast is not None:
-        a_np, book = fast
-        n_sub = vals.shape[1] // PQ_SUB_DIM
-        assign = F.broadcast(local_df(
-            spark,
-            [
-                (int(i), s, int(a_np[r, s]))
-                for r, i in enumerate(ids.tolist())
-                for s in range(n_sub)
-            ],
-            "vec_id long, sub int, cluster int",
-        ))
-        cent = local_df(
-            spark,
-            [
-                (j, s * PQ_SUB_DIM + d, float(book[s, j, d]))
-                for s in range(n_sub)
-                for j in range(PQ_K)
-                for d in range(PQ_SUB_DIM)
-                if book[s, j, d] == book[s, j, d]
-            ],
-            "cluster int, dim int, c double",
-        )
-        e = _pq_fact(emb, materialize=False)  # one consumer: scan-fused
-    else:
-        e = _pq_fact(emb)
-        assign, cent = _pq_train(e)
+    Scale shape: TRAINING is _pq_codebook — the numpy twin under the
+    driver bound, the distributed ladder past it (the exploded fact
+    checkpointed ONCE and reused by every iteration; per iteration
+    the (8 sub x 4 k x 8 dims) codebook BROADCASTS onto the fact, the
+    distance agg lands on (vec_id, sub, cluster), the argmin window
+    and the join-back reuse the vec_id partitioning, and the codebook
+    update shuffles map-side partials onto the 256-key (cluster, dim)
+    space). RECONSTRUCTION is one scan-fused exploded pass over the
+    corpus with the codebook broadcast, the label rollup the only
+    label-sized output."""
+    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
+    assign, cent = _pq_codebook(emb, PQ_K)
+    e = _pq_fact(emb, materialize=False)  # one consumer: scan-fused
     err = F.col("val") - F.col("c")
     rec = (
         e.join(assign, ["vec_id", "sub"])
@@ -2081,8 +2035,6 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (qid, nid) sum; every shuffle key (cell, nid, qid) is the natural
     one. ADC ranks by dot(q, x̂)/|x| (true corpus norms ride the
     candidate rows; |q| is per-query constant, rank-neutral)."""
-    from sql_flow_spark.functions.mat import materialize_once
-
     t = load_tables(spark, sf_dir, ("embeddings",), spread=False)
     emb = t["embeddings"]
     e = _with_norm(emb)
@@ -2104,80 +2056,12 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(q), F.col("cell") == F.col("qcell")
     ).select("qid", "nid", "cell", "cnrm")
 
-    # (cell, dim, cval) coarse-centroid table — IVF_K*64 rows, broadcast
-    # (Arrow local frame: no 32-task Python-RDD scan, see localdf.py)
-    from sql_flow_spark.localdf import local_df
-
-    cent_rows = [
-        (int(cid), int(d), float(v))
-        for cid, row in enumerate(cent_ivf)
-        for d, v in enumerate(row)
-    ]
-    cent_df = local_df(spark, cent_rows, "cell int, dim int, cval double")
-    # PQ training (r14): bounded-input job — under the driver bound,
-    # one collect + the identical fixed-point numpy trajectory
-    # (_pq_train_driver; cell assignment through the same
-    # _ivf_assign_np the executor UDF runs, residual through the same
-    # float64 subtraction the cent_df join performs); codes/codebook
-    # return as Arrow local frames for the unchanged distributed ADC.
-    # Fallback below the bound: the r13 shape — residual fact
-    # checkpointed ONCE (­_pq_train re-reads it twice per iteration
-    # plus the seed collect), distributed Lloyd.
-    fastpq = None
-    got = _collect_embeddings(emb.where(F.col("vec_id") >= N_QUERIES))
-    if got is not None:
-        pids, pvals = got
-        seed_ids = list(range(N_QUERIES, N_QUERIES + IVFPQ_PQ_K))
-        if len(pvals) and set(seed_ids) <= set(pids.tolist()):
-            cells_np = _ivf_assign_np(pvals, cent_ivf, 1)[:, 0]
-            res_np = pvals - cent_ivf[cells_np]
-            try:
-                fastpq = _pq_train_driver(
-                    pids, res_np, IVFPQ_PQ_K, PQ_SUB_DIM,
-                    seed_ids=seed_ids,
-                )
-            except _TwinOverflow:
-                fastpq = None
-    if fastpq is not None:
-        a_np, book = fastpq
-        n_sub = pvals.shape[1] // PQ_SUB_DIM
-        codes = local_df(
-            spark,
-            [
-                (int(i), s, int(a_np[r, s]))
-                for r, i in enumerate(pids.tolist())
-                for s in range(n_sub)
-            ],
-            "vec_id long, sub int, cluster int",
-        )
-        cb = local_df(
-            spark,
-            [
-                (j, s * PQ_SUB_DIM + d, float(book[s, j, d]))
-                for s in range(n_sub)
-                for j in range(IVFPQ_PQ_K)
-                for d in range(PQ_SUB_DIM)
-                if book[s, j, d] == book[s, j, d]
-            ],
-            "cluster int, dim int, c double",
-        )
-    else:
-        res_fact = _pq_fact(
-            emb.where(F.col("vec_id") >= N_QUERIES)
-        )
-        res_fact = materialize_once(
-            res_fact.withColumnRenamed("val", "rawval")
-            .join(
-                cells.select(F.col("nid").alias("vec_id"), "cell"),
-                "vec_id",
-            )
-            .join(F.broadcast(cent_df), ["cell", "dim"])
-            .select(
-                "vec_id", "dim", "sub",
-                (F.col("rawval") - F.col("cval")).alias("val"),
-            )
-        )
-        codes, cb = _pq_train(res_fact, seed_lo=N_QUERIES, k=IVFPQ_PQ_K)
+    cent_df = _cell_df(spark, cent_ivf)
+    # PQ codebooks train on the corpus cell residuals (_pq_codebook)
+    codes, cb = _pq_codebook(
+        emb.where(F.col("vec_id") >= N_QUERIES), IVFPQ_PQ_K,
+        seed_lo=N_QUERIES, centroids=cent_ivf,
+    )
     qfact = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"),
         F.posexplode("embedding").alias("dim", "qval"),

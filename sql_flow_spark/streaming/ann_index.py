@@ -61,12 +61,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sql_flow_spark.functions.similarity import (
+    PQ_ITERS,
+    _pq_dist,
+    _pq_twin,
     dot_dec_fast,
     ivf_assign,
     ivf_centroids,
     safe_cos,
     sq_norm_dec,
 )
+from sql_flow_spark.localdf import bounded_or_distributed
 from sql_flow_spark.streaming import foreach_batch_query
 from sql_flow_spark.streaming.compaction import (
     MarkerCommit,
@@ -167,7 +171,7 @@ class IncrementalIVF:
         # encoder never selects them, the LUT zeroes them.
         self.pq_codebook = pq_codebook
         self._mc = MarkerCommit(index_dir, FOLD_SLOTS)
-        self._index_schema = None  # memoized on first index_df() read
+        self._index_schema = None  # (memo key, schema) — see index_df
 
     @property
     def k(self) -> int:
@@ -217,124 +221,38 @@ class IncrementalIVF:
         """Train per-subspace codebooks on the CELL RESIDUALS of the
         build corpus (x − c_cell — residuals are small, so codewords
         describe within-cell structure; the flat-PQ variant measured
-        recall 0.075 in ann_ivfpq_topk's A/B). Training is
-        functions/similarity._pq_train's pinned Lloyd trajectory; seeds
-        are the pq_k smallest vec_ids (deterministic, id-contract-free).
-        Returns the (n_sub, pq_k, sub_dim) codebook; codewords that
-        lost every member stay NaN (never encoded to, zeroed in the
-        LUT).
-
-        r14 optimization: quantizer training is a bounded-input job by
-        construction (faiss trains coarse and PQ quantizers on a
-        corpus sample, never the corpus — ivf_centroids already makes
-        that argument for the coarse stage). When the build corpus
-        fits the driver bound, collect it ONCE and run the identical
-        fixed-point trajectory in numpy (_pq_train_driver in
-        functions/similarity.py — bit-equal by construction, verified
-        bit-for-bit against the distributed trainer at sf0.01/sf0.1):
-        the exploded-fact checkpoint, the seed collect and the
-        per-iteration distributed Lloyd jobs (~10 Spark jobs) collapse
-        into one bounded collect. Beyond the bound the distributed
-        trajectory runs unchanged — the same small-side/large-side
-        switch a broadcast join makes."""
-        import numpy as np
-
-        from sql_flow_spark.functions.similarity import (
-            _PQ_DRIVER_TRAIN_CAP,
-            _ivf_assign_np,
-            _pq_train_driver,
-            _TwinOverflow,
-        )
-
+        recall 0.075 in ann_ivfpq_topk's A/B). Training runs the two
+        halves of functions/similarity._pq_codebook's pinned Lloyd
+        trajectory: the numpy twin (_pq_twin) under the driver bound
+        (quantizers train on a bounded sample by construction, as
+        faiss does), the distributed ladder (_pq_dist) past it. Seeds
+        are the pq_k smallest vec_ids (deterministic,
+        id-contract-free). Returns the (n_sub, pq_k, sub_dim)
+        codebook; codewords that lost every member stay NaN (never
+        encoded to, zeroed in the LUT)."""
         dim = len(self.centroids[0])
         sd = self.pq_sub_dim
         if dim % sd:
             raise ValueError(
                 f"embedding dim {dim} is not divisible by pq_sub_dim {sd}"
             )
-        rows = (
-            corpus.select(self.id_col, self.emb_col)
-            .limit(_PQ_DRIVER_TRAIN_CAP + 1)
-            .collect()
+        emb = corpus.select(
+            F.col(self.id_col).alias("vec_id"),
+            F.col(self.emb_col).alias("embedding"),
         )
-        clean = len(rows) <= _PQ_DRIVER_TRAIN_CAP and all(
-            r[1] is not None
-            and len(r[1]) == dim
-            and all(v is not None for v in r[1])
-            for r in rows
-        )
-        if clean:
-            ids = np.array([r[0] for r in rows], dtype=np.int64)
-            if len(np.unique(ids)) == len(ids):  # dup ids -> distributed
-                embs = np.array([r[1] for r in rows], dtype=np.float64)
-                if np.all(np.isfinite(embs)):
-                    cells = _ivf_assign_np(embs, self.centroids, 1)[:, 0]
-                    res = embs - self.centroids[cells]
-                    try:
-                        _, book = _pq_train_driver(ids, res, pq_k, sd)
-                        return book
-                    except _TwinOverflow:
-                        pass  # magnitudes past the exactness bound
-        return self._train_pq_distributed(corpus, pq_k)
 
-    def _train_pq_distributed(self, corpus: DataFrame, pq_k: int):
-        """The at-scale trainer: similarity._pq_train's distributed
-        Lloyd over the exploded residual fact (see _train_pq)."""
-        import numpy as np
+        def twin(pdf):
+            got = _pq_twin(pdf, pq_k, None, sd, PQ_ITERS, self.centroids)
+            return None if got is None else got[2]
 
-        from sql_flow_spark.functions.similarity import PQ_ITERS, _pq_train
+        def dist():
+            _, cb = _pq_dist(emb, pq_k, None, sd, PQ_ITERS, self.centroids)
+            book = np.full((dim // sd, pq_k, sd), np.nan)
+            for r in cb.collect():
+                book[r["dim"] // sd, r["cluster"], r["dim"] % sd] = r["c"]
+            return book
 
-        dim = len(self.centroids[0])
-        sd = self.pq_sub_dim
-        n_sub = dim // sd
-        from sql_flow_spark.functions.mat import materialize_once
-        from sql_flow_spark.localdf import local_df
-
-        cent_df = local_df(
-            self.spark,
-            [
-                (int(c), int(d), float(v))
-                for c, row in enumerate(self.centroids)
-                for d, v in enumerate(row)
-            ],
-            "cell int, dim int, cval double",
-        )
-        assigned = self._assigned_base(corpus)
-        # checkpointed ONCE (r13): _pq_train reads this fact twice per
-        # iteration plus the seed join — without the materialization
-        # every pass re-ran the cell-assign pandas UDF and the
-        # centroid join; partitioned at core count because the
-        # training aggregates are CPU-bound on tiny bytes (see
-        # similarity._lloyd)
-        fact = materialize_once(
-            assigned.select(
-                "vec_id", "cell",
-                F.posexplode("embedding").alias("dim", "rawval"),
-            )
-            .join(F.broadcast(cent_df), ["cell", "dim"])
-            .select(
-                "vec_id",
-                F.col("dim").cast("int").alias("dim"),
-                F.floor(F.col("dim") / F.lit(sd)).cast("int").alias("sub"),
-                (F.col("rawval") - F.col("cval")).alias("val"),
-            )
-            .repartition(
-                self.spark.sparkContext.defaultParallelism, "vec_id"
-            )
-        )
-        seed_ids = [
-            r[0]
-            for r in fact.select("vec_id")
-            .distinct()
-            .orderBy("vec_id")
-            .limit(pq_k)
-            .collect()
-        ]
-        _, cb = _pq_train(fact, k=pq_k, iters=PQ_ITERS, seed_ids=seed_ids)
-        book = np.full((n_sub, pq_k, sd), np.nan, dtype=np.float64)
-        for r in cb.collect():
-            book[r["dim"] // sd, r["cluster"], r["dim"] % sd] = r["c"]
-        return book
+        return bounded_or_distributed(emb, twin, dist)
 
     @classmethod
     def load(cls, spark: SparkSession, index_dir: str) -> "IncrementalIVF":
@@ -502,6 +420,7 @@ class IncrementalIVF:
         # cell collapses it to one file per cell, the shape a 100 TB
         # partitioned index write needs anyway.
         assigned = self._assigned(df).repartition("cell")
+        self._index_schema = None
         with lease_heartbeat(self.index_dir):
             (
                 assigned.write.mode("overwrite")
@@ -602,6 +521,7 @@ class IncrementalIVF:
         if wm is None and self._mc.has_dir(SEED_BATCH):
             cond = cond | (F.col("b") == SEED_BATCH)
         target = self._mc.inactive_slot(slot)
+        self._index_schema = None
         cols = ["vec_id", "embedding", "nrm", "cell"] + (
             ["codes"] if self.pq else []
         )
@@ -624,18 +544,28 @@ class IncrementalIVF:
     # -------------------------------------------------------- search
 
     def index_df(self) -> DataFrame:
-        # Schema memo (r14, guide §6): the index schema is fixed at
-        # build time, but a bare read infers it from file footers on
-        # EVERY call — search_pq alone reads the index twice (candidate
-        # + rerank scans). Infer once per IncrementalIVF instance and
-        # pass it explicitly afterwards; partition discovery still runs
-        # (the file set does change between batches).
-        reader = self.spark.read
-        if getattr(self, "_index_schema", None) is not None:
-            reader = reader.schema(self._index_schema)
-        df = reader.parquet(self.index_dir)
-        self._index_schema = df.schema
+        # Schema memo (guide §6): a bare read infers the schema from
+        # file footers on EVERY call — search_pq alone reads the index
+        # twice (candidate + rerank scans). Infer once and pass it
+        # explicitly afterwards, until the column set may have changed:
+        # this instance wrote (_write_batch and compact drop the memo),
+        # or the committed marker or _meta.json (rewritten by every
+        # build) differs from the one the memo was taken under. An
+        # explicit schema would read columns missing from rebuilt files
+        # as NULL. Partition discovery still runs (the file set does
+        # change between batches).
         wm, slot = self._mc.marker()
+        try:
+            meta = os.stat(os.path.join(self.index_dir, _META)).st_mtime_ns
+        except OSError:
+            meta = None
+        key = (wm, slot, meta)
+        reader = self.spark.read
+        memo = getattr(self, "_index_schema", None)
+        if memo is not None and memo[0] == key:
+            reader = reader.schema(memo[1])
+        df = reader.parquet(self.index_dir)
+        self._index_schema = (key, df.schema)
         if wm is not None:
             df = df.where(
                 (F.col("b") == slot)

@@ -242,8 +242,10 @@ def load_tables(
                 dim = _array_dim_from_parquet(path, col)
                 if dim is not None:
                     # nrows rides along (footer metadata, driver-side):
-                    # the Lloyd/power-iteration facts size their
-                    # partition count from it (similarity._fact_parts)
+                    # the trainer facts size their partition count from
+                    # it (similarity._fact_parts), and
+                    # localdf.bounded_or_distributed skips its probe
+                    # when it is over the driver cap
                     df = df.withColumn(
                         col,
                         F.col(col).alias(

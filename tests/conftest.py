@@ -1,3 +1,5 @@
+import contextlib
+
 import pytest
 
 from sql_flow_spark.session import get_spark
@@ -13,3 +15,41 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def forced_distributed(monkeypatch):
+    """Context-manager factory for the forced-distributed lane: inside
+    ``with forced_distributed():`` the bounded-trainer cap
+    (localdf.DRIVER_CAP) is 0, so every bounded_or_distributed call
+    takes its distributed path, and a driver twin call fails the test.
+    The yielded list records one entry per distributed path taken; the
+    block must take at least one."""
+    from sql_flow_spark import localdf
+    from sql_flow_spark.functions import bpe, similarity
+    from sql_flow_spark.streaming import ann_index
+
+    real = localdf.bounded_or_distributed
+
+    @contextlib.contextmanager
+    def force():
+        runs = []
+
+        def no_twin(probed):
+            raise AssertionError("driver twin ran with the cap at 0")
+
+        def spy(df, twin, dist):
+            def counted():
+                runs.append(dist)
+                return dist()
+
+            return real(df, no_twin, counted)
+
+        with monkeypatch.context() as m:
+            m.setattr(localdf, "DRIVER_CAP", 0)
+            for mod in (localdf, similarity, bpe, ann_index):
+                m.setattr(mod, "bounded_or_distributed", spy)
+            yield runs
+        assert runs, "no bounded_or_distributed call took the distributed path"
+
+    return force

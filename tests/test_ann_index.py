@@ -363,6 +363,46 @@ def test_pq_build_search_reload_replay_compact(spark, tmp_path):
     assert len(idx.search_pq(qz, topk=5).collect()) == 5
 
 
+def test_pq_codebook_equal_on_both_trainer_paths(
+    spark, tmp_path, forced_distributed
+):
+    """build(pq_k) trains the residual-PQ codebook with the numpy twin;
+    with the driver cap at 0 the distributed trainer must produce the
+    identical codebook, dead codewords (NaN) included."""
+    import numpy as np
+
+    corpus = _corpus_df(spark)
+    kw = dict(k=4, nprobe=2, pq_k=4, pq_sub_dim=4)
+    twin = IncrementalIVF.build(spark, str(tmp_path / "twin"), corpus, **kw)
+    with forced_distributed():
+        dist = IncrementalIVF.build(
+            spark, str(tmp_path / "dist"), corpus, **kw
+        )
+    assert twin.pq_codebook.shape == (2, 4, 4)
+    assert np.array_equal(twin.pq_codebook, dist.pq_codebook, equal_nan=True)
+
+
+def test_index_df_reads_rebuilt_column_set(spark, tmp_path):
+    """A live instance's memoized read schema must not outlive a
+    rebuild of its directory: rebuilt with PQ, index_df() reads the
+    new codes column; rebuilt without, the column is gone instead of
+    read back as NULLs."""
+    index_dir = str(tmp_path / "ivf")
+    corpus = _corpus_df(spark)
+    live = IncrementalIVF.build(spark, index_dir, corpus, k=4, nprobe=2)
+    assert "codes" not in live.index_df().columns
+
+    IncrementalIVF.build(
+        spark, index_dir, corpus, k=4, nprobe=2, pq_k=4, pq_sub_dim=4
+    )
+    df = live.index_df()
+    assert "codes" in df.columns
+    assert df.where(F.col("codes").isNull()).count() == 0
+
+    IncrementalIVF.build(spark, index_dir, corpus, k=4, nprobe=2)
+    assert "codes" not in live.index_df().columns
+
+
 def test_search_pq_requires_pq_index(spark, tmp_path):
     import pytest
 

@@ -3,6 +3,9 @@ the driver only row-counts these, so we pin their actual guarantees
 here: candidate recall, threshold soundness, subset relations vs the
 exact baselines."""
 
+import contextlib
+
+import pytest
 from pyspark.sql import functions as F
 
 from sql_flow_spark.operators import QUERIES
@@ -420,20 +423,26 @@ def test_dedup_phash_runs_on_documents(spark, sf_dir):
     assert all(r.hamming <= 3 for r in rows)
 
 
-def test_power_iteration_tracks_numpy_trajectory(spark, sf_dir):
+@pytest.mark.parametrize("path", ["twin", "distributed"])
+def test_power_iteration_tracks_numpy_trajectory(
+    path, spark, sf_dir, forced_distributed
+):
     """embedding_top_pc's six fixed-point steps must land within
     float rounding of numpy's float64 power iteration from the same
-    start — i.e. the distributed loop computes the real algorithm,
-    not an approximation of it."""
+    start — on both the driver twin and (cap 0) the distributed loop,
+    i.e. each computes the real algorithm, not an approximation of
+    it."""
     import numpy as np
 
     from sql_flow_spark.functions.similarity import _PI_ITERS
 
-    rows = (
-        QUERIES["embedding_top_pc"](spark, sf_dir)
-        .orderBy("dim")
-        .collect()
-    )
+    forced = path == "distributed"
+    with forced_distributed() if forced else contextlib.nullcontext():
+        rows = (
+            QUERIES["embedding_top_pc"](spark, sf_dir)
+            .orderBy("dim")
+            .collect()
+        )
     got = np.array([r["loading"] for r in rows])
 
     emb = (
@@ -451,16 +460,20 @@ def test_power_iteration_tracks_numpy_trajectory(spark, sf_dir):
     assert abs(float(np.linalg.norm(got)) - 1.0) < 1e-9
 
 
-def test_kmeans_tracks_numpy_lloyd(spark, sf_dir):
+@pytest.mark.parametrize("path", ["twin", "distributed"])
+def test_kmeans_tracks_numpy_lloyd(path, spark, sf_dir, forced_distributed):
     """kmeans_embeddings' four fixed-point Lloyd iterations must land
     within float rounding of numpy's float64 Lloyd from the same
-    seeds with the same (dist, cluster) argmin tiebreak — i.e. the
-    distributed loop computes the real algorithm."""
+    seeds with the same (dist, cluster) argmin tiebreak — on both the
+    driver twin and (cap 0) the distributed loop, i.e. each computes
+    the real algorithm."""
     import numpy as np
 
     from sql_flow_spark.functions.similarity import _KM_ITERS, _KM_K
 
-    rows = QUERIES["kmeans_embeddings"](spark, sf_dir).collect()
+    forced = path == "distributed"
+    with forced_distributed() if forced else contextlib.nullcontext():
+        rows = QUERIES["kmeans_embeddings"](spark, sf_dir).collect()
     got = np.zeros((_KM_K, max(r.dim for r in rows) + 1))
     sizes = {}
     for r in rows:

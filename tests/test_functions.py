@@ -404,6 +404,38 @@ def test_bpe_merge_sequence_matches_reference(spark, sf_dir):
     assert got == expected
 
 
+def test_bpe_over_cap_vocab_aggregates_once(spark, sf_dir, forced_distributed):
+    """Past the driver cap (forced to 0) learn_merges must build the
+    corpus vocabulary ONCE: the probe and the distributed ladder both
+    read its checkpoint instead of re-running the tokenize/explode/
+    groupBy. The documents are spread over 13 partitions so the
+    aggregate's input stage is the only 13-task stage; the test counts
+    the jobs that ran it."""
+    from sql_flow_spark.functions.bpe import learn_merges
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(13)
+    sc = spark.sparkContext
+    group = "test-bpe-vocab-aggregate"
+    sc.setJobGroup(group, "learn_merges past the cap")
+    try:
+        with forced_distributed():
+            learn_merges(docs, 2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    aggregate_jobs = [
+        j
+        for j in st.getJobIdsForGroup(group)
+        if any(
+            (si := st.getStageInfo(s)) is not None
+            and si.numTasks == 13
+            and si.numCompletedTasks == 13
+            for s in st.getJobInfo(j).stageIds
+        )
+    ]
+    assert len(aggregate_jobs) == 1, aggregate_jobs
+
+
 def test_bpe_deterministic_tiebreak(spark):
     from sql_flow_spark.functions.bpe import learn_merges
 
