@@ -77,6 +77,7 @@ from sql_flow_spark.streaming.compaction import (
     assert_no_live_writer,
     lease_heartbeat,
 )
+from sql_flow_spark.tables import part_files, read_footer
 
 logger = logging.getLogger(__name__)
 
@@ -435,21 +436,14 @@ class IncrementalIVF:
         # ~two full Spark jobs cheaper per append/build; at object-
         # store scale this is the standard list+footer pass over one
         # batch directory, O(files in the batch).
-        import pyarrow.parquet as pq
-
         base = f"{self.index_dir}/b={batch_id}"
         occ: dict[int, int] = {}
         for d in os.listdir(base):
             if not d.startswith("cell="):
                 continue
             cell = int(d.split("=", 1)[1])
-            n = 0
-            cdir = os.path.join(base, d)
-            for fn in os.listdir(cdir):
-                if fn.endswith(".parquet") and not fn.startswith((".", "_")):
-                    n += pq.ParquetFile(
-                        os.path.join(cdir, fn)
-                    ).metadata.num_rows
+            # unmemoized: every batch directory is a new path
+            n = read_footer(part_files(os.path.join(base, d))).nrows
             if n:
                 occ[cell] = n
         return occ

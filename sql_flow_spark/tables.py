@@ -5,12 +5,22 @@ file per table. ``load_tables`` reads them lazily and registers temp
 views so operators can be written either via the DataFrame API or
 ``spark.sql``. Reads are plain ``spark.read.parquet`` — column pruning
 and predicate pushdown then happen per-query via Catalyst.
+
+Source metadata comes from one footer record per table
+(``TableFooter``): ``part_files`` lists the part files once, sorted,
+with their ``(path, size, mtime_ns)``; ``read_footer`` opens each
+footer once and adds total row groups, total rows and the vector
+columns' dims. ``load_tables`` memoizes the record per table path and
+keys it on that per-file signature, so an in-place rewrite of a part
+file is seen on the next load. The record feeds the ``{"dim", "nrows"}``
+column metadata and the small-scan spread bound (``_scan_bound``).
 """
 
 from __future__ import annotations
 
 import os
 import weakref
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,118 +81,102 @@ _SPREAD_SCAN_TABLES = ("documents", "embeddings")
 # fixed hyperplanes/codebooks (pinned in tests/test_approx_quality.py).
 
 
-# Per-(path, mtime) memo of the scan-parallelism probe below: the
-# footer read is cheap (~ms) but load_tables runs per QUERY, and the
-# probe's result only changes when the file set does.
-_SPLIT_CACHE: dict[tuple[str, float], int] = {}
+class TableFooter(NamedTuple):
+    """What a table's parquet footers say, read in one driver-side pass
+    (no Spark job). ``files`` is the sorted ``(path, size, mtime_ns)``
+    of every part file and doubles as the memo signature; ``dims`` maps
+    each requested vector column to the length of its first value in
+    the first part (None when absent, empty or null — parquet schemas
+    carry no list lengths)."""
+
+    files: tuple[tuple[str, int, int], ...]
+    row_groups: int
+    nrows: int
+    dims: tuple[tuple[str, int | None], ...]
 
 
-def _max_scan_splits(path: str) -> int:
-    """Upper bound on the parquet scan's parallelism: the total
-    row-group count across the table's files (a row group is the
-    smallest splittable read unit, so no maxPartitionBytes setting can
-    produce more non-empty scan tasks than this). Driver-side footer
-    metadata only — replaces the r13 ``df.rdd.getNumPartitions()``
-    probe, which forced a full analysis + physical plan + RDD
-    conversion on EVERY load_tables call (ADVICE r13) and is
-    unavailable under Spark Connect. Unreadable paths report a large
-    bound (= never spread, the safe default at scale)."""
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        return 1 << 30
-    key = (path, mtime)
-    if key in _SPLIT_CACHE:
-        return _SPLIT_CACHE[key]
-    try:
-        import pyarrow.parquet as pq
+# An unreadable table: no files (never spread), nrows 0, no dims.
+_UNREADABLE = TableFooter((), 0, 0, ())
 
-        files = [path]
-        if os.path.isdir(path):
-            files = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            ]
-        n = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
-    except Exception:
-        n = 1 << 30
-    _SPLIT_CACHE[key] = n
-    return n
+# path -> its last footer record. load_tables runs per QUERY, so the
+# footers are read once per file version; a rewrite changes the
+# signature and replaces the entry, bounding the memo by table paths.
+_FOOTERS: dict[str, TableFooter] = {}
 
 
-_NROWS_CACHE: dict[tuple[str, float], int] = {}
+def part_files(path: str) -> tuple[tuple[str, int, int], ...]:
+    """``(path, size, mtime_ns)`` of a table's data files, sorted:
+    ``path`` itself, or a directory's visible ``.parquet`` parts.
+    Raises OSError when the path is missing."""
+    names = [path]
+    if os.path.isdir(path):
+        names = sorted(
+            os.path.join(path, f)
+            for f in os.listdir(path)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        )
+    stats = [(f, os.stat(f)) for f in names]
+    return tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
 
 
-def _parquet_num_rows(path: str) -> int:
-    """Total row count from parquet footers (driver-side metadata,
-    memoized per (path, mtime)); 0 when unreadable."""
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        return 0
-    key = (path, mtime)
-    if key in _NROWS_CACHE:
-        return _NROWS_CACHE[key]
-    try:
-        import pyarrow.parquet as pq
+def read_footer(
+    files: tuple[tuple[str, int, int], ...], vector_cols: tuple[str, ...] = ()
+) -> TableFooter:
+    """Unmemoized: open each footer of ``files`` (from part_files) once,
+    decoding one value per vector column from the first part. Raises on
+    an unreadable file."""
+    import pyarrow.parquet as pq
 
-        files = [path]
-        if os.path.isdir(path):
-            files = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            ]
-        n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
-        n = 0
-    _NROWS_CACHE[key] = n
-    return n
+    row_groups = nrows = 0
+    dims: tuple[tuple[str, int | None], ...] = ()
+    for i, (f, _, _) in enumerate(files):
+        pf = pq.ParquetFile(f)
+        row_groups += pf.metadata.num_row_groups
+        nrows += pf.metadata.num_rows
+        if i == 0:
+            dims = tuple((c, _first_len(pf, c)) for c in vector_cols)
+    return TableFooter(files, row_groups, nrows, dims)
 
 
-_DIM_CACHE: dict[tuple[str, str, float], int | None] = {}
-
-
-def _array_dim_from_parquet(path: str, col: str) -> int | None:
-    """Vector dimensionality by decoding ONE value of ``col`` from the
-    first row group — a driver-side pyarrow read of a few KB, not a
-    Spark job. Parquet schemas don't carry list lengths, so this is the
-    cheapest source of truth; at cluster scale the same read hits only
-    one footer + one column chunk of one file. Memoized per
-    (path, col, mtime) — load_tables runs per query (r14)."""
-    try:
-        key = (path, col, os.path.getmtime(path))
-        if key in _DIM_CACHE:
-            return _DIM_CACHE[key]
-    except OSError:
-        key = None
-    try:
-        import pyarrow.parquet as pq
-
-        target = path
-        if os.path.isdir(path):
-            parts = sorted(
-                f for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
-            if not parts:
-                return None
-            target = os.path.join(path, parts[0])
-        pf = pq.ParquetFile(target)
-        dim = None
-        if col in pf.schema_arrow.names:
-            batch = next(
-                pf.iter_batches(batch_size=1, columns=[col]), None
-            )
-            if batch is not None and batch.num_rows > 0:
-                value = batch.column(0)[0].as_py()
-                dim = len(value) if value is not None else None
-        if key is not None:
-            _DIM_CACHE[key] = dim
-        return dim
-    except Exception:  # missing/odd file: builders fall back to probing
+def _first_len(pf, col: str) -> int | None:
+    if col not in pf.schema_arrow.names:
         return None
+    batch = next(pf.iter_batches(batch_size=1, columns=[col]), None)
+    value = batch.column(0)[0].as_py() if batch and batch.num_rows else None
+    return None if value is None else len(value)
+
+
+def _footer(path: str, vector_cols: tuple[str, ...]) -> TableFooter:
+    """The memoized record: re-read only when the file set's signature
+    changed. Unreadable paths give _UNREADABLE, never memoized."""
+    try:
+        files = part_files(path)
+        hit = _FOOTERS.get(path)
+        if hit is None or hit.files != files:
+            hit = _FOOTERS[path] = read_footer(files, vector_cols)
+        return hit
+    except Exception:
+        return _UNREADABLE
+
+
+def _scan_bound(spark: SparkSession, meta: TableFooter, par: int) -> int:
+    """Upper bound on the non-empty tasks of a plain scan of the table.
+    Spark cuts each file into ceil(size / maxSplitBytes) splits and packs
+    splits into tasks (FilePartition.maxSplitBytes, with ``par`` as the
+    parallelism), and a split holding no row-group midpoint reads
+    nothing, so neither the split count nor the row-group count can be
+    exceeded. Footer metadata and two session confs only: planning the
+    scan to count its partitions would cost a full analysis on every
+    load_tables call. Unreadable tables report an unbounded scan (never
+    spread, the safe default at scale)."""
+    if not meta.files:
+        return 1 << 30
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    total = sum(size + open_cost for _, size, _ in meta.files)
+    split = min(conf.filesMaxPartitionBytes(), max(open_cost, total // par))
+    splits = sum(-(-size // split) for _, size, _ in meta.files)
+    return min(meta.row_groups, splits)
 
 
 def load_tables(
@@ -237,28 +231,23 @@ def load_tables(
         for col, dtype in df.dtypes:
             if dtype == "timestamp_ntz":
                 df = df.withColumn(col, F.col(col).cast("timestamp"))
-        for col in _VECTOR_COLS.get(name, ()):
-            if col in df.columns:
-                dim = _array_dim_from_parquet(path, col)
-                if dim is not None:
-                    # nrows rides along (footer metadata, driver-side):
-                    # the trainer facts size their partition count from
-                    # it (similarity._fact_parts), and
-                    # localdf.bounded_or_distributed skips its probe
-                    # when it is over the driver cap
-                    df = df.withColumn(
-                        col,
-                        F.col(col).alias(
-                            col,
-                            metadata={
-                                "dim": dim,
-                                "nrows": _parquet_num_rows(path),
-                            },
-                        ),
-                    )
+        meta = _footer(path, _VECTOR_COLS.get(name, ()))
+        for col, dim in meta.dims:
+            if dim is not None and col in df.columns:
+                # nrows rides along (footer metadata, driver-side):
+                # the trainer facts size their partition count from
+                # it (similarity._fact_parts), and
+                # localdf.bounded_or_distributed skips its probe
+                # when it is over the driver cap
+                df = df.withColumn(
+                    col,
+                    F.col(col).alias(
+                        col, metadata={"dim": dim, "nrows": meta.nrows}
+                    ),
+                )
         if spread and name in _SPREAD_SCAN_TABLES:
             par = spark.sparkContext.defaultParallelism
-            if _max_scan_splits(path) < par:
+            if _scan_bound(spark, meta, par) < par:
                 # Hash on the leading id column, not round-robin: a
                 # keyless repartition pays a local sort of its input
                 # (sortBeforeRepartition, kept on for retry safety)

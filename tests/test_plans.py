@@ -164,6 +164,16 @@ def test_embedding_builders_trigger_no_driver_jobs(spark, sf_dir, monkeypatch):
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     md = emb.schema["embedding"].metadata
     assert md.get("dim", 0) > 0
+    # the attached values are the file's: dim is the first vector's
+    # length, nrows the table's row count
+    import duckdb
+    import pyarrow.parquet as pq
+
+    path = f"{sf_dir}/embeddings.parquet"
+    first = pq.read_table(path, columns=["embedding"]).column(0)[0].as_py()
+    assert md["dim"] == len(first)
+    count = duckdb.sql(f"select count(*) from '{path}'").fetchone()[0]
+    assert md["nrows"] == count
 
     def _no_probe(self, *a, **k):
         raise AssertionError("builder fired a driver-side probe job")
