@@ -3,8 +3,8 @@
 The driver's synthetic TPC-H-ish tables (TESTDATA.md) are one parquet
 file per table. ``load_tables`` reads them lazily and registers temp
 views so operators can be written either via the DataFrame API or
-``spark.sql``. Reads are plain ``spark.read.parquet`` — column pruning
-and predicate pushdown then happen per-query via Catalyst.
+``spark.sql``; column pruning and predicate pushdown then happen
+per-query via Catalyst.
 
 Source metadata comes from one footer record per table
 (``TableFooter``): ``part_files`` lists the part files once, sorted,
@@ -14,16 +14,26 @@ columns' dims. ``load_tables`` memoizes the record per table path and
 keys it on that per-file signature, so an in-place rewrite of a part
 file is seen on the next load. The record feeds the ``{"dim", "nrows"}``
 column metadata and the small-scan spread bound (``_scan_bound``).
+
+The record also carries the table's schema as Spark inferred it (JSON).
+``read_footer`` leaves it None; the first load of a file set is a plain
+``spark.read.parquet``, whose schema-inference job fills it, and every
+later load of the same file set reads with ``spark.read.schema(stored)``
+and runs no Spark job. Paths with no readable part file (missing,
+unreadable footer, parts only in subdirectories) always take the plain
+inferred read, Spark's error included, and never store a schema.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import weakref
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 # Sessions whose defensive runtime confs are already applied (see
 # load_tables); weak so stopped sessions don't pin memory and replaced
@@ -87,15 +97,19 @@ class TableFooter(NamedTuple):
     of every part file and doubles as the memo signature; ``dims`` maps
     each requested vector column to the length of its first value in
     the first part (None when absent, empty or null — parquet schemas
-    carry no list lengths)."""
+    carry no list lengths). ``schema`` is the JSON of the StructType
+    Spark inferred for the file set, filled by load_tables after its
+    first read (None until then)."""
 
     files: tuple[tuple[str, int, int], ...]
     row_groups: int
     nrows: int
     dims: tuple[tuple[str, int | None], ...]
+    schema: str | None = None
 
 
-# An unreadable table: no files (never spread), nrows 0, no dims.
+# An unreadable table: no files (never spread), nrows 0, no dims, no
+# schema (always the plain inferred read).
 _UNREADABLE = TableFooter((), 0, 0, ())
 
 # path -> its last footer record. load_tables runs per QUERY, so the
@@ -221,19 +235,30 @@ def load_tables(
     out: dict[str, DataFrame] = {}
     for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")
-        df = spark.read.parquet(path)
+        meta = _footer(path, _VECTOR_COLS.get(name, ()))
+        if meta.schema is None:
+            # The inferring read (one Spark job); its schema is stored
+            # only for a readable file set, so a missing path keeps
+            # Spark's own error and no record.
+            df = spark.read.parquet(path)
+            schema = df.schema
+            if meta.files:
+                _FOOTERS[path] = meta._replace(schema=schema.json())
+        else:
+            schema = StructType.fromJson(json.loads(meta.schema))
+            df = spark.read.schema(schema).parquet(path)
+        types = {f.name: f.dataType for f in schema.fields}
         for col in _NANO_TS_COLS.get(name, ()):
-            if dict(df.dtypes).get(col) == "bigint":
+            if isinstance(types.get(col), LongType):
                 df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
         # Belt-and-braces for NTZ: with session tz pinned UTC the cast
         # keeps the same instant, and downstream micros/window math
         # works on either source schema generation.
-        for col, dtype in df.dtypes:
-            if dtype == "timestamp_ntz":
+        for col, dtype in types.items():
+            if isinstance(dtype, TimestampNTZType):
                 df = df.withColumn(col, F.col(col).cast("timestamp"))
-        meta = _footer(path, _VECTOR_COLS.get(name, ()))
         for col, dim in meta.dims:
-            if dim is not None and col in df.columns:
+            if dim is not None and col in types:
                 # nrows rides along (footer metadata, driver-side):
                 # the trainer facts size their partition count from
                 # it (similarity._fact_parts), and
@@ -259,7 +284,7 @@ def load_tables(
                 # at bench conf: char_entropy 1.02 -> 0.49 s,
                 # unigram_logprob 1.14 -> 0.77 s, rrf_fusion
                 # 2.10 -> 1.59 s, kmeans 3.86 -> 3.31 s.
-                df = df.repartition(par, F.col(df.columns[0]))
+                df = df.repartition(par, F.col(schema.names[0]))
         if register_views:
             df.createOrReplaceTempView(name)
         out[name] = df

@@ -1,4 +1,5 @@
 import contextlib
+import uuid
 
 import pytest
 
@@ -15,6 +16,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def job_ids(spark):
+    """Context-manager factory: ``with job_ids() as ids:`` runs the block
+    under a unique Spark job group; on exit ``ids`` holds the ids of the
+    jobs the block ran, from the status tracker once the listener bus
+    has delivered their events. Blocks nest: an inner block's jobs are
+    its own, and the outer group resumes on exit."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def run():
+        group = f"test-{uuid.uuid4().hex}"
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        ids = []
+        sc.setJobGroup(group, group)
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture

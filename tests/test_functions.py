@@ -404,7 +404,9 @@ def test_bpe_merge_sequence_matches_reference(spark, sf_dir):
     assert got == expected
 
 
-def test_bpe_over_cap_vocab_aggregates_once(spark, sf_dir, forced_distributed):
+def test_bpe_over_cap_vocab_aggregates_once(
+    spark, sf_dir, forced_distributed, job_ids
+):
     """Past the driver cap (forced to 0) learn_merges must build the
     corpus vocabulary ONCE: the probe and the distributed ladder both
     read its checkpoint instead of re-running the tokenize/explode/
@@ -414,18 +416,12 @@ def test_bpe_over_cap_vocab_aggregates_once(spark, sf_dir, forced_distributed):
     from sql_flow_spark.functions.bpe import learn_merges
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(13)
-    sc = spark.sparkContext
-    group = "test-bpe-vocab-aggregate"
-    sc.setJobGroup(group, "learn_merges past the cap")
-    try:
-        with forced_distributed():
-            learn_merges(docs, 2)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    st = sc.statusTracker()
+    with job_ids() as ids, forced_distributed():
+        learn_merges(docs, 2)
+    st = spark.sparkContext.statusTracker()
     aggregate_jobs = [
         j
-        for j in st.getJobIdsForGroup(group)
+        for j in ids
         if any(
             (si := st.getStageInfo(s)) is not None
             and si.numTasks == 13

@@ -1,9 +1,11 @@
 """Table metadata: the footer record load_tables reads per table.
 
-Pins the two things the record decides: the ``{"dim", "nrows"}``
-column metadata (which must follow an in-place rewrite of a part
-file) and the small-scan spread bound (which must never undercount the
-scan tasks Spark actually runs).
+Pins the three things the record decides: the ``{"dim", "nrows"}``
+column metadata and the stored schema (both of which must follow an
+in-place rewrite of a part file), and the small-scan spread bound
+(which must never undercount the scan tasks Spark actually runs). A
+load served from the stored schema must equal an inferred one and run
+no Spark job.
 """
 
 import os
@@ -11,22 +13,24 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql.types import TimestampType
 
 from sql_flow_spark import tables
-from sql_flow_spark.tables import load_tables
+from sql_flow_spark.tables import TABLE_NAMES, load_tables
 
 
-def _write_embeddings(path, n, dim, row_group_size=None):
-    t = pa.table(
-        {
-            "vec_id": pa.array(range(n), pa.int64()),
-            "embedding": pa.array(
-                [[float(i + j) for j in range(dim)] for i in range(n)],
-                pa.list_(pa.float32()),
-            ),
-        }
-    )
-    pq.write_table(t, path, row_group_size=row_group_size)
+def _write_embeddings(path, n, dim, row_group_size=None, labels=False):
+    cols = {
+        "vec_id": pa.array(range(n), pa.int64()),
+        "embedding": pa.array(
+            [[float(i + j) for j in range(dim)] for i in range(n)],
+            pa.list_(pa.float32()),
+        ),
+    }
+    if labels:
+        cols["label"] = pa.array([f"l{i}" for i in range(n)])
+    pq.write_table(pa.table(cols), path, row_group_size=row_group_size)
 
 
 def _vector_md(spark, sf_dir):
@@ -37,8 +41,9 @@ def _vector_md(spark, sf_dir):
 def test_in_place_rewrite_refreshes_metadata(spark, tmp_path):
     """Rewriting a part file in place keeps the directory's file set
     (and, restored here, its mtime); the record is keyed on the per-file
-    signature, so the next load sees the new dim and nrows, and the
-    memo keeps one entry for the path."""
+    signature, so the next load sees the new dim and nrows and the
+    column the rewrite added (read, not NULL-filled from a stale stored
+    schema), and the memo keeps one entry for the path."""
     table = tmp_path / "embeddings.parquet"
     table.mkdir()
     part = table / "part-0.parquet"
@@ -46,13 +51,69 @@ def test_in_place_rewrite_refreshes_metadata(spark, tmp_path):
     assert _vector_md(spark, str(tmp_path)) == {"dim": 4, "nrows": 10}
 
     st = os.stat(table)
-    _write_embeddings(part, 20, 8)
+    _write_embeddings(part, 20, 8, labels=True)
     os.utime(table, ns=(st.st_atime_ns, st.st_mtime_ns))
-    assert _vector_md(spark, str(tmp_path)) == {"dim": 8, "nrows": 20}
+    df = load_tables(spark, str(tmp_path), ("embeddings",),
+                     register_views=False)["embeddings"]
+    assert df.schema["embedding"].metadata == {"dim": 8, "nrows": 20}
+    assert "label" in df.columns
+    got = {(r.vec_id, r.label) for r in df.select("vec_id", "label").collect()}
+    assert got == {(i, f"l{i}") for i in range(20)}
     assert [p for p in tables._FOOTERS if p.startswith(str(tmp_path))] == [
         str(table)
     ]
     assert tables._FOOTERS[str(table)].files == tables.part_files(str(table))
+
+
+def test_warm_load_runs_no_spark_job(spark, sf_dir, job_ids):
+    """Once every table's record carries its schema, loading all of
+    them again plans from the stored schemas: no inference job."""
+    load_tables(spark, sf_dir)
+    with job_ids() as ids:
+        load_tables(spark, sf_dir)
+    assert ids == []
+
+
+@pytest.mark.parametrize("name", TABLE_NAMES)
+def test_stored_schema_matches_inferred(spark, sf_dir, name):
+    """A load served from the stored schema has the schema of a cold,
+    inferred load: names, types, nullability and field metadata."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    tables._FOOTERS.pop(path, None)
+    cold = load_tables(spark, sf_dir, (name,), register_views=False)[name]
+    assert tables._FOOTERS[path].schema is not None
+    warm = load_tables(spark, sf_dir, (name,), register_views=False)[name]
+    assert warm.schema.jsonValue() == cold.schema.jsonValue()
+    if name == "events":
+        assert warm.schema["ts"].dataType == TimestampType()
+    if name == "embeddings":
+        assert set(warm.schema["embedding"].metadata) == {"dim", "nrows"}
+
+
+def test_missing_table_keeps_spark_error(spark, tmp_path):
+    """A missing table raises Spark's own PATH_NOT_FOUND and leaves no
+    record behind."""
+    with pytest.raises(AnalysisException) as err:
+        load_tables(spark, str(tmp_path), ("embeddings",),
+                    register_views=False)
+    assert err.value.getCondition() == "PATH_NOT_FOUND"
+    assert str(tmp_path / "embeddings.parquet") not in tables._FOOTERS
+
+
+def test_nested_parts_keep_inferred_read(spark, tmp_path, job_ids):
+    """A directory whose parts all sit in subdirectories has an empty
+    file set: every load infers (partition discovery included) and no
+    schema is stored."""
+    table = tmp_path / "embeddings.parquet"
+    (table / "k=1").mkdir(parents=True)
+    _write_embeddings(table / "k=1" / "part-0.parquet", 4, 2)
+    for _ in range(2):
+        with job_ids() as ids:
+            df = load_tables(spark, str(tmp_path), ("embeddings",),
+                             register_views=False)["embeddings"]
+        assert ids
+    assert df.columns == ["vec_id", "embedding", "k"]
+    assert tables._FOOTERS[str(table)].schema is None
 
 
 def _nonempty_scan_tasks(spark, path):
