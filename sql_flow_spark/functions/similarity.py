@@ -26,34 +26,30 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sql_flow_spark.localdf import _TwinOverflow, bounded_or_distributed, local_df
-from sql_flow_spark.registry import query
+from sql_flow_spark.registry import dsum, fixed, query, scaled_int
 from sql_flow_spark.tables import load_tables
 
 # Engine-identical exact dot products. Per-element products are pure
 # IEEE double math (identical in Spark and DuckDB); each term is then
-# fixed-pointed via floor(t*1e12 + 0.5) — still pure IEEE — and summed
+# fixed-pointed via scaled_int (floor(t*1e12 + 0.5), pure IEEE) and summed
 # as integers (exact, order-insensitive). Casting the *computed* double
 # to decimal directly would NOT be safe: Spark converts via shortest
 # string repr, DuckDB via the true binary value, and they disagree on
 # repr-boundary ties.
-_DOT_SCALE = 1e12
+_DOT_SCALE = 12  # fixed-point digits
 
 
 def dot_dec(a: Column, b: Column) -> Column:
     """Exact dot product exposed as DOUBLE (engine-identical)."""
     terms = F.zip_with(
-        a,
-        b,
-        lambda x, y: F.floor(
-            x.cast("double") * y.cast("double") * F.lit(_DOT_SCALE) + F.lit(0.5)
-        ).cast("decimal(30,0)"),
+        a, b, lambda x, y: scaled_int(x.cast("double") * y.cast("double"), _DOT_SCALE)
     )
     acc = F.aggregate(
         terms,
         F.lit(0).cast("decimal(38,0)"),
         lambda acc, v: acc + v,
     )
-    return acc.cast("double") / F.lit(_DOT_SCALE)
+    return acc.cast("double") / F.lit(10.0**_DOT_SCALE)
 
 
 def sq_norm_dec(a: Column) -> Column:
@@ -74,7 +70,7 @@ _DOT_EXACT_BOUND = "4.5E15D"
 def _dot_term_sql(a: str, b: str, i: int) -> str:
     return (
         f"cast(floor(cast({a}[{i}] as double) * cast({b}[{i}] as double)"
-        f" * {_DOT_SCALE:.1f}D + 0.5D) as double)"
+        f" * {10.0 ** _DOT_SCALE:.1f}D + 0.5D) as double)"
     )
 
 
@@ -117,7 +113,7 @@ def dot_dec_fast(
     sd = " + ".join(_dot_term_sql(a, b, i) for i in range(n))
     if na is not None and nb is not None:
         guard = (
-            f"(({na} + 1.0E-5D) * ({nb} + 1.0E-5D) * {_DOT_SCALE:.1f}D"
+            f"(({na} + 1.0E-5D) * ({nb} + 1.0E-5D) * {10.0 ** _DOT_SCALE:.1f}D"
             f" + {n}.0D) < {_DOT_EXACT_BOUND}"
         )
     else:
@@ -128,13 +124,13 @@ def dot_dec_fast(
     fb = (
         f"cast(aggregate(zip_with({a}, {b}, (x, y) ->"
         f" cast(floor(cast(x as double) * cast(y as double)"
-        f" * {_DOT_SCALE:.1f}D + 0.5D) as decimal(30,0))),"
+        f" * {10.0 ** _DOT_SCALE:.1f}D + 0.5D) as decimal(30,0))),"
         f" cast(0 as decimal(38,0)), (acc, v) -> acc + v) as double)"
     )
     return F.expr(
         f"(case when size({a}) = {n} and size({b}) = {n}"
         f" and {guard} then ({sd})"
-        f" else {fb} end / {_DOT_SCALE:.1f}D)"
+        f" else {fb} end / {10.0 ** _DOT_SCALE:.1f}D)"
     )
 
 
@@ -171,7 +167,8 @@ def o_dot_dec(a: str, b: str) -> str:
     return (
         f"(CAST(list_sum(list_transform(generate_series(1, len({a})), "
         f"i -> CAST(floor(CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) "
-        f"* {_DOT_SCALE:.1f} + 0.5) AS DECIMAL(30,0)))) AS DOUBLE) / {_DOT_SCALE:.1f})"
+        f"* {10.0 ** _DOT_SCALE:.1f} + 0.5) AS DECIMAL(30,0)))) AS DOUBLE)"
+        f" / {10.0 ** _DOT_SCALE:.1f})"
     )
 
 
@@ -682,15 +679,9 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         exploded.groupBy("label", F.col("dim").cast("int").alias("dim"))
         .agg(
-            (
-                F.sum(
-                    F.floor(
-                        F.col("v").cast("double") * 10000.0 + F.lit(0.5)
-                    ).cast("decimal(30,0)")
-                ).cast("double")
-                / 10000.0
-                / F.count("*").cast("double")
-            ).alias("centroid")
+            (dsum(F.col("v").cast("double")) / F.count("*").cast("double")).alias(
+                "centroid"
+            )
         )
     )
 
@@ -702,7 +693,7 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_approx_quality.py); both engines run the IDENTICAL
 # unrolled arithmetic so the oracle matches bit-for-bit regardless.
 _PI_ITERS = 6
-_PI_SCALE = 100000000.0  # 1e8 fixed-point for every sum
+_PI_SCALE = 8  # fixed-point digits for every sum
 _PI_DIMS = 64  # embeddings schema contract (TESTDATA.md)
 
 # Exploded-fact rows per task for the iterative trainers (Lloyd /
@@ -735,21 +726,10 @@ def _fact_parts(emb: DataFrame, emb_col: str = "embedding") -> int:
     return max(1, min(cores, -(-n // _FACT_ROWS_PER_TASK)))
 
 
-def _pi_fsum(term):
-    return (
-        F.sum(
-            F.floor(term * F.lit(_PI_SCALE) + F.lit(0.5)).cast(
-                "decimal(38,0)"
-            )
-        ).cast("double")
-        / F.lit(_PI_SCALE)
-    )
-
-
 def _o_pi_fsum(expr: str) -> str:
     return (
-        f"CAST(SUM(CAST(floor(({expr}) * {_PI_SCALE} + 0.5) "
-        f"AS DECIMAL(38,0))) AS DOUBLE) / {_PI_SCALE}"
+        f"CAST(SUM(CAST(floor(({expr}) * {10.0 ** _PI_SCALE} + 0.5) "
+        f"AS DECIMAL(38,0))) AS DOUBLE) / {10.0 ** _PI_SCALE}"
     )
 
 
@@ -822,27 +802,28 @@ def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
         if got is None or got[1].shape[1] != _PI_DIMS:
             return None
         vals = got[1]
+        scale = 10.0**_PI_SCALE
         v_np = np.full(_PI_DIMS, 0.125)
         for _ in range(_PI_ITERS):
             s = (
                 _ck(
-                    np.floor((vals * v_np[None, :]) * _PI_SCALE + 0.5),
+                    np.floor((vals * v_np[None, :]) * scale + 0.5),
                     _PI_DIMS,
                 ).astype(np.int64).sum(axis=1)
-                / _PI_SCALE
+                / scale
             )
             w = (
                 _ck(
-                    np.floor((vals * s[:, None]) * _PI_SCALE + 0.5),
+                    np.floor((vals * s[:, None]) * scale + 0.5),
                     len(vals),
                 ).astype(np.int64).sum(axis=0)
-                / _PI_SCALE
+                / scale
             )
-            nw = _ck(np.floor((w * w) * _PI_SCALE + 0.5), 1)
+            nw = _ck(np.floor((w * w) * scale + 0.5), 1)
             # 64-term norm sum in python ints (arbitrary precision;
             # float(exact int) is the same correctly-rounded double
             # the decimal->double cast produces)
-            nrm = np.sqrt(float(sum(int(x) for x in nw)) / _PI_SCALE)
+            nrm = np.sqrt(float(sum(int(x) for x in nw)) / scale)
             v_np = w / nrm
         return local_df(
             spark,
@@ -875,22 +856,18 @@ def _pi_distributed(emb: DataFrame) -> DataFrame:
         score = (
             e.join(F.broadcast(v), "dim")
             .groupBy("vec_id")
-            .agg(_pi_fsum(F.col("val") * F.col("v")).alias("s"))
+            .agg(dsum(F.col("val") * F.col("v"), _PI_SCALE).alias("s"))
         )
         w = (
             e.join(score, "vec_id")
             .groupBy("dim")
-            .agg(_pi_fsum(F.col("val") * F.col("s")).alias("w"))
+            .agg(dsum(F.col("val") * F.col("s"), _PI_SCALE).alias("w"))
         )
         nrm = F.sqrt(
-            F.sum(
-                F.floor(
-                    F.col("w") * F.col("w") * F.lit(_PI_SCALE) + F.lit(0.5)
-                ).cast("decimal(38,0)")
-            )
+            F.sum(scaled_int(F.col("w") * F.col("w"), _PI_SCALE))
             .over(wall)
             .cast("double")
-            / F.lit(_PI_SCALE)
+            / F.lit(10.0**_PI_SCALE)
         )
         v = w.select(
             "dim", (F.col("w") / nrm).alias("v")
@@ -1003,11 +980,11 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -------------------------------------------- embedding isotropy QA
 
-# 6dp fixed point for the S_d^2 terms (S_d can reach n in magnitude,
-# so S_d^2*1e6 stays far inside DECIMAL(38,0) at any realistic label
-# size) — the per-label 64-term sum must be partitioning-invariant
-# like every other cross-engine sum.
-_ISO_SQ_SCALE = 1_000_000.0
+# 6 fixed-point digits for the S_d^2 terms (S_d can reach n in
+# magnitude; the lattice integer is a BIGINT floor, far inside the
+# DECIMAL accumulator) — the per-label 64-term sum must be
+# partitioning-invariant like every other cross-engine sum.
+_ISO_SQ_SCALE = 6
 
 
 @query(
@@ -1031,9 +1008,9 @@ _ISO_SQ_SCALE = 1_000_000.0
     ),
     q AS (
       SELECT label,
-             CAST(SUM(CAST(floor(sd * sd * {_ISO_SQ_SCALE} + 0.5)
+             CAST(SUM(CAST(floor(sd * sd * {10.0 ** _ISO_SQ_SCALE} + 0.5)
                            AS DECIMAL(38,0))) AS DOUBLE)
-               / {_ISO_SQ_SCALE} AS qsum
+               / {10.0 ** _ISO_SQ_SCALE} AS qsum
       FROM s GROUP BY label
     ),
     nstats AS (
@@ -1096,17 +1073,9 @@ def embedding_isotropy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "label", "dim", (F.col("v").cast("double") / F.col("nrm")).alias("uv")
     )
-    s = u.groupBy("label", "dim").agg(_pi_fsum(F.col("uv")).alias("sd"))
+    s = u.groupBy("label", "dim").agg(dsum("uv", _PI_SCALE).alias("sd"))
     q = s.groupBy("label").agg(
-        (
-            F.sum(
-                F.floor(
-                    F.col("sd") * F.col("sd") * F.lit(_ISO_SQ_SCALE)
-                    + F.lit(0.5)
-                ).cast("decimal(38,0)")
-            ).cast("double")
-            / F.lit(_ISO_SQ_SCALE)
-        ).alias("qsum")
+        dsum(F.col("sd") * F.col("sd"), _ISO_SQ_SCALE).alias("qsum")
     )
     nstats = lab.groupBy("label").agg(
         F.sum(F.when(F.col("nrm") > 0, 1).otherwise(0))
@@ -1115,8 +1084,8 @@ def embedding_isotropy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("nrm") > 0, 0).otherwise(1))
         .cast("long")
         .alias("n_zero_norm"),
-        _pi_fsum(
-            F.when(F.col("nrm") > 0, F.col("nrm")).otherwise(F.lit(0.0))
+        dsum(
+            F.when(F.col("nrm") > 0, F.col("nrm")).otherwise(F.lit(0.0)), _PI_SCALE
         ).alias("nrm_sum"),
         F.min(F.when(F.col("nrm") > 0, F.col("nrm"))).alias("min_norm"),
         F.max("nrm").alias("max_norm"),
@@ -1331,38 +1300,21 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").cast("double").alias("v"),
     )
     cent = e.groupBy("label", "dim").agg(
-        (
-            F.sum(
-                F.floor(F.col("v") * 10000.0 + F.lit(0.5)).cast(
-                    "decimal(30,0)"
-                )
-            ).cast("double")
-            / 10000.0
-            / F.count("*").cast("double")
-        ).alias("c")
+        (dsum("v") / F.count("*").cast("double")).alias("c")
     )
     diff = F.col("v") - F.col("c")
     d = (
         e.join(cent, ["label", "dim"])
         .groupBy("vec_id", "label")
         .agg(
-            F.sqrt(
-                F.sum(
-                    F.floor(
-                        diff * diff * F.lit(100000000.0) + F.lit(0.5)
-                    ).cast("decimal(38,0)")
-                ).cast("double")
-                / F.lit(100000000.0)
-            ).alias("dist")
+            F.sqrt(dsum(diff * diff, 8)).alias("dist")
         )
     )
     s = d.select(
         "vec_id",
         "label",
         "dist",
-        F.floor(F.col("dist") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("decimal(38,0)")
-        .alias("ds"),
+        scaled_int("dist", 6).alias("ds"),
     )
     st = s.groupBy("label").agg(
         F.count("*").cast("decimal(38,0)").alias("n"),
@@ -1372,22 +1324,13 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     dev = F.col("n") * F.col("ds") - F.col("sx")
     var_n2 = F.col("n") * F.col("sq") - F.col("sx") * F.col("sx")
     zscore = F.when(
-        var_n2 > 0,
-        F.floor(
-            dev.cast("double") / F.sqrt(var_n2.cast("double"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        / F.lit(1000000.0),
+        var_n2 > 0, fixed(dev.cast("double") / F.sqrt(var_n2.cast("double")), 6)
     )
     is_outlier = (var_n2 > 0) & (dev > 0) & (dev * dev > 4 * var_n2)
     return s.join(F.broadcast(st), "label").select(
         "vec_id",
         "label",
-        (
-            F.floor(F.col("dist") * F.lit(1000000.0) + F.lit(0.5))
-            / F.lit(1000000.0)
-        ).alias("dist"),
+        fixed("dist", 6).alias("dist"),
         zscore.alias("zscore"),
         is_outlier.alias("is_outlier"),
     )
@@ -1509,9 +1452,9 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -------------------------------------------- product quantization audit
 
-# 12dp fixed point for quantization error terms — shared by the PQ and
-# scalar (embedding_quantization) audits.
-_SQ_ERRSCALE = 1_000_000_000_000.0
+# Fixed-point digits for quantization error terms — shared by the PQ
+# and scalar (embedding_quantization) audits.
+_SQ_ERRSCALE = 12
 
 PQ_SUB_DIM = 8  # dims per subspace -> 8 subspaces over the 64-dim schema
 PQ_K = 4  # codewords per subspace (2 bits/code -> 2 bytes/vector)
@@ -1710,6 +1653,7 @@ def _pq_train_driver(
     rows)."""
     n, dim = vals.shape
     n_sub = dim // sd
+    scale = 10.0**_PI_SCALE
     pos = {int(v): i for i, v in enumerate(ids)}
     c = np.full((k, dim), np.nan)  # (k, dim); NaN = dead
     for j, sid in enumerate(seed_ids):
@@ -1724,13 +1668,13 @@ def _pq_train_driver(
             if not alive.any():
                 raise _TwinOverflow()  # all-dead sub: defer to Spark
             diff = seg[:, None, :] - csub[None, alive, :]  # (n, alive, sd)
-            terms = np.floor(diff * diff * _PI_SCALE + 0.5)
+            terms = np.floor(diff * diff * scale + 0.5)
             # int64 sums: exact under _ck's bound (float64 partial sums
             # would lose exactness past 2^53), then one float division
             # — the same exact-int -> double -> divide the DECIMAL fold
             # performs
             dist_alive = (
-                _ck(terms, sd).astype(np.int64).sum(axis=2) / _PI_SCALE
+                _ck(terms, sd).astype(np.int64).sum(axis=2) / scale
             )
             dist = np.full((len(vals), k), np.inf)
             dist[:, alive] = dist_alive
@@ -1744,11 +1688,11 @@ def _pq_train_driver(
                     continue
                 seg = vals[m, s * sd:(s + 1) * sd]
                 ssum = (
-                    _ck(np.floor(seg * _PI_SCALE + 0.5), cnt)
+                    _ck(np.floor(seg * scale + 0.5), cnt)
                     .astype(np.int64)
                     .sum(axis=0)
                 )
-                new_c[j, s * sd:(s + 1) * sd] = (ssum / _PI_SCALE) / cnt
+                new_c[j, s * sd:(s + 1) * sd] = (ssum / scale) / cnt
         c = new_c
     book = np.stack([c[:, s * sd:(s + 1) * sd] for s in range(n_sub)])
     return assign, book
@@ -1784,7 +1728,7 @@ def _pq_train(e: DataFrame, seed_ids: list[int], iters: int):
         dist = (
             e.join(F.broadcast(cent), "dim")
             .groupBy("vec_id", "sub", "cluster")
-            .agg(_pi_fsum(diff * diff).alias("dist"))
+            .agg(dsum(diff * diff, _PI_SCALE).alias("dist"))
         )
         assign = (
             dist.withColumn("rn", F.row_number().over(wv))
@@ -1795,7 +1739,7 @@ def _pq_train(e: DataFrame, seed_ids: list[int], iters: int):
             e.join(assign, ["vec_id", "sub"])
             .groupBy("cluster", "dim")
             .agg(
-                (_pi_fsum(F.col("val")) / F.count("*").cast("double"))
+                (dsum("val", _PI_SCALE) / F.count("*").cast("double"))
                 .alias("c")
             )
             .localCheckpoint(eager=True)
@@ -1909,9 +1853,9 @@ def _pq_oracle() -> str:
         )
         SELECT emb.label,
           CAST(COUNT(DISTINCT r.vec_id) AS BIGINT) AS n_vecs,
-          CAST(SUM(CAST(floor(err * err * {_SQ_ERRSCALE} + 0.5)
+          CAST(SUM(CAST(floor(err * err * {10.0 ** _SQ_ERRSCALE} + 0.5)
                         AS DECIMAL(38,0))) AS DOUBLE)
-            / {_SQ_ERRSCALE} / CAST(COUNT(*) AS DOUBLE) AS mse,
+            / {10.0 ** _SQ_ERRSCALE} / CAST(COUNT(*) AS DOUBLE) AS mse,
           MAX(ABS(err)) AS max_abs_err
         FROM rec r JOIN embeddings emb ON emb.vec_id = r.vec_id
         GROUP BY emb.label
@@ -1959,9 +1903,7 @@ def pq_quantization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cent), ["cluster", "dim"])
         .select(
             "vec_id",
-            F.floor(err * err * F.lit(_SQ_ERRSCALE) + F.lit(0.5))
-            .cast("decimal(38,0)")
-            .alias("sq_dec"),
+            scaled_int(err * err, _SQ_ERRSCALE).alias("sq_dec"),
             F.abs(err).alias("abs_err"),
         )
     )
@@ -1972,7 +1914,7 @@ def pq_quantization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("vec_id").cast("long").alias("n_vecs"),
             (
                 F.sum("sq_dec").cast("double")
-                / F.lit(_SQ_ERRSCALE)
+                / F.lit(10.0**_SQ_ERRSCALE)
                 / F.count("*").cast("double")
             ).alias("mse"),
             F.max("abs_err").alias("max_abs_err"),
@@ -1990,13 +1932,6 @@ def pq_quantization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (16 subs x 64 codewords x 3 iters) buys only the last 0.075.
 IVFPQ_SHORTLIST = 10 * TOP_K
 IVFPQ_PQ_K = 16  # codewords per subspace (4 bits/code, 4 B/vector)
-
-
-def _fp_dec(term: Column) -> Column:
-    """_PI_SCALE fixed-point term as DECIMAL — summable exactly."""
-    return F.floor(term * F.lit(_PI_SCALE) + F.lit(0.5)).cast(
-        "decimal(38,0)"
-    )
 
 
 @query("ann_ivfpq_topk")  # approximate -> rows-only check
@@ -2076,7 +2011,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid", "sub", "cluster")
         .agg(
             F.sum(
-                _fp_dec(F.col("qval").cast("double") * F.col("c"))
+                scaled_int(F.col("qval").cast("double") * F.col("c"), _PI_SCALE)
             ).alias("lut_fp")
         )
     )
@@ -2086,7 +2021,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid", "cell")
         .agg(
             F.sum(
-                _fp_dec(F.col("qval").cast("double") * F.col("cval"))
+                scaled_int(F.col("qval").cast("double") * F.col("cval"), _PI_SCALE)
             ).alias("cell_fp")
         )
     )
@@ -2102,7 +2037,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("cnrm") == 0, F.lit(0.0))
             .otherwise(
                 (F.col("res_fp") + F.col("cell_fp")).cast("double")
-                / F.lit(_PI_SCALE)
+                / F.lit(10.0**_PI_SCALE)
                 / F.col("cnrm")
             )
             .alias("adc_score"),
@@ -2342,13 +2277,13 @@ _SQ_LEVELS = 255.0  # int8-style 256-level scalar quantization
                             / {_SQ_LEVELS}) + 0.5)
                        * ((CAST(mx AS DOUBLE) - CAST(mn AS DOUBLE))
                           / {_SQ_LEVELS})))
-                   * {_SQ_ERRSCALE} + 0.5) AS DECIMAL(30,0))))
+                   * {10.0 ** _SQ_ERRSCALE} + 0.5) AS DECIMAL(30,0))))
              END AS sq_dec
       FROM per_vec
     )
     SELECT label,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           CAST(SUM(sq_dec) AS DOUBLE) / {_SQ_ERRSCALE}
+           CAST(SUM(sq_dec) AS DOUBLE) / {10.0 ** _SQ_ERRSCALE}
              / CAST(SUM(dim) AS DOUBLE) AS mse,
            MAX(max_err) AS max_abs_err
     FROM errs GROUP BY label
@@ -2397,9 +2332,7 @@ def embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.aggregate(
             F.transform(
                 "embedding",
-                lambda x: F.floor(
-                    _err(x) * _err(x) * F.lit(_SQ_ERRSCALE) + F.lit(0.5)
-                ).cast("decimal(30,0)"),
+                lambda x: scaled_int(_err(x) * _err(x), _SQ_ERRSCALE),
             ),
             F.lit(0).cast("decimal(38,0)"),
             lambda acc, v: acc + v,
@@ -2412,7 +2345,7 @@ def embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_vecs"),
         (
             F.sum("sq_dec").cast("double")
-            / F.lit(_SQ_ERRSCALE)
+            / F.lit(10.0**_SQ_ERRSCALE)
             / F.sum("dim").cast("double")
         ).alias("mse"),
         F.max("max_err").alias("max_abs_err"),
@@ -2421,7 +2354,7 @@ def embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------- within-label diversity (Gram identity)
 
-_DIV_SCALE = 10000.0  # per-component fixed-point; keeps Gram sums < 2^53
+_DIV_SCALE = 4  # per-component fixed-point digits; keeps Gram sums < 2^53
 
 
 @query(
@@ -2429,7 +2362,7 @@ _DIV_SCALE = 10000.0  # per-component fixed-point; keeps Gram sums < 2^53
     oracle=f"""
     WITH comp AS (
       SELECT label, t.i AS pos,
-             CAST(floor(CAST(embedding[t.i] AS DOUBLE) * {_DIV_SCALE:.1f} + 0.5)
+             CAST(floor(CAST(embedding[t.i] AS DOUBLE) * {10.0 ** _DIV_SCALE:.1f} + 0.5)
                   AS DECIMAL(18,0)) AS c
       FROM embeddings,
            LATERAL unnest(generate_series(1, len(embedding))) AS t(i)
@@ -2449,9 +2382,9 @@ _DIV_SCALE = 10000.0  # per-component fixed-point; keeps Gram sums < 2^53
            CAST(cnt.n_vecs AS BIGINT) AS n_vecs,
            CAST(g2.gram - g2.diag AS DOUBLE)
              / CAST(cnt.n_vecs * (cnt.n_vecs - 1) AS DOUBLE)
-             / {_DIV_SCALE * _DIV_SCALE:.1f} AS mean_pair_dot,
+             / {10.0 ** (2 * _DIV_SCALE):.1f} AS mean_pair_dot,
            CAST(g2.diag AS DOUBLE) / CAST(cnt.n_vecs AS DOUBLE)
-             / {_DIV_SCALE * _DIV_SCALE:.1f} AS mean_sq_norm
+             / {10.0 ** (2 * _DIV_SCALE):.1f} AS mean_sq_norm
     FROM g2 JOIN cnt ON g2.label = cnt.label
     WHERE cnt.n_vecs > 1
     """,
@@ -2482,16 +2415,13 @@ def embedding_diversity_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus-level audit a training pipeline adds on top."""
     t = load_tables(spark, sf_dir, ("embeddings",))
     e = t["embeddings"]
-    s_lit = F.lit(_DIV_SCALE)
     comp = e.select(
         "label",
         F.posexplode("embedding").alias("pos", "v"),
     ).select(
         "label",
         "pos",
-        F.floor(F.col("v").cast("double") * s_lit + F.lit(0.5))
-        .cast("decimal(18,0)")
-        .alias("c"),
+        scaled_int(F.col("v").cast("double"), _DIV_SCALE).alias("c"),
     )
     # Overflow bound: |c| <= ~10^4 (unit-ish components at _DIV_SCALE
     # fixed point), so |s| <= n*10^4 fits decimal(19,0) to n = 10^15
@@ -2508,7 +2438,7 @@ def embedding_diversity_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ssq").alias("diag"),
     )
     cnt = e.groupBy("label").agg(F.count("*").alias("n_vecs"))
-    s2 = F.lit(_DIV_SCALE * _DIV_SCALE)
+    s2 = F.lit(10.0 ** (2 * _DIV_SCALE))
     joined = g2.join(F.broadcast(cnt), "label").where(F.col("n_vecs") > 1)
     return joined.select(
         "label",

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_flow_spark.registry import query
+from sql_flow_spark.registry import fixed, query, scaled_int
 from sql_flow_spark.tables import load_tables
 
 # BPE-ish pre-tokenizer: letter runs, digit runs, single punctuation.
@@ -476,11 +476,9 @@ def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cnt = chars.groupBy("doc_id", "ch").agg(F.count("*").alias("c"))
     n = cnt.groupBy("doc_id").agg(F.sum("c").cast("long").alias("n"))
-    ln_int = F.floor(
-        F.log(F.col("c").cast("double") / F.col("n").cast("double"))
-        * F.lit(1000000.0)
-        + F.lit(0.5)
-    ).cast("decimal(30,0)")
+    ln_int = scaled_int(
+        F.log(F.col("c").cast("double") / F.col("n").cast("double")), 6
+    )
     return (
         cnt.join(n, "doc_id")
         .groupBy("doc_id", "n")
@@ -568,9 +566,7 @@ def readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_words",
         "n_sentences",
         "n_syllables",
-        (F.floor(flesch * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "flesch"
-        ),
+        fixed(flesch, 6).alias("flesch"),
     )
 
 
@@ -745,11 +741,7 @@ def doc_language_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     enough = F.col("tot") >= _PURITY_MIN_HITS
     purity_fp = F.when(
         enough,
-        F.floor(
-            F.col("top").cast("double") / F.col("tot").cast("double")
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        ).cast("decimal(30,0)"),
+        scaled_int(F.col("top").cast("double") / F.col("tot").cast("double"), 6),
     ).otherwise(F.lit(0).cast("decimal(30,0)"))
     return scored.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_docs"),

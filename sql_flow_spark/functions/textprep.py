@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sql_flow_spark.functions.dedup import O_NGRAMS, O_TOKENS, ws_tokens
-from sql_flow_spark.registry import query
+from sql_flow_spark.registry import dsum, fixed, query, scaled_int
 from sql_flow_spark.tables import load_tables
 
 CHUNK_TOKENS = 20
@@ -176,7 +176,7 @@ def tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("tf").cast("double")
         * F.log((F.col("n_docs") + F.lit(1.0)) / (F.col("df").cast("double") + F.lit(1.0)))
     )
-    tfidf = F.floor(raw * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
+    tfidf = fixed(raw, 6)
     scored = (
         tf.join(F.broadcast(df_), "term")
         .crossJoin(F.broadcast(n))
@@ -408,7 +408,7 @@ def mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TEMP_ALPHA = 0.7  # the multilingual-sampling exponent (Conneau et al.)
-_TEMP_SCALE = 1000000000.0  # 9dp fixed-point mask on pow (ewma pattern)
+_TEMP_SCALE = 9  # fixed-point digits of the mask on pow (ewma pattern)
 
 
 @query(
@@ -426,7 +426,7 @@ _TEMP_SCALE = 1000000000.0  # 9dp fixed-point mask on pow (ewma pattern)
       SELECT source, n_docs, n_tokens,
         CAST(n_tokens AS DOUBLE) / CAST(total AS DOUBLE) AS nat_share,
         CAST(floor(pow(CAST(n_tokens AS DOUBLE) / CAST(total AS DOUBLE),
-                       {TEMP_ALPHA}) * {_TEMP_SCALE:.1f} + 0.5)
+                       {TEMP_ALPHA}) * {10.0 ** _TEMP_SCALE:.1f} + 0.5)
              AS BIGINT) AS t_fp
       FROM per CROSS JOIN tot
     ),
@@ -448,7 +448,7 @@ def temperature_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: p_i = n_i/N divides exact BIGINTs (IEEE-identical),
     but pow() is libm — so each p_i^α is floor-masked to a 9dp
-    fixed-point BIGINT (the ewma_daily pow discipline) before the
+    fixed-point integer (the ewma_daily pow discipline) before the
     exact integer normalizer sum; both output ratios then divide
     exact/identical values. Margin-audited like every masked key.
 
@@ -476,12 +476,7 @@ def temperature_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         "n_tokens",
         nat_share.alias("nat_share"),
-        F.floor(
-            F.pow(nat_share, F.lit(TEMP_ALPHA)) * F.lit(_TEMP_SCALE)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("t_fp"),
+        scaled_int(F.pow(nat_share, F.lit(TEMP_ALPHA)), _TEMP_SCALE).alias("t_fp"),
     )
     tsum = terms.agg(F.sum("t_fp").alias("t_tot"))
     temp_share = F.col("t_fp").cast("double") / F.col("t_tot").cast("double")
@@ -555,11 +550,9 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     vocab = terms.groupBy("term").agg(F.count("*").alias("c"))
     tot = terms.agg(F.count("*").alias("n"))
-    lp_int = F.floor(
-        F.log(F.col("c").cast("double") / F.col("n").cast("double"))
-        * F.lit(1000000.0)
-        + F.lit(0.5)
-    ).cast("decimal(30,0)")
+    lp_int = scaled_int(
+        F.log(F.col("c").cast("double") / F.col("n").cast("double")), 6
+    )
     scored = (
         tf.join(vocab, "term")
         .join(F.broadcast(tot))
@@ -650,11 +643,9 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bc = bg.groupBy("a", "b").agg(F.count("*").alias("c2"))
     bs = bg.groupBy("a").agg(F.count("*").alias("c1"))
-    lp_int = F.floor(
-        F.log(F.col("c2").cast("double") / F.col("c1").cast("double"))
-        * F.lit(1000000.0)
-        + F.lit(0.5)
-    ).cast("decimal(30,0)")
+    lp_int = scaled_int(
+        F.log(F.col("c2").cast("double") / F.col("c1").cast("double")), 6
+    )
     scored = (
         bg.join(bc, ["a", "b"])
         .join(bs, ["a"])
@@ -718,13 +709,7 @@ def importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("double")
     u = (x + F.lit(0.5)) / F.lit(4294967296.0)
-    key = (
-        F.floor(
-            F.log(u) / F.col("n_chars").cast("double") * F.lit(1000000000.0)
-            + F.lit(0.5)
-        )
-        / F.lit(1000000000.0)
-    )
+    key = fixed(F.log(u) / F.col("n_chars").cast("double"), 9)
     return (
         t["documents"]
         .where(F.col("n_chars") > 0)
@@ -830,17 +815,13 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("n_ab") >= PMI_MIN_PAIR_DOCS)
     )
-    pmi = (
-        F.floor(
-            F.log(
-                F.col("n_ab").cast("double")
-                * F.col("n").cast("double")
-                / (F.col("df_a").cast("double") * F.col("df_b").cast("double"))
-            )
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        ).cast("double")
-        / F.lit(1000000.0)
+    pmi = fixed(
+        F.log(
+            F.col("n_ab").cast("double")
+            * F.col("n").cast("double")
+            / (F.col("df_a").cast("double") * F.col("df_b").cast("double"))
+        ),
+        6,
     )
     return pairs.join(F.broadcast(nd)).select(
         "term_a", "term_b", "n_ab", pmi.alias("pmi")
@@ -894,13 +875,7 @@ def weighted_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("double")
     u = (x + F.lit(0.5)) / F.lit(4294967296.0)
-    key = (
-        F.floor(
-            F.log(u) / F.col("n_chars").cast("double") * F.lit(1000000000.0)
-            + F.lit(0.5)
-        )
-        / F.lit(1000000000.0)
-    )
+    key = fixed(F.log(u) / F.col("n_chars").cast("double"), 9)
     from pyspark.sql import Window
 
     ranked = (
@@ -1005,30 +980,19 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(ZIPF_TOP_N)
     )
 
-    def mask6(c):
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
     w = Window.orderBy(F.col("occurrences").desc(), "term")
     ranked = freq.select(
-        mask6(F.log(F.row_number().over(w).cast("double"))).alias("x"),
-        mask6(F.log(F.col("occurrences").cast("double"))).alias("y"),
+        fixed(F.log(F.row_number().over(w).cast("double")), 6).alias("x"),
+        fixed(F.log(F.col("occurrences").cast("double")), 6).alias("y"),
     )
-
-    def fsum(c):
-        return (
-            F.sum(F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("long")).cast(
-                "double"
-            )
-            / F.lit(1e6)
-        )
 
     s = ranked.agg(
         F.count("*").cast("long").alias("n"),
-        fsum(F.col("x")).alias("sx"),
-        fsum(F.col("y")).alias("sy"),
-        fsum(F.col("x") * F.col("x")).alias("sxx"),
-        fsum(F.col("y") * F.col("y")).alias("syy"),
-        fsum(F.col("x") * F.col("y")).alias("sxy"),
+        dsum("x", 6).alias("sx"),
+        dsum("y", 6).alias("sy"),
+        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
+        dsum(F.col("y") * F.col("y"), 6).alias("syy"),
+        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
     )
     nd = F.col("n").cast("double")
     cov = nd * F.col("sxy") - F.col("sx") * F.col("sy")
@@ -1037,9 +1001,9 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope = cov / varx
     return s.select(
         F.col("n").alias("n_terms"),
-        mask6(slope).alias("zipf_slope"),
-        mask6((F.col("sy") - slope * F.col("sx")) / nd).alias("intercept"),
-        mask6(cov * cov / (varx * vary)).alias("r2"),
+        fixed(slope, 6).alias("zipf_slope"),
+        fixed((F.col("sy") - slope * F.col("sx")) / nd, 6).alias("intercept"),
+        fixed(cov * cov / (varx * vary), 6).alias("r2"),
     )
 
 
@@ -1287,29 +1251,18 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def mask6(c):
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
     pts = cum.select(
-        mask6(F.log(F.col("cum_n").cast("double"))).alias("x"),
-        mask6(F.log(F.col("cum_v").cast("double"))).alias("y"),
+        fixed(F.log(F.col("cum_n").cast("double")), 6).alias("x"),
+        fixed(F.log(F.col("cum_v").cast("double")), 6).alias("y"),
     )
-
-    def fsum(c):
-        return (
-            F.sum(F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("long")).cast(
-                "double"
-            )
-            / F.lit(1e6)
-        )
 
     s = pts.agg(
         F.count("*").cast("long").alias("n"),
-        fsum(F.col("x")).alias("sx"),
-        fsum(F.col("y")).alias("sy"),
-        fsum(F.col("x") * F.col("x")).alias("sxx"),
-        fsum(F.col("y") * F.col("y")).alias("syy"),
-        fsum(F.col("x") * F.col("y")).alias("sxy"),
+        dsum("x", 6).alias("sx"),
+        dsum("y", 6).alias("sy"),
+        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
+        dsum(F.col("y") * F.col("y"), 6).alias("syy"),
+        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
     )
     nd = F.col("n").cast("double")
     cov = nd * F.col("sxy") - F.col("sx") * F.col("sy")
@@ -1318,7 +1271,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope = cov / varx
     return s.select(
         F.col("n").alias("n_points"),
-        mask6(slope).alias("heaps_beta"),
-        mask6((F.col("sy") - slope * F.col("sx")) / nd).alias("ln_k"),
-        mask6(cov * cov / (varx * vary)).alias("r2"),
+        fixed(slope, 6).alias("heaps_beta"),
+        fixed((F.col("sy") - slope * F.col("sx")) / nd, 6).alias("ln_k"),
+        fixed(cov * cov / (varx * vary), 6).alias("r2"),
     )

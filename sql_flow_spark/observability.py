@@ -13,7 +13,7 @@ to any exporter; no prometheus client is bundled here).
 from __future__ import annotations
 
 import threading
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
@@ -25,7 +25,10 @@ class QueryMetrics:
     num_batches: int = 0
     num_input_rows: int = 0
     last_rows_per_sec: float = 0.0
-    batch_durations_ms: list[int] = field(default_factory=list)
+    # running count/total, not a per-batch list: a standing query
+    # reports for its whole life and only the mean is read
+    timed_batches: int = 0
+    batch_ms_total: int = 0
 
 
 class MetricsListener(StreamingQueryListener):
@@ -54,7 +57,8 @@ class MetricsListener(StreamingQueryListener):
             m.last_rows_per_sec = float(p.processedRowsPerSecond or 0.0)
             dur = (p.durationMs or {}).get("triggerExecution")
             if dur is not None:
-                m.batch_durations_ms.append(int(dur))
+                m.timed_batches += 1
+                m.batch_ms_total += int(dur)
 
     def onQueryIdle(self, event):
         pass
@@ -72,9 +76,7 @@ class MetricsListener(StreamingQueryListener):
                     "num_input_rows": m.num_input_rows,
                     "last_rows_per_sec": m.last_rows_per_sec,
                     "avg_batch_ms": (
-                        sum(m.batch_durations_ms) / len(m.batch_durations_ms)
-                        if m.batch_durations_ms
-                        else 0.0
+                        m.batch_ms_total / m.timed_batches if m.timed_batches else 0.0
                     ),
                 }
                 for qid, m in self.queries.items()

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sql_flow_spark.registry import query
+from sql_flow_spark.registry import fixed, query, scaled_int
 from sql_flow_spark.tables import load_tables
 
 
@@ -518,22 +518,18 @@ def user_behavior_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("k"),
     )
     p = F.col("n").cast("double") / F.col("tn").cast("double")
-    term = p * (F.floor(F.log(p) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+    term = p * fixed(F.log(p), 6)
     terms = c.join(tot, "user_id").select(
         "user_id",
         "tn",
         "k",
         term.alias("term"),
     )
-    ent = (
-        -F.sum(F.floor(F.col("term") * F.lit(1e9) + F.lit(0.5)).cast("long"))
-        .cast("double")
-        / F.lit(1e9)
-    )
+    ent = -F.sum(scaled_int("term", 9)).cast("double") / F.lit(1e9)
     return terms.groupBy("user_id").agg(
         F.max("tn").cast("long").alias("n_events"),
         F.max("k").cast("long").alias("n_types"),
-        (F.floor(ent * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("entropy"),
+        fixed(ent, 6).alias("entropy"),
     )
 
 
@@ -908,7 +904,7 @@ def window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from a driver hash FAIL (the r8 kaplan_meier class). 6dp puts the
 # same data at ~1e8 ulps; the entropy column loses nothing an
 # uncertainty readout cares about (error ~1e-5 bits).
-_NEP_SCALE = 1_000_000.0
+_NEP_SCALE = 6
 
 
 @query(
@@ -931,12 +927,12 @@ _NEP_SCALE = 1_000_000.0
       SELECT c.cur, c.nxt, c.n, t.tot,
              CAST(floor((CAST(c.n AS DOUBLE) / CAST(t.tot AS DOUBLE))
                * log2(CAST(c.n AS DOUBLE) / CAST(t.tot AS DOUBLE))
-               * {_NEP_SCALE} + 0.5) AS DECIMAL(30,0)) AS hterm
+               * {10.0 ** _NEP_SCALE} + 0.5) AS DECIMAL(30,0)) AS hterm
       FROM counts c JOIN tot t ON c.cur = t.cur
     ),
     ent AS (
       SELECT cur, CAST(tot AS BIGINT) AS n_obs,
-             -(CAST(SUM(hterm) AS DOUBLE) / {_NEP_SCALE}) AS entropy_bits
+             -(CAST(SUM(hterm) AS DOUBLE) / {10.0 ** _NEP_SCALE}) AS entropy_bits
       FROM terms GROUP BY cur, tot
     ),
     best AS (
@@ -984,14 +980,12 @@ def next_event_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = counts.groupBy("cur").agg(F.sum("n").alias("tot"))
     p = F.col("n").cast("double") / F.col("tot").cast("double")
-    hterm = F.floor(p * F.log2(p) * F.lit(_NEP_SCALE) + F.lit(0.5)).cast(
-        "decimal(30,0)"
-    )
+    hterm = scaled_int(p * F.log2(p), _NEP_SCALE)
     terms = counts.join(F.broadcast(tot), "cur").select(
         "cur", "nxt", "n", "tot", hterm.alias("hterm")
     )
     ent = terms.groupBy("cur", "tot").agg(
-        (-(F.sum("hterm").cast("double") / F.lit(_NEP_SCALE))).alias(
+        (-(F.sum("hterm").cast("double") / F.lit(10.0**_NEP_SCALE))).alias(
             "entropy_bits"
         )
     ).select("cur", F.col("tot").cast("long").alias("n_obs"), "entropy_bits")

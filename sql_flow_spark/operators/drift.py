@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sql_flow_spark.registry import query
+from sql_flow_spark.registry import dsum, fixed, query
 from sql_flow_spark.tables import load_tables
 
 # Fixed split boundary for the self-contained drift pair: first half
@@ -296,22 +296,9 @@ def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p1 = (F.col("c1").cast("double") + 0.5) / (F.col("t1").cast("double") + 5.0)
     p2 = (F.col("c2").cast("double") + 0.5) / (F.col("t2").cast("double") + 5.0)
-    ln_masked = (
-        F.floor(F.log(p2 / p1) * F.lit(1000000.0) + F.lit(0.5)).cast("double")
-        / F.lit(1000000.0)
-    )
-    term = (p2 - p1) * ln_masked
+    term = (p2 - p1) * fixed(F.log(p2 / p1), 6)
     return (
         counts.join(F.broadcast(tot), "event_type")
         .groupBy("event_type")
-        .agg(
-            (
-                F.sum(
-                    F.floor(term * F.lit(1000000000.0) + F.lit(0.5)).cast(
-                        "decimal(30,0)"
-                    )
-                ).cast("double")
-                / F.lit(1000000000.0)
-            ).alias("psi")
-        )
+        .agg(dsum(term, 9).alias("psi"))
     )

@@ -14,8 +14,10 @@ from sql_flow_spark.functions.mat import materialize_once
 from sql_flow_spark.registry import (
     O_TS_STR,
     dsum,
+    fixed,
     o_dsum,
     query,
+    scaled_int,
     ts_str,
 )
 from sql_flow_spark.tables import load_tables
@@ -497,8 +499,6 @@ def events_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     three window functions."""
     t = load_tables(spark, sf_dir, ("events",))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    from sql_flow_spark.registry import scaled_int
-
     running = (
         F.sum(scaled_int("value")).over(w).cast("double") / F.lit(10000.0)
     )
@@ -665,9 +665,7 @@ def events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed-point scale (1e2) — ANSI mode fails loudly on overflow
     rather than corrupting, so the limit is explicit."""
     t = load_tables(spark, sf_dir, ("events",))
-    xs = F.floor(F.col("value") * F.lit(10000.0) + F.lit(0.5)).cast(
-        "decimal(38,0)"
-    )
+    xs = scaled_int("value")
     s = t["events"].select("event_id", "event_type", "value", xs.alias("xs"))
     st = s.groupBy("event_type").agg(
         F.count("*").cast("decimal(38,0)").alias("n"),
@@ -676,15 +674,7 @@ def events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dev = F.col("n") * F.col("xs") - F.col("sx")
     var_n2 = F.col("n") * F.col("sq") - F.col("sx") * F.col("sx")
-    zscore = (
-        F.floor(
-            dev.cast("double")
-            / F.sqrt(var_n2.cast("double"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        / F.lit(1000000.0)
-    )
+    zscore = fixed(dev.cast("double") / F.sqrt(var_n2.cast("double")), 6)
     return (
         s.join(F.broadcast(st), "event_type")
         .where(dev * dev > F.lit(4) * var_n2)
@@ -843,16 +833,7 @@ def revenue_share_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dsum("o_totalprice").alias("revenue"))
     )
     w = Window.partitionBy()
-    total = (
-        F.sum(
-            F.floor(F.col("revenue") * F.lit(10000.0) + F.lit(0.5)).cast(
-                "decimal(38,0)"
-            )
-        )
-        .over(w)
-        .cast("double")
-        / F.lit(10000.0)
-    )
+    total = F.sum(scaled_int("revenue")).over(w).cast("double") / F.lit(10000.0)
     return per.select(
         "o_orderpriority",
         "revenue",
@@ -1278,23 +1259,17 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = ev.join(F.broadcast(th), "event_type")
     clamped = F.least(F.greatest(F.col("value"), F.col("lo")), F.col("hi"))
     in_fence = (F.col("value") >= F.col("lo")) & (F.col("value") <= F.col("hi"))
-    fsum = lambda c: F.sum(  # noqa: E731
-        F.floor(c * F.lit(10000.0) + F.lit(0.5)).cast("decimal(30,0)")
-    ).cast("double") / F.lit(10000.0)
     return e.groupBy("event_type", "lo", "hi").agg(
         F.first("lo").alias("p05"),
         F.first("hi").alias("p95"),
-        (fsum(clamped) / F.count(F.lit(1)).cast("double")).alias(
+        (dsum(clamped) / F.count(F.lit(1)).cast("double")).alias(
             "winsorized_mean"
         ),
         (
             F.sum(
-                F.when(
-                    in_fence,
-                    F.floor(F.col("value") * F.lit(10000.0) + F.lit(0.5)).cast(
-                        "decimal(30,0)"
-                    ),
-                ).otherwise(F.lit(0).cast("decimal(30,0)"))
+                F.when(in_fence, scaled_int("value")).otherwise(
+                    F.lit(0).cast("decimal(30,0)")
+                )
             ).cast("double")
             / F.lit(10000.0)
             / F.count(F.when(in_fence, F.lit(1))).cast("double")
@@ -1537,14 +1512,7 @@ def gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg. The raw-fact stages never sort."""
     t = load_tables(spark, sf_dir, ("orders", "lineitem"))
     xs = (
-        F.sum(
-            F.floor(
-                F.col("l_extendedprice")
-                * (F.lit(1) - F.col("l_discount"))
-                * F.lit(10000.0)
-                + F.lit(0.5)
-            ).cast("decimal(30,0)")
-        )
+        F.sum(scaled_int(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))))
         .cast("decimal(38,0)")
         .alias("xs")
     )
@@ -1612,7 +1580,7 @@ def gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         F.col("n").alias("n_customers"),
         (F.col("s0").cast("double") / F.lit(10000.0)).alias("total_revenue"),
-        (F.floor(gini * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("gini"),
+        fixed(gini, 6).alias("gini"),
     )
 
 
@@ -1682,38 +1650,18 @@ def price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p_partkey") == F.col("l_partkey"),
         )
     )
-
-    def mask6(c):
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
-    def fsum(c):
-        # DECIMAL(38,0) accumulator, not BIGINT: x=ln(unit price) can
-        # reach ~11.6 so x^2*1e6 terms are ~1.3e8; at TPC-H SF~100k the
-        # per-brand sxx sum would land within ~3x of int64 overflow and
-        # Spark 4's ANSI mode makes that a hard error (DuckDB widens to
-        # HUGEINT silently — asymmetric failure). gini_revenue uses the
-        # same decimal discipline.
-        return (
-            F.sum(
-                F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,0)")
-            ).cast("double")
-            / F.lit(1e6)
-        )
-
     pts = pts.select(
         "p_brand",
-        mask6(
-            F.log(F.col("l_extendedprice") / F.col("l_quantity"))
-        ).alias("x"),
-        mask6(F.log(F.col("l_quantity"))).alias("y"),
+        fixed(F.log(F.col("l_extendedprice") / F.col("l_quantity")), 6).alias("x"),
+        fixed(F.log(F.col("l_quantity")), 6).alias("y"),
     )
     s = pts.groupBy("p_brand").agg(
         F.count("*").cast("long").alias("n"),
-        fsum(F.col("x")).alias("sx"),
-        fsum(F.col("y")).alias("sy"),
-        fsum(F.col("x") * F.col("x")).alias("sxx"),
-        fsum(F.col("y") * F.col("y")).alias("syy"),
-        fsum(F.col("x") * F.col("y")).alias("sxy"),
+        dsum("x", 6).alias("sx"),
+        dsum("y", 6).alias("sy"),
+        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
+        dsum(F.col("y") * F.col("y"), 6).alias("syy"),
+        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
     )
     nd = F.col("n").cast("double")
     cov = nd * F.col("sxy") - F.col("sx") * F.col("sy")
@@ -1722,12 +1670,12 @@ def price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "p_brand",
         "n",
-        mask6(cov / varx).alias("elasticity"),
-        mask6(cov * cov / (varx * vary)).alias("r2"),
+        fixed(cov / varx, 6).alias("elasticity"),
+        fixed(cov * cov / (varx * vary), 6).alias("r2"),
     )
 
 
-_HHI_SCALE = 1_000_000_000_000.0  # 12dp fixed point for share^2 terms
+_HHI_SCALE = 12  # fixed-point digits for share^2 terms
 
 
 @query(
@@ -1751,8 +1699,8 @@ _HHI_SCALE = 1_000_000_000_000.0  # 12dp fixed point for share^2 terms
       FROM cust_rev r JOIN nat t ON r.c_nationkey = t.c_nationkey
     )
     SELECT n.n_name AS nation, s.n_customers,
-           CAST(SUM(CAST(floor(s.share * s.share * {_HHI_SCALE} + 0.5)
-                AS DECIMAL(30,0))) AS DOUBLE) / {_HHI_SCALE} * 10000.0
+           CAST(SUM(CAST(floor(s.share * s.share * {10.0 ** _HHI_SCALE} + 0.5)
+                AS DECIMAL(30,0))) AS DOUBLE) / {10.0 ** _HHI_SCALE} * 10000.0
              AS hhi,
            MAX(s.share) AS top_share
     FROM shares s JOIN nation n ON s.c_nationkey = n.n_nationkey
@@ -1787,11 +1735,7 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("c_nationkey", "o_custkey")
         .agg(
-            F.sum(
-                F.floor(
-                    F.col("o_totalprice") * F.lit(10000.0) + F.lit(0.5)
-                ).cast("decimal(30,0)")
-            ).alias("rev_dec")
+            F.sum(scaled_int("o_totalprice")).alias("rev_dec")
         )
     )
     nat = cust_rev.groupBy("c_nationkey").agg(
@@ -1805,9 +1749,6 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rev_dec").cast("double") / F.col("tot_dec").cast("double")
         ).alias("share"),
     )
-    sq = F.floor(
-        F.col("share") * F.col("share") * F.lit(_HHI_SCALE) + F.lit(0.5)
-    ).cast("decimal(30,0)")
     return (
         shares.join(
             F.broadcast(t["nation"]),
@@ -1816,7 +1757,7 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("n_name").alias("nation"), "n_customers")
         .agg(
             (
-                F.sum(sq).cast("double") / F.lit(_HHI_SCALE) * F.lit(10000.0)
+                dsum(F.col("share") * F.col("share"), _HHI_SCALE) * F.lit(10000.0)
             ).alias("hhi"),
             F.max("share").alias("top_share"),
         )
@@ -1880,12 +1821,9 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey")
         .agg(
             F.sum(
-                F.floor(
-                    F.col("l_extendedprice")
-                    * (F.lit(1.0) - F.col("l_discount"))
-                    * F.lit(10000.0)
-                    + F.lit(0.5)
-                ).cast("decimal(30,0)")
+                scaled_int(
+                    F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+                )
             )
             .cast("decimal(38,0)")
             .alias("xs")
@@ -2018,12 +1956,7 @@ def lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(
             F.sum(
-                F.floor(
-                    F.col("l_extendedprice")
-                    * (F.lit(1) - F.col("l_discount"))
-                    * F.lit(10000.0)
-                    + F.lit(0.5)
-                ).cast("decimal(30,0)")
+                scaled_int(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")))
             )
             .cast("decimal(38,0)")
             .alias("xs")
@@ -2234,12 +2167,9 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey")
         .agg(
             F.sum(
-                F.floor(
-                    F.col("l_extendedprice")
-                    * (F.lit(1.0) - F.col("l_discount"))
-                    * F.lit(10000.0)
-                    + F.lit(0.5)
-                ).cast("decimal(30,0)")
+                scaled_int(
+                    F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+                )
             )
             .cast("decimal(38,0)")
             .alias("wt")

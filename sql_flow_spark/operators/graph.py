@@ -16,27 +16,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sql_flow_spark.functions.mat import materialize_once
-from sql_flow_spark.registry import query
+from sql_flow_spark.registry import dsum, fixed, query
 from sql_flow_spark.tables import load_tables
 
 _PR_ITERS = 4
 _PR_D = 0.85  # damping
-_PR_SCALE = 1e12  # fixed-point quantum for inflow sums (values ~1e-7..1)
-
-
-def _pr_fsum(term):
-    return (
-        F.sum(
-            F.floor(term * F.lit(_PR_SCALE) + F.lit(0.5)).cast("decimal(38,0)")
-        ).cast("double")
-        / F.lit(_PR_SCALE)
-    )
+_PR_SCALE = 12  # fixed-point digits for inflow sums (values ~1e-7..1)
 
 
 def _o_pr_fsum(expr: str) -> str:
     return (
-        f"CAST(SUM(CAST(floor(({expr}) * {_PR_SCALE} + 0.5) "
-        f"AS DECIMAL(38,0))) AS DOUBLE) / {_PR_SCALE}"
+        f"CAST(SUM(CAST(floor(({expr}) * {10.0 ** _PR_SCALE} + 0.5) "
+        f"AS DECIMAL(38,0))) AS DOUBLE) / {10.0 ** _PR_SCALE}"
     )
 
 
@@ -184,10 +175,11 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             ew.join(_maybe_b(pr), ew.src == pr.node)
             .groupBy("dst")
             .agg(
-                _pr_fsum(
+                dsum(
                     F.col("pr")
                     * F.col("w").cast("double")
-                    / F.col("outw").cast("double")
+                    / F.col("outw").cast("double"),
+                    _PR_SCALE,
                 ).alias("inflow")
             )
         )
@@ -545,7 +537,5 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.crossJoin(F.broadcast(n_nodes)).select(
         (F.col("m2") / F.lit(2)).cast("long").alias("n_edges"),
         F.col("n_nodes"),
-        (F.floor((num / den) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "assortativity"
-        ),
+        fixed(num / den, 6).alias("assortativity"),
     )

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_flow_spark.registry import query
+from sql_flow_spark.registry import dsum, fixed, o_dsum, query
 from sql_flow_spark.tables import load_tables
 
 _PROFILE_COLS = (
@@ -226,8 +226,6 @@ _CORR_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 def _corr_oracle() -> str:
     from itertools import combinations
 
-    from sql_flow_spark.registry import o_dsum
-
     sums = ["CAST(COUNT(*) AS BIGINT) AS n"]
     for c in _CORR_COLS:
         sums.append(f"{o_dsum(c)} AS sx_{c}")
@@ -279,8 +277,6 @@ def correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     work; one single-row exchange; the unpivot is constant-sized."""
     from itertools import combinations
 
-    from sql_flow_spark.registry import dsum
-
     t = load_tables(spark, sf_dir, ("lineitem",))
     aggs = [F.count("*").cast("long").alias("n")]
     for c in _CORR_COLS:
@@ -302,10 +298,7 @@ def correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(a).alias("col_a"),
                 F.lit(b).alias("col_b"),
                 F.col("n").alias("n"),
-                (
-                    F.floor((num / den) * F.lit(1e12) + F.lit(0.5))
-                    / F.lit(1e12)
-                ).alias("corr"),
+                fixed(num / den, 12).alias("corr"),
             )
         )
     return s.select(F.explode(F.array(*pair_structs)).alias("p")).select(
@@ -403,7 +396,5 @@ def benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         obs.alias("obs_share"),
         bexpr.alias("benford_share"),
-        (
-            F.floor((obs - bexpr) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-        ).alias("deviation"),
+        fixed(obs - bexpr, 6).alias("deviation"),
     )

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from sql_flow_spark.functions.dedup import ws_tokens
 from sql_flow_spark.functions.mat import materialize_once
-from sql_flow_spark.registry import o_dsum, query
+from sql_flow_spark.registry import davg, dsum, fixed, o_dsum, query
 from sql_flow_spark.tables import load_tables
 
 # Shared first-half/second-half split for the two-sample tests
@@ -83,8 +83,6 @@ def welch_t_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_type, half) key space with map-side partials, then a
     5-row self-join. The 100 TB cost is the scan."""
     t = load_tables(spark, sf_dir, ("events",))
-    from sql_flow_spark.registry import dsum
-
     lab = t["events"].select(
         "event_type",
         "value",
@@ -191,8 +189,6 @@ def chi2_hour_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one shuffle onto the bounded (type, hour) key space
     with map-side partials; everything after is type x 24 rows."""
     t = load_tables(spark, sf_dir, ("events",))
-    from sql_flow_spark.registry import dsum
-
     first = F.unix_micros("ts") < _SPLIT_US
     o = (
         t["events"]
@@ -301,8 +297,6 @@ def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     source key space with map-side partials. Never pairwise over
     documents, never a driver collect."""
     t = load_tables(spark, sf_dir, ("documents",))
-    from sql_flow_spark.registry import dsum
-
     c = (
         t["documents"]
         .select(
@@ -333,14 +327,11 @@ def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("tg") - F.col("ts")
     ).cast("double")
 
-    def masked_ln(x):
-        return (
-            F.floor(F.log(x) * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
-        )
-
-    term_jsd = F.when(p > 0, p * masked_ln(F.lit(2.0) * p / (p + q))).otherwise(
-        0.0
-    ) + F.when(q > 0, q * masked_ln(F.lit(2.0) * q / (p + q))).otherwise(0.0)
+    term_jsd = F.when(
+        p > 0, p * fixed(F.log(F.lit(2.0) * p / (p + q)), 6)
+    ).otherwise(0.0) + F.when(
+        q > 0, q * fixed(F.log(F.lit(2.0) * q / (p + q)), 6)
+    ).otherwise(0.0)
     return (
         grid.select("source", "ts", term_jsd.alias("term_jsd"))
         .groupBy("source")
@@ -403,8 +394,6 @@ def ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded history, bound the window (w < 1e-9 after ~64 days) —
     the same prefilter keeps the join linear."""
     t = load_tables(spark, sf_dir, ("events",))
-    from sql_flow_spark.registry import davg
-
     daily = (
         t["events"]
         .select(
@@ -423,14 +412,7 @@ def ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("day_idx").alias("d2"),
         F.col("daily_avg").alias("x"),
     )
-    w = (
-        F.floor(
-            F.pow(F.lit(1.0 - _EWMA_ALPHA), F.col("day_idx") - F.col("d2"))
-            * F.lit(1e9)
-            + F.lit(0.5)
-        )
-        / F.lit(1e9)
-    )
+    w = fixed(F.pow(F.lit(1.0 - _EWMA_ALPHA), F.col("day_idx") - F.col("d2")), 9)
     pairs = daily.join(
         i,
         (F.col("e2") == F.col("event_type")) & (F.col("d2") <= F.col("day_idx")),
@@ -441,22 +423,9 @@ def ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         w.alias("w"),
         "x",
     )
-    num = (
-        F.sum(
-            F.floor(F.col("w") * F.col("x") * F.lit(1e6) + F.lit(0.5)).cast(
-                "decimal(30,0)"
-            )
-        ).cast("double")
-        / F.lit(1e6)
-    )
-    den = (
-        F.sum(F.floor(F.col("w") * F.lit(1e9) + F.lit(0.5)).cast("decimal(30,0)"))
-        .cast("double")
-        / F.lit(1e9)
-    )
     return pairs.groupBy("event_type", "day_idx").agg(
         F.min("daily_avg").alias("daily_avg"),
-        (num / den).alias("ewma"),
+        (dsum(F.col("w") * F.col("x"), 6) / dsum("w", 9)).alias("ewma"),
     )
 
 
@@ -541,8 +510,6 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: raw scan -> types x days aggregate (one bounded-key
     shuffle); windows and argmax run on that tiny frame."""
     t = load_tables(spark, sf_dir, ("events",))
-    from sql_flow_spark.registry import davg, dsum
-
     daily = (
         t["events"]
         .select(
@@ -566,12 +533,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = daily.join(F.broadcast(stats), "event_type").select(
         "event_type",
         "day_idx",
-        (
-            F.floor(
-                (F.col("x") - F.col("mu")) / F.col("sd") * F.lit(1e6) + F.lit(0.5)
-            )
-            / F.lit(1e6)
-        ).alias("z"),
+        fixed((F.col("x") - F.col("mu")) / F.col("sd"), 6).alias("z"),
     )
     w = (
         Window.partitionBy("event_type")
@@ -605,9 +567,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ranked.where(F.col("rk") == 1).select(
         "event_type",
-        (F.floor(F.col("s_max") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "cusum_max"
-        ),
+        fixed("s_max", 6).alias("cusum_max"),
         F.col("day_idx").alias("peak_day"),
         F.when(F.col("s_max") > _CUSUM_H, 1).otherwise(0).alias("drifted"),
     )
@@ -791,16 +751,12 @@ def events_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ss").cast("double")
         - F.col("s0").cast("double") * F.col("s0").cast("double") / nd
     ) / nd
-
-    def mask6(c):
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
     return s.select(
         "event_type",
         "n_hours",
         F.col("s0").alias("n_events"),
-        mask6(var / mean).alias("fano"),
-        mask6(F.sqrt(var) / mean).alias("cv"),
+        fixed(var / mean, 6).alias("fano"),
+        fixed(F.sqrt(var) / mean, 6).alias("cv"),
     )
 
 
@@ -856,8 +812,6 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     on that tiny aggregate — at unbounded history, bound the trend
     window (trailing 90 days) exactly like ewma's decay horizon."""
     t = load_tables(spark, sf_dir, ("events",))
-    from sql_flow_spark.registry import davg
-
     daily = (
         t["events"]
         .select(
@@ -978,8 +932,6 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     first, O(days^2) sign join on the tiny aggregate, single-row
     moments per type. Bound the window at unbounded history."""
     t = load_tables(spark, sf_dir, ("events",))
-    from sql_flow_spark.registry import davg
-
     daily = (
         t["events"]
         .select(
@@ -1439,8 +1391,6 @@ def conversion_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_b",
         conv_a.alias("conv_a"),
         conv_b.alias("conv_b"),
-        (F.floor(z * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)).alias(
-            "z_score"
-        ),
+        fixed(z, 6).alias("z_score"),
         (~degen & (F.abs(z) > F.lit(_AB_Z_CRIT))).alias("significant"),
     )

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sql_flow_spark.functions.mat import materialize_once
-from sql_flow_spark.registry import o_dsum, query
+from sql_flow_spark.registry import dsum, o_dsum, query, scaled_int
 from sql_flow_spark.tables import load_tables
 
 # 30-minute attribution window, in microseconds.
@@ -155,14 +155,7 @@ def events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("event_type"), hour.alias("h"))
         .agg(
             F.count("*").alias("n_events"),
-            (
-                F.sum(
-                    F.floor(F.col("value") * 10000.0 + F.lit(0.5)).cast(
-                        "decimal(30,0)"
-                    )
-                ).cast("double")
-                / F.lit(10000.0)
-            ).alias("value_sum"),
+            dsum("value").alias("value_sum"),
         )
     )
     rng = agg.agg(F.min("h").alias("hmin"), F.max("h").alias("hmax"))
@@ -247,18 +240,10 @@ def time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         seg.alias("seg"),
     )
     dur = F.max("us") - F.min("us")
-    fsum = (
-        F.sum(
-            F.floor(F.col("seg") * F.lit(10000.0) + F.lit(0.5)).cast(
-                "decimal(38,0)"
-            )
-        ).cast("double")
-        / F.lit(10000.0)
-    )
     return segs.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n_events"),
         dur.alias("duration_us"),
-        F.when(dur > 0, fsum / dur.cast("double")).alias("twa_value"),
+        F.when(dur > 0, dsum("seg") / dur.cast("double")).alias("twa_value"),
     )
 
 
@@ -324,14 +309,7 @@ def events_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
         t["events"]
         .groupBy(F.col("event_type"), hour.alias("h"))
         .agg(
-            (
-                F.sum(
-                    F.floor(F.col("value") * 10000.0 + F.lit(0.5)).cast(
-                        "decimal(30,0)"
-                    )
-                ).cast("double")
-                / F.lit(10000.0)
-            ).alias("value_sum"),
+            dsum("value").alias("value_sum"),
         )
     )
     rng = agg.agg(F.min("h").alias("hmin"), F.max("h").alias("hmax"))
@@ -417,21 +395,12 @@ def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.unix_micros("ts"), F.col("event_id"))
         .rowsBetween(-(MOVING_AVG_ROWS - 1), Window.currentRow)
     )
-    fsum = (
-        F.sum(
-            F.floor(F.col("value") * F.lit(10000.0) + F.lit(0.5)).cast(
-                "decimal(38,0)"
-            )
-        )
-        .over(w)
-        .cast("double")
-        / F.lit(10000.0)
-    )
+    total = F.sum(scaled_int("value")).over(w).cast("double") / F.lit(10000.0)
     return t["events"].select(
         "event_id",
         "event_type",
         "value",
-        (fsum / F.count("*").over(w).cast("double")).alias("moving_avg"),
+        (total / F.count("*").over(w).cast("double")).alias("moving_avg"),
     )
 
 
@@ -497,8 +466,6 @@ def seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     seasonal means (types x 7 keys) and the final join all run on that
     tiny frame, with seasonal broadcast back."""
     t = load_tables(spark, sf_dir, ("events",))
-    from sql_flow_spark.registry import dsum
-
     daily = (
         t["events"]
         .select(
@@ -519,11 +486,7 @@ def seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     full = 2 * _TREND_HALF + 1
     trend = F.when(
         F.count("*").over(w) == full,
-        F.sum(
-            F.floor(F.col("daily_total") * F.lit(1e4) + F.lit(0.5)).cast(
-                "decimal(30,0)"
-            )
-        )
+        F.sum(scaled_int("daily_total"))
         .over(w)
         .cast("double")
         / F.lit(1e4)
@@ -618,14 +581,7 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("m")
         )
         .agg(
-            (
-                F.sum(
-                    F.floor(
-                        F.col("o_totalprice") * F.lit(10000.0) + F.lit(0.5)
-                    ).cast("decimal(30,0)")
-                ).cast("double")
-                / F.lit(10000.0)
-            ).alias("y")
+            dsum("o_totalprice").alias("y")
         )
     )
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_flow_spark.registry import davg, dsum, o_davg, o_dsum, query
+from sql_flow_spark.registry import davg, dsum, o_davg, o_dsum, query, scaled_int
 from sql_flow_spark.tables import load_tables
 
 _REVENUE = "l_extendedprice * (1 - l_discount)"
@@ -735,8 +735,6 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     total on exact decimals), so both engines agree on every
     borderline part. The group stats are one broadcast row; the
     per-part aggregate shuffles once on l_partkey."""
-    from sql_flow_spark.registry import scaled_int
-
     t = load_tables(spark, sf_dir, ("lineitem", "supplier", "nation"))
     supp = (
         t["supplier"]
@@ -805,8 +803,6 @@ def q16_parts_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Distinct-supplier counting shuffles once on the
     (brand, type, size) key space after the broadcast part join and
     broadcast anti-join."""
-    from sql_flow_spark.registry import scaled_int
-
     t = load_tables(spark, sf_dir, ("lineitem", "part", "supplier"))
     s = t["supplier"].select(
         "s_suppkey", scaled_int(F.col("s_acctbal")).alias("bal")
@@ -889,11 +885,7 @@ def q20_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_partkey", "l_suppkey")
         .agg(
-            F.sum(
-                F.floor(F.col("l_quantity") * F.lit(10000.0) + F.lit(0.5)).cast(
-                    "decimal(30,0)"
-                )
-            ).alias("sq")
+            F.sum(scaled_int("l_quantity")).alias("sq")
         )
     )
     ptot = shipped.groupBy("l_partkey").agg(F.sum("sq").alias("pq"))

@@ -5,9 +5,15 @@ builder and, when SQL-expressible, a DuckDB oracle statement. The
 driver's correctness gate hashes values column-by-column, so builders
 are written to be *bit-identical* to their oracle:
 
-- money/metric sums go through DECIMAL (exact, order-insensitive
-  addition regardless of partitioning) and are cast to DOUBLE only at
-  the output boundary;
+- real values meet their oracle through ONE fixed-point rule: put the
+  double on the 10^s lattice with floor(x*10^s + 0.5), which both
+  engines evaluate bit-identically in IEEE arithmetic. ``scaled_int``
+  is that lattice integer as DECIMAL(30,0), the one accumulator type;
+  ``dsum``/``davg`` sum it exactly (order-insensitive regardless of
+  partitioning) and divide once in DOUBLE; ``fixed`` rounds a score to
+  s decimals, floor(x*10^s + 0.5) / 10^s as DOUBLE. Spark-side code
+  uses these helpers rather than writing the rule out (the oracle SQL
+  spells it out; ``o_dsum`` is its twin);
 - time buckets are emitted as formatted strings (the reference does the
   same for window output — dev/config/examples/tumbling.window.yml uses
   strftime on the bucket) to sidestep tz-awareness differences between
@@ -39,6 +45,11 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
+def _lattice(col: Column | str, scale: int) -> Column:
+    c = F.col(col) if isinstance(col, str) else col
+    return F.floor(c * F.lit(float(10**scale)) + F.lit(0.5))
+
+
 def scaled_int(col: Column | str, scale: int = 4) -> Column:
     """Fixed-point representation computed in pure IEEE double math.
 
@@ -50,15 +61,19 @@ def scaled_int(col: Column | str, scale: int = 4) -> Column:
     0.5) instead uses only IEEE ops (multiply, add, floor), which both
     engines evaluate bit-identically, then the integer sum is exact.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.floor(c * F.lit(float(10**scale)) + F.lit(0.5)).cast("decimal(30,0)")
-    )
+    return _lattice(col, scale).cast("decimal(30,0)")
 
 
 def dsum(col: Column | str, scale: int = 4) -> Column:
     """Order-insensitive, engine-identical sum exposed as DOUBLE."""
     return F.sum(scaled_int(col, scale)).cast("double") / F.lit(float(10**scale))
+
+
+def fixed(col: Column | str, scale: int) -> Column:
+    """Round to ``scale`` decimals on the same lattice, as DOUBLE:
+    floor(x*10^s + 0.5) / 10^s; the oracle writes the same expression
+    out. Masks derived scores (ratios, logs, z-scores) at the output."""
+    return _lattice(col, scale) / F.lit(float(10**scale))
 
 
 def davg(col: Column | str, scale: int = 4) -> Column:

@@ -2,11 +2,14 @@
 seeded cross-engine determinism check for the fixed-point summation
 core (the engine's central correctness trick)."""
 
+import ast
 import math
 from decimal import Decimal
+from pathlib import Path
 
 import duckdb
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -46,30 +49,143 @@ def _fixed_point_sum(values, scale=4):
     return float(sum(Decimal(math.floor(v * m + 0.5)) for v in values)) / m
 
 
-def test_fixed_point_sum_matches_engines(spark):
-    """The determinism contract itself: spark dsum == duckdb o_dsum ==
-    python reference, on adversarial values (many near rounding
-    boundaries)."""
-    from sql_flow_spark.registry import dsum, o_dsum
-
+def _fixed_point_values(scale):
+    """Adversarial doubles for the 10^scale lattice: wide-range values of
+    both signs, points next to a rounding boundary, and points whose
+    scaled product is exactly k + 0.5 (a tie, which floor rounds toward
+    +inf for either sign)."""
+    m = float(10**scale)
     rng = np.random.RandomState(7)
+    ties = rng.randint(-(10**6), 10**6, 4000) + 0.5
+    on_tie = ties / m
+    on_tie = on_tie[on_tie * m == ties]
+    assert (on_tie < 0).sum() > 100 and (on_tie > 0).sum() > 100
     vals = np.concatenate([
         rng.uniform(-1e5, 1e5, 3000),
         np.round(rng.uniform(0, 100, 3000), 4) + 5e-5,  # boundary-adjacent
         rng.uniform(0, 1, 3000) * 1e-3,
+        np.round(rng.uniform(-100, 100, 1000), scale) + 0.5 / m,
+        on_tie,
     ])
-    pdf_vals = [float(v) for v in vals]
+    return [float(v) for v in vals]
 
-    sdf = spark.createDataFrame([(v,) for v in pdf_vals], "v double")
-    got_spark = sdf.agg(dsum("v").alias("s")).first().s
 
+@pytest.mark.parametrize(
+    "helper,scale",
+    [("dsum", 4)] + [(h, s) for h in ("fixed", "scaled_int") for s in (4, 6, 8, 12)],
+)
+def test_fixed_point_sum_matches_engines(spark, helper, scale):
+    """The determinism contract itself: every registry fixed-point
+    helper equals its DuckDB spelling bit for bit (and the python
+    reference), on adversarial values."""
+    from sql_flow_spark import registry
+
+    vals = _fixed_point_values(scale)
+    sdf = spark.createDataFrame(list(enumerate(vals)), "i long, v double")
     con = duckdb.connect()
-    con.execute("CREATE TABLE t(v DOUBLE)")
-    con.executemany("INSERT INTO t VALUES (?)", [(v,) for v in pdf_vals])
-    got_duck = con.execute(f"SELECT {o_dsum('v')} FROM t").fetchone()[0]
+    con.register("t", pd.DataFrame({"i": np.arange(len(vals)), "v": vals}))
+    m = float(10**scale)
 
-    got_py = _fixed_point_sum(pdf_vals)
-    assert got_spark == got_duck == pytest.approx(got_py, abs=0)
+    if helper == "dsum":
+        got_spark = sdf.agg(registry.dsum("v", scale).alias("s")).first().s
+        sql = f"SELECT {registry.o_dsum('v', scale)} FROM t"
+        got_duck = con.execute(sql).fetchone()[0]
+        got_py = _fixed_point_sum(vals, scale)
+        assert got_spark == got_duck == pytest.approx(got_py, abs=0)
+        return
+
+    col = getattr(registry, helper)("v", scale)
+    got_spark = [r.x for r in sdf.orderBy("i").select(col.alias("x")).collect()]
+    lattice = f"floor(v * {m} + 0.5)"
+    expr = f"{lattice} / {m}" if helper == "fixed" else (
+        f"CAST({lattice} AS DECIMAL(30,0))"
+    )
+    got_duck = [r[0] for r in con.execute(f"SELECT {expr} FROM t ORDER BY i").fetchall()]
+    if helper == "fixed":
+        assert [x.hex() for x in got_spark] == [x.hex() for x in got_duck]
+        assert got_spark == [math.floor(v * m + 0.5) / m for v in vals]
+    else:
+        assert sdf.select(col).schema[0].dataType.simpleString() == "decimal(30,0)"
+        assert got_spark == got_duck == [Decimal(math.floor(v * m + 0.5)) for v in vals]
+
+
+# Spark-side floor(x + 0.5) sites that stay outside registry.py, each
+# with its reason; everything on a 10^s lattice goes through
+# registry.scaled_int / dsum / fixed.
+_FIXED_POINT_ALLOWLIST = {
+    ("functions/similarity.py", "_err"):
+        "SQ quantizer rounds (x - min) / step to a per-vector level: "
+        "not a 10^s lattice",
+    ("functions/similarity.py", "_dot_term_sql"):
+        "Spark SQL string of the unrolled dot fast path (not a Column; "
+        "the AST scan cannot see it)",
+    ("functions/similarity.py", "dot_dec_fast"):
+        "Spark SQL string of the dot fast path's guard and fallback fold "
+        "(not a Column; the AST scan cannot see it)",
+}
+
+
+def _is_half(node):
+    if isinstance(node, ast.Constant):
+        return node.value == 0.5
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "lit"
+        and len(node.args) == 1
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value == 0.5
+    )
+
+
+def _hand_rolled_fixed_point_sites(path):
+    """(function, line) of every F.floor(<expr> + 0.5) and
+    F.floor(<expr> + F.lit(0.5)) in one module."""
+    sites = []
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "floor"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+            and node.args
+            and isinstance(node.args[0], ast.BinOp)
+            and isinstance(node.args[0].op, ast.Add)
+            and _is_half(node.args[0].right)
+        ):
+            sites.append((fn, node.lineno))
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(ast.parse(path.read_text()), "<module>")
+    return sites
+
+
+def test_fixed_point_idiom_lives_in_registry():
+    """The fixed-point rule has one home: a new hand-rolled
+    floor(x*10^s + 0.5) in a builder fails here; use
+    registry.scaled_int / dsum / fixed, or allowlist it with a reason."""
+    import sql_flow_spark
+
+    root = Path(sql_flow_spark.__file__).parent
+    stray = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "registry.py":
+            continue
+        for fn, line in _hand_rolled_fixed_point_sites(path):
+            if (rel, fn) not in _FIXED_POINT_ALLOWLIST:
+                stray.append(f"{rel}:{line} in {fn}")
+    assert not stray, "use registry.scaled_int / dsum / fixed:\n" + "\n".join(stray)
+    for rel, fn in _FIXED_POINT_ALLOWLIST:  # no stale entries
+        tree = ast.parse((root / rel).read_text())
+        assert any(
+            isinstance(n, ast.FunctionDef) and n.name == fn for n in ast.walk(tree)
+        ), f"allowlisted {rel}:{fn} no longer exists"
 
 
 def _union_find_components(edges):
