@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sql_flow_spark.localdf import _TwinOverflow, bounded_or_distributed, local_df
-from sql_flow_spark.registry import dsum, fixed, query, scaled_int
+from sql_flow_spark.registry import dsum, fixed, o_dsum, query, scaled_int
 from sql_flow_spark.tables import load_tables
 
 # Engine-identical exact dot products. Per-element products are pure
@@ -726,13 +726,6 @@ def _fact_parts(emb: DataFrame, emb_col: str = "embedding") -> int:
     return max(1, min(cores, -(-n // _FACT_ROWS_PER_TASK)))
 
 
-def _o_pi_fsum(expr: str) -> str:
-    return (
-        f"CAST(SUM(CAST(floor(({expr}) * {10.0 ** _PI_SCALE} + 0.5) "
-        f"AS DECIMAL(38,0))) AS DOUBLE) / {10.0 ** _PI_SCALE}"
-    )
-
-
 def _pi_oracle() -> str:
     # MATERIALIZED: e is referenced 2x per iteration and each s/w/v
     # feeds the next — without the hint DuckDB inlines the whole
@@ -747,15 +740,15 @@ def _pi_oracle() -> str:
     ]
     for k in range(1, _PI_ITERS + 1):
         ctes.append(
-            f"s{k} AS MATERIALIZED (SELECT vec_id, {_o_pi_fsum('val * v')} AS s"
+            f"s{k} AS MATERIALIZED (SELECT vec_id, {o_dsum('val * v', _PI_SCALE)} AS s"
             f" FROM e JOIN v{k - 1} USING (dim) GROUP BY vec_id)"
         )
         ctes.append(
-            f"w{k} AS MATERIALIZED (SELECT dim, {_o_pi_fsum('val * s')} AS w"
+            f"w{k} AS MATERIALIZED (SELECT dim, {o_dsum('val * s', _PI_SCALE)} AS w"
             f" FROM e JOIN s{k} USING (vec_id) GROUP BY dim)"
         )
         ctes.append(
-            f"n{k} AS (SELECT sqrt({_o_pi_fsum('w * w')}) AS nrm FROM w{k})"
+            f"n{k} AS (SELECT sqrt({o_dsum('w * w', _PI_SCALE)}) AS nrm FROM w{k})"
         )
         ctes.append(
             f"v{k} AS MATERIALIZED (SELECT dim, w / nrm AS v FROM w{k}, n{k})"
@@ -1003,7 +996,7 @@ _ISO_SQ_SCALE = 6
             FROM lab WHERE nrm > 0)
     ),
     s AS (
-      SELECT label, dim, {_o_pi_fsum('uv')} AS sd
+      SELECT label, dim, {o_dsum('uv', _PI_SCALE)} AS sd
       FROM u GROUP BY label, dim
     ),
     q AS (
@@ -1018,7 +1011,7 @@ _ISO_SQ_SCALE = 6
              CAST(SUM(CASE WHEN nrm > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_vecs,
              CAST(SUM(CASE WHEN nrm > 0 THEN 0 ELSE 1 END) AS BIGINT)
                AS n_zero_norm,
-             {_o_pi_fsum('CASE WHEN nrm > 0 THEN nrm ELSE 0 END')} AS nrm_sum,
+             {o_dsum('CASE WHEN nrm > 0 THEN nrm ELSE 0 END', _PI_SCALE)} AS nrm_sum,
              MIN(CASE WHEN nrm > 0 THEN nrm END) AS min_norm,
              MAX(nrm) AS max_norm
       FROM lab GROUP BY label
@@ -1367,7 +1360,7 @@ def _km_ctes(n_clusters: int, iters: int) -> list[str]:
     for k in range(1, iters + 1):
         ctes.append(
             f"d{k} AS MATERIALIZED (SELECT vec_id, cluster,"
-            f" {_o_pi_fsum('(val - c) * (val - c)')} AS dist"
+            f" {o_dsum('(val - c) * (val - c)', _PI_SCALE)} AS dist"
             f" FROM e JOIN c{k - 1} USING (dim)"
             f" GROUP BY vec_id, cluster)"
         )
@@ -1379,7 +1372,7 @@ def _km_ctes(n_clusters: int, iters: int) -> list[str]:
         )
         ctes.append(
             f"c{k} AS MATERIALIZED (SELECT cluster, dim,"
-            f" {_o_pi_fsum('val')} / CAST(COUNT(*) AS DOUBLE) AS c"
+            f" {o_dsum('val', _PI_SCALE)} / CAST(COUNT(*) AS DOUBLE) AS c"
             f" FROM e JOIN a{k} USING (vec_id)"
             f" GROUP BY cluster, dim)"
         )
@@ -1481,7 +1474,7 @@ def _pq_ctes() -> list[str]:
     for k in range(1, PQ_ITERS + 1):
         ctes.append(
             f"d{k} AS MATERIALIZED (SELECT vec_id, sub, cluster,"
-            f" {_o_pi_fsum('(val - c) * (val - c)')} AS dist"
+            f" {o_dsum('(val - c) * (val - c)', _PI_SCALE)} AS dist"
             f" FROM e JOIN c{k - 1} USING (dim)"
             f" GROUP BY vec_id, sub, cluster)"
         )
@@ -1493,7 +1486,7 @@ def _pq_ctes() -> list[str]:
         )
         ctes.append(
             f"c{k} AS MATERIALIZED (SELECT cluster, dim,"
-            f" {_o_pi_fsum('val')} / CAST(COUNT(*) AS DOUBLE) AS c"
+            f" {o_dsum('val', _PI_SCALE)} / CAST(COUNT(*) AS DOUBLE) AS c"
             f" FROM e JOIN a{k} USING (vec_id, sub)"
             f" GROUP BY cluster, dim)"
         )

@@ -16,19 +16,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sql_flow_spark.functions.mat import materialize_once
-from sql_flow_spark.registry import dsum, fixed, query
+from sql_flow_spark.registry import dsum, fixed, o_dsum, query
 from sql_flow_spark.tables import load_tables
 
 _PR_ITERS = 4
 _PR_D = 0.85  # damping
 _PR_SCALE = 12  # fixed-point digits for inflow sums (values ~1e-7..1)
-
-
-def _o_pr_fsum(expr: str) -> str:
-    return (
-        f"CAST(SUM(CAST(floor(({expr}) * {10.0 ** _PR_SCALE} + 0.5) "
-        f"AS DECIMAL(38,0))) AS DOUBLE) / {10.0 ** _PR_SCALE}"
-    )
 
 
 def _pr_oracle() -> str:
@@ -52,7 +45,7 @@ def _pr_oracle() -> str:
     for k in range(1, _PR_ITERS + 1):
         ctes.append(
             f"f{k} AS MATERIALIZED (SELECT e.dst AS node,"
-            f" {_o_pr_fsum('p.pr * CAST(e.w AS DOUBLE) / CAST(o.outw AS DOUBLE)')}"
+            f" {o_dsum('p.pr * CAST(e.w AS DOUBLE) / CAST(o.outw AS DOUBLE)', _PR_SCALE)}"
             f" AS inflow"
             f" FROM edges e JOIN outw o ON e.src = o.src"
             f" JOIN p{k - 1} p ON p.node = e.src GROUP BY e.dst)"

@@ -26,8 +26,10 @@ def foreach_batch_query(
     name: str | None = None,
 ):
     """Start ``fn(batch_df, batch_id)`` as a foreachBatch query over
-    ``stream``: the one writer recipe shared by the pipeline's main and
-    managed-table queries and every standalone ``attach``.
+    ``stream``: the one writer recipe, shared by the pipeline's main and
+    managed-table queries. A leg runs standalone the same way:
+    ``foreach_batch_query(stream, leg.process, ckpt)``
+    (``IncrementalIVF.append_batch`` for the IVF index).
     ``available_now`` drains what is there and stops; otherwise
     ``processing_time`` sets the trigger interval (None = Spark's
     default trigger)."""

@@ -52,7 +52,7 @@ import json
 import logging
 import math
 import os
-from typing import Callable, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -71,12 +71,7 @@ from sql_flow_spark.functions.similarity import (
     sq_norm_dec,
 )
 from sql_flow_spark.localdf import bounded_or_distributed
-from sql_flow_spark.streaming import foreach_batch_query
-from sql_flow_spark.streaming.compaction import (
-    MarkerCommit,
-    assert_no_live_writer,
-    lease_heartbeat,
-)
+from sql_flow_spark.streaming.compaction import MarkerCommit
 from sql_flow_spark.tables import part_files, read_footer
 
 logger = logging.getLogger(__name__)
@@ -143,9 +138,9 @@ def prune_generations(root: str, keep: int = 2) -> list[int]:
 class IncrementalIVF:
     """A disk-resident IVF(-PQ) index that grows per micro-batch.
 
-    Build once (``build``), append forever (``append_batch`` /
-    ``attach``), search anytime (``search`` exact-in-cell /
-    ``search_pq`` ADC), ``rebuild()`` when ``needs_retrain`` fires."""
+    Build once (``build``), append forever (``append_batch``), search
+    anytime (``search`` exact-in-cell / ``search_pq`` ADC),
+    ``rebuild()`` when ``needs_retrain`` fires."""
 
     def __init__(
         self,
@@ -171,7 +166,7 @@ class IncrementalIVF:
         # mark codewords that lost every member during training — the
         # encoder never selects them, the LUT zeroes them.
         self.pq_codebook = pq_codebook
-        self._mc = MarkerCommit(index_dir, FOLD_SLOTS)
+        self._mc = MarkerCommit(index_dir, FOLD_SLOTS, seed=SEED_BATCH)
         self._index_schema = None  # (memo key, schema) — see index_df
 
     @property
@@ -403,15 +398,6 @@ class IncrementalIVF:
         driver transfer — the only collect on this path). Refuses a
         batch id at/below the compaction watermark and heartbeats the
         writer lease (streaming/compaction.py)."""
-        if batch_id >= 0:
-            self._mc.check_batch_writable(batch_id)
-        elif self._mc.marker()[0] is not None:
-            raise ValueError(
-                f"index {self.index_dir} already has a compaction "
-                "watermark; a build()-time seed partition would be "
-                "invisible to marker-filtered readers. Build into a "
-                "fresh index dir."
-            )
         # Align the write layout with partitionBy (guide §6): without
         # this, every upstream task writes a file into every cell dir
         # (tasks × k small files — after the r13 embeddings scan
@@ -422,12 +408,10 @@ class IncrementalIVF:
         # partitioned index write needs anyway.
         assigned = self._assigned(df).repartition("cell")
         self._index_schema = None
-        with lease_heartbeat(self.index_dir):
-            (
-                assigned.write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(f"{self.index_dir}/b={batch_id}")
-            )
+        self._mc.write(
+            batch_id,
+            assigned.write.mode("overwrite").partitionBy("cell").parquet,
+        )
         # occupancy from what was written — replay-consistent by
         # construction. r13: read per-cell row counts from the parquet
         # FOOTERS driver-side (k cell dirs, metadata-only reads)
@@ -436,7 +420,7 @@ class IncrementalIVF:
         # ~two full Spark jobs cheaper per append/build; at object-
         # store scale this is the standard list+footer pass over one
         # batch directory, O(files in the batch).
-        base = f"{self.index_dir}/b={batch_id}"
+        base = self._mc.path(batch_id)
         occ: dict[int, int] = {}
         for d in os.listdir(base):
             if not d.startswith("cell="):
@@ -468,72 +452,32 @@ class IncrementalIVF:
             )
         return verdict
 
-    def attach(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str,
-        on_batch: Optional[Callable[[int, dict], None]] = None,
-        available_now: bool = True,
-        processing_time: str | None = None,
-    ):
-        """Maintain the index from a streaming DataFrame; ``on_batch``
-        receives each batch's drift verdict."""
-
-        def _step(batch_df: DataFrame, batch_id: int) -> None:
-            verdict = self.append_batch(batch_df, batch_id)
-            if on_batch is not None:
-                on_batch(batch_id, verdict)
-
-        return foreach_batch_query(
-            stream, _step, checkpoint_dir, available_now, processing_time,
-            "ann-index-append",
-        )
-
     # ---------------------------------------------------- compaction
 
     def compact(self, force: bool = False) -> int:
         """Fold committed batch partitions (and the build()-time seed,
-        if any) into the inactive slot, preserving the ``cell``
-        partitioning so search keeps its partition-pruned scans. Commit
-        = atomic marker rename; the newest live batch is never folded
-        (replay protection); dead directories are removed best-effort
-        (streaming/compaction.py). Returns the number of batch
-        partitions folded. Rows are concatenated as-is — a vec_id
-        re-inserted in a later batch stays duplicated, exactly as it is
-        across live ``b=`` partitions (search dropDuplicates on
-        (qid, vec_id) already handles it)."""
-        if not force:
-            assert_no_live_writer(self.index_dir)
-        fold_ids, upto = self._mc.foldable()
-        if not fold_ids:
-            return 0
-        wm, slot = self._mc.marker()
-        df = self.spark.read.parquet(self.index_dir)
-        cond = F.col("b").isin(fold_ids)
-        if slot is not None:
-            cond = cond | (F.col("b") == slot)
-        if wm is None and self._mc.has_dir(SEED_BATCH):
-            cond = cond | (F.col("b") == SEED_BATCH)
-        target = self._mc.inactive_slot(slot)
-        self._index_schema = None
+        if any) into one slot by the shared marker-commit protocol
+        (streaming/compaction.py), preserving the ``cell`` partitioning
+        so search keeps its partition-pruned scans. Returns the number
+        of batch partitions folded. Rows are concatenated as-is — a
+        vec_id re-inserted in a later batch stays duplicated, exactly
+        as it is across live ``b=`` partitions (search dropDuplicates
+        on (qid, vec_id) already handles it)."""
         cols = ["vec_id", "embedding", "nrm", "cell"] + (
             ["codes"] if self.pq else []
         )
-        (
-            df.where(cond)
-            .select(*cols)
-            .repartition("cell")  # one file per cell (see _write_batch)
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{self.index_dir}/b={target}")
-        )
-        self._mc.write_marker(upto, target)  # COMMIT
-        self._mc.cleanup(
-            upto,
-            slot if slot != target else None,
-            extra=[SEED_BATCH] if self._mc.has_dir(SEED_BATCH) else [],
-        )
-        return len(fold_ids)
+
+        def fold(sources: DataFrame, target: str, _upto: int) -> None:
+            self._index_schema = None
+            (
+                sources.select(*cols)
+                .repartition("cell")  # one file per cell (see _write_batch)
+                .write.mode("overwrite")
+                .partitionBy("cell")
+                .parquet(target)
+            )
+
+        return self._mc.compact(self.spark, fold, force)
 
     # -------------------------------------------------------- search
 
@@ -560,12 +504,7 @@ class IncrementalIVF:
             reader = reader.schema(memo[1])
         df = reader.parquet(self.index_dir)
         self._index_schema = (key, df.schema)
-        if wm is not None:
-            df = df.where(
-                (F.col("b") == slot)
-                | ((F.col("b") >= 0) & (F.col("b") > wm))
-            )
-        return df
+        return self._mc.live(df)
 
     def recall_audit(
         self,

@@ -41,12 +41,10 @@ state, so its gate can only ever see one batch; this one remembers.
 
 from __future__ import annotations
 
-import logging
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from sql_flow_spark.functions.curation import (
     QUALITY_MIN,
@@ -55,13 +53,7 @@ from sql_flow_spark.functions.curation import (
     with_repetition_2gram,
 )
 from sql_flow_spark.functions.textops import fingerprint
-from sql_flow_spark.streaming.ingest_dedup import (
-    FingerprintIndex,
-    attach_foreach,
-    probe_index,
-)
-
-logger = logging.getLogger(__name__)
+from sql_flow_spark.streaming.ingest_dedup import FingerprintIndex, probe_index
 
 
 class CurationGate:
@@ -139,16 +131,3 @@ class CurationGate:
         new_fps = verdicts.where(F.col("verdict") != "duplicate").select("f")
         self.index.append(new_fps, batch_id)
         return verdicts
-
-    def attach(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str,
-        available_now: bool = True,
-        processing_time: str | None = None,
-    ) -> StreamingQuery:
-        """Run as a standalone streaming query over ``stream``."""
-        return attach_foreach(
-            self.process, "curation-gate", stream, checkpoint_dir,
-            available_now, processing_time,
-        )

@@ -39,13 +39,12 @@ from __future__ import annotations
 
 import logging
 import os
-from typing import Callable, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_flow_spark.streaming import foreach_batch_query
+from sql_flow_spark.streaming.compaction import batch_dirs
 
 logger = logging.getLogger(__name__)
 
@@ -146,18 +145,7 @@ class StreamingHeavyHitters:
         the pyarrow-written ones."""
         import pyarrow.parquet as pq
 
-        ids = []
-        try:
-            for nm in os.listdir(self.state_dir):
-                if nm.startswith("b="):
-                    try:
-                        b = int(nm[2:])
-                    except ValueError:
-                        continue
-                    if b < before_batch:
-                        ids.append(b)
-        except OSError:
-            return None, [], 0
+        ids = [b for b in batch_dirs(self.state_dir) if b < before_batch]
         if not ids:
             return None, [], 0
         head = max(ids)
@@ -188,23 +176,13 @@ class StreamingHeavyHitters:
         import shutil
 
         keep_from = pred if pred is not None else batch_id
-        try:
-            names = os.listdir(self.state_dir)
-        except OSError:  # pragma: no cover - dir vanished
-            return
-        for nm in names:
-            if not nm.startswith("b="):
-                continue
-            try:
-                b = int(nm[2:])
-            except ValueError:
-                continue
+        for b in batch_dirs(self.state_dir):
             if b < keep_from:
                 try:
-                    shutil.rmtree(os.path.join(self.state_dir, nm))
+                    shutil.rmtree(os.path.join(self.state_dir, f"b={b}"))
                 except OSError as e:  # pragma: no cover - best-effort
                     logger.warning(
-                        "heavy-hitters prune: could not remove %s: %s", nm, e
+                        "heavy-hitters prune: could not remove b=%s: %s", b, e
                     )
 
     def _write_snapshot(
@@ -289,25 +267,3 @@ class StreamingHeavyHitters:
                 batch_id, result["n"],
             )
         return result
-
-    def attach(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str,
-        on_batch: Optional[Callable[[int, dict], None]] = None,
-        available_now: bool = True,
-        processing_time: str | None = None,
-    ):
-        def _step(batch_df: DataFrame, batch_id: int) -> None:
-            result = self.fold_batch(batch_df, batch_id)
-            logger.info(
-                "heavy-hitters batch %s: n=%s, %s hitters",
-                batch_id, result["n"], len(result["hitters"]),
-            )
-            if on_batch is not None:
-                on_batch(batch_id, result)
-
-        return foreach_batch_query(
-            stream, _step, checkpoint_dir, available_now, processing_time,
-            "heavy-hitters",
-        )

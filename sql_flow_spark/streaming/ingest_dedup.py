@@ -38,23 +38,14 @@ directory count stays bounded regardless of stream lifetime.
 
 from __future__ import annotations
 
-import logging
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
 from sql_flow_spark.functions.textops import fingerprint
-from sql_flow_spark.streaming import foreach_batch_query
-from sql_flow_spark.streaming.compaction import (
-    MarkerCommit,
-    assert_no_live_writer,
-    lease_heartbeat,
-)
-
-logger = logging.getLogger(__name__)
+from sql_flow_spark.streaming.compaction import MarkerCommit
 
 # Partition key for index rows seeded from a pre-existing corpus
 # (never excluded by replay protection: -1 is not a valid batch id).
@@ -68,109 +59,53 @@ FOLD_SLOTS = (-101, -102)
 class FingerprintIndex:
     """The corpus fingerprint index: Hive-partitioned parquet
     ``index_dir/b=<batch>/`` holding one column ``f`` (md5 of the
-    normalized text). Batch-keyed overwrite makes every write
-    idempotent under streaming replay."""
+    normalized text), kept by the marker-commit protocol
+    (streaming/compaction.py)."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        self._mc = MarkerCommit(index_dir, FOLD_SLOTS)
+        self._mc = MarkerCommit(index_dir, FOLD_SLOTS, seed=SEED_BATCH)
 
     def read(self, exclude_batch: Optional[int] = None) -> Optional[DataFrame]:
-        """The index as of 'before batch ``exclude_batch``' (replay
-        protection: a crashed attempt of the same batch id must not
-        count as corpus). None when the index is empty.
-
-        Marker-aware: once a compaction has committed, the folded
-        history lives in the active slot and every partition at or
-        below the watermark (including the bootstrap b=-1) is dead —
-        reading them would double-count crash leftovers the best-effort
-        cleanup missed."""
+        """The committed index as of 'before batch ``exclude_batch``'
+        (replay protection: a crashed attempt of the same batch id must
+        not count as corpus). None when the index is empty."""
         try:
             df = self.spark.read.parquet(self.index_dir)
         except AnalysisException:
             return None  # nothing ingested yet
         if "f" not in df.columns:  # empty dir discovered with no schema
             return None
-        wm, slot = self._mc.marker()
-        if wm is not None:
-            df = df.where(
-                (F.col("b") == slot)
-                | ((F.col("b") >= 0) & (F.col("b") > wm))
-            )
-        if exclude_batch is not None:
-            df = df.where(F.col("b") != F.lit(exclude_batch))
-        return df.select("f")
+        return self._mc.live(df, exclude=exclude_batch).select("f")
 
     def append(self, new_fps: DataFrame, batch_id: int) -> None:
         """Overwrite partition ``b=batch_id`` with the batch's new
-        DISTINCT fingerprints (idempotent under replay). Refuses a
-        batch id at/below the compaction watermark and heartbeats the
-        writer lease (streaming/compaction.py)."""
-        if batch_id >= 0:
-            self._mc.check_batch_writable(batch_id)
-        with lease_heartbeat(self.index_dir):
-            (
-                new_fps.select("f")
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(f"{self.index_dir}/b={batch_id}")
-            )
+        DISTINCT fingerprints (idempotent under replay)."""
+        self._mc.write(
+            batch_id,
+            new_fps.select("f").distinct().write.mode("overwrite").parquet,
+        )
 
     def seed(self, corpus: DataFrame, text_col: str = "text") -> None:
         """Bootstrap from an existing corpus (the batch world's
         dedup_exact output feeding the streaming world's index)."""
-        wm, _slot = self._mc.marker()
-        if wm is not None:
-            raise ValueError(
-                f"index {self.index_dir} already has a compaction "
-                "watermark; the bootstrap partition b=-1 would be "
-                "invisible to marker-filtered readers. Seed a fresh "
-                "index dir."
-            )
         fps = corpus.select(fingerprint(text_col).alias("f"))
         self.append(fps, SEED_BATCH)
 
     def compact(self, force: bool = False) -> int:
         """Fold committed batch partitions (and the bootstrap, if any)
-        into the inactive slot; commit by atomic marker rename; remove
-        dead directories best-effort. The newest live batch is never
-        folded (replay protection — see streaming/compaction.py).
-        Returns the number of batch partitions folded. The fold is a
-        DISTINCT over fingerprints, so the folded slot is no bigger
-        than the unique corpus."""
-        if not force:
-            assert_no_live_writer(self.index_dir)
-        fold_ids, upto = self._mc.foldable()
-        if not fold_ids:
-            return 0
-        wm, slot = self._mc.marker()
-        try:
-            df = self.spark.read.parquet(self.index_dir)
-        except AnalysisException:  # pragma: no cover - dirs vanished
-            return 0
-        sources = [F.col("b").isin(fold_ids)]
-        if slot is not None:
-            sources.append(F.col("b") == slot)
-        seed_present = wm is None and self._mc.has_dir(SEED_BATCH)
-        if seed_present:
-            sources.append(F.col("b") == SEED_BATCH)
-        cond = sources[0]
-        for c in sources[1:]:
-            cond = cond | c
-        target = self._mc.inactive_slot(slot)
-        folded = df.where(cond).select("f").distinct()
-        folded.write.mode("overwrite").parquet(f"{self.index_dir}/b={target}")
-        self._mc.write_marker(upto, target)  # COMMIT
-        # the bootstrap dir is dead once ANY marker exists (first fold
-        # absorbed it) — clean it even if it is a crash leftover from a
-        # previous compact's interrupted cleanup
-        self._mc.cleanup(
-            upto,
-            slot if slot != target else None,
-            extra=[SEED_BATCH] if self._mc.has_dir(SEED_BATCH) else [],
-        )
-        return len(fold_ids)
+        into one slot (streaming/compaction.py). Returns the number of
+        batch partitions folded. The fold is a DISTINCT over
+        fingerprints, so the folded slot is no bigger than the unique
+        corpus."""
+
+        def fold(sources: DataFrame, target: str, _upto: int) -> None:
+            sources.select("f").distinct().write.mode("overwrite").parquet(
+                target
+            )
+
+        return self._mc.compact(self.spark, fold, force)
 
 
 def probe_index(
@@ -193,27 +128,6 @@ def probe_index(
     else:
         probed = fp.withColumn("_in_corpus", F.lit(None).cast("boolean"))
     return probed.join(firsts, "f")
-
-
-def attach_foreach(
-    process,
-    name: str,
-    stream: DataFrame,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    processing_time: str | None = None,
-) -> StreamingQuery:
-    """Run a (batch_df, batch_id) -> DataFrame processor as a
-    standalone foreachBatch streaming query (shared by IngestDedup
-    and CurationGate)."""
-
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        n = process(batch_df, batch_id).count()
-        logger.info("%s batch %s: %s verdicts", name, batch_id, n)
-
-    return foreach_batch_query(
-        stream, _step, checkpoint_dir, available_now, processing_time, name
-    )
 
 
 def score_batch(
@@ -282,16 +196,3 @@ class IngestDedup:
         new_fps = verdicts.where(F.col("verdict") != "dup_of_corpus").select("f")
         self.index.append(new_fps, batch_id)
         return verdicts
-
-    def attach(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str,
-        available_now: bool = True,
-        processing_time: str | None = None,
-    ) -> StreamingQuery:
-        """Run as a standalone streaming query over ``stream``."""
-        return attach_foreach(
-            self.process, "ingest-dedup", stream, checkpoint_dir,
-            available_now, processing_time,
-        )

@@ -13,28 +13,12 @@ without transactions, the same protocol the dedup index proved.
 Read = merge-on-read: one groupBy over the partials (partials are
 key-cardinality × batches, not row-cardinality — the fact rows were
 collapsed before the write). ``compact()`` bounds the partition count
-with a MARKER-COMMIT protocol:
-
-- two seed slots (``b=-1`` / ``b=-2``); a fold writes the merged
-  history into the INACTIVE slot, never overwriting the slot readers
-  are using;
-- the commit point is an atomic rename of ``_watermark.json``
-  (watermark + active slot). A crash anywhere before the rename
-  leaves the old marker — readers keep the old, complete state; a
-  crash after it leaves only stale directories, which the NEXT
-  compact removes (cleanup deletes every on-disk batch partition at
-  or below the watermark, not just the ones it folded);
-- the newest live batch is never folded: under a (serial) streaming
-  writer only the latest batch can be replayed after a restart, so
-  keeping it out of the fold makes replay and compaction commute.
-  compact() must not run concurrently with a writer — run it between
-  triggers or from the `cli compact` maintenance verb while the
-  stream is stopped; this is now ENFORCED advisorily: ``process``
-  heartbeats a writer lease and compact() refuses while a different
-  process's lease is fresh (streaming/compaction.py);
-- ``process`` re-reads the marker on every call (one local
-  file read, no Spark job) and refuses a batch id at or below the
-  watermark — a write readers would silently ignore.
+by folding history into one of two seed slots (``b=-1`` / ``b=-2``)
+under the shared marker-commit protocol (streaming/compaction.py:
+atomic ``_watermark.json`` commit, the newest batch never folded,
+writes at/below the watermark refused, writer lease). compact() must
+not run concurrently with a writer — run it between triggers or from
+the `cli compact` maintenance verb while the stream is stopped.
 
 Scale shape: per batch one shuffle onto the rollup keys with map-side
 partials (the classic combiner); the maintained table grows with KEY
@@ -49,20 +33,13 @@ maintained aggregate is a first-class queryable parquet table.
 
 from __future__ import annotations
 
-import logging
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-from sql_flow_spark.streaming.compaction import (
-    MarkerCommit,
-    assert_no_live_writer,
-    lease_heartbeat,
-)
-
-logger = logging.getLogger(__name__)
+from sql_flow_spark.streaming.compaction import MarkerCommit
 
 SEED_SLOTS = (-1, -2)  # the two fold targets; never real batch ids
 _SUPPORTED = ("sum", "count", "min", "max", "avg")
@@ -104,9 +81,6 @@ class StreamingRollup:
         # incremental state engines (streaming/compaction.py)
         self._mc = MarkerCommit(table_dir, SEED_SLOTS)
 
-    def _marker(self) -> tuple[Optional[int], Optional[int]]:
-        return self._mc.marker()
-
     # ------------------------------------------------------ partials
 
     def _partial_cols(self):
@@ -138,22 +112,16 @@ class StreamingRollup:
 
     def process(self, df: DataFrame, batch_id: int) -> None:
         """Fold one micro-batch: per-key partials overwrite
-        ``b=<batch_id>`` (replay-idempotent). Refuses a batch id at or
-        below the compaction watermark — readers would silently ignore
-        it (streaming batch ids only grow, so this only bites a
-        one-shot ``invoke`` (fixed slot 0) against a previously
-        compacted table). The marker is re-read from disk on every
-        call, so a compaction by another process is seen immediately.
-        Also heartbeats the advisory writer lease that makes a
-        concurrent `cli compact` refuse (compaction.py)."""
-        self._mc.check_batch_writable(batch_id)
+        ``b=<batch_id>`` (replay-idempotent) through the shared
+        marker-commit write, which refuses a batch id at or below the
+        compaction watermark (streaming batch ids only grow, so this
+        only bites a one-shot ``invoke`` (fixed slot 0) against a
+        previously compacted table) and heartbeats the writer lease
+        that makes a concurrent `cli compact` refuse."""
         part = self._partial_agg(df).withColumn(
             _WM_COL, F.lit(None).cast("long")
         )
-        with lease_heartbeat(self.table_dir):
-            part.write.mode("overwrite").parquet(
-                f"{self.table_dir}/b={batch_id}"
-            )
+        self._mc.write(batch_id, part.write.mode("overwrite").parquet)
 
     # --------------------------------------------------------- reads
 
@@ -166,14 +134,7 @@ class StreamingRollup:
             return None
         if not set(self.keys).issubset(df.columns):
             return None
-        wm, slot = self._marker()
-        if wm is None:
-            # no compaction yet: live batch partitions only (a crashed
-            # first fold may have left an uncommitted seed slot)
-            return df.where(F.col("b") >= 0)
-        return df.where(
-            (F.col("b") == slot) | ((F.col("b") >= 0) & (F.col("b") > wm))
-        )
+        return self._mc.live(df)
 
     def _merge_exprs(self):
         exprs = []
@@ -211,43 +172,19 @@ class StreamingRollup:
     # ---------------------------------------------------- compaction
 
     def compact(self, force: bool = False) -> int:
-        """Fold committed batch partitions into the inactive seed slot
-        and commit via the atomic marker rename. The NEWEST live batch
-        is never folded (it is the only one a restarted stream can
-        replay). Cleanup afterwards removes the old seed slot and
-        EVERY on-disk batch partition at/below the new watermark —
-        including leftovers of a previously crashed cleanup. Returns
-        the number of batch partitions folded. Refuses while another
-        process's writer lease is fresh (compaction.py)."""
-        if not force:
-            assert_no_live_writer(self.table_dir)
-        wm, slot = self._marker()
-        fold_ids, upto = self._mc.foldable()
-        if not fold_ids:
-            return 0  # nothing foldable without touching the newest batch
-        partials = self._read_partials()
-        if partials is None:  # pragma: no cover - dirs vanished underneath
-            return 0
-        to_fold = partials.where(
-            (F.col("b") == (slot if slot is not None else SEED_SLOTS[0]))
-            | F.col("b").isin(fold_ids)
-        )
-        target = self._mc.inactive_slot(slot)
-        folded = (
-            to_fold.drop("b")
-            .groupBy(*self.keys)
-            .agg(*self._merge_exprs())
-            .withColumn(_WM_COL, F.lit(upto).cast("long"))
-        )
-        # fold reads the OLD slot and writes the OTHER one — no
-        # self-referential overwrite, so no checkpoint needed; a crash
-        # during this write leaves the marker (and readers) on the old
-        # complete state
-        folded.write.mode("overwrite").parquet(
-            f"{self.table_dir}/b={target}"
-        )
-        self._mc.write_marker(upto, target)  # COMMIT
-        # best-effort cleanup; a crash here is repaired by the next
-        # compact (anything <= the committed watermark is dead)
-        self._mc.cleanup(upto, slot if slot != target else None)
-        return len(fold_ids)
+        """Fold committed batch partitions into one seed slot by the
+        shared marker-commit protocol (streaming/compaction.py): the
+        newest live batch is never folded, and the fold merges partials
+        exactly as a read does. Returns the number of batch partitions
+        folded."""
+
+        def fold(sources: DataFrame, target: str, upto: int) -> None:
+            (
+                sources.groupBy(*self.keys)
+                .agg(*self._merge_exprs())
+                .withColumn(_WM_COL, F.lit(upto).cast("long"))
+                .write.mode("overwrite")
+                .parquet(target)
+            )
+
+        return self._mc.compact(self.spark, fold, force)

@@ -9,6 +9,7 @@ import random
 from pyspark.sql import functions as F
 
 from sql_flow_spark.sources import FileSource
+from sql_flow_spark.streaming import foreach_batch_query
 from sql_flow_spark.streaming.ann_index import (
     RETRAIN_PSI,
     AnnIndexLeg,
@@ -266,11 +267,10 @@ def test_streaming_append_e2e(spark, tmp_path):
         max_files_per_trigger=1,
     )
     stream = src.read_stream(spark)
-    q = idx.attach(
+    q = foreach_batch_query(
         stream,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        on_batch=lambda bid, v: verdicts.__setitem__(bid, v),
-        available_now=True,
+        lambda df, b: verdicts.__setitem__(b, idx.append_batch(df, b)),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
 

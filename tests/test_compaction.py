@@ -1,10 +1,10 @@
 """Marker-commit compaction for the fingerprint index and the IVF
-index (streaming/compaction.py, r8 verdict item 2), plus the writer-
-lease concurrency guard (item 6) and the heavy-hitters snapshot
-pruning. The rollup's own compaction tests live in
-test_streaming_rollup.py; these port the same crash-orphan and
-watermark disciplines to the two other incremental state engines and
-assert the listing cost is actually bounded."""
+index (streaming/compaction.py), plus the writer-lease concurrency
+guard and the heavy-hitters snapshot pruning. The rollup's own
+compaction tests live in test_streaming_rollup.py; these port the same
+crash-orphan, crash-before-marker and watermark disciplines to the two
+other incremental state engines and assert the listing cost is
+actually bounded."""
 
 import os
 import time
@@ -131,6 +131,36 @@ def test_fingerprint_compact_crash_orphan_is_repaired(spark, tmp_path):
     assert (wm, slot) == (4, -102)
 
 
+def _crash_before_marker(monkeypatch):
+    """Make the next compact die after its fold write, before the
+    marker rename (the commit point)."""
+
+    def crash(self, wm, slot):
+        raise RuntimeError("simulated crash before the marker rename")
+
+    monkeypatch.setattr(MarkerCommit, "write_marker", crash)
+
+
+def test_fingerprint_compact_crash_before_marker_is_invisible(
+    spark, tmp_path, monkeypatch
+):
+    """A first fold that wrote its slot but died before the marker
+    rename leaves readers on the old, complete state: the uncommitted
+    slot is not read (the bootstrap partition still is)."""
+    idx = _grown_index(spark, tmp_path)
+    before = sorted(r.f for r in idx.read().collect())
+    with monkeypatch.context() as m:
+        _crash_before_marker(m)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            idx.compact()
+    assert "b=-101" in _bdirs(idx.index_dir)  # the orphan fold slot
+    assert sorted(r.f for r in idx.read().collect()) == before
+    # a real compact afterwards repairs everything
+    assert idx.compact() == 3
+    assert _bdirs(idx.index_dir) == ["b=-101", "b=3"]
+    assert {r.f for r in idx.read().collect()} == set(before)
+
+
 # ----------------------------------------------------------- IVF index
 
 
@@ -166,6 +196,40 @@ def test_ivf_compact_preserves_search_and_bounds_dirs(spark, tmp_path):
 
     with pytest.raises(ValueError, match="watermark"):
         idx.append_batch(queries, 0)
+
+
+def test_ivf_compact_crash_before_marker_is_invisible(
+    spark, tmp_path, monkeypatch
+):
+    """The IVF port of the crash-before-marker test: the orphan fold
+    slot is not read, so counts and search results do not move."""
+    index_dir = str(tmp_path / "ivf")
+    idx = IncrementalIVF.build(spark, index_dir, _corpus_df(spark), k=4, nprobe=2)
+    for b in range(3):
+        batch = spark.createDataFrame(
+            [(10_000 + 100 * b + i, v)
+             for i, v in enumerate(_vecs(20, [1.0] + [0.0] * (DIM - 1), 50 + b))],
+            "vec_id long, embedding array<double>",
+        )
+        idx.append_batch(batch, b)
+    queries = spark.createDataFrame(
+        [(90_000, [1.0] + [0.0] * (DIM - 1))],
+        "vec_id long, embedding array<double>",
+    )
+    n_before = idx.index_df().count()
+    before = sorted(map(tuple, idx.search(queries, topk=5).collect()))
+    with monkeypatch.context() as m:
+        _crash_before_marker(m)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            idx.compact()
+    assert "b=-101" in _bdirs(index_dir)  # the orphan fold slot
+    assert idx.index_df().count() == n_before
+    assert IncrementalIVF.load(spark, index_dir).index_df().count() == n_before
+    assert sorted(map(tuple, idx.search(queries, topk=5).collect())) == before
+    # a real compact afterwards repairs everything
+    assert idx.compact() == 2
+    assert _bdirs(index_dir) == ["b=-101", "b=2"]
+    assert idx.index_df().count() == n_before
 
 
 # --------------------------------------------------------- writer lease

@@ -188,6 +188,70 @@ def test_fixed_point_idiom_lives_in_registry():
         ), f"allowlisted {rel}:{fn} no longer exists"
 
 
+_PROTOCOL_CALLS = {
+    "assert_no_live_writer", "lease_heartbeat", "write_marker", "foldable",
+    "inactive_slot", "cleanup", "check_batch_writable",
+}
+
+
+def _is_col_b(node):
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "col"
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+        and len(node.args) == 1
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value == "b"
+    )
+
+
+def _is_col(node):
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "col"
+    )
+
+
+def _state_protocol_sites(path):
+    """(line, what) of every marker-commit step in one module: a call
+    of a protocol function, or F.col("b") compared to (or isin of)
+    anything but another column — a slot / watermark filter."""
+    sites = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in _PROTOCOL_CALLS:
+                sites.append((node.lineno, name))
+            elif name == "isin" and _is_col_b(f.value):
+                sites.append((node.lineno, 'F.col("b").isin'))
+        elif isinstance(node, ast.Compare):
+            ops = [node.left, *node.comparators]
+            if any(map(_is_col_b, ops)) and not all(map(_is_col, ops)):
+                sites.append((node.lineno, 'F.col("b") compared to a slot'))
+    return sorted(sites)
+
+
+def test_state_table_protocol_lives_in_compaction():
+    """The marker-commit protocol has one home: writes, reads and folds
+    of a batch-partitioned state table go through
+    streaming/compaction.py:MarkerCommit (write / live / compact); an
+    owner supplies only its fold."""
+    import sql_flow_spark
+
+    root = Path(sql_flow_spark.__file__).parent
+    stray = [
+        f"{path.relative_to(root).as_posix()}:{line} {what}"
+        for path in sorted(root.rglob("*.py"))
+        if path.relative_to(root).as_posix() != "streaming/compaction.py"
+        for line, what in _state_protocol_sites(path)
+    ]
+    assert not stray, "use MarkerCommit.write / live / compact:\n" + "\n".join(stray)
+
+
 def _union_find_components(edges):
     parent = {}
 

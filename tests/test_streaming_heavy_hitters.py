@@ -7,6 +7,7 @@ import os
 from collections import Counter
 
 from sql_flow_spark.sources import FileSource
+from sql_flow_spark.streaming import foreach_batch_query
 from sql_flow_spark.streaming.heavy_hitters import (
     StreamingHeavyHitters,
     _mg_compact,
@@ -47,11 +48,10 @@ def test_streaming_heavy_hitters_e2e_restart_replay(spark, tmp_path):
     )
     results = {}
     src = FileSource(in_dir, format="json", max_files_per_trigger=1)
-    q = hh.attach(
+    q = foreach_batch_query(
         src.read_stream(spark),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        on_batch=lambda bid, r: results.__setitem__(bid, r),
-        available_now=True,
+        lambda df, b: results.__setitem__(b, hh.fold_batch(df, b)),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
 
@@ -78,11 +78,10 @@ def test_streaming_heavy_hitters_e2e_restart_replay(spark, tmp_path):
     hh2 = StreamingHeavyHitters(
         spark, state_dir=str(tmp_path / "state"), key_col="k", k=K
     )
-    q2 = hh2.attach(
+    q2 = foreach_batch_query(
         FileSource(in_dir, format="json", max_files_per_trigger=1).read_stream(spark),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        on_batch=lambda bid, r: results2.__setitem__(bid, r),
-        available_now=True,
+        lambda df, b: results2.__setitem__(b, hh2.fold_batch(df, b)),
+        str(tmp_path / "ckpt"),
     )
     q2.awaitTermination(120)
     true3 = Counter(b0 + b1 + b2)
