@@ -21,9 +21,8 @@ from sql_flow_spark.functions.similarity import (
     EMB_DUP_TAU,
     O_COSINE_PAIRS,
     O_NORMS_CTE,
-    dot_dec,
-    safe_cos,
-    sq_norm_dec,
+    norm,
+    pair_cosine,
 )
 from sql_flow_spark.functions.mat import materialize_once
 from sql_flow_spark.functions.textops import (
@@ -506,7 +505,7 @@ def embedding_near_dup_pairs(
     so thresholds agree across engines.
     """
     if block_col is not None:
-        s = emb.withColumn("nrm", F.sqrt(sq_norm_dec(F.col(emb_col))))
+        s = emb.withColumn("nrm", norm(emb_col))
         a = s.select(
             F.col(id_col).alias("vec_a"), F.col(block_col).alias("blk_a"),
             F.col(emb_col).alias("ea"), F.col("nrm").alias("nrm_a"),
@@ -572,7 +571,7 @@ def embedding_near_dup_pairs(
         vecs = emb.select(
             F.col(id_col).alias(id_col),
             F.col(emb_col).alias(emb_col),
-            F.sqrt(sq_norm_dec(F.col(emb_col))).alias("nrm"),
+            norm(emb_col).alias("nrm"),
         )
         cand = cand_ids.join(
             vecs.select(
@@ -587,17 +586,13 @@ def embedding_near_dup_pairs(
             ),
             "vec_b",
         )
-    # dot_dec_fast: bit-identical fixed-point dot with the codegen
-    # fast path — the candidate-pair cosine is the family's hottest
-    # per-row cost (r13, see similarity.dot_dec_fast)
-    from sql_flow_spark.functions.similarity import dot_dec_fast
-
+    # pair_cosine rides the codegen fast dot — the candidate-pair
+    # cosine is the family's hottest per-row cost (see
+    # similarity.dot_dec_fast)
     return cand.select(
         "vec_a",
         "vec_b",
-        safe_cos(
-            dot_dec_fast("ea", "eb", "nrm_a", "nrm_b"), F.col("nrm_a"), F.col("nrm_b")
-        ).alias("cosine"),
+        pair_cosine("ea", "eb", "nrm_a", "nrm_b").alias("cosine"),
     ).where(F.col("cosine") >= tau)
 
 

@@ -38,9 +38,8 @@ from sql_flow_spark.functions.dedup import ws_tokens
 from sql_flow_spark.functions.mat import materialize_once
 from sql_flow_spark.functions.similarity import (
     O_NORMS_CTE,
-    dot_dec_fast,
-    safe_cos,
-    sq_norm_dec,
+    norm,
+    pair_cosine,
 )
 from sql_flow_spark.registry import query, scaled_int
 from sql_flow_spark.tables import load_tables
@@ -316,7 +315,7 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "rank_lex")
 
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"].withColumn(
-        "nrm", F.sqrt(sq_norm_dec(F.col("embedding")))
+        "nrm", norm("embedding")
     )
     qv = e.where(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qe"), F.col("nrm").alias("qnrm")
@@ -326,11 +325,7 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qv))
         .select(
             F.col("vec_id").alias("doc_id"),
-            safe_cos(
-                dot_dec_fast("embedding", "qe", "nrm", "qnrm"),
-                F.col("nrm"),
-                F.col("qnrm"),
-            ).alias("cosine"),
+            pair_cosine("embedding", "qe", "nrm", "qnrm").alias("cosine"),
         )
     )
     vec = _ranked_head(cos, "cosine", "doc_id", RRF_DEPTH, "rank_vec").select(

@@ -13,6 +13,17 @@ Cross-engine determinism: cosine is computed from DECIMAL-exact sums
 of double products (see ``cosine_cols``), then a single IEEE
 sqrt/divide — bit-identical between Spark and DuckDB, so ordering and
 thresholds agree exactly.
+
+One cosine-search rule, shared by every search, dedup and retrieval
+builder (here, ``dedup.py``, ``retrieval.py`` and
+``streaming/ann_index.py``): ``norm`` is a vector's norm, ``pair_cosine``
+scores a candidate pair from the two stored norms (0 when either is 0),
+``top_per_query`` keeps each query's top k by (score DESC, nid) with an
+INT rank, and ``recall_panel`` grades an approximate neighbor list
+against the exact one. Only candidate generation (LSH buckets, IVF
+cells, ADC shortlists) differs between methods;
+``tests/test_properties.py::test_cosine_rule_lives_in_similarity``
+keeps hand-written copies out.
 """
 
 from __future__ import annotations
@@ -56,6 +67,11 @@ def sq_norm_dec(a: Column) -> Column:
     return dot_dec(a, a)
 
 
+def norm(col: Column | str) -> Column:
+    """The family's vector norm: sqrt of the exact squared norm."""
+    return F.sqrt(sq_norm_dec(F.col(col) if isinstance(col, str) else col))
+
+
 # Schema width of the embeddings table (TESTDATA.md contract; also
 # _PI_DIMS below). The fast dot kernel unrolls to this width and
 # falls back to the generic fold for any other array length.
@@ -74,9 +90,7 @@ def _dot_term_sql(a: str, b: str, i: int) -> str:
     )
 
 
-def dot_dec_fast(
-    a: str, b: str, na: str | None = None, nb: str | None = None
-) -> Column:
+def dot_dec_fast(a: str, b: str, na: str, nb: str) -> Column:
     """dot_dec over SQL column names, with a codegen fast path.
 
     Bit-identical to ``dot_dec`` by construction (r13 optimization
@@ -93,34 +107,27 @@ def dot_dec_fast(
     (OPTIMIZATION_r13.md) — the interpreted higher-order fold is the
     single hottest per-row cost of the embedding family.
 
-    r14 (VERDICT item 2 — the guard was the kernel's own hot spot):
-    when the caller supplies the vectors' norm columns ``na``/``nb``
-    (virtually every consumer already computes them for safe_cos),
-    the Σ|t| bound comes from Cauchy-Schwarz instead of a second
-    64-term abs pass: Σ|t_i| ≤ SCALE·Σ|a_i·b_i| + n ≤
+    The guard takes the vectors' norm columns ``na``/``nb`` (every
+    pair scorer already has them for safe_cos): the Σ|t| bound comes
+    from Cauchy-Schwarz instead of a second 64-term abs pass:
+    Σ|t_i| ≤ SCALE·Σ|a_i·b_i| + n ≤
     SCALE·‖a‖·‖b‖ + n, and the fixed-point norms under-estimate the
     true norms by < 6e-6, absorbed by the +1e-5 margin. The guard is
     strictly TIGHTER, and any row it reroutes lands on the exact
     DECIMAL fallback — identical value either way (verified: 0
     mismatches over 2M pairs). Effect: the expression halves (64
     terms instead of 128), ~1.5x warm and ~3x cold (codegen size) on
-    the kernel bench. Null/NaN/Inf routing is unchanged: a null
-    element nulls the norm exactly as it nulled the abs-sum.
+    the kernel bench. A null element nulls the norm, which nulls the
+    guard and routes the row to the fallback.
 
-    Use where the inputs are plain column names (the hot pair stages);
+    Called only through ``pair_cosine`` (the hot pair stages);
     ``dot_dec`` stays the general Column-level API."""
     n = _DOT_UNROLL_DIMS
     sd = " + ".join(_dot_term_sql(a, b, i) for i in range(n))
-    if na is not None and nb is not None:
-        guard = (
-            f"(({na} + 1.0E-5D) * ({nb} + 1.0E-5D) * {10.0 ** _DOT_SCALE:.1f}D"
-            f" + {n}.0D) < {_DOT_EXACT_BOUND}"
-        )
-    else:
-        sabs = " + ".join(
-            f"abs({_dot_term_sql(a, b, i)})" for i in range(n)
-        )
-        guard = f"({sabs}) < {_DOT_EXACT_BOUND}"
+    guard = (
+        f"(({na} + 1.0E-5D) * ({nb} + 1.0E-5D) * {10.0 ** _DOT_SCALE:.1f}D"
+        f" + {n}.0D) < {_DOT_EXACT_BOUND}"
+    )
     fb = (
         f"cast(aggregate(zip_with({a}, {b}, (x, y) ->"
         f" cast(floor(cast(x as double) * cast(y as double)"
@@ -135,9 +142,7 @@ def dot_dec_fast(
 
 
 def cosine_cols(a: Column, b: Column) -> Column:
-    return safe_cos(
-        dot_dec(a, b), F.sqrt(sq_norm_dec(a)), F.sqrt(sq_norm_dec(b))
-    )
+    return safe_cos(dot_dec(a, b), norm(a), norm(b))
 
 
 # Zero-norm convention for the whole cosine family (Spark side +
@@ -152,6 +157,13 @@ def safe_cos(dot: Column, na: Column, nb: Column) -> Column:
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(
         dot / (na * nb)
     )
+
+
+def pair_cosine(a: str, b: str, na: str, nb: str) -> Column:
+    """Cosine of a scored pair over column names: vectors ``a``/``b``
+    with their stored norms ``na``/``nb`` (``norm``), the fast exact
+    dot, 0 when either norm is 0."""
+    return safe_cos(dot_dec_fast(a, b, na, nb), F.col(na), F.col(nb))
 
 
 def o_safe_cos(dot_expr: str, na: str, nb: str) -> str:
@@ -205,7 +217,73 @@ EMB_DUP_TAU = 0.40
 def _with_norm(e: DataFrame) -> DataFrame:
     """Attach the per-vector norm once (narrow map, computed at the
     scan) so pair scoring only pays for the dot product."""
-    return e.withColumn("nrm", F.sqrt(sq_norm_dec(F.col("embedding"))))
+    return e.withColumn("nrm", norm("embedding"))
+
+
+def _sides(
+    e: DataFrame,
+    carry: tuple[str, ...] = (),
+    q_extra: tuple[Column, ...] = (),
+    c_extra: tuple[Column, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """Split a normed corpus (vec_id, embedding, nrm, ...) into the
+    query side (qid, q<carry>, ea, qnrm, *q_extra) — vec_id <
+    N_QUERIES — and the corpus side (nid, n<carry>, eb, cnrm,
+    *c_extra), the rest."""
+
+    def side(cond, key, p, emb, nrm, extra):
+        return e.where(cond).select(
+            F.col("vec_id").alias(key),
+            *(F.col(c).alias(p + c) for c in carry),
+            F.col("embedding").alias(emb),
+            F.col("nrm").alias(nrm),
+            *extra,
+        )
+
+    return (
+        side(F.col("vec_id") < N_QUERIES, "qid", "q", "ea", "qnrm", q_extra),
+        side(F.col("vec_id") >= N_QUERIES, "nid", "n", "eb", "cnrm", c_extra),
+    )
+
+
+def top_per_query(df: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """The top ``k`` rows per ``qid`` by (``score`` DESC, nid), with the
+    INT ``rank`` column: every neighbor list of the family."""
+    w = Window.partitionBy("qid").orderBy(F.col(score).desc(), F.col("nid"))
+    return df.withColumn("rank", F.row_number().over(w).cast("int")).where(
+        F.col("rank") <= k
+    )
+
+
+def recall_panel(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """Grade ``approx`` (qid, nid) neighbor lists against the ``exact``
+    top-``k`` (qid, nid): one row (n_queries, macro_recall, min_recall,
+    perfect_queries). A query the approximate method returns nothing
+    for still counts, with recall 0: the qid base frame comes from
+    ``exact``. Every query has exactly k exact neighbors, so the macro
+    average of hits_q/k is sum(hits)/(|Q|*k) — one division of exact
+    BIGINTs instead of an order-sensitive double sum."""
+    hits = (
+        approx.select("qid", "nid")
+        .join(F.broadcast(exact), ["qid", "nid"])
+        .groupBy("qid")
+        .agg(F.count("*").alias("hits"))
+    )
+    per_q = (
+        exact.select("qid")
+        .distinct()
+        .join(hits, "qid", "left")
+        .select(F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"))
+    )
+    return per_q.agg(
+        F.count("*").cast("long").alias("n_queries"),
+        (
+            F.sum("hits").cast("double")
+            / (F.count("*") * F.lit(k)).cast("double")
+        ).alias("macro_recall"),
+        (F.min("hits").cast("double") / F.lit(float(k))).alias("min_recall"),
+        F.sum((F.col("hits") == k).cast("long")).cast("long").alias("perfect_queries"),
+    )
 
 
 @query(
@@ -233,28 +311,11 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring is map-side over a single embeddings scan; the only shuffle
     is the per-query top-k (k*|Q| rows). Exact baseline for ANN."""
     t = load_tables(spark, sf_dir, ("embeddings",), spread=False)
-    e = _with_norm(t["embeddings"])
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("ea"),
-        F.col("nrm").alias("qnrm"),
-    )
-    c = e.where(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("eb"),
-        F.col("nrm").alias("cnrm"),
-    )
+    q, c = _sides(_with_norm(t["embeddings"]))
     scored = c.crossJoin(F.broadcast(q)).select(
-        "qid",
-        "nid",
-        safe_cos(
-            dot_dec_fast("ea", "eb", "qnrm", "cnrm"), F.col("qnrm"), F.col("cnrm")
-        ).alias("cosine"),
+        "qid", "nid", pair_cosine("ea", "eb", "qnrm", "cnrm").alias("cosine")
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= TOP_K)
-        .select("qid", "nid", "cosine", "rank")
-    )
+    return top_per_query(scored, TOP_K).select("qid", "nid", "cosine", "rank")
 
 
 # Multi-table sign LSH: L tables of k hyperplanes each. One table of
@@ -325,15 +386,10 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding", "nrm",
         lsh_buckets(F.col("embedding"), planes).alias("buckets"),
     )
-    q = with_bucket.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("ea"),
-        F.col("nrm").alias("qnrm"),
-        F.explode("buckets").alias("qbucket"),
-    )
-    c = with_bucket.where(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("eb"),
-        F.col("nrm").alias("cnrm"),
-        F.explode("buckets").alias("bucket"),
+    q, c = _sides(
+        with_bucket,
+        q_extra=(F.explode("buckets").alias("qbucket"),),
+        c_extra=(F.explode("buckets").alias("bucket"),),
     )
     cand = (
         c.join(F.broadcast(q), F.col("bucket") == F.col("qbucket"))
@@ -341,18 +397,9 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["qid", "nid"])
     )
     scored = cand.select(
-        "qid",
-        "nid",
-        safe_cos(
-            dot_dec_fast("ea", "eb", "qnrm", "cnrm"), F.col("qnrm"), F.col("cnrm")
-        ).alias("cosine"),
+        "qid", "nid", pair_cosine("ea", "eb", "qnrm", "cnrm").alias("cosine")
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= TOP_K)
-        .select("qid", "nid", "cosine", "rank")
-    )
+    return top_per_query(scored, TOP_K).select("qid", "nid", "cosine", "rank")
 
 
 # ----------------------------------------------------------------- IVF
@@ -450,16 +497,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("embeddings",), spread=False)
     e = t["embeddings"]
     cent = ivf_centroids(e)
-    with_cell = _with_norm(e)
-    q = with_cell.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("ea"),
-        F.col("nrm").alias("qnrm"),
-        F.explode(ivf_assign(F.col("embedding"), cent, IVF_NPROBE)).alias("qcell"),
-    )
-    c = with_cell.where(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("eb"),
-        F.col("nrm").alias("cnrm"),
-        ivf_assign(F.col("embedding"), cent, 1)[0].alias("cell"),
+    emb = F.col("embedding")
+    q, c = _sides(
+        _with_norm(e),
+        q_extra=(F.explode(ivf_assign(emb, cent, IVF_NPROBE)).alias("qcell"),),
+        c_extra=(ivf_assign(emb, cent, 1)[0].alias("cell"),),
     )
     cand = (
         c.join(F.broadcast(q), F.col("cell") == F.col("qcell"))
@@ -467,18 +509,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["qid", "nid"])
     )
     scored = cand.select(
-        "qid",
-        "nid",
-        safe_cos(
-            dot_dec_fast("ea", "eb", "qnrm", "cnrm"), F.col("qnrm"), F.col("cnrm")
-        ).alias("cosine"),
+        "qid", "nid", pair_cosine("ea", "eb", "qnrm", "cnrm").alias("cosine")
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= TOP_K)
-        .select("qid", "nid", "cosine", "rank")
-    )
+    return top_per_query(scored, TOP_K).select("qid", "nid", "cosine", "rank")
 
 
 @query("ann_ivf_incremental")  # approximate + disk index -> rows-only
@@ -603,34 +636,10 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "nid")
         .localCheckpoint(eager=True)
     )
-    qids = exact.select("qid").distinct()
 
     def leg(name: str, approx: DataFrame) -> DataFrame:
-        hits = (
-            approx.select("qid", "nid")
-            .join(F.broadcast(exact), ["qid", "nid"])
-            .groupBy("qid")
-            .agg(F.count("*").alias("hits"))
-        )
-        per_q = qids.join(hits, "qid", "left").select(
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits")
-        )
-        # every query has exactly K exact neighbors, so the macro
-        # average of hits_q/K equals sum(hits)/(|Q|*K) — one division
-        # of exact BIGINTs instead of an order-sensitive double sum
-        return per_q.agg(
-            F.lit(name).alias("method"),
-            F.count("*").cast("long").alias("n_queries"),
-            (
-                F.sum("hits").cast("double")
-                / (F.count("*") * F.lit(TOP_K)).cast("double")
-            ).alias("macro_recall"),
-            (F.min("hits").cast("double") / F.lit(float(TOP_K))).alias(
-                "min_recall"
-            ),
-            F.sum((F.col("hits") == TOP_K).cast("long"))
-            .cast("long")
-            .alias("perfect_queries"),
+        return recall_panel(exact, approx, TOP_K).select(
+            F.lit(name).alias("method"), "*"
         )
 
     lsh = leg("lsh", ann_lsh_topk(spark, sf_dir))
@@ -643,13 +652,11 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_centroids",
-    oracle="""
+    oracle=f"""
     SELECT
       label,
       CAST(i - 1 AS INTEGER) AS dim,
-      CAST(SUM(CAST(floor(CAST(v AS DOUBLE) * 10000.0 + 0.5)
-                    AS DECIMAL(30,0))) AS DOUBLE)
-        / 10000.0 / CAST(COUNT(*) AS DOUBLE) AS centroid
+      {o_dsum('CAST(v AS DOUBLE)')} / CAST(COUNT(*) AS DOUBLE) AS centroid
     FROM (
       SELECT label,
              unnest(embedding) AS v,
@@ -856,12 +863,7 @@ def _pi_distributed(emb: DataFrame) -> DataFrame:
             .groupBy("dim")
             .agg(dsum(F.col("val") * F.col("s"), _PI_SCALE).alias("w"))
         )
-        nrm = F.sqrt(
-            F.sum(scaled_int(F.col("w") * F.col("w"), _PI_SCALE))
-            .over(wall)
-            .cast("double")
-            / F.lit(10.0**_PI_SCALE)
-        )
+        nrm = F.sqrt(dsum(F.col("w") * F.col("w"), _PI_SCALE, over=wall))
         v = w.select(
             "dim", (F.col("w") / nrm).alias("v")
         ).localCheckpoint(eager=True)
@@ -926,35 +928,17 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality |Q|×labels. The label column rides the same scan, so
     classification costs nothing beyond the search."""
     t = load_tables(spark, sf_dir, ("embeddings",), spread=False)
-    e = _with_norm(t["embeddings"])
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("qnrm"),
-    )
-    c = e.where(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("nid"),
-        F.col("label").alias("nlabel"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("cnrm"),
-    )
+    q, c = _sides(_with_norm(t["embeddings"]), carry=("label",))
     scored = c.crossJoin(F.broadcast(q)).select(
-        "qid",
-        "qlabel",
-        "nid",
-        "nlabel",
-        safe_cos(
-            dot_dec_fast("ea", "eb", "qnrm", "cnrm"), F.col("qnrm"), F.col("cnrm")
-        ).alias("cosine"),
+        "qid", "qlabel", "nid", "nlabel",
+        pair_cosine("ea", "eb", "qnrm", "cnrm").alias("cosine"),
     )
-    wk = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    topk = scored.withColumn("rnk", F.row_number().over(wk)).where(
-        F.col("rnk") <= KNN_K
+    votes = (
+        top_per_query(scored, KNN_K)
+        .groupBy("qid", "qlabel", "nlabel")
+        .agg(F.count("*").alias("n_votes"))
     )
-    votes = topk.groupBy("qid", "qlabel", "nlabel").agg(
-        F.count("*").alias("n_votes")
-    )
+    # the vote pick ranks labels, not neighbors: not a top_per_query
     wv = Window.partitionBy("qid").orderBy(
         F.col("n_votes").desc(), F.col("nlabel")
     )
@@ -1001,9 +985,7 @@ _ISO_SQ_SCALE = 6
     ),
     q AS (
       SELECT label,
-             CAST(SUM(CAST(floor(sd * sd * {10.0 ** _ISO_SQ_SCALE} + 0.5)
-                           AS DECIMAL(38,0))) AS DOUBLE)
-               / {10.0 ** _ISO_SQ_SCALE} AS qsum
+             {o_dsum('sd * sd', _ISO_SQ_SCALE)} AS qsum
       FROM s GROUP BY label
     ),
     nstats AS (
@@ -1175,34 +1157,12 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding operators; this extends the brief's training-data
     toolkit."""
     t = load_tables(spark, sf_dir, ("embeddings",), spread=False)
-    e = _with_norm(t["embeddings"])
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("qnrm"),
-    )
-    c = e.where(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("nid"),
-        F.col("label").alias("nlabel"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("cnrm"),
-    )
+    q, c = _sides(_with_norm(t["embeddings"]), carry=("label",))
     scored = c.crossJoin(F.broadcast(q)).select(
-        "qid",
-        "qlabel",
-        "nid",
-        "nlabel",
-        safe_cos(
-            dot_dec_fast("ea", "eb", "qnrm", "cnrm"), F.col("qnrm"), F.col("cnrm")
-        ).alias("cosine"),
+        "qid", "qlabel", "nid", "nlabel",
+        pair_cosine("ea", "eb", "qnrm", "cnrm").alias("cosine"),
     )
-    wk = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    neg = (
-        scored.where(F.col("nlabel") != F.col("qlabel"))
-        .withColumn("rnk", F.row_number().over(wk))
-        .where(F.col("rnk") <= HNM_K)
-    )
+    neg = top_per_query(scored.where(F.col("nlabel") != F.col("qlabel")), HNM_K)
     pos = (
         scored.where(F.col("nlabel") == F.col("qlabel"))
         .groupBy("qid")
@@ -1214,7 +1174,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nid",
         F.col("nlabel").cast("int").alias("neg_label"),
         "cosine",
-        F.col("rnk").cast("int").alias("rank"),
+        "rank",
         "pos_cosine",
         (F.col("pos_cosine") - F.col("cosine")).alias("margin"),
     )
@@ -1224,7 +1184,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_outliers",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT vec_id, label, CAST(i - 1 AS INTEGER) AS dim,
              CAST(v AS DOUBLE) AS v
@@ -1234,15 +1194,12 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     cent AS (
       SELECT label, dim,
-             CAST(SUM(CAST(floor(v * 10000.0 + 0.5) AS DECIMAL(30,0)))
-                  AS DOUBLE) / 10000.0 / CAST(COUNT(*) AS DOUBLE) AS c
+             {o_dsum('v')} / CAST(COUNT(*) AS DOUBLE) AS c
       FROM e GROUP BY label, dim
     ),
     d AS (
       SELECT vec_id, e.label,
-             sqrt(CAST(SUM(CAST(floor((v - c) * (v - c) * 100000000.0 + 0.5)
-                                AS DECIMAL(38,0))) AS DOUBLE)
-                  / 100000000.0) AS dist
+             sqrt({o_dsum('(v - c) * (v - c)', 8)}) AS dist
       FROM e JOIN cent ON cent.label = e.label AND cent.dim = e.dim
       GROUP BY vec_id, e.label
     ),
@@ -1846,9 +1803,7 @@ def _pq_oracle() -> str:
         )
         SELECT emb.label,
           CAST(COUNT(DISTINCT r.vec_id) AS BIGINT) AS n_vecs,
-          CAST(SUM(CAST(floor(err * err * {10.0 ** _SQ_ERRSCALE} + 0.5)
-                        AS DECIMAL(38,0))) AS DOUBLE)
-            / {10.0 ** _SQ_ERRSCALE} / CAST(COUNT(*) AS DOUBLE) AS mse,
+          {o_dsum('err * err', _SQ_ERRSCALE)} / CAST(COUNT(*) AS DOUBLE) AS mse,
           MAX(ABS(err)) AS max_abs_err
         FROM rec r JOIN embeddings emb ON emb.vec_id = r.vec_id
         GROUP BY emb.label
@@ -2036,41 +1991,18 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("adc_score"),
         )
     )
-    ws = Window.partitionBy("qid").orderBy(
-        F.col("adc_score").desc(), F.col("nid")
+    shortlist = top_per_query(adc, IVFPQ_SHORTLIST, score="adc_score").select(
+        "qid", "nid"
     )
-    shortlist = (
-        adc.withColumn("srank", F.row_number().over(ws))
-        .where(F.col("srank") <= IVFPQ_SHORTLIST)
-        .select("qid", "nid")
-    )
-    qv = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("ea"),
-        F.col("nrm").alias("qnrm"),
-    )
-    cv = e.where(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("eb"),
-        F.col("nrm").alias("cnrm"),
-    )
+    qv, cv = _sides(e)
     scored = (
         shortlist.join(cv, "nid")
         .join(F.broadcast(qv), "qid")
         .select(
-            "qid",
-            "nid",
-            safe_cos(
-                dot_dec_fast("ea", "eb", "qnrm", "cnrm"),
-                F.col("qnrm"),
-                F.col("cnrm"),
-            ).alias("cosine"),
+            "qid", "nid", pair_cosine("ea", "eb", "qnrm", "cnrm").alias("cosine")
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= TOP_K)
-        .select("qid", "nid", "cosine", "rank")
-    )
+    return top_per_query(scored, TOP_K).select("qid", "nid", "cosine", "rank")
 
 
 FPS_K = 5
@@ -2162,7 +2094,7 @@ def farthest_point_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t["embeddings"].select(
         "vec_id",
         "embedding",
-        F.sqrt(sq_norm_dec(F.col("embedding"))).alias("nrm"),
+        norm("embedding").alias("nrm"),
     )
     e = materialize_once(e)
 
@@ -2531,7 +2463,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         t["embeddings"]
         .select("vec_id", "embedding")
         .join(assign, "vec_id")
-        .withColumn("nrm", F.sqrt(sq_norm_dec(F.col("embedding"))))
+        .withColumn("nrm", norm("embedding"))
         .repartition(
             spark.sparkContext.defaultParallelism, "cluster"
         )
@@ -2548,9 +2480,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("eb"),
         F.col("nrm").alias("ynrm"),
     )
-    cos = safe_cos(
-        dot_dec_fast("ea", "eb", "xnrm", "ynrm"), F.col("xnrm"), F.col("ynrm")
-    )
+    cos = pair_cosine("ea", "eb", "xnrm", "ynrm")
     pruned = (
         x.join(y, "cluster")
         .where(F.col("xid") < F.col("yid"))

@@ -499,9 +499,7 @@ def events_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     three window functions."""
     t = load_tables(spark, sf_dir, ("events",))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    running = (
-        F.sum(scaled_int("value")).over(w).cast("double") / F.lit(10000.0)
-    )
+    running = dsum("value", over=w)
     micros_prev = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag(F.col("ts")).over(w))
     return t["events"].select(
         "user_id",
@@ -833,7 +831,7 @@ def revenue_share_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dsum("o_totalprice").alias("revenue"))
     )
     w = Window.partitionBy()
-    total = F.sum(scaled_int("revenue")).over(w).cast("double") / F.lit(10000.0)
+    total = dsum("revenue", over=w)
     return per.select(
         "o_orderpriority",
         "revenue",
@@ -1586,7 +1584,7 @@ def gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "price_elasticity",
-    oracle="""
+    oracle=f"""
     WITH pts AS (
       SELECT p.p_brand,
              floor(ln(l.l_extendedprice / l.l_quantity) * 1000000.0 + 0.5)
@@ -1598,16 +1596,11 @@ def gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     s AS (
       SELECT p_brand,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(floor(x * 1000000.0 + 0.5) AS DECIMAL(38,0)))
-                  AS DOUBLE) / 1000000.0 AS sx,
-             CAST(SUM(CAST(floor(y * 1000000.0 + 0.5) AS DECIMAL(38,0)))
-                  AS DOUBLE) / 1000000.0 AS sy,
-             CAST(SUM(CAST(floor(x * x * 1000000.0 + 0.5) AS DECIMAL(38,0)))
-                  AS DOUBLE) / 1000000.0 AS sxx,
-             CAST(SUM(CAST(floor(y * y * 1000000.0 + 0.5) AS DECIMAL(38,0)))
-                  AS DOUBLE) / 1000000.0 AS syy,
-             CAST(SUM(CAST(floor(x * y * 1000000.0 + 0.5) AS DECIMAL(38,0)))
-                  AS DOUBLE) / 1000000.0 AS sxy
+             {o_dsum('x', 6)} AS sx,
+             {o_dsum('y', 6)} AS sy,
+             {o_dsum('x * x', 6)} AS sxx,
+             {o_dsum('y * y', 6)} AS syy,
+             {o_dsum('x * y', 6)} AS sxy
       FROM pts GROUP BY p_brand
     )
     SELECT p_brand, n,

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sql_flow_spark.functions.mat import materialize_once
-from sql_flow_spark.registry import dsum, o_dsum, query, scaled_int
+from sql_flow_spark.registry import dsum, o_dsum, query
 from sql_flow_spark.tables import load_tables
 
 # 30-minute attribution window, in microseconds.
@@ -191,7 +191,7 @@ def events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "time_weighted_avg",
-    oracle="""
+    oracle=f"""
     WITH seg AS (
       SELECT event_type,
              epoch_us(ts) AS us,
@@ -205,8 +205,7 @@ def events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_events,
            MAX(us) - MIN(us) AS duration_us,
            CASE WHEN MAX(us) > MIN(us) THEN
-             (CAST(SUM(CAST(floor(seg * 10000.0 + 0.5) AS DECIMAL(38,0)))
-                   AS DOUBLE) / 10000.0)
+             ({o_dsum('seg')})
              / CAST(MAX(us) - MIN(us) AS DOUBLE)
            END AS twa_value
     FROM seg
@@ -395,7 +394,7 @@ def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.unix_micros("ts"), F.col("event_id"))
         .rowsBetween(-(MOVING_AVG_ROWS - 1), Window.currentRow)
     )
-    total = F.sum(scaled_int("value")).over(w).cast("double") / F.lit(10000.0)
+    total = dsum("value", over=w)
     return t["events"].select(
         "event_id",
         "event_type",
@@ -486,11 +485,7 @@ def seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     full = 2 * _TREND_HALF + 1
     trend = F.when(
         F.count("*").over(w) == full,
-        F.sum(scaled_int("daily_total"))
-        .over(w)
-        .cast("double")
-        / F.lit(1e4)
-        / F.lit(float(full)),
+        dsum("daily_total", over=w) / F.lit(float(full)),
     )
     tr = daily.select(
         "event_type",

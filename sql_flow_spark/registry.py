@@ -27,6 +27,7 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -64,9 +65,15 @@ def scaled_int(col: Column | str, scale: int = 4) -> Column:
     return _lattice(col, scale).cast("decimal(30,0)")
 
 
-def dsum(col: Column | str, scale: int = 4) -> Column:
-    """Order-insensitive, engine-identical sum exposed as DOUBLE."""
-    return F.sum(scaled_int(col, scale)).cast("double") / F.lit(float(10**scale))
+def dsum(
+    col: Column | str, scale: int = 4, over: WindowSpec | None = None
+) -> Column:
+    """Order-insensitive, engine-identical sum exposed as DOUBLE; with
+    ``over``, the same sum as a window aggregate."""
+    s = F.sum(scaled_int(col, scale))
+    if over is not None:
+        s = s.over(over)
+    return s.cast("double") / F.lit(float(10**scale))
 
 
 def fixed(col: Column | str, scale: int) -> Column:

@@ -3,7 +3,6 @@ reference's managed tumbling-window tables), stream dedup, custom
 stateful processing."""
 
 from sql_flow_spark.streaming.window import (
-    TumblingWindow,
     session_aggregate,
     sliding_aggregate,
     tumbling_aggregate,
@@ -46,7 +45,6 @@ def foreach_batch_query(
 
 
 __all__ = [
-    "TumblingWindow",
     "tumbling_aggregate",
     "sliding_aggregate",
     "session_aggregate",

@@ -58,17 +58,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from sql_flow_spark.functions.similarity import (
     PQ_ITERS,
     _pq_dist,
     _pq_twin,
-    dot_dec_fast,
     ivf_assign,
     ivf_centroids,
-    safe_cos,
-    sq_norm_dec,
+    norm,
+    pair_cosine,
+    recall_panel,
+    top_per_query,
 )
 from sql_flow_spark.localdf import bounded_or_distributed
 from sql_flow_spark.streaming.compaction import MarkerCommit
@@ -353,7 +353,7 @@ class IncrementalIVF:
         return df.select(
             F.col(self.id_col).alias("vec_id"),
             F.col(self.emb_col).alias("embedding"),
-            F.sqrt(sq_norm_dec(F.col(self.emb_col))).alias("nrm"),
+            norm(self.emb_col).alias("nrm"),
             ivf_assign(F.col(self.emb_col), self.centroids, 1)[0].alias("cell"),
         )
 
@@ -533,7 +533,7 @@ class IncrementalIVF:
         q = queries.select(
             F.col(self.id_col).alias("qid"),
             F.col(self.emb_col).alias("ea"),
-            F.sqrt(sq_norm_dec(F.col(self.emb_col))).alias("qnrm"),
+            norm(self.emb_col).alias("qnrm"),
         )
         # dropDuplicates mirrors search(): the index permits duplicate
         # vec_ids (re-inserts, post-replay seed rows — compact()
@@ -546,20 +546,12 @@ class IncrementalIVF:
             .select(
                 "qid",
                 F.col("vec_id").alias("nid"),
-                safe_cos(
-                    dot_dec_fast("ea", "embedding", "qnrm", "nrm"),
-                    F.col("qnrm"),
-                    F.col("nrm"),
-                ).alias("cosine"),
+                pair_cosine("ea", "embedding", "qnrm", "nrm").alias("cosine"),
             )
             .dropDuplicates(["qid", "nid"])
         )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("cosine").desc(), F.col("nid")
-        )
         exact = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= topk)
+            top_per_query(scored, topk)
             .select("qid", "nid")
             .localCheckpoint(eager=True)
         )
@@ -568,35 +560,7 @@ class IncrementalIVF:
             if pq
             else self.search(queries, topk)
         )
-        hits = (
-            approx.select("qid", "nid")
-            .join(F.broadcast(exact), ["qid", "nid"])
-            .groupBy("qid")
-            .agg(F.count("*").alias("hits"))
-        )
-        per_q = (
-            exact.select("qid")
-            .distinct()
-            .join(hits, "qid", "left")
-            .select(
-                F.coalesce(F.col("hits"), F.lit(0))
-                .cast("long")
-                .alias("hits")
-            )
-        )
-        return per_q.agg(
-            F.count("*").cast("long").alias("n_queries"),
-            (
-                F.sum("hits").cast("double")
-                / (F.count("*") * F.lit(topk)).cast("double")
-            ).alias("macro_recall"),
-            (F.min("hits").cast("double") / F.lit(float(topk))).alias(
-                "min_recall"
-            ),
-            F.sum((F.col("hits") == topk).cast("long"))
-            .cast("long")
-            .alias("perfect_queries"),
-        )
+        return recall_panel(exact, approx, topk)
 
     def search(self, queries: DataFrame, topk: int = 5) -> DataFrame:
         """Probe nprobe cells per query, exact-cosine rerank inside
@@ -605,7 +569,7 @@ class IncrementalIVF:
         q = queries.select(
             F.col(self.id_col).alias("qid"),
             F.col(self.emb_col).alias("ea"),
-            F.sqrt(sq_norm_dec(F.col(self.emb_col))).alias("qnrm"),
+            norm(self.emb_col).alias("qnrm"),
             F.explode(
                 ivf_assign(F.col(self.emb_col), self.centroids, self.nprobe)
             ).alias("qcell"),
@@ -619,20 +583,9 @@ class IncrementalIVF:
         scored = cand.select(
             "qid",
             F.col("vec_id").alias("nid"),
-            safe_cos(
-                dot_dec_fast("ea", "embedding", "qnrm", "nrm"),
-                F.col("qnrm"),
-                F.col("nrm"),
-            ).alias("cosine"),
+            pair_cosine("ea", "embedding", "qnrm", "nrm").alias("cosine"),
         )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("cosine").desc(), F.col("nid")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("int"))
-            .where(F.col("rank") <= topk)
-            .select("qid", "nid", "cosine", "rank")
-        )
+        return top_per_query(scored, topk).select("qid", "nid", "cosine", "rank")
 
     def search_pq(
         self,
@@ -735,14 +688,7 @@ class IncrementalIVF:
             )
             .alias("adc_score"),
         )
-        ws = Window.partitionBy("qid").orderBy(
-            F.col("adc_score").desc(), F.col("nid")
-        )
-        sl = (
-            adc.withColumn("srank", F.row_number().over(ws))
-            .where(F.col("srank") <= short)
-            .select("qid", "nid")
-        )
+        sl = top_per_query(adc, short, score="adc_score").select("qid", "nid")
         # rerank query frame from the rows already collected above
         # (r14): same ids/vectors, same exact-decimal norm expression —
         # skips a second scan of the queries source per search
@@ -752,9 +698,7 @@ class IncrementalIVF:
             self.spark,
             [(r["qid"], list(r["emb"])) for r in qrows],
             f"qid {id_t}, ea {emb_t}",
-        ).select(
-            "qid", "ea", F.sqrt(sq_norm_dec(F.col("ea"))).alias("qnrm")
-        )
+        ).select("qid", "ea", norm("ea").alias("qnrm"))
         # rerank reads raw vectors ONLY from the probed cells (every
         # shortlist member lives there by construction) — the same
         # partition pruning as the candidate scan, on the heavy column
@@ -770,21 +714,10 @@ class IncrementalIVF:
             .select(
                 "qid",
                 "nid",
-                safe_cos(
-                    dot_dec_fast("ea", "embedding", "qnrm", "nrm"),
-                    F.col("qnrm"),
-                    F.col("nrm"),
-                ).alias("cosine"),
+                pair_cosine("ea", "embedding", "qnrm", "nrm").alias("cosine"),
             )
         )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("cosine").desc(), F.col("nid")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("int"))
-            .where(F.col("rank") <= topk)
-            .select("qid", "nid", "cosine", "rank")
-        )
+        return top_per_query(scored, topk).select("qid", "nid", "cosine", "rank")
 
 
 class AnnIndexLeg:

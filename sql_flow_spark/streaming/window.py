@@ -17,11 +17,8 @@ bucketed — a correctness upgrade over wall-clock polling.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 
 def tumbling_aggregate(
@@ -99,45 +96,3 @@ def session_aggregate(
         *[c for c in out.columns if c != "w"],
     )
 
-
-class TumblingWindow:
-    """Drop-in equivalent of the reference's managed-table Tumbling
-    manager: wire a stream through a tumbling agg into a sink callback.
-
-    sink_fn receives each batch of CLOSED windows (what the reference's
-    collect_closed_windows_sql returned on poll)."""
-
-    def __init__(
-        self,
-        stream: DataFrame,
-        time_column: str,
-        duration: str,
-        aggs: list[Column] | None = None,
-        group_by: list[str] | None = None,
-        watermark_delay: str = "0 seconds",
-        sink_fn: Callable[[DataFrame, int], None] | None = None,
-        checkpoint_dir: str | None = None,
-    ):
-        self.result = tumbling_aggregate(
-            stream, time_column, duration, aggs, group_by, watermark_delay
-        )
-        self.sink_fn = sink_fn or (lambda df, bid: None)
-        self.checkpoint_dir = checkpoint_dir
-        self._query: StreamingQuery | None = None
-
-    def start(self, trigger_once: bool = True, **trigger_kwargs) -> StreamingQuery:
-        writer = (
-            self.result.writeStream.outputMode("append").foreachBatch(self.sink_fn)
-        )
-        if self.checkpoint_dir:
-            writer = writer.option("checkpointLocation", self.checkpoint_dir)
-        if trigger_once:
-            writer = writer.trigger(availableNow=True)
-        elif trigger_kwargs:
-            writer = writer.trigger(**trigger_kwargs)
-        self._query = writer.start()
-        return self._query
-
-    def stop(self):
-        if self._query:
-            self._query.stop()

@@ -4,6 +4,7 @@ core (the engine's central correctness trick)."""
 
 import ast
 import math
+from collections import Counter
 from decimal import Decimal
 from pathlib import Path
 
@@ -138,31 +139,54 @@ def _is_half(node):
     )
 
 
-def _hand_rolled_fixed_point_sites(path):
-    """(function, line) of every F.floor(<expr> + 0.5) and
-    F.floor(<expr> + F.lit(0.5)) in one module."""
+def _is_call(node, name, on=None):
+    """``node`` is a call of ``name`` — bare, or as an attribute (of
+    the module alias ``on`` when given)."""
+    if not isinstance(node, ast.Call):
+        return False
+    f = node.func
+    if isinstance(f, ast.Name):
+        return on is None and f.id == name
+    return (
+        isinstance(f, ast.Attribute)
+        and f.attr == name
+        and (on is None or (isinstance(f.value, ast.Name) and f.value.id == on))
+    )
+
+
+def _sites(path, match):
+    """(function, line) of every node in one module for which
+    ``match(node)`` holds; function is the innermost enclosing def."""
     sites = []
 
     def visit(node, fn):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             fn = node.name
-        if (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "floor"
-            and isinstance(node.func.value, ast.Name)
-            and node.func.value.id == "F"
-            and node.args
-            and isinstance(node.args[0], ast.BinOp)
-            and isinstance(node.args[0].op, ast.Add)
-            and _is_half(node.args[0].right)
-        ):
+        if match(node):
             sites.append((fn, node.lineno))
         for child in ast.iter_child_nodes(node):
             visit(child, fn)
 
     visit(ast.parse(path.read_text()), "<module>")
     return sites
+
+
+def _is_fixed_point(node):
+    """F.floor(<expr> + 0.5), F.floor(<expr> + F.lit(0.5)), or a window
+    sum F.sum(scaled_int(...)).over(...) (registry.dsum(over=...))."""
+    if _is_call(node, "floor", "F"):
+        return (
+            bool(node.args)
+            and isinstance(node.args[0], ast.BinOp)
+            and isinstance(node.args[0].op, ast.Add)
+            and _is_half(node.args[0].right)
+        )
+    return (
+        _is_call(node, "over")
+        and _is_call(node.func.value, "sum", "F")
+        and bool(node.func.value.args)
+        and _is_call(node.func.value.args[0], "scaled_int")
+    )
 
 
 def test_fixed_point_idiom_lives_in_registry():
@@ -177,7 +201,7 @@ def test_fixed_point_idiom_lives_in_registry():
         rel = path.relative_to(root).as_posix()
         if rel == "registry.py":
             continue
-        for fn, line in _hand_rolled_fixed_point_sites(path):
+        for fn, line in _sites(path, _is_fixed_point):
             if (rel, fn) not in _FIXED_POINT_ALLOWLIST:
                 stray.append(f"{rel}:{line} in {fn}")
     assert not stray, "use registry.scaled_int / dsum / fixed:\n" + "\n".join(stray)
@@ -250,6 +274,72 @@ def test_state_table_protocol_lives_in_compaction():
         for line, what in _state_protocol_sites(path)
     ]
     assert not stray, "use MarkerCommit.write / live / compact:\n" + "\n".join(stray)
+
+
+# The cosine-search rule (functions/similarity.py): the norm is
+# ``norm``, a pair's cosine is ``pair_cosine`` (the only caller of the
+# fast dot), and a per-query neighbor list is ``top_per_query``.
+_COSINE_RULE = {
+    "dot_dec_fast call": (
+        "pair_cosine", lambda n: _is_call(n, "dot_dec_fast")
+    ),
+    "F.sqrt(sq_norm_dec(...))": (
+        "norm",
+        lambda n: _is_call(n, "sqrt", "F")
+        and bool(n.args)
+        and _is_call(n.args[0], "sq_norm_dec"),
+    ),
+    'Window.partitionBy("qid")': (
+        "top_per_query",
+        lambda n: _is_call(n, "partitionBy", "Window")
+        and len(n.args) == 1
+        and isinstance(n.args[0], ast.Constant)
+        and n.args[0].value == "qid",
+    ),
+}
+
+# Sites of the rule's shapes that are not the rule, each with its reason.
+_COSINE_RULE_ALLOWLIST = {
+    ("functions/similarity.py", "knn_classify", 'Window.partitionBy("qid")'):
+        "the majority-vote pick orders labels by (n_votes DESC, nlabel): "
+        "a vote tally, not a cosine neighbor list",
+    (
+        "functions/retrieval.py", "bm25_self_retrieval_mrr",
+        'Window.partitionBy("qid")',
+    ):
+        "picks each query document's terms by (tf DESC, term): a term "
+        "list, not a neighbor list",
+}
+
+
+def test_cosine_rule_lives_in_similarity():
+    """The cosine-search rule has one home: a new hand-written pair
+    cosine, norm or per-query top-k window fails here; use
+    similarity.pair_cosine / norm / top_per_query, or allowlist it
+    with a reason."""
+    import sql_flow_spark
+
+    root = Path(sql_flow_spark.__file__).parent
+    found = [
+        (rel, fn, what, line)
+        for path in sorted(root.rglob("*.py"))
+        for rel in [path.relative_to(root).as_posix()]
+        for what, (owner, match) in _COSINE_RULE.items()
+        for fn, line in _sites(path, match)
+        if (rel, fn) != ("functions/similarity.py", owner)
+    ]
+    per_key = Counter(site[:3] for site in found)
+    stray = [  # an allowlist entry covers exactly one site
+        f"{rel}:{line} in {fn}: {what}"
+        for rel, fn, what, line in found
+        if (rel, fn, what) not in _COSINE_RULE_ALLOWLIST
+        or per_key[rel, fn, what] > 1
+    ]
+    assert not stray, (
+        "use similarity.pair_cosine / norm / top_per_query:\n" + "\n".join(stray)
+    )
+    stale = [k for k in _COSINE_RULE_ALLOWLIST if not per_key[k]]
+    assert not stale, f"allowlisted sites no longer exist: {stale}"
 
 
 def _union_find_components(edges):
