@@ -10,7 +10,6 @@ not syntax parity — see README).
 
 from __future__ import annotations
 
-import copy
 import os
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional
@@ -51,12 +50,9 @@ class HandlerConf:
     type: str = "handlers.InferredBatch"  # or handlers.StructuredBatch
     sql: str = "SELECT * FROM batch"
     table: Optional[str] = None  # StructuredBatch target table
-    serde: str = "json"
     # StructuredBatch durable state: parquet-append dir (shared storage
-    # at scale); None -> a fresh temp dir. durable=False keeps state
-    # in-memory (union + localCheckpoint), lost on session death.
+    # at scale); None -> a fresh temp dir.
     state_dir: Optional[str] = None
-    durable: bool = True
 
 
 @dataclass
@@ -365,9 +361,17 @@ def _sink_from_dict(d: dict) -> SinkConf:
     return SinkConf(type=typ, **_flat_merge(d, typ, allowed - {"type"}))
 
 
+def _handler_from_dict(d: dict) -> HandlerConf:
+    return HandlerConf(
+        type=d.get("type", "handlers.InferredBatch"),
+        sql=d.get("sql", "SELECT * FROM batch"),
+        table=d.get("table"),
+        state_dir=d.get("state_dir"),
+    )
+
+
 def new_from_dict(conf: dict) -> Conf:
     p = conf["pipeline"]
-    handler_d = p.get("handler", {})
     on_error_d = p.get("on_error", {}) or {}
     dlq = _sink_from_dict(on_error_d["dlq"]) if "dlq" in on_error_d else None
 
@@ -390,18 +394,10 @@ def new_from_dict(conf: dict) -> Conf:
 
     fanout: list[PipelineLegConf] = []
     for leg in conf.get("fanout", []):
-        h = leg.get("handler", {})
         fanout.append(
             PipelineLegConf(
                 name=leg["name"],
-                handler=HandlerConf(
-                    type=h.get("type", "handlers.InferredBatch"),
-                    sql=h.get("sql", "SELECT * FROM batch"),
-                    table=h.get("table"),
-                    serde=h.get("serde", "json"),
-                    state_dir=h.get("state_dir"),
-                    durable=h.get("durable", True),
-                ),
+                handler=_handler_from_dict(leg.get("handler", {})),
                 sink=_sink_from_dict(leg["sink"]),
             )
         )
@@ -421,14 +417,7 @@ def new_from_dict(conf: dict) -> Conf:
         tables=tables,
         pipeline=PipelineConf(
             source=_source_from_dict(p["source"]),
-            handler=HandlerConf(
-                type=handler_d.get("type", "handlers.InferredBatch"),
-                sql=handler_d.get("sql", "SELECT * FROM batch"),
-                table=handler_d.get("table"),
-                serde=handler_d.get("serde", "json"),
-                state_dir=handler_d.get("state_dir"),
-                durable=handler_d.get("durable", True),
-            ),
+            handler=_handler_from_dict(p.get("handler", {})),
             sink=_sink_from_dict(p["sink"]),
             on_error=ErrorPolicyConf(
                 policy=(on_error_d.get("policy") or Policy.RAISE).upper(),

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sql_flow_spark.functions.textops import ws_tokens
 from sql_flow_spark.localdf import bounded_or_distributed, local_df
 from sql_flow_spark.registry import query
 from sql_flow_spark.tables import load_tables
@@ -77,7 +78,7 @@ def learn_merges(
     spark = docs.sparkSession
     vocab = (
         docs.select(
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word")
+            F.explode(ws_tokens(text_col)).alias("word")
         )
         .where(F.col("word") != "")
         .groupBy("word")
@@ -220,7 +221,7 @@ def apply_merges(
     corpus."""
     if engine == "expr":
         per_word = F.transform(
-            F.split(F.trim(F.col(text_col)), r"\s+"),
+            ws_tokens(text_col),
             lambda w: F.regexp_extract_all(w, F.lit("."), 0),
         )
 

@@ -25,9 +25,13 @@ from sql_flow_spark.functions.dedup import (
 # materialize_once flattens lineage between CC iterations and
 # materializes multi-consumer subtrees without leaking cache entries
 # (lives in functions/mat.py so dedup.py shares it cycle-free)
-from sql_flow_spark.functions.mat import materialize_observed
-from sql_flow_spark.functions.mat import materialize_once as _iter_checkpoint
-from sql_flow_spark.functions.textops import O_NORMALIZE, _o_hits, fingerprint
+from sql_flow_spark.functions.mat import materialize_observed, materialize_once
+from sql_flow_spark.functions.textops import (
+    O_NORMALIZE,
+    _o_hits,
+    fingerprint,
+    ws_token_count,
+)
 from sql_flow_spark.registry import query
 from sql_flow_spark.tables import load_tables
 
@@ -216,7 +220,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no hook to do that — a long-lived session would accumulate one
     # cached shingle relation per invocation. Checkpoint blocks are
     # reclaimed by the ContextCleaner when the plan is GC'd.
-    sh = _iter_checkpoint(sh)
+    sh = materialize_once(sh)
     bench = (
         sh.where(F.col("source") == BENCHMARK_SOURCE)
         .select(F.explode("shingles").alias("s"))
@@ -259,7 +263,7 @@ def connected_components(
 
     Each iteration is one join + groupBy (label <- min of own and
     neighbors' labels) with the frontier checkpointed (reliable when a
-    checkpoint dir is set, see _iter_checkpoint) to keep lineage flat;
+    checkpoint dir is set, see mat.materialize_once) to keep lineage flat;
     convergence is checked with a changed-count action. Iterations
     needed = graph diameter — duplicate families are near-cliques
     (diameter ~1-2), so this converges in 2-3 rounds. This is the
@@ -283,7 +287,7 @@ def connected_components(
     # exchange comes FIRST and the dedup reuses it (hash(src)
     # satisfies the (src,dst) ClusteredDistribution) — one edge-set
     # shuffle instead of distinct + repartition (guide §2.4).
-    both = _iter_checkpoint(
+    both = materialize_once(
         both.repartition(n_shuffle, "src").dropDuplicates(["src", "dst"])
     )
     # Join strategy picked deliberately (guide §3.1, mirroring
@@ -520,8 +524,6 @@ def doc_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("documents",))
     from pyspark.sql import Window
 
-    from sql_flow_spark.functions.textops import ws_token_count
-
     toks = t["documents"].select(
         "doc_id", "lang", ws_token_count("text").cast("long").alias("n_tokens")
     )
@@ -582,7 +584,7 @@ def quality_score(text_col: str = "text") -> Column:
     the guard, ANSI Spark hard-fails the whole job on the 0-length
     text's 0/0 division (the word-count denominator can never be zero
     — split(trim('')) is [''], size 1 — only n_chars can)."""
-    from sql_flow_spark.functions.textops import _stop_re, ws_token_count
+    from sql_flow_spark.functions.textops import _stop_re
 
     n_chars = F.length(text_col)
     n_alpha = F.size(F.regexp_extract_all(text_col, F.lit(r"[A-Za-z]"), 0))
@@ -797,8 +799,6 @@ def filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop_idx aggregate with map-side partials; the 3-row stage frame
     cross-joins the broadcast 4-row aggregate — output is 3 rows
     regardless of corpus size."""
-    from sql_flow_spark.functions.textops import ws_token_count
-
     t = load_tables(spark, sf_dir, ("documents",))
     d = t["documents"]
     v = curation_verdicts(d)
@@ -897,8 +897,7 @@ def corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast); the final agg lands on the tiny (lang, source) key
     space with map-side partials. The mean quality divides two exact
     fixed-point sums, so both engines emit identical doubles."""
-    from sql_flow_spark.functions.textops import ws_token_count
-    from sql_flow_spark.registry import scaled_int
+    from sql_flow_spark.registry import dsum
 
     t = load_tables(spark, sf_dir, ("documents",))
     d = t["documents"]
@@ -919,11 +918,7 @@ def corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("n_tokens").alias("total_tokens"),
-            (
-                F.sum(scaled_int(F.col("q"))).cast("double")
-                / F.lit(10000.0)
-                / F.count("*").cast("double")
-            ).alias("avg_quality"),
+            (dsum("q") / F.count("*").cast("double")).alias("avg_quality"),
             (F.sum(is_dup).cast("double") / F.count("*").cast("double")).alias(
                 "dup_rate"
             ),
@@ -1234,7 +1229,7 @@ def pii_density_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.size(F.regexp_extract_all("text", F.lit(PII_PATTERNS["ipv4"]), 0))
         + F.size(F.regexp_extract_all("text", F.lit(PII_PATTERNS["phone"]), 0))
     )
-    n_toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_toks = ws_token_count("text")
     d = t["documents"].select(
         "source", n_pii.alias("n_pii"), n_toks.alias("n_toks")
     )
@@ -1377,8 +1372,6 @@ def token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE window per language partition (running sum over the
     (q, doc_id) sort) and the output agg collapses to languages-sized
     rows map-side. Same shape as doc_packing. 100 TB-safe."""
-    from sql_flow_spark.functions.textops import ws_token_count
-
     t = load_tables(spark, sf_dir, ("documents",))
     d = t["documents"]
 
@@ -1457,8 +1450,6 @@ def packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to doc_packing — ONE window per language
     partition, then a languages-sized agg whose partials collapse
     map-side; no second shuffle beyond the window sort. 100 TB-safe."""
-    from sql_flow_spark.functions.textops import ws_token_count
-
     t = load_tables(spark, sf_dir, ("documents",))
     toks = t["documents"].select(
         "doc_id", "lang", ws_token_count("text").cast("long").alias("n_tokens")
@@ -1580,7 +1571,7 @@ def dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
         .withColumn("shingles", token_ngrams(F.col("toks")))
     )
-    grams = _iter_checkpoint(
+    grams = materialize_once(
         sh.select("doc_id", "source", F.explode_outer("shingles").alias("gram"))
         .where(F.col("gram").isNotNull())
     )

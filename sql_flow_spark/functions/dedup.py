@@ -29,6 +29,8 @@ from sql_flow_spark.functions.textops import (
     O_NORMALIZE,
     fingerprint,
     normalize_text,
+    ws_token_count,
+    ws_tokens,
 )
 from sql_flow_spark.registry import query
 from sql_flow_spark.tables import load_tables
@@ -66,11 +68,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------- shingles
-
-def ws_tokens(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(F.trim(c), r"\s+")
-
 
 def token_ngrams(toks: Column, n: int = 3, distinct: bool = True) -> Column:
     """Distinct word n-gram shingles from a *materialized* token-array
@@ -695,7 +692,7 @@ def chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("documents",))
     d = t["documents"]
 
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws_tokens("text")
     n_chunks = F.greatest(
         F.ceil(F.size(toks).cast("double") / float(CHUNK_WORDS)).cast("int"),
         F.lit(1),
@@ -802,7 +799,7 @@ def paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.md5(normalize_text(F.col("p"))).alias("pf"),
-            F.size(F.split(F.trim("p"), r"\s+")).cast("long").alias("ptoks"),
+            ws_token_count("p").cast("long").alias("ptoks"),
         )
     )
     counts = paras.groupBy("pf").agg(F.count("*").cast("long").alias("c"))

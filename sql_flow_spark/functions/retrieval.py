@@ -41,7 +41,7 @@ from sql_flow_spark.functions.similarity import (
     norm,
     pair_cosine,
 )
-from sql_flow_spark.registry import query, scaled_int
+from sql_flow_spark.registry import dsum, query, scaled_int
 from sql_flow_spark.tables import load_tables
 
 # Fixed query: terms exist at every scale factor (the corpus vocabulary
@@ -497,12 +497,7 @@ def bm25_self_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(df_), "term")
         .crossJoin(F.broadcast(stats))
         .groupBy("qid", "doc_id")
-        .agg(
-            (
-                F.sum(scaled_int(term_score, _BM_DP)).cast("double")
-                / F.lit(_BM_SCALE)
-            ).alias("score")
-        )
+        .agg(dsum(term_score, _BM_DP).alias("score"))
     )
     self_ = scores.where(F.col("doc_id") == F.col("qid")).select(
         F.col("qid").alias("sqid"), F.col("score").alias("s")

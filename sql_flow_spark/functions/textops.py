@@ -34,9 +34,14 @@ def _stop_re(lang: str) -> str:
     return r"\b(?:" + "|".join(STOPWORDS[lang]) + r")\b"
 
 
-def ws_token_count(text: Column | str) -> Column:
+def ws_tokens(text: Column | str) -> Column:
+    """The one whitespace tokenizer: split the trimmed text on \\s+."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.size(F.split(F.trim(c), r"\s+"))
+    return F.split(F.trim(c), r"\s+")
+
+
+def ws_token_count(text: Column | str) -> Column:
+    return F.size(ws_tokens(text))
 
 
 def bpe_token_count(text: Column | str) -> Column:
@@ -299,7 +304,7 @@ def gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ("documents",))
     d = t["documents"]
 
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws_tokens("text")
     n_words = F.size(toks).cast("long")
     char_mass = F.length(F.regexp_replace("text", r"\s", "")).cast("long")
     n_symbols = F.size(
@@ -386,8 +391,7 @@ def lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents, switch to an explode + groupBy count for book-length
     texts."""
     t = load_tables(spark, sf_dir, ("documents",))
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    d = t["documents"].select("doc_id", toks.alias("toks"))
+    d = t["documents"].select("doc_id", ws_tokens("text").alias("toks"))
     types = F.array_distinct("toks")
     n_tokens = F.size("toks").cast("long")
     n_types = F.size(types).cast("long")
@@ -535,7 +539,7 @@ def readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: narrow map over the scan, no shuffle at all — the
     whole operator is one WholeStageCodegen span."""
     t = load_tables(spark, sf_dir, ("documents",))
-    n_words = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    n_words = ws_token_count("text").cast("long")
     n_sent = F.greatest(
         F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[.!?]+"), 0)).cast(
             "long"
@@ -915,7 +919,7 @@ def quality_filter_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     divide two exact BIGINTs in DOUBLE — bit-identical cross-engine."""
     t = load_tables(spark, sf_dir, ("documents",))
     d = t["documents"]
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws_tokens("text")
     n_words = F.size(toks).cast("long")
     mean_len = (
         F.length(F.regexp_replace("text", r"\s", "")).cast("double")

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sql_flow_spark.functions.dedup import O_NGRAMS, O_TOKENS, ws_tokens
-from sql_flow_spark.registry import dsum, fixed, query, scaled_int
+from sql_flow_spark.registry import fixed, ols_fit, query, scaled_int
 from sql_flow_spark.tables import load_tables
 
 CHUNK_TOKENS = 20
@@ -265,8 +265,8 @@ def boilerplate_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     is corpus-cardinality, never broadcast), one per-doc count, one
     join back to docs. Work is linear in corpus shingles; docs never
     pair with docs."""
-    from sql_flow_spark.functions.curation import _iter_checkpoint
-    from sql_flow_spark.functions.dedup import token_ngrams, ws_tokens
+    from sql_flow_spark.functions.dedup import token_ngrams
+    from sql_flow_spark.functions.mat import materialize_once
 
     t = load_tables(spark, sf_dir, ("documents",))
     sh = (
@@ -276,7 +276,7 @@ def boilerplate_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # three consumers (explode for counts, explode for hits, final
     # join-back): materialize once, no lingering cache entry
-    sh = _iter_checkpoint(sh)
+    sh = materialize_once(sh)
     ex = sh.select("doc_id", "source", F.explode("shingles").alias("s"))
     bp = (
         ex.groupBy("source", "s")
@@ -961,11 +961,7 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness recipe (house rules, registry.py): ln is floor-masked to
     6dp on each point (ln is not correctly rounded and may differ by
-    ulps between engines); the five regression sums then go through
-    6dp fixed-point integers so partitioning can't reorder a double
-    sum; slope/intercept/r² are IEEE arithmetic on identical scalars,
-    floor-masked once more at the boundary because x*y products of
-    masked 6dp values are exact only to ~12dp in a double.
+    ulps between engines); the fit is ``registry.ols_fit``.
 
     Scale shape: word-count (explode -> partial-agg shuffle on term) ->
     top-500 via TakeOrderedAndProject (no global sort) -> 500-row
@@ -986,24 +982,11 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         fixed(F.log(F.col("occurrences").cast("double")), 6).alias("y"),
     )
 
-    s = ranked.agg(
-        F.count("*").cast("long").alias("n"),
-        dsum("x", 6).alias("sx"),
-        dsum("y", 6).alias("sy"),
-        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
-        dsum(F.col("y") * F.col("y"), 6).alias("syy"),
-        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
-    )
-    nd = F.col("n").cast("double")
-    cov = nd * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx = nd * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = nd * F.col("syy") - F.col("sy") * F.col("sy")
-    slope = cov / varx
-    return s.select(
+    return ols_fit(ranked).select(
         F.col("n").alias("n_terms"),
-        fixed(slope, 6).alias("zipf_slope"),
-        fixed((F.col("sy") - slope * F.col("sx")) / nd, 6).alias("intercept"),
-        fixed(cov * cov / (varx * vary), 6).alias("r2"),
+        F.col("slope").alias("zipf_slope"),
+        "intercept",
+        "r2",
     )
 
 
@@ -1198,10 +1181,8 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: tranche assignment is shingle_novelty_curve's exact
     integer floor-division; cumulative token/vocab counts are exact
-    BIGINTs over 10 rows; the fit follows zipf_fit's recipe to the
-    letter (ln floor-masked to 6dp per point, regression sums through
-    6dp fixed-point integers, outputs masked once more at the
-    boundary).
+    BIGINTs over 10 rows; ln is floor-masked to 6dp per point and the
+    fit is ``registry.ols_fit``, as in zipf_fit.
 
     Scale shape: cumulative token mass is a narrow array-size sum (no
     explode) onto 10 tranche keys; the vocabulary side is ONE
@@ -1256,22 +1237,9 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         fixed(F.log(F.col("cum_v").cast("double")), 6).alias("y"),
     )
 
-    s = pts.agg(
-        F.count("*").cast("long").alias("n"),
-        dsum("x", 6).alias("sx"),
-        dsum("y", 6).alias("sy"),
-        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
-        dsum(F.col("y") * F.col("y"), 6).alias("syy"),
-        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
-    )
-    nd = F.col("n").cast("double")
-    cov = nd * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx = nd * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = nd * F.col("syy") - F.col("sy") * F.col("sy")
-    slope = cov / varx
-    return s.select(
+    return ols_fit(pts).select(
         F.col("n").alias("n_points"),
-        fixed(slope, 6).alias("heaps_beta"),
-        fixed((F.col("sy") - slope * F.col("sx")) / nd, 6).alias("ln_k"),
-        fixed(cov * cov / (varx * vary), 6).alias("r2"),
+        F.col("slope").alias("heaps_beta"),
+        F.col("intercept").alias("ln_k"),
+        "r2",
     )

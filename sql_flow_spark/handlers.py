@@ -56,9 +56,9 @@ class StructuredBatch(Handler):
     """Insert the batch into a known table, then run the SQL against
     the table (reference: handlers.py:136).
 
-    Accumulated state is durable by default: each micro-batch is
-    appended as parquet to ``state_dir`` and the table view is re-bound
-    to a plain parquet scan of that directory. Planning cost per batch
+    Accumulated state is durable: each micro-batch is appended as
+    parquet to ``state_dir`` and the table view is re-bound to a plain
+    parquet scan of that directory. Planning cost per batch
     is constant (one scan, no growing union lineage), state lives in
     storage rather than executor memory, and it survives session or
     executor loss — a new handler pointed at the same ``state_dir``
@@ -66,26 +66,13 @@ class StructuredBatch(Handler):
     ``state_dir`` is a shared-storage path (and the natural upgrade is
     a Delta/Iceberg MERGE target); many small appended files are the
     classic cost, compacted out-of-band.
-
-    ``durable=False`` keeps the previous in-memory accumulation
-    (union + periodic localCheckpoint) for environments with no
-    writable shared storage; that state is executor-pinned and lost on
-    session death.
     """
 
-    # durable=False fallback: truncate the union lineage every N
-    # batches so planning cost doesn't grow per batch.
-    CHECKPOINT_EVERY = 16
-
-    def __init__(self, sql: str, table: str, state_dir: str | None = None,
-                 durable: bool = True):
+    def __init__(self, sql: str, table: str, state_dir: str | None = None):
         self.sql = sql
         self.table = table
-        self.durable = durable
         self._state_dir = state_dir
         self._adopted = False
-        self._accumulated: Optional[DataFrame] = None
-        self._batches_since_ckpt = 0
 
     def invoke(self, spark: SparkSession, batch_df: DataFrame) -> Optional[DataFrame]:
         session = batch_df.sparkSession
@@ -93,11 +80,18 @@ class StructuredBatch(Handler):
         aligned = batch_df.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target_schema.fields]
         )
-        if self.durable:
-            return self._invoke_durable(session, target_schema, aligned)
-        return self._invoke_in_memory(session, aligned)
-
-    # ------------------------------------------------ durable (default)
+        d = self.state_dir()
+        if not self._adopted:
+            # First touch: adopt pre-existing state (handler restart);
+            # otherwise seed with the target table's current contents
+            # so init-command seed rows participate in the state.
+            if not self._has_state(d):
+                session.table(self.table).write.mode("append").parquet(d)
+            self._adopted = True
+        aligned.write.mode("append").parquet(d)
+        state = session.read.schema(target_schema).parquet(d)
+        state.createOrReplaceTempView(self.table)
+        return session.sql(self.sql)
 
     def state_dir(self) -> str:
         if self._state_dir is None:
@@ -108,7 +102,7 @@ class StructuredBatch(Handler):
             # mkdtemp means restart-adoption silently doesn't hold and
             # the temp state grows unboundedly. Say so, loudly.
             logger.warning(
-                "StructuredBatch(table=%r, durable=True) got no state_dir: "
+                "StructuredBatch(table=%r) got no state_dir: "
                 "using fresh temp dir %s — state will NOT be adopted on "
                 "restart and is never compacted. Pass state_dir= (shared "
                 "storage at cluster scale) for real durability.",
@@ -128,36 +122,6 @@ class StructuredBatch(Handler):
             for name in os.listdir(d)
         )
 
-    def _invoke_durable(self, session: SparkSession, target_schema,
-                        aligned: DataFrame) -> DataFrame:
-        d = self.state_dir()
-        if not self._adopted:
-            # First touch: adopt pre-existing state (handler restart);
-            # otherwise seed with the target table's current contents
-            # so init-command seed rows participate in the state.
-            if not self._has_state(d):
-                session.table(self.table).write.mode("append").parquet(d)
-            self._adopted = True
-        aligned.write.mode("append").parquet(d)
-        state = session.read.schema(target_schema).parquet(d)
-        state.createOrReplaceTempView(self.table)
-        return session.sql(self.sql)
-
-    # --------------------------------------- in-memory fallback (weak)
-
-    def _invoke_in_memory(self, session: SparkSession,
-                          aligned: DataFrame) -> DataFrame:
-        if self._accumulated is None:
-            self._accumulated = session.table(self.table).union(aligned)
-        else:
-            self._accumulated = self._accumulated.union(aligned)
-        self._batches_since_ckpt += 1
-        if self._batches_since_ckpt >= self.CHECKPOINT_EVERY:
-            self._accumulated = self._accumulated.localCheckpoint(eager=True)
-            self._batches_since_ckpt = 0
-        self._accumulated.createOrReplaceTempView(self.table)
-        return session.sql(self.sql)
-
 
 def new_handler_from_conf(handler_conf: config.HandlerConf) -> Handler:
     typ = handler_conf.type
@@ -170,6 +134,5 @@ def new_handler_from_conf(handler_conf: config.HandlerConf) -> Handler:
             sql=handler_conf.sql,
             table=handler_conf.table,
             state_dir=handler_conf.state_dir,
-            durable=handler_conf.durable,
         )
     raise NotImplementedError(f"Unsupported handler type: {typ}")

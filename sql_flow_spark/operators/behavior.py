@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sql_flow_spark.registry import fixed, query, scaled_int
+from sql_flow_spark.registry import dsum, fixed, query, scaled_int
 from sql_flow_spark.tables import load_tables
 
 
@@ -525,7 +525,7 @@ def user_behavior_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k",
         term.alias("term"),
     )
-    ent = -F.sum(scaled_int("term", 9)).cast("double") / F.lit(1e9)
+    ent = -dsum("term", 9)
     return terms.groupBy("user_id").agg(
         F.max("tn").cast("long").alias("n_events"),
         F.max("k").cast("long").alias("n_types"),

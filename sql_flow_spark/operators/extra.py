@@ -16,6 +16,7 @@ from sql_flow_spark.registry import (
     dsum,
     fixed,
     o_dsum,
+    ols_fit,
     query,
     scaled_int,
     ts_str,
@@ -1036,34 +1037,16 @@ def part_copurchase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear in orders for bounded basket sizes, never all-parts².
     Deterministic top-k via the (count desc, a, b) total order.
 
-    Scale shape: both sides shuffle once on orderkey (same exchange
-    reused), pair counts partial-agg on the (a, b) key space, top-20
-    is TakeOrderedAndProject. A pathologic giant basket is the skew
-    risk — cap basket size upstream as LSH caps band buckets."""
-    t = load_tables(spark, sf_dir, ("lineitem",))
-    # r13: pin the basket self-join to the session shuffle partitioning
-    # — the pair explosion is CPU-dense on small bytes and AQE's
-    # byte-based coalescing starved it of tasks (see graph._basket_pairs).
-    pk = (
-        t["lineitem"].select("l_orderkey", "l_partkey").distinct()
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-            "l_orderkey",
-        )
-    )
-    a = pk.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a")
-    )
-    b = pk.select(
-        F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("part_b")
-    )
+    Scale shape: the pairs are graph.basket_pairs (one reused orderkey
+    exchange for both sides), pair counts partial-agg on the (a, b) key
+    space, top-20 is TakeOrderedAndProject. A pathologic giant basket
+    is the skew risk — cap basket size upstream as LSH caps band
+    buckets."""
+    from sql_flow_spark.operators.graph import basket_pairs
+
     return (
-        a.join(
-            b,
-            (F.col("ok") == F.col("ok2"))
-            & (F.col("part_a") < F.col("part_b")),
-        )
-        .groupBy("part_a", "part_b")
+        basket_pairs(spark, sf_dir)
+        .groupBy(F.col("a").alias("part_a"), F.col("b").alias("part_b"))
         .agg(F.count("*").cast("long").alias("n_orders"))
         .orderBy(F.col("n_orders").desc(), "part_a", "part_b")
         .limit(20)
@@ -1105,37 +1088,22 @@ def copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer counts in DOUBLE with identical expression trees, so
     ordering by lift is engine-identical (plus the total tiebreak).
 
-    Scale shape: pair generation as in part_copurchase_topk (linear,
-    basket-bounded); the item-count dim is part-cardinality and joins
-    back by broadcast; the total is a one-row cross join."""
-    t = load_tables(spark, sf_dir, ("lineitem",))
-    # r13: same self-join task pin as part_copurchase_topk.
-    pk = (
-        t["lineitem"].select("l_orderkey", "l_partkey").distinct()
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-            "l_orderkey",
-        )
-    )
+    Scale shape: item counts over graph.order_parts, pairs from
+    graph.basket_pairs (linear, basket-bounded); the item-count dim is
+    part-cardinality and joins back by broadcast; the total is a
+    one-row cross join."""
+    from sql_flow_spark.operators.graph import basket_pairs, order_parts
+
+    pk = order_parts(load_tables(spark, sf_dir, ("lineitem",))["lineitem"])
     tot = pk.agg(
         F.count_distinct("l_orderkey").cast("long").alias("n_orders")
     )
     item = pk.groupBy("l_partkey").agg(
         F.count("*").cast("long").alias("n")
     )
-    a = pk.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a")
-    )
-    b = pk.select(
-        F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("part_b")
-    )
     pairs = (
-        a.join(
-            b,
-            (F.col("ok") == F.col("ok2"))
-            & (F.col("part_a") < F.col("part_b")),
-        )
-        .groupBy("part_a", "part_b")
+        basket_pairs(spark, sf_dir)
+        .groupBy(F.col("a").alias("part_a"), F.col("b").alias("part_b"))
         .agg(F.count("*").cast("long").alias("n_ab"))
     )
     ia = item.select(
@@ -1456,6 +1424,75 @@ def key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def ordered_scan(
+    df: DataFrame, order: list, value: str | None = None, name: str = "rk"
+) -> DataFrame:
+    """``df`` plus column ``name``: a scan along the total order
+    ``order`` — the 1-based global rank (LONG) when ``value`` is None,
+    else the running sum of the DECIMAL(38,0) column ``value`` through
+    the current row — without the one-task sort of a bare
+    ``Window.orderBy``.
+
+    Range-partition on ``order`` at the session's shuffle-partition
+    count and tag ``spark_partition_id``: range partitions are
+    contiguous in the sort order, so pid order is global order (an
+    empty partition only adds no rows). ``materialize_once`` pins that
+    one assignment for both consumers. Per-pid row counts (or DECIMAL
+    sums) become offsets through an exclusive running sum over pid —
+    the only unpartitioned window, over n_partitions rows — and the
+    row_number (or running sum) within each pid is a parallel
+    ``partitionBy("pid")`` window; offset + local is exact in both
+    modes."""
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    tagged = materialize_once(
+        df.repartitionByRange(n_part, *order).withColumn(
+            "pid", F.spark_partition_id()
+        )
+    )
+    if value is None:
+        typ, part, local = "long", F.count("*"), F.row_number()
+    else:
+        typ, part, local = "decimal(38,0)", F.sum(value), F.sum(value)
+    offs = (
+        tagged.groupBy("pid")
+        .agg(part.cast(typ).alias("part"))
+        .select(
+            "pid",
+            F.coalesce(
+                F.sum("part").over(
+                    Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
+                ),
+                F.lit(0).cast(typ),
+            ).alias("off"),
+        )
+    )
+    wp = (
+        Window.partitionBy("pid")
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        tagged.withColumn("local", local.over(wp).cast(typ))
+        .join(F.broadcast(offs), "pid")
+        .select(*df.columns, (F.col("off") + F.col("local")).alias(name))
+    )
+
+
+def _customer_revenue(t: dict) -> DataFrame:
+    """(o_custkey, xs): per-customer revenue as a 4dp fixed-point
+    DECIMAL(38,0) sum over the orders-lineitem join."""
+    return (
+        t["orders"]
+        .select("o_orderkey", "o_custkey")
+        .join(
+            t["lineitem"].select("l_orderkey", "l_extendedprice", "l_discount"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
+        .groupBy("o_custkey")
+        .agg(F.sum(scaled_int(_revenue_col())).cast("decimal(38,0)").alias("xs"))
+    )
+
+
 @query(
     "gini_revenue",
     oracle=f"""
@@ -1502,66 +1539,13 @@ def gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: fact-fact join shuffles on orderkey (AQE-salted if
     skewed) -> customer-keyed agg (customer-dim-sized output) -> the
-    global rank is DISTRIBUTED (r7 advice): range-partition on the
-    rank order, row_number within each range partition (parallel
-    WindowExec, one task per partition), plus per-partition offsets
-    from a count table — the only unpartitioned window runs over
-    n_partitions rows, never n_customers. Moments are a single-row
-    agg. The raw-fact stages never sort."""
-    t = load_tables(spark, sf_dir, ("orders", "lineitem"))
-    xs = (
-        F.sum(scaled_int(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))))
-        .cast("decimal(38,0)")
-        .alias("xs")
-    )
-    rev = (
-        t["orders"]
-        .select("o_orderkey", "o_custkey")
-        .join(
-            t["lineitem"].select(
-                "l_orderkey", "l_extendedprice", "l_discount"
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .groupBy("o_custkey")
-        .agg(xs)
-    )
-    # Distributed global rank: a bare Window.orderBy would move every
-    # customer row into ONE task. Range-partition on the rank order,
-    # tag the physical partition id (range partitions are contiguous
-    # in the sort order, so pid order == global order), rank WITHIN
-    # each pid via a partitionBy("pid") window (parallel), then add
-    # per-pid offsets. materialize_once pins one partition assignment
-    # for both consumers (counts + window).
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    tagged = materialize_once(
-        rev.repartitionByRange(n_part, "xs", "o_custkey").withColumn(
-            "pid", F.spark_partition_id()
-        )
-    )
-    offs = (
-        tagged.groupBy("pid")
-        .agg(F.count("*").cast("long").alias("c"))
-        .select(
-            "pid",
-            F.coalesce(
-                F.sum("c").over(
-                    # n_partitions rows only — trivially single-task
-                    Window.orderBy("pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("off"),
-        )
-    )
-    wp = Window.partitionBy("pid").orderBy("xs", "o_custkey")
-    ranked = (
-        tagged.withColumn("j", F.row_number().over(wp).cast("long"))
-        .join(F.broadcast(offs), "pid")
-        .select("xs", (F.col("off") + F.col("j")).alias("rk"))
+    global rank is ``ordered_scan`` (distributed; no window over
+    n_customers rows in one task). Moments are a single-row agg. The
+    raw-fact stages never sort."""
+    ranked = ordered_scan(
+        _customer_revenue(load_tables(spark, sf_dir, ("orders", "lineitem"))),
+        ["xs", "o_custkey"],
+        name="rk",
     )
     s = ranked.agg(
         F.count("*").cast("long").alias("n"),
@@ -1625,15 +1609,12 @@ def price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: the unit price l_extendedprice/l_quantity is one IEEE
     division on identical doubles; both logs are 6dp floor-masked;
-    the five per-group regression sums go through 6dp fixed-point
-    integers (order-insensitive); slope and r² are IEEE arithmetic on
-    identical scalars, masked at the boundary.
+    the per-brand fit is ``registry.ols_fit``.
 
     Scale shape: broadcast the part dim onto the lineitem scan (no
     fact shuffle for the join), then ONE partial-agg shuffle on
-    p_brand (bounded key count). Output is brand-sized. The regression
-    itself is free once the moments exist — the same
-    one-pass-moments trick as correlation_matrix."""
+    p_brand (bounded key count) for the fit's moments. Output is
+    brand-sized."""
     t = load_tables(spark, sf_dir, ("lineitem", "part"))
     pts = (
         t["lineitem"]
@@ -1648,23 +1629,8 @@ def price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         fixed(F.log(F.col("l_extendedprice") / F.col("l_quantity")), 6).alias("x"),
         fixed(F.log(F.col("l_quantity")), 6).alias("y"),
     )
-    s = pts.groupBy("p_brand").agg(
-        F.count("*").cast("long").alias("n"),
-        dsum("x", 6).alias("sx"),
-        dsum("y", 6).alias("sy"),
-        dsum(F.col("x") * F.col("x"), 6).alias("sxx"),
-        dsum(F.col("y") * F.col("y"), 6).alias("syy"),
-        dsum(F.col("x") * F.col("y"), 6).alias("sxy"),
-    )
-    nd = F.col("n").cast("double")
-    cov = nd * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx = nd * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = nd * F.col("syy") - F.col("sy") * F.col("sy")
-    return s.select(
-        "p_brand",
-        "n",
-        fixed(cov / varx, 6).alias("elasticity"),
-        fixed(cov * cov / (varx * vary), 6).alias("r2"),
+    return ols_fit(pts, by=("p_brand",)).select(
+        "p_brand", "n", F.col("slope").alias("elasticity"), "r2"
     )
 
 
@@ -1801,13 +1767,10 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     (revenue DESC, partkey) total order, identical in both engines);
     boundary shares divide exact decimals as DOUBLE.
 
-    Scale shape: the global cumulative sum uses the gini_revenue
-    pattern — a bare Window.orderBy would drag every part into ONE
-    task, so instead: range-partition on the sort order, cumulative
-    sums WITHIN each physical partition (parallel WindowExec), and a
-    per-partition revenue offset from a n_partitions-row side table;
-    the only unpartitioned window runs over n_partitions rows. The
-    class summary is a 3-key groupBy of map-side partials."""
+    Scale shape: the global cumulative sum is ``ordered_scan`` in
+    DECIMAL-sum mode (distributed; no window over every part in one
+    task). The class summary is a 3-key groupBy of map-side
+    partials."""
     t = load_tables(spark, sf_dir, ("lineitem",))
     rev = (
         t["lineitem"]
@@ -1822,45 +1785,18 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("xs")
         )
     )
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    tagged = materialize_once(
-        rev.repartitionByRange(
-            n_part, F.col("xs").desc(), F.col("l_partkey")
-        ).withColumn("pid", F.spark_partition_id())
-    )
-    offs = (
-        tagged.groupBy("pid")
-        .agg(F.sum("xs").cast("decimal(38,0)").alias("psum"))
-        .select(
-            "pid",
-            F.coalesce(
-                F.sum("psum").over(
-                    # n_partitions rows only — trivially single-task
-                    Window.orderBy("pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("off"),
-        )
-    )
-    wp = (
-        Window.partitionBy("pid")
-        .orderBy(F.col("xs").desc(), F.col("l_partkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     tot = rev.agg(F.sum("xs").cast("decimal(38,0)").alias("tot"))
     cum = (
-        tagged.withColumn("cin", F.sum("xs").over(wp))
-        .join(F.broadcast(offs), "pid")
+        ordered_scan(
+            rev, [F.col("xs").desc(), F.col("l_partkey")], value="xs", name="cum"
+        )
         .crossJoin(F.broadcast(tot))
         .select(
             "xs",
             "tot",
-            (
-                (F.col("off") + F.col("cin")).cast("double")
-                / F.col("tot").cast("double")
-            ).alias("cshare"),
+            (F.col("cum").cast("double") / F.col("tot").cast("double")).alias(
+                "cshare"
+            ),
         )
     )
     cls = F.when(F.col("cshare") <= 0.80, "A").when(
@@ -1931,69 +1867,23 @@ def lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum_share window sums 10 doubles in decile order — sequential and
     identical both sides.
 
-    Scale shape: the global rank reuses gini_revenue's distributed
-    pattern — range-partition on the sort order, row_number within
-    each physical partition (parallel), per-partition count offsets
-    from an n_partitions-row table; the only unpartitioned windows
-    run over n_partitions and 10 rows respectively."""
-    t = load_tables(spark, sf_dir, ("orders", "lineitem"))
-    rev = (
-        t["orders"]
-        .select("o_orderkey", "o_custkey")
-        .join(
-            t["lineitem"].select(
-                "l_orderkey", "l_extendedprice", "l_discount"
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .groupBy("o_custkey")
-        .agg(
-            F.sum(
-                scaled_int(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")))
-            )
-            .cast("decimal(38,0)")
-            .alias("xs")
-        )
-    )
+    Scale shape: the global rank is ``ordered_scan`` over
+    gini_revenue's per-customer revenue frame; the only unpartitioned
+    window left runs over the 10 decile rows."""
+    rev = _customer_revenue(load_tables(spark, sf_dir, ("orders", "lineitem")))
     tot = rev.agg(
         F.sum("xs").cast("decimal(38,0)").alias("tot"),
         F.count("*").cast("long").alias("n"),
     )
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    tagged = materialize_once(
-        rev.repartitionByRange(n_part, "xs", "o_custkey").withColumn(
-            "pid", F.spark_partition_id()
-        )
-    )
-    offs = (
-        tagged.groupBy("pid")
-        .agg(F.count("*").cast("long").alias("c"))
-        .select(
-            "pid",
-            F.coalesce(
-                F.sum("c").over(
-                    # n_partitions rows only — trivially single-task
-                    Window.orderBy("pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("off"),
-        )
-    )
-    wp = Window.partitionBy("pid").orderBy("xs", "o_custkey")
     decile = (
         F.floor(
-            ((F.col("off") + F.col("j") - F.lit(1)) * F.lit(10)).cast("double")
+            ((F.col("rk") - F.lit(1)) * F.lit(10)).cast("double")
             / F.col("n").cast("double")
         ).cast("int")
         + F.lit(1)
     )
     dec = (
-        tagged.withColumn("j", F.row_number().over(wp).cast("long"))
-        .join(F.broadcast(offs), "pid")
+        ordered_scan(rev, ["xs", "o_custkey"], name="rk")
         .crossJoin(F.broadcast(tot))
         .select("xs", "tot", decile.alias("decile"))
     )
@@ -2055,25 +1945,17 @@ def frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     triple-keyed count with map-side combine. Identical exact counts,
     structurally different algorithm — the strongest kind of oracle.
 
-    Scale shape: two orderkey-partitioned stages (distinct, collect)
-    + one shuffle onto the triple key space; top-20 is a distributed
+    Scale shape: graph.order_parts, then the per-order collect in the
+    same orderkey partitioning (the C(basket,3) explode is CPU-dense,
+    hence the pin) + one shuffle onto the triple key space; top-20 is a distributed
     sort-limit with rank over the survivors. At 100 TB the triple
     space is the pressure point — map-side partial aggregation and
     the bounded-basket guarantee keep it a counting problem, and a
     support-threshold HAVING slots in before the sort for true
     Apriori-style pruning."""
-    t = load_tables(spark, sf_dir, ("lineitem",))
-    # r13: pin the basket-collect stage (collect_set + the fused
-    # C(basket,3) combination explode is CPU-dense on small bytes; AQE
-    # byte-coalescing starved it of tasks — same treatment as
-    # graph._basket_pairs).
-    b = (
-        t["lineitem"].select("l_orderkey", "l_partkey").distinct()
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-            "l_orderkey",
-        )
-    )
+    from sql_flow_spark.operators.graph import order_parts
+
+    b = order_parts(load_tables(spark, sf_dir, ("lineitem",))["lineitem"])
     arr = b.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("a")
     ).where(F.size("a") >= 3)
@@ -2150,10 +2032,9 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     total order), and the crossing test cw·2 ≥ tot is an exact
     integer inequality — no float enters until the output cast.
 
-    Scale shape: third use of the distributed range-partition cumsum
-    (gini/abc/lorenz lineage): per-partition DECIMAL cumsums in
-    parallel plus an n_partitions-row offset table; the crossing
-    filter + single-row MIN aggregate replace any global sort."""
+    Scale shape: the cumulative weight is ``ordered_scan`` in
+    DECIMAL-sum mode; the crossing filter + single-row MIN aggregate
+    replace any global sort."""
     t = load_tables(spark, sf_dir, ("lineitem", "part"))
     w = (
         t["lineitem"]
@@ -2176,43 +2057,10 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("wt").cast("decimal(38,0)").alias("tot"),
         F.count("*").cast("long").alias("n"),
     )
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    tagged = materialize_once(
-        pts.repartitionByRange(n_part, "price", "p_partkey").withColumn(
-            "pid", F.spark_partition_id()
-        )
-    )
-    offs = (
-        tagged.groupBy("pid")
-        .agg(F.sum("wt").cast("decimal(38,0)").alias("psum"))
-        .select(
-            "pid",
-            F.coalesce(
-                F.sum("psum").over(
-                    # n_partitions rows only — trivially single-task
-                    Window.orderBy("pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("off"),
-        )
-    )
-    wp = (
-        Window.partitionBy("pid")
-        .orderBy("price", "p_partkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     cum = (
-        tagged.withColumn("cin", F.sum("wt").over(wp))
-        .join(F.broadcast(offs), "pid")
+        ordered_scan(pts, ["price", "p_partkey"], value="wt", name="cw")
         .crossJoin(F.broadcast(tot))
-        .select(
-            "price",
-            "n",
-            "tot",
-            (F.col("off") + F.col("cin")).alias("cw"),
-        )
+        .select("price", "n", "tot", "cw")
     )
     return (
         cum.where(F.col("cw") * 2 >= F.col("tot"))

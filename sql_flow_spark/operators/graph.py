@@ -76,9 +76,9 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. Parts never co-purchased have no edges and are
     excluded (their rank is the floor (1-d)/N by definition).
 
-    Scale shape: the weighted edge list (bounded by
-    Σ basket·(basket−1) — linear in orders for bounded baskets) is
-    built once, joined with its out-weight, checkpointed, and
+    Scale shape: the weighted edge list (the ``order_parts`` self-join,
+    bounded by Σ basket·(basket−1) — linear in orders for bounded
+    baskets) is built once, joined with its out-weight, checkpointed, and
     pre-partitioned on src; every iteration joins the node-sized pr
     table on that same src partitioning (no edge exchange), then
     shuffles only node-sized inflow onto dst. pr is
@@ -90,18 +90,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialize_once,
     )
 
-    t = load_tables(spark, sf_dir, ("lineitem",))
-    # Same CPU-dense pair-explosion treatment as _basket_pairs (r13):
-    # pin the distinct's output to the session shuffle partitioning on
-    # the join key so the self-join runs at core count instead of
-    # AQE's byte-coalesced handful of tasks.
-    pk = (
-        t["lineitem"].select("l_orderkey", "l_partkey").distinct()
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-            "l_orderkey",
-        )
-    )
+    pk = order_parts(load_tables(spark, sf_dir, ("lineitem",))["lineitem"])
     a = pk.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
     b = pk.select(F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("dst"))
     # r13: repartition("src") WITHOUT a count let AQE coalesce the
@@ -324,22 +313,27 @@ def _triangle_pipeline(und: DataFrame) -> DataFrame:
     )
 
 
-def _basket_pairs(spark: SparkSession, sf_dir: str):
-    t = load_tables(spark, sf_dir, ("lineitem",))
-    # r13: the basket self-join is CPU-dense on small bytes (per-order
-    # pair explosion), and AQE's byte-based coalescing handed it ~5
-    # tasks at sf0.1 (stage profile: 4.3 CPU-s on 5 tasks, ~1 s wall).
-    # Pinning the distinct's output to the session shuffle partitioning
-    # on the join key keeps the explosion at core count — the same
-    # CPU-dense-reduce treatment as the Lloyd facts — and both join
-    # sides read ONE reused exchange, so no extra shuffle is added.
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    pk = (
-        t["lineitem"]
-        .select("l_orderkey", "l_partkey")
+def order_parts(lineitem: DataFrame) -> DataFrame:
+    """The order baskets: DISTINCT (l_orderkey, l_partkey), pinned to
+    the session's shuffle partitioning on l_orderkey. Every basket
+    self-join (and the per-order collect of frequent_triples) is
+    CPU-dense on small bytes — the per-order pair explosion — and AQE's
+    byte-based coalescing handed it ~5 tasks at sf0.1 (stage profile:
+    4.3 CPU-s on 5 tasks, ~1 s wall). The pin keeps it at core count,
+    and both sides of a self-join read ONE reused exchange, so no
+    shuffle is added."""
+    n_shuffle = int(lineitem.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        lineitem.select("l_orderkey", "l_partkey")
         .distinct()
         .repartition(n_shuffle, "l_orderkey")
     )
+
+
+def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(a, b): one row per order and pair of its distinct parts a < b —
+    the ``order_parts`` self-join on l_orderkey."""
+    pk = order_parts(load_tables(spark, sf_dir, ("lineitem",))["lineitem"])
     a = pk.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("a"))
     b = pk.select(F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("b"))
     return a.join(
@@ -370,8 +364,8 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer counts; the coefficient 2T/(d(d-1)) is one IEEE
     division on identical integers.
 
-    Scale shape: DISTINCT basket pairs (linear for bounded baskets) ->
-    degree (two-key agg) -> oriented edges (two broadcastable deg
+    Scale shape: DISTINCT ``basket_pairs`` (linear for bounded baskets)
+    -> degree (two-key agg) -> oriented edges (two broadcastable deg
     joins at dim scale, shuffle joins at web scale) -> wedge self-join
     partitioned on src -> closing equi-join on (src, dst). All
     equi-joins, all spillable; no driver traffic.
@@ -382,7 +376,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry is triangle_count_sparse (weight >= 2 sparsification, same
     pipeline), the lever this docstring has always named for the
     100 TB regime."""
-    return _triangle_pipeline(_basket_pairs(spark, sf_dir).distinct())
+    return _triangle_pipeline(basket_pairs(spark, sf_dir).distinct())
 
 
 @query("triangle_count_sparse", oracle=_tri_oracle(_TRI_UND_SPARSE))
@@ -408,7 +402,7 @@ def triangle_count_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     free map-side partial work on the exchange DISTINCT already
     paid for)."""
     und = (
-        _basket_pairs(spark, sf_dir)
+        basket_pairs(spark, sf_dir)
         .groupBy("a", "b")
         .agg(F.count("*").alias("w"))
         .where(F.col("w") >= _TRI_MIN_W)
@@ -475,14 +469,11 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficient is IEEE arithmetic on identical scalars, floor-masked
     to 6dp at the boundary.
 
-    Scale shape: DISTINCT basket pairs (bounded-basket linear) -> two
-    broadcastable degree joins -> single-row moment agg. No data-sized
+    Scale shape: DISTINCT ``basket_pairs`` (bounded-basket linear) ->
+    two broadcastable degree joins -> single-row moment agg. No data-sized
     stage after the first DISTINCT; the moment agg is map-side partial
     everywhere."""
-    # r13: share _basket_pairs (which pins the CPU-dense basket
-    # self-join to the session shuffle partitioning) instead of an
-    # unpinned inline copy of the same pair join.
-    und = _basket_pairs(spark, sf_dir).distinct()
+    und = basket_pairs(spark, sf_dir).distinct()
     # und's DISTINCT already ends in an Exchange+HashAggregate; its
     # three consumers (deg's two union legs + the edge join) reuse that
     # exchange (ReusedExchange), so no persist/checkpoint is needed —

@@ -89,6 +89,36 @@ def davg(col: Column | str, scale: int = 4) -> Column:
     return dsum(c, scale) / F.count(c).cast("double")
 
 
+def ols_fit(df: DataFrame, by: tuple = (), scale: int = 6) -> DataFrame:
+    """Least-squares line y ≈ slope·x + intercept over columns ``x``
+    and ``y`` of ``df``, per ``by`` group: ``n``, ``slope``,
+    ``intercept`` and ``r2``. The five moment sums are ``dsum`` at
+    ``scale`` (order-insensitive); the fit is IEEE arithmetic on those
+    engine-identical scalars, masked with ``fixed`` at ``scale``
+    because x·y products of ``scale``-dp values are exact only to
+    about 2·``scale`` digits in a double."""
+    s = df.groupBy(*by).agg(
+        F.count("*").cast("long").alias("n"),
+        dsum("x", scale).alias("sx"),
+        dsum("y", scale).alias("sy"),
+        dsum(F.col("x") * F.col("x"), scale).alias("sxx"),
+        dsum(F.col("y") * F.col("y"), scale).alias("syy"),
+        dsum(F.col("x") * F.col("y"), scale).alias("sxy"),
+    )
+    nd = F.col("n").cast("double")
+    cov = nd * F.col("sxy") - F.col("sx") * F.col("sy")
+    varx = nd * F.col("sxx") - F.col("sx") * F.col("sx")
+    vary = nd * F.col("syy") - F.col("sy") * F.col("sy")
+    slope = cov / varx
+    return s.select(
+        *by,
+        "n",
+        fixed(slope, scale).alias("slope"),
+        fixed((F.col("sy") - slope * F.col("sx")) / nd, scale).alias("intercept"),
+        fixed(cov * cov / (varx * vary), scale).alias("r2"),
+    )
+
+
 # DuckDB-side equivalents for use inside oracle SQL strings.
 def o_dsum(expr: str, scale: int = 4) -> str:
     m = float(10**scale)

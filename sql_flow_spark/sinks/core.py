@@ -34,25 +34,15 @@ class Sink(ABC):
     def flush(self):
         """Flush buffered batches (default: no buffering)."""
 
-    def batch(self) -> Optional[DataFrame]:
-        """Last written batch, for error reporting (reference
-        pipeline.py:139 logs the failed batch)."""
-        return None
-
 
 class ConsoleSink(Sink):
     def __init__(self, f=None):
         self.f = f or sys.stdout
-        self._last: Optional[DataFrame] = None
 
     def write_table(self, df: DataFrame):
-        self._last = df
         for (line,) in df.select(F.to_json(F.struct(*df.columns))).collect():
             self.f.write(line)
             self.f.write("\n")
-
-    def batch(self) -> Optional[DataFrame]:
-        return self._last
 
 
 class MemorySink(Sink):
@@ -78,9 +68,6 @@ class MemorySink(Sink):
         for b in self.batches:
             out.extend(b.collect())
         return out
-
-    def batch(self) -> Optional[DataFrame]:
-        return self.batches[-1] if self.batches else None
 
 
 class RecordingSink(MemorySink):
@@ -114,19 +101,14 @@ class FileSink(Sink):
         self.mode = mode
         self.options = options or {}
         self.partition_by = list(partition_by or [])
-        self._last: Optional[DataFrame] = None
 
     def write_table(self, df: DataFrame):
-        self._last = df
         w = df.write.format(self.format).mode(self.mode)
         if self.partition_by:
             w = w.partitionBy(*self.partition_by)
         for k, v in self.options.items():
             w = w.option(k, v)
         w.save(self.path)
-
-    def batch(self) -> Optional[DataFrame]:
-        return self._last
 
 
 class UpsertSink(Sink):
@@ -177,7 +159,6 @@ class UpsertSink(Sink):
         self.order_by = order_by
         self.n_buckets = n_buckets
         self._seq: Optional[int] = None
-        self._last: Optional[DataFrame] = None
 
     def _table(self) -> Optional[DataFrame]:
         try:
@@ -215,7 +196,6 @@ class UpsertSink(Sink):
         )
 
     def write_table(self, df: DataFrame):
-        self._last = df
         existing = self._table()
         seq = self._next_seq(existing)
         batch = self._bucket(df.withColumn(self.SEQ_COL, F.lit(seq)))
@@ -248,9 +228,6 @@ class UpsertSink(Sink):
         if t is None:
             return None
         return t.drop(self.SEQ_COL, self.BUCKET_COL)
-
-    def batch(self) -> Optional[DataFrame]:
-        return self._last
 
 
 class KafkaSink(Sink):

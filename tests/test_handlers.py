@@ -108,24 +108,8 @@ def test_structured_batch_seed_rows_participate(spark, tmp_path):
     assert h.invoke(spark, _batch_df(spark)).first().n == 4  # 1 seed + 3
 
 
-def test_structured_batch_in_memory_fallback(spark):
-    """durable=False keeps the pre-r3 union/localCheckpoint behavior."""
-    spark.sql("DROP VIEW IF EXISTS city_events_m")
-    spark.createDataFrame([], "city string, event string, user_id string") \
-        .createOrReplaceTempView("city_events_m")
-    h = StructuredBatch(
-        sql="SELECT COUNT(*) AS n FROM city_events_m",
-        table="city_events_m",
-        durable=False,
-    )
-    assert h.invoke(spark, _batch_df(spark)).first().n == 3
-    assert h.invoke(spark, _batch_df(spark)).first().n == 6
-    assert h._accumulated is not None  # union path, no state dir
-    assert h._state_dir is None
-
-
 def test_structured_batch_durable_without_state_dir_warns(spark, caplog):
-    """Explicit-state_dir contract (VERDICT r4 item 4): durable=True
+    """Explicit-state_dir contract (VERDICT r4 item 4): a handler
     with no state_dir falls back to a fresh temp dir, which cannot be
     re-adopted after restart — the handler must say so loudly."""
     import logging

@@ -172,8 +172,10 @@ def _sites(path, match):
 
 
 def _is_fixed_point(node):
-    """F.floor(<expr> + 0.5), F.floor(<expr> + F.lit(0.5)), or a window
-    sum F.sum(scaled_int(...)).over(...) (registry.dsum(over=...))."""
+    """F.floor(<expr> + 0.5), F.floor(<expr> + F.lit(0.5)), a window
+    sum F.sum(scaled_int(...)).over(...) (registry.dsum(over=...)), or
+    an exact sum read as DOUBLE, F.sum(scaled_int(...)).cast("double")
+    (registry.dsum; a sum kept DECIMAL is not the idiom)."""
     if _is_call(node, "floor", "F"):
         return (
             bool(node.args)
@@ -181,8 +183,12 @@ def _is_fixed_point(node):
             and isinstance(node.args[0].op, ast.Add)
             and _is_half(node.args[0].right)
         )
+    as_double = _is_call(node, "cast") and [
+        getattr(a, "value", None) for a in node.args
+    ] == ["double"]
     return (
-        _is_call(node, "over")
+        (_is_call(node, "over") or as_double)
+        and isinstance(node.func, ast.Attribute)
         and _is_call(node.func.value, "sum", "F")
         and bool(node.func.value.args)
         and _is_call(node.func.value.args[0], "scaled_int")
@@ -218,17 +224,17 @@ _PROTOCOL_CALLS = {
 }
 
 
-def _is_col_b(node):
+def _is_col_named(node, name):
     return (
-        isinstance(node, ast.Call)
-        and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "col"
-        and isinstance(node.func.value, ast.Name)
-        and node.func.value.id == "F"
+        _is_call(node, "col", "F")
         and len(node.args) == 1
         and isinstance(node.args[0], ast.Constant)
-        and node.args[0].value == "b"
+        and node.args[0].value == name
     )
+
+
+def _is_col_b(node):
+    return _is_col_named(node, "b")
 
 
 def _is_col(node):
@@ -340,6 +346,99 @@ def test_cosine_rule_lives_in_similarity():
     )
     stale = [k for k in _COSINE_RULE_ALLOWLIST if not per_key[k]]
     assert not stale, f"allowlisted sites no longer exist: {stale}"
+
+
+# One helper per repeated operator plan shape: (home module, helper,
+# matcher). The distributed ordered scan, the pinned order baskets and
+# the log-log moment fit are each written once, in their helper.
+_PLAN_SHAPES = {
+    "F.spark_partition_id()": (
+        "operators/extra.py",
+        "ordered_scan",
+        lambda n: _is_call(n, "spark_partition_id", "F"),
+    ),
+    '.repartition(..., "l_orderkey")': (
+        "operators/graph.py",
+        "order_parts",
+        lambda n: _is_call(n, "repartition")
+        and any(isinstance(a, ast.Constant) and a.value == "l_orderkey" for a in n.args),
+    ),
+    'dsum(F.col("x") * F.col("y"), ...)': (
+        "registry.py",
+        "ols_fit",
+        lambda n: _is_call(n, "dsum")
+        and bool(n.args)
+        and isinstance(n.args[0], ast.BinOp)
+        and isinstance(n.args[0].op, ast.Mult)
+        and _is_col_named(n.args[0].left, "x")
+        and _is_col_named(n.args[0].right, "y"),
+    ),
+}
+
+
+def test_operator_plan_shapes_live_in_helpers():
+    """A new hand-written range-partition scan, order-basket pin or
+    moment fit fails here; use extra.ordered_scan, graph.order_parts
+    or registry.ols_fit."""
+    import sql_flow_spark
+
+    root = Path(sql_flow_spark.__file__).parent
+    found = [
+        (rel, fn, what, line)
+        for path in sorted(root.rglob("*.py"))
+        for rel in [path.relative_to(root).as_posix()]
+        for what, (_, _, match) in _PLAN_SHAPES.items()
+        for fn, line in _sites(path, match)
+    ]
+    stray = [
+        f"{rel}:{line} in {fn}: {what}"
+        for rel, fn, what, line in found
+        if (rel, fn) != _PLAN_SHAPES[what][:2]
+    ]
+    assert not stray, (
+        "use ordered_scan / order_parts / ols_fit:\n" + "\n".join(stray)
+    )
+    homes = {(rel, fn) for rel, fn, _, _ in found}
+    assert all(v[:2] in homes for v in _PLAN_SHAPES.values()), "a helper moved"
+
+
+@pytest.mark.parametrize("seed,n_part", [(0, 1), (1, 64), (2, 64), (3, 3)])
+def test_ordered_scan_matches_global_window(spark, seed, n_part):
+    """ordered_scan equals a plain single-task Window.orderBy — LONG
+    rank and running DECIMAL sum — on frames with ties on the first
+    order column, with one partition, and with more range partitions
+    than rows (some empty)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from sql_flow_spark.operators.extra import ordered_scan
+
+    rng = np.random.RandomState(seed)
+    n = int(rng.randint(1, 40))
+    rows = [
+        (int(g), i, Decimal(int(v)))
+        for i, (g, v) in enumerate(
+            zip(rng.randint(0, 4, n), rng.randint(-(10**12), 10**12, n))
+        )
+    ]
+    df = spark.createDataFrame(rows, "g int, id long, v decimal(38,0)")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
+    try:
+        for order in (["g", "id"], [F.col("g").desc(), F.col("id").desc()]):
+            w = Window.orderBy(*order).rowsBetween(
+                Window.unboundedPreceding, Window.currentRow
+            )
+            for value, ref in ((None, F.row_number()), ("v", F.sum("v"))):
+                got = ordered_scan(df, order, value=value, name="s")
+                want = df.withColumn("s", ref.over(w))
+                assert got.columns == ["g", "id", "v", "s"]
+                assert sorted(got.collect()) == sorted(want.collect())
+                assert got.schema["s"].dataType.simpleString() == (
+                    "bigint" if value is None else "decimal(38,0)"
+                )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _union_find_components(edges):

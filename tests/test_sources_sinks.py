@@ -160,7 +160,6 @@ def test_console_sink_writes_json_lines(spark):
     sink.write_table(spark.createDataFrame([(1, "a")], "id long, v string"))
     sink.flush()
     assert buf.getvalue() == '{"id":1,"v":"a"}\n'
-    assert sink.batch() is not None
 
 
 def test_all_example_configs_parse():
