@@ -180,7 +180,7 @@ def warm_session(spark, sf_dir: str) -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
     from sql_flow_spark.tables import TABLE_NAMES, load_tables
 
-    for df in load_tables(spark, sf_dir, TABLE_NAMES, register_views=False).values():
+    for df in load_tables(spark, sf_dir, TABLE_NAMES).values():
         df.write.format("noop").mode("overwrite").save()
 
     import pandas as pd  # noqa: F401 — driver side, matches worker env

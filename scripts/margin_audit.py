@@ -75,13 +75,14 @@ _ULP = 2.0 ** -52
 # deterministic across engines at ANY margin.
 EXEMPT: dict[tuple[str, int], str] = {
     ("ewma_daily", 2): (
-        "arg = (already-9dp-masked weight w)*1e9 + 0.5: w is integer/1e9,"
-        " so the chain from the masked integer is pure IEEE; libm (pow)"
-        " sits upstream of the s0 mask, which has 0.5-unit margins"
+        "w*x term of the DECIMAL numerator sum: w is the already-9dp-masked"
+        " weight (integer/1e9) and x a fixed-point daily mean, so the chain"
+        " from the masks is pure IEEE; libm (pow) sits behind the s1 mask"
     ),
     ("user_behavior_entropy", 2): (
-        "final entropy floor over -(exact BIGINT fixed-point sum)/1e9*1e6:"
-        " pure IEEE on an exact integer both engines share bit-for-bit"
+        "p*ln(p) term of the DECIMAL(30,0) fixed-point sum: p is an exact"
+        " count ratio and ln sits behind the s0 mask, so the product is"
+        " pure IEEE on values both engines share bit-for-bit"
     ),
     ("rrf_fusion", 1): (
         "norms fixed-point (O_NORMS_CTE): IEEE products of exact parquet"
@@ -92,13 +93,13 @@ EXEMPT: dict[tuple[str, int], str] = {
         "dot_dec fixed-point: IEEE per-element products of exact parquet"
         " floats — same idiom as the [ieee] embedding keys"
     ),
-    ("price_elasticity", 4): (
+    ("price_elasticity", 7): (
         "sxx term: x*x where x is the already-6dp-masked ln — IEEE"
         " product of bit-identical doubles; raw ln sits behind the s0"
         " mask (measured 8.1e3 ulps, above the bar)"
     ),
-    ("price_elasticity", 6): (
-        "sxy term: x*y of already-masked values — same as s4"
+    ("price_elasticity", 9): (
+        "sxy term: x*y of already-masked values — same as s7"
     ),
 }
 

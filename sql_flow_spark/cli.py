@@ -186,7 +186,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "sql":
         from sql_flow_spark.tables import load_tables
 
-        load_tables(spark, args.sf_dir)
+        for name, df in load_tables(spark, args.sf_dir).items():
+            df.createOrReplaceTempView(name)
         for row in spark.sql(args.query).limit(args.limit).collect():
             print(row.asDict(recursive=True))
         return 0

@@ -32,7 +32,7 @@ from sql_flow_spark.functions.textops import (
     fingerprint,
     ws_token_count,
 )
-from sql_flow_spark.registry import query
+from sql_flow_spark.registry import o_dsum, query
 from sql_flow_spark.tables import load_tables
 
 # ------------------------------------------------------------ PII scrub
@@ -875,8 +875,7 @@ def filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
       fp.source,
       COUNT(*) AS n_docs,
       CAST(SUM(fp.n_tokens) AS BIGINT) AS total_tokens,
-      CAST(SUM(CAST(floor(q.q * 10000.0 + 0.5) AS DECIMAL(30,0))) AS DOUBLE)
-        / 10000.0 / CAST(COUNT(*) AS DOUBLE) AS avg_quality,
+      {o_dsum('q.q')} / CAST(COUNT(*) AS DOUBLE) AS avg_quality,
       CAST(SUM(CASE WHEN k.keep_id <> fp.doc_id THEN 1 ELSE 0 END) AS DOUBLE)
         / CAST(COUNT(*) AS DOUBLE) AS dup_rate
     FROM fp

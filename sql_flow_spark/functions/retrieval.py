@@ -17,7 +17,7 @@ LLM-training-data family (SURVEY.md §2 rows 22+) the brief asks for.
 
 Cross-engine determinism: per-term BM25 contributions are pure IEEE
 double expressions on exact-integer inputs, fixed-pointed to 6dp
-(``scaled_int``; see _BM_SCALE for the margin-audit rationale) and
+(``scaled_int``; see _BM_DP for the margin-audit rationale) and
 summed as DECIMAL — exact and order-insensitive under any
 partitioning; ln() ulp drift between engines is absorbed by
 the fixed-point rounding. RRF scores are one or two IEEE divisions on
@@ -41,7 +41,7 @@ from sql_flow_spark.functions.similarity import (
     norm,
     pair_cosine,
 )
-from sql_flow_spark.registry import dsum, query, scaled_int
+from sql_flow_spark.registry import dsum, o_dsum, query, scaled_int
 from sql_flow_spark.tables import load_tables
 
 # Fixed query: terms exist at every scale factor (the corpus vocabulary
@@ -60,10 +60,15 @@ RRF_TOP = 10
 # order as the observed r8 cross-libm flip (~1.4e3 ulps). At 6dp the
 # same data clears 1e6+ ulps. Ranking ties the coarser score could
 # introduce are already broken deterministically by doc_id.
-_BM_SCALE = 1_000_000.0
-_BM_DP = 6  # must match _BM_SCALE for the Spark-side scaled_int calls
+_BM_DP = 6
 
 _TERMS_SQL = ", ".join(f"'{t}'" for t in QUERY_TERMS)
+
+# One query term's BM25 score over the oracle CTEs below (tf, df, s).
+_O_BM25_TERM = f"""ln(1.0 + (s.n_docs - df.df + 0.5) / (df.df + 0.5))
+             * (tf.tf * {BM25_K1 + 1.0}
+                / (tf.tf + {BM25_K1} * ({1.0 - BM25_B} + {BM25_B}
+                   * (CAST(tf.dl AS DOUBLE) / s.avgdl))))"""
 
 # Shared oracle CTE chain producing bm25(doc_id, score). Expression
 # structure mirrors the Spark builder token for token so both engines
@@ -93,15 +98,12 @@ O_BM25_CTES = f"""
   term_scores AS (
     SELECT tf.doc_id,
            CAST(floor(
-             ln(1.0 + (s.n_docs - df.df + 0.5) / (df.df + 0.5))
-             * (tf.tf * {BM25_K1 + 1.0}
-                / (tf.tf + {BM25_K1} * ({1.0 - BM25_B} + {BM25_B}
-                   * (CAST(tf.dl AS DOUBLE) / s.avgdl))))
-             * {_BM_SCALE} + 0.5) AS DECIMAL(30,0)) AS ts
+             {_O_BM25_TERM}
+             * {10.0 ** _BM_DP} + 0.5) AS DECIMAL(30,0)) AS ts
     FROM tf JOIN df ON tf.term = df.term CROSS JOIN stats s
   ),
   bm25 AS (
-    SELECT doc_id, CAST(SUM(ts) AS DOUBLE) / {_BM_SCALE} AS score
+    SELECT doc_id, CAST(SUM(ts) AS DOUBLE) / {10.0 ** _BM_DP} AS score
     FROM term_scores GROUP BY doc_id
   )
 """
@@ -204,7 +206,7 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(stats))
         .select(
             "doc_id",
-            (total.cast("double") / F.lit(_BM_SCALE)).alias("score"),
+            (total.cast("double") / F.lit(10.0 ** _BM_DP)).alias("score"),
         )
     )
 
@@ -386,13 +388,7 @@ MRR_QTERMS = 3
     ),
     scores AS (
       SELECT q.qid, tf.doc_id,
-             CAST(SUM(CAST(floor(
-               ln(1.0 + (s.n_docs - df.df + 0.5) / (df.df + 0.5))
-               * (tf.tf * {BM25_K1 + 1.0}
-                  / (tf.tf + {BM25_K1} * ({1.0 - BM25_B} + {BM25_B}
-                     * (CAST(tf.dl AS DOUBLE) / s.avgdl))))
-               * {_BM_SCALE} + 0.5) AS DECIMAL(30,0))) AS DOUBLE)
-               / {_BM_SCALE} AS score
+             {o_dsum(_O_BM25_TERM, _BM_DP)} AS score
       FROM tf
       JOIN qterms q ON tf.term = q.term
       JOIN df ON tf.term = df.term

@@ -12,7 +12,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sql_flow_spark.functions.dedup import O_NGRAMS, O_TOKENS, ws_tokens
-from sql_flow_spark.registry import fixed, ols_fit, query, scaled_int
+from sql_flow_spark.registry import (
+    fixed,
+    o_dsum,
+    o_fixed,
+    o_ols_fit,
+    ols_fit,
+    query,
+    scaled_int,
+)
 from sql_flow_spark.tables import load_tables
 
 CHUNK_TOKENS = 20
@@ -575,7 +583,7 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bigram_logprob",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
              regexp_split_to_array(trim(lower(text)), '\\s+') AS arr
@@ -591,16 +599,12 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     bs AS (SELECT a, COUNT(*) AS c1 FROM bg GROUP BY a),
     scored AS (
       SELECT bg.doc_id,
-             SUM(CAST(floor(
-               ln(CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE))
-               * 1000000.0 + 0.5) AS DECIMAL(30,0))) AS lp,
+             {o_dsum('ln(CAST(c2 AS DOUBLE) / CAST(c1 AS DOUBLE))', 6)} AS lp,
              CAST(COUNT(*) AS BIGINT) AS n_bigrams
       FROM bg JOIN bc USING (a, b) JOIN bs USING (a)
       GROUP BY bg.doc_id
     )
-    SELECT doc_id, n_bigrams,
-           CAST(lp AS DOUBLE) / 1000000.0
-             / CAST(n_bigrams AS DOUBLE) AS avg_logprob
+    SELECT doc_id, n_bigrams, lp / CAST(n_bigrams AS DOUBLE) AS avg_logprob
     FROM scored
     """,
 )
@@ -915,41 +919,13 @@ ZIPF_TOP_N = 500
       LIMIT {ZIPF_TOP_N}
     ),
     ranked AS (
-      SELECT floor(ln(CAST(ROW_NUMBER() OVER
-               (ORDER BY occurrences DESC, term) AS DOUBLE))
-               * 1000000.0 + 0.5) / 1000000.0 AS x,
-             floor(ln(CAST(occurrences AS DOUBLE)) * 1000000.0 + 0.5)
-               / 1000000.0 AS y
+      SELECT {o_fixed('ln(CAST(ROW_NUMBER() OVER'
+                      ' (ORDER BY occurrences DESC, term) AS DOUBLE))', 6)} AS x,
+             {o_fixed('ln(CAST(occurrences AS DOUBLE))', 6)} AS y
       FROM freq
-    ),
-    s AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(floor(x * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-               / 1000000.0 AS sx,
-             CAST(SUM(CAST(floor(y * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-               / 1000000.0 AS sy,
-             CAST(SUM(CAST(floor(x * x * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-               / 1000000.0 AS sxx,
-             CAST(SUM(CAST(floor(y * y * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-               / 1000000.0 AS syy,
-             CAST(SUM(CAST(floor(x * y * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-               / 1000000.0 AS sxy
-      FROM ranked
     )
-    SELECT n AS n_terms,
-           floor(((CAST(n AS DOUBLE) * sxy - sx * sy)
-                  / (CAST(n AS DOUBLE) * sxx - sx * sx)) * 1000000.0 + 0.5)
-             / 1000000.0 AS zipf_slope,
-           floor(((sy - ((CAST(n AS DOUBLE) * sxy - sx * sy)
-                         / (CAST(n AS DOUBLE) * sxx - sx * sx)) * sx)
-                  / CAST(n AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0
-             AS intercept,
-           floor(((CAST(n AS DOUBLE) * sxy - sx * sy)
-                  * (CAST(n AS DOUBLE) * sxy - sx * sy)
-                  / ((CAST(n AS DOUBLE) * sxx - sx * sx)
-                     * (CAST(n AS DOUBLE) * syy - sy * sy)))
-                 * 1000000.0 + 0.5) / 1000000.0 AS r2
-    FROM s
+    SELECT n AS n_terms, slope AS zipf_slope, intercept, r2
+    FROM ({o_ols_fit('ranked')})
     """,
 )
 def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1127,40 +1103,12 @@ _HEAPS_TRANCHES = 10
       FROM tokc t LEFT JOIN newv v ON v.tranche = t.tranche
     ),
     pts AS (
-      SELECT floor(ln(CAST(cum_n AS DOUBLE)) * 1000000.0 + 0.5)
-               / 1000000.0 AS x,
-             floor(ln(CAST(cum_v AS DOUBLE)) * 1000000.0 + 0.5)
-               / 1000000.0 AS y
+      SELECT {o_fixed('ln(CAST(cum_n AS DOUBLE))', 6)} AS x,
+             {o_fixed('ln(CAST(cum_v AS DOUBLE))', 6)} AS y
       FROM cum
-    ),
-    s AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(floor(x * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-               / 1000000.0 AS sx,
-             CAST(SUM(CAST(floor(y * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-               / 1000000.0 AS sy,
-             CAST(SUM(CAST(floor(x * x * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-               / 1000000.0 AS sxx,
-             CAST(SUM(CAST(floor(y * y * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-               / 1000000.0 AS syy,
-             CAST(SUM(CAST(floor(x * y * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-               / 1000000.0 AS sxy
-      FROM pts
     )
-    SELECT n AS n_points,
-           floor(((CAST(n AS DOUBLE) * sxy - sx * sy)
-                  / (CAST(n AS DOUBLE) * sxx - sx * sx)) * 1000000.0 + 0.5)
-             / 1000000.0 AS heaps_beta,
-           floor(((sy - ((CAST(n AS DOUBLE) * sxy - sx * sy)
-                         / (CAST(n AS DOUBLE) * sxx - sx * sx)) * sx)
-                  / CAST(n AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0
-             AS ln_k,
-           floor(((CAST(n AS DOUBLE) * sxy - sx * sy)
-                  * (CAST(n AS DOUBLE) * sxy - sx * sy)
-                  / ((CAST(n AS DOUBLE) * sxx - sx * sx)
-                     * (CAST(n AS DOUBLE) * syy - sy * sy)))
-                 * 1000000.0 + 0.5) / 1000000.0 AS r2
-    FROM s
+    SELECT n AS n_points, slope AS heaps_beta, intercept AS ln_k, r2
+    FROM ({o_ols_fit('pts')})
     """,
 )
 def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sql_flow_spark.registry import dsum, fixed, query, scaled_int
+from sql_flow_spark.registry import dsum, fixed, o_dsum, o_fixed, query, scaled_int
 from sql_flow_spark.tables import load_tables
 
 
@@ -461,7 +461,7 @@ def user_activity_streaks(spark, sf_dir: str):
 
 @query(
     "user_behavior_entropy",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n
       FROM events GROUP BY 1, 2
@@ -475,16 +475,14 @@ def user_activity_streaks(spark, sf_dir: str):
     terms AS (
       SELECT c.user_id, t.tn, t.k,
              (CAST(c.n AS DOUBLE) / CAST(t.tn AS DOUBLE))
-               * (floor(ln(CAST(c.n AS DOUBLE) / CAST(t.tn AS DOUBLE))
-                        * 1000000.0 + 0.5) / 1000000.0) AS term
+               * ({o_fixed('ln(CAST(c.n AS DOUBLE) / CAST(t.tn AS DOUBLE))', 6)})
+               AS term
       FROM c JOIN tot t ON t.user_id = c.user_id
     )
     SELECT user_id,
            CAST(MAX(tn) AS BIGINT) AS n_events,
            CAST(MAX(k) AS BIGINT) AS n_types,
-           floor(-CAST(SUM(CAST(floor(term * 1000000000.0 + 0.5) AS BIGINT))
-                       AS DOUBLE) / 1000000000.0
-                 * 1000000.0 + 0.5) / 1000000.0 AS entropy
+           {o_fixed('-' + o_dsum('term', 9), 6)} AS entropy
     FROM terms
     GROUP BY user_id
     """,

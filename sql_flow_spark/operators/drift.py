@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sql_flow_spark.registry import dsum, fixed, query
+from sql_flow_spark.registry import dsum, fixed, o_dsum, o_fixed, query
 from sql_flow_spark.tables import load_tables
 
 # Fixed split boundary for the self-contained drift pair: first half
@@ -205,6 +205,10 @@ def _psi_oracle() -> str:
         f"CASE WHEN e.value >= r.f{i} THEN 1 ELSE 0 END"
         for i in range(1, len(_PSI_FRACS) + 1)
     )
+    p1, p2 = (
+        f"((CAST(c{g} AS DOUBLE) + 0.5) / (CAST(t{g} AS DOUBLE) + 5.0))"
+        for g in (1, 2)
+    )
     return f"""
     WITH ref AS (
       SELECT event_type, {fence_cols}
@@ -230,18 +234,11 @@ def _psi_oracle() -> str:
     ),
     terms AS (
       SELECT c.event_type,
-             ((CAST(c2 AS DOUBLE) + 0.5) / (CAST(t2 AS DOUBLE) + 5.0)
-              - (CAST(c1 AS DOUBLE) + 0.5) / (CAST(t1 AS DOUBLE) + 5.0))
-             * (CAST(floor(ln(
-                 ((CAST(c2 AS DOUBLE) + 0.5) / (CAST(t2 AS DOUBLE) + 5.0))
-                 / ((CAST(c1 AS DOUBLE) + 0.5) / (CAST(t1 AS DOUBLE) + 5.0))
-               ) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS term
+             ({p2} - {p1}) * ({o_fixed(f'ln({p2} / {p1})', 6)}) AS term
       FROM counts c JOIN tot t ON t.event_type = c.event_type
     )
     SELECT event_type,
-           CAST(SUM(CAST(floor(term * 1000000000.0 + 0.5)
-                         AS DECIMAL(30,0))) AS DOUBLE)
-             / 1000000000.0 AS psi
+           {o_dsum('term', 9)} AS psi
     FROM terms GROUP BY event_type
     """
 

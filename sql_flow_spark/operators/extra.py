@@ -16,6 +16,9 @@ from sql_flow_spark.registry import (
     dsum,
     fixed,
     o_dsum,
+    o_fixed,
+    o_ols_fit,
+    o_scaled_int,
     ols_fit,
     query,
     scaled_int,
@@ -487,8 +490,7 @@ def orders_by_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
       user_id,
       event_id,
       CAST(ROW_NUMBER() OVER w AS INTEGER) AS seq,
-      CAST(SUM(CAST(floor(value * 10000.0 + 0.5) AS DECIMAL(30,0))) OVER w AS DOUBLE)
-        / 10000.0 AS running_value,
+      {o_dsum('value', over='w')} AS running_value,
       epoch_us(ts) - epoch_us(lag(ts) OVER w) AS micros_since_prev
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -807,10 +809,7 @@ def revenue_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders GROUP BY o_orderpriority
     )
     SELECT o_orderpriority, revenue,
-           revenue /
-             (CAST(SUM(CAST(floor(revenue * 10000.0 + 0.5)
-                            AS DECIMAL(38,0))) OVER ()
-                   AS DOUBLE) / 10000.0) AS revenue_share
+           revenue / ({o_dsum('revenue', over='()')}) AS revenue_share
     FROM per
     """,
 )
@@ -1173,7 +1172,7 @@ def events_weekday_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "winsorized_stats",
-    oracle="""
+    oracle=f"""
     WITH th AS (
       SELECT event_type,
              quantile_cont(value, 0.05) AS lo,
@@ -1182,13 +1181,10 @@ def events_weekday_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT e.event_type,
            th.lo AS p05, th.hi AS p95,
-           CAST(SUM(CAST(floor(
-             LEAST(GREATEST(e.value, th.lo), th.hi) * 10000.0 + 0.5)
-             AS DECIMAL(30,0))) AS DOUBLE) / 10000.0
+           {o_dsum('LEAST(GREATEST(e.value, th.lo), th.hi)')}
              / CAST(COUNT(*) AS DOUBLE) AS winsorized_mean,
            CAST(SUM(CASE WHEN e.value >= th.lo AND e.value <= th.hi
-                    THEN CAST(floor(e.value * 10000.0 + 0.5)
-                              AS DECIMAL(30,0)) ELSE 0 END) AS DOUBLE)
+                    THEN {o_scaled_int('e.value')} ELSE 0 END) AS DOUBLE)
              / 10000.0
              / CAST(COUNT(CASE WHEN e.value >= th.lo AND e.value <= th.hi
                           THEN 1 END) AS DOUBLE) AS trimmed_mean,
@@ -1493,17 +1489,25 @@ def _customer_revenue(t: dict) -> DataFrame:
     )
 
 
+def _part_revenue(lineitem: DataFrame) -> DataFrame:
+    """(l_partkey, xs): the per-part twin of ``_customer_revenue``."""
+    return lineitem.groupBy("l_partkey").agg(
+        F.sum(scaled_int(_revenue_col())).cast("decimal(38,0)").alias("xs")
+    )
+
+
+# The oracle twins of the two revenue aggregates, as CTE bodies.
+_O_CUSTOMER_REVENUE = f"""SELECT o.o_custkey, SUM({o_scaled_int(_REVENUE)}) AS xs
+      FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+      GROUP BY o.o_custkey"""
+_O_PART_REVENUE = f"""SELECT l_partkey, SUM({o_scaled_int(_REVENUE)}) AS xs
+      FROM lineitem GROUP BY l_partkey"""
+
+
 @query(
     "gini_revenue",
     oracle=f"""
-    WITH rev AS MATERIALIZED (
-      SELECT o.o_custkey,
-             CAST(SUM(CAST(floor(l.l_extendedprice * (1 - l.l_discount)
-                                 * 10000.0 + 0.5) AS DECIMAL(30,0)))
-                  AS DECIMAL(38,0)) AS xs
-      FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-      GROUP BY o.o_custkey
-    ),
+    WITH rev AS MATERIALIZED ({_O_CUSTOMER_REVENUE}),
     ranked AS (
       SELECT xs,
              CAST(ROW_NUMBER() OVER (ORDER BY xs, o_custkey) AS BIGINT) AS rk
@@ -1517,10 +1521,10 @@ def _customer_revenue(t: dict) -> DataFrame:
     )
     SELECT n AS n_customers,
            CAST(s0 AS DOUBLE) / 10000.0 AS total_revenue,
-           floor((2.0 * CAST(s1 AS DOUBLE)
-                  / (CAST(n AS DOUBLE) * CAST(s0 AS DOUBLE))
-                  - (CAST(n AS DOUBLE) + 1.0) / CAST(n AS DOUBLE))
-                 * 1000000.0 + 0.5) / 1000000.0 AS gini
+           {o_fixed('2.0 * CAST(s1 AS DOUBLE)'
+                    ' / (CAST(n AS DOUBLE) * CAST(s0 AS DOUBLE))'
+                    ' - (CAST(n AS DOUBLE) + 1.0) / CAST(n AS DOUBLE)', 6)}
+             AS gini
     FROM s
     """,
 )
@@ -1571,32 +1575,13 @@ def gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH pts AS (
       SELECT p.p_brand,
-             floor(ln(l.l_extendedprice / l.l_quantity) * 1000000.0 + 0.5)
-               / 1000000.0 AS x,
-             floor(ln(l.l_quantity) * 1000000.0 + 0.5) / 1000000.0 AS y
+             {o_fixed('ln(l.l_extendedprice / l.l_quantity)', 6)} AS x,
+             {o_fixed('ln(l.l_quantity)', 6)} AS y
       FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
       WHERE l.l_quantity > 0
-    ),
-    s AS (
-      SELECT p_brand,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             {o_dsum('x', 6)} AS sx,
-             {o_dsum('y', 6)} AS sy,
-             {o_dsum('x * x', 6)} AS sxx,
-             {o_dsum('y * y', 6)} AS syy,
-             {o_dsum('x * y', 6)} AS sxy
-      FROM pts GROUP BY p_brand
     )
-    SELECT p_brand, n,
-           floor(((CAST(n AS DOUBLE) * sxy - sx * sy)
-                  / (CAST(n AS DOUBLE) * sxx - sx * sx)) * 1000000.0 + 0.5)
-             / 1000000.0 AS elasticity,
-           floor(((CAST(n AS DOUBLE) * sxy - sx * sy)
-                  * (CAST(n AS DOUBLE) * sxy - sx * sy)
-                  / ((CAST(n AS DOUBLE) * sxx - sx * sx)
-                     * (CAST(n AS DOUBLE) * syy - sy * sy)))
-                 * 1000000.0 + 0.5) / 1000000.0 AS r2
-    FROM s
+    SELECT p_brand, n, slope AS elasticity, r2
+    FROM ({o_ols_fit('pts', by=('p_brand',))})
     """,
 )
 def price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1642,8 +1627,7 @@ _HHI_SCALE = 12  # fixed-point digits for share^2 terms
     oracle=f"""
     WITH cust_rev AS (
       SELECT c.c_nationkey, o.o_custkey,
-             SUM(CAST(floor(o.o_totalprice * 10000.0 + 0.5)
-                 AS DECIMAL(30,0))) AS rev_dec
+             SUM({o_scaled_int('o.o_totalprice')}) AS rev_dec
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       GROUP BY c.c_nationkey, o.o_custkey
     ),
@@ -1658,9 +1642,7 @@ _HHI_SCALE = 12  # fixed-point digits for share^2 terms
       FROM cust_rev r JOIN nat t ON r.c_nationkey = t.c_nationkey
     )
     SELECT n.n_name AS nation, s.n_customers,
-           CAST(SUM(CAST(floor(s.share * s.share * {10.0 ** _HHI_SCALE} + 0.5)
-                AS DECIMAL(30,0))) AS DOUBLE) / {10.0 ** _HHI_SCALE} * 10000.0
-             AS hhi,
+           {o_dsum('s.share * s.share', _HHI_SCALE)} * 10000.0 AS hhi,
            MAX(s.share) AS top_share
     FROM shares s JOIN nation n ON s.c_nationkey = n.n_nationkey
     GROUP BY n.n_name, s.n_customers
@@ -1725,13 +1707,8 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "abc_classification",
-    oracle="""
-    WITH rev AS (
-      SELECT l_partkey,
-             SUM(CAST(floor(l_extendedprice * (1.0 - l_discount) * 10000.0
-                 + 0.5) AS DECIMAL(30,0))) AS xs
-      FROM lineitem GROUP BY l_partkey
-    ),
+    oracle=f"""
+    WITH rev AS ({_O_PART_REVENUE}),
     tot AS (SELECT SUM(xs) AS tot FROM rev),
     cum AS (
       SELECT l_partkey, xs,
@@ -1771,20 +1748,7 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL-sum mode (distributed; no window over every part in one
     task). The class summary is a 3-key groupBy of map-side
     partials."""
-    t = load_tables(spark, sf_dir, ("lineitem",))
-    rev = (
-        t["lineitem"]
-        .groupBy("l_partkey")
-        .agg(
-            F.sum(
-                scaled_int(
-                    F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-                )
-            )
-            .cast("decimal(38,0)")
-            .alias("xs")
-        )
-    )
+    rev = _part_revenue(load_tables(spark, sf_dir, ("lineitem",))["lineitem"])
     tot = rev.agg(F.sum("xs").cast("decimal(38,0)").alias("tot"))
     cum = (
         ordered_scan(
@@ -1817,14 +1781,8 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lorenz_curve_deciles",
-    oracle="""
-    WITH rev AS (
-      SELECT o.o_custkey,
-             SUM(CAST(floor(l.l_extendedprice * (1 - l.l_discount)
-                 * 10000.0 + 0.5) AS DECIMAL(30,0))) AS xs
-      FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-      GROUP BY o.o_custkey
-    ),
+    oracle=f"""
+    WITH rev AS ({_O_CUSTOMER_REVENUE}),
     tot AS (
       SELECT SUM(xs) AS tot, CAST(COUNT(*) AS BIGINT) AS n FROM rev
     ),
@@ -1993,21 +1951,16 @@ def frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "weighted_median_price",
-    oracle="""
-    WITH w AS (
-      SELECT l_partkey,
-             SUM(CAST(floor(l_extendedprice * (1.0 - l_discount)
-                 * 10000.0 + 0.5) AS DECIMAL(30,0))) AS wt
-      FROM lineitem GROUP BY l_partkey
-    ),
+    oracle=f"""
+    WITH w AS ({_O_PART_REVENUE}),
     pts AS (
-      SELECT p.p_partkey, p.p_retailprice AS price, w.wt
+      SELECT p.p_partkey, p.p_retailprice AS price, w.xs
       FROM w JOIN part p ON p.p_partkey = w.l_partkey
     ),
-    tot AS (SELECT SUM(wt) AS tot, CAST(COUNT(*) AS BIGINT) AS n FROM pts),
+    tot AS (SELECT SUM(xs) AS tot, CAST(COUNT(*) AS BIGINT) AS n FROM pts),
     cum AS (
-      SELECT price, wt,
-             SUM(wt) OVER (ORDER BY price, p_partkey
+      SELECT price, xs,
+             SUM(xs) OVER (ORDER BY price, p_partkey
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw
       FROM pts
     )
@@ -2036,29 +1989,17 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL-sum mode; the crossing filter + single-row MIN aggregate
     replace any global sort."""
     t = load_tables(spark, sf_dir, ("lineitem", "part"))
-    w = (
-        t["lineitem"]
-        .groupBy("l_partkey")
-        .agg(
-            F.sum(
-                scaled_int(
-                    F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-                )
-            )
-            .cast("decimal(38,0)")
-            .alias("wt")
-        )
-    )
+    w = _part_revenue(t["lineitem"])
     pts = w.join(
         t["part"].select("p_partkey", "p_retailprice"),
         w["l_partkey"] == F.col("p_partkey"),
-    ).select("p_partkey", F.col("p_retailprice").alias("price"), "wt")
+    ).select("p_partkey", F.col("p_retailprice").alias("price"), "xs")
     tot = pts.agg(
-        F.sum("wt").cast("decimal(38,0)").alias("tot"),
+        F.sum("xs").cast("decimal(38,0)").alias("tot"),
         F.count("*").cast("long").alias("n"),
     )
     cum = (
-        ordered_scan(pts, ["price", "p_partkey"], value="wt", name="cw")
+        ordered_scan(pts, ["price", "p_partkey"], value="xs", name="cw")
         .crossJoin(F.broadcast(tot))
         .select("price", "n", "tot", "cw")
     )

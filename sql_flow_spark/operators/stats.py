@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from sql_flow_spark.functions.dedup import ws_tokens
 from sql_flow_spark.functions.mat import materialize_once
-from sql_flow_spark.registry import davg, dsum, fixed, o_dsum, query
+from sql_flow_spark.registry import davg, dsum, fixed, o_dsum, o_fixed, query
 from sql_flow_spark.tables import load_tables
 
 # Shared first-half/second-half split for the two-sample tests
@@ -233,7 +233,7 @@ def chi2_hour_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "js_divergence_sources",
-    oracle="""
+    oracle=f"""
     WITH terms AS (
       SELECT source,
              unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS term
@@ -263,18 +263,14 @@ def chi2_hour_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     t AS (
       SELECT source, ts, tr,
              CASE WHEN p > 0 THEN
-               p * (floor(ln(2.0 * p / (p + q)) * 1000000.0 + 0.5)
-                    / 1000000.0) ELSE 0.0 END
+               p * ({o_fixed('ln(2.0 * p / (p + q))', 6)}) ELSE 0.0 END
              + CASE WHEN q > 0 THEN
-               q * (floor(ln(2.0 * q / (p + q)) * 1000000.0 + 0.5)
-                    / 1000000.0) ELSE 0.0 END
+               q * ({o_fixed('ln(2.0 * q / (p + q))', 6)}) ELSE 0.0 END
              AS term_jsd
       FROM pq
     )
     SELECT source, MIN(ts) AS source_tokens,
-           CAST(SUM(CAST(floor(term_jsd * 1000000000000.0 + 0.5)
-                         AS DECIMAL(30,0))) AS DOUBLE)
-             / 1000000000000.0 / 2.0 AS jsd
+           {o_dsum('term_jsd', 12)} / 2.0 AS jsd
     FROM t GROUP BY source
     """,
 )
@@ -358,18 +354,14 @@ _EWMA_ALPHA = 0.3
     ),
     pairs AS (
       SELECT t.event_type, t.day_idx, t.daily_avg,
-             floor(pow({1.0 - _EWMA_ALPHA}, t.day_idx - i.day_idx)
-                   * 1000000000.0 + 0.5) / 1000000000.0 AS w,
+             {o_fixed(f'pow({1.0 - _EWMA_ALPHA}, t.day_idx - i.day_idx)', 9)}
+               AS w,
              i.daily_avg AS x
       FROM daily t JOIN daily i
         ON i.event_type = t.event_type AND i.day_idx <= t.day_idx
     )
     SELECT event_type, day_idx, MIN(daily_avg) AS daily_avg,
-           (CAST(SUM(CAST(floor(w * x * 1000000.0 + 0.5)
-                          AS DECIMAL(30,0))) AS DOUBLE) / 1000000.0)
-           / (CAST(SUM(CAST(floor(w * 1000000000.0 + 0.5)
-                            AS DECIMAL(30,0))) AS DOUBLE) / 1000000000.0)
-           AS ewma
+           ({o_dsum('w * x', 6)}) / ({o_dsum('w', 9)}) AS ewma
     FROM pairs GROUP BY event_type, day_idx
     """,
 )

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sql_flow_spark.functions.mat import materialize_once
-from sql_flow_spark.registry import dsum, o_dsum, query
+from sql_flow_spark.registry import dsum, o_dsum, o_fixed, query
 from sql_flow_spark.tables import load_tables
 
 # 30-minute attribution window, in microseconds.
@@ -369,8 +369,7 @@ MOVING_AVG_ROWS = 4  # current row + 3 preceding
     "events_moving_avg",
     oracle=f"""
     SELECT event_id, event_type, value,
-      CAST(SUM(CAST(floor(value * 10000.0 + 0.5) AS DECIMAL(38,0)))
-             OVER w AS DOUBLE) / 10000.0
+      {o_dsum('value', over='w')}
         / CAST(COUNT(*) OVER w AS DOUBLE) AS moving_avg
     FROM events
     WINDOW w AS (
@@ -421,9 +420,8 @@ _TREND_HALF = 3  # 7-day centered moving-average trend window
              CAST((day_idx + 4) % 7 AS BIGINT) AS dow,
              daily_total,
              CASE WHEN COUNT(*) OVER w = {2 * _TREND_HALF + 1} THEN
-               CAST(SUM(CAST(floor(daily_total * 10000.0 + 0.5)
-                             AS DECIMAL(30,0))) OVER w AS DOUBLE)
-                 / 10000.0 / {float(2 * _TREND_HALF + 1)}
+               {o_dsum('daily_total', over='w')}
+                 / {float(2 * _TREND_HALF + 1)}
              END AS trend
       FROM daily
       WINDOW w AS (PARTITION BY event_type ORDER BY day_idx
@@ -521,12 +519,11 @@ _HOLT_OUT = 1_000_000.0  # 6dp output rounding
 
 @query(
     "holt_linear_forecast",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE months AS (
       SELECT (EXTRACT(year FROM o_orderdate) - 1970) * 12
                + EXTRACT(month FROM o_orderdate) - 1 AS m,
-             CAST(SUM(CAST(floor(o_totalprice * 10000.0 + 0.5)
-                  AS DECIMAL(30,0))) AS DOUBLE) / 10000.0 AS y
+             {o_dsum('o_totalprice')} AS y
       FROM orders GROUP BY 1
     ),
     idx AS (SELECT m, y, ROW_NUMBER() OVER (ORDER BY m) AS i FROM months),
@@ -542,9 +539,9 @@ _HOLT_OUT = 1_000_000.0  # 6dp output rounding
       FROM rec JOIN idx ON idx.i = rec.i + 1
     )
     SELECT m AS month_idx, y,
-           floor(l * 1000000.0 + 0.5) / 1000000.0 AS level,
-           floor(b * 1000000.0 + 0.5) / 1000000.0 AS trend,
-           floor((l + b) * 1000000.0 + 0.5) / 1000000.0 AS forecast_next
+           {o_fixed('l', 6)} AS level,
+           {o_fixed('b', 6)} AS trend,
+           {o_fixed('l + b', 6)} AS forecast_next
     FROM rec
     """,
 )

@@ -25,7 +25,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_flow_spark.registry import davg, dsum, o_davg, o_dsum, query, scaled_int
+from sql_flow_spark.registry import (
+    davg,
+    dsum,
+    o_davg,
+    o_dsum,
+    o_scaled_int,
+    query,
+    scaled_int,
+)
 from sql_flow_spark.tables import load_tables
 
 _REVENUE = "l_extendedprice * (1 - l_discount)"
@@ -444,11 +452,10 @@ def q19_flexible_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q22_idle_customers",
-    oracle="""
+    oracle=f"""
     SELECT n_name,
            COUNT(*) AS numcust,
-           CAST(SUM(CAST(floor(c_acctbal * 10000.0 + 0.5) AS DECIMAL(30,0)))
-                AS DOUBLE) / 10000.0 AS totacctbal
+           {o_dsum('c_acctbal')} AS totacctbal
     FROM customer
     JOIN nation ON c_nationkey = n_nationkey
     WHERE c_acctbal > (
@@ -707,8 +714,7 @@ _Q11_MULTIPLE = 2  # part passes when value > 2x the mean part value
     oracle=f"""
     WITH v AS (
       SELECT l_partkey,
-        SUM(CAST(floor(l_extendedprice * l_quantity * 10000.0 + 0.5)
-                 AS DECIMAL(30,0))) AS vs
+        SUM({o_scaled_int('l_extendedprice * l_quantity')}) AS vs
       FROM lineitem
       JOIN supplier ON s_suppkey = l_suppkey
       JOIN nation ON n_nationkey = s_nationkey
@@ -784,10 +790,8 @@ _Q16_SIZES = (1, 4, 9, 14, 19, 23, 36, 45)
       AND p_size IN {str(_Q16_SIZES)}
       AND l_suppkey NOT IN (
         SELECT s_suppkey FROM supplier
-        WHERE CAST(floor(s_acctbal * 10000.0 + 0.5) AS DECIMAL(30,0))
-              * (SELECT COUNT(*) FROM supplier)
-            < (SELECT SUM(CAST(floor(s_acctbal * 10000.0 + 0.5)
-                               AS DECIMAL(30,0))) FROM supplier)
+        WHERE {o_scaled_int('s_acctbal')} * (SELECT COUNT(*) FROM supplier)
+            < (SELECT SUM({o_scaled_int('s_acctbal')}) FROM supplier)
       )
     GROUP BY p_brand, p_type, p_size
     """,
@@ -844,7 +848,7 @@ _Q20_YEAR = 1997
     oracle=f"""
     WITH shipped AS (
       SELECT l_partkey, l_suppkey,
-        SUM(CAST(floor(l_quantity * 10000.0 + 0.5) AS DECIMAL(30,0))) AS sq
+        SUM({o_scaled_int('l_quantity')}) AS sq
       FROM lineitem
       JOIN part ON p_partkey = l_partkey
       WHERE p_name LIKE '%widget%'

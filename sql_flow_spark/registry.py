@@ -11,9 +11,10 @@ are written to be *bit-identical* to their oracle:
   is that lattice integer as DECIMAL(30,0), the one accumulator type;
   ``dsum``/``davg`` sum it exactly (order-insensitive regardless of
   partitioning) and divide once in DOUBLE; ``fixed`` rounds a score to
-  s decimals, floor(x*10^s + 0.5) / 10^s as DOUBLE. Spark-side code
-  uses these helpers rather than writing the rule out (the oracle SQL
-  spells it out; ``o_dsum`` is its twin);
+  s decimals, floor(x*10^s + 0.5) / 10^s as DOUBLE; ``ols_fit`` is
+  the least-squares line on ``dsum`` moments. Neither engine's code
+  writes the rule out: the oracle SQL renders it through the DuckDB
+  twins ``o_scaled_int`` / ``o_dsum`` / ``o_fixed`` / ``o_ols_fit``;
 - time buckets are emitted as formatted strings (the reference does the
   same for window output — dev/config/examples/tumbling.window.yml uses
   strftime on the bucket) to sidestep tz-awareness differences between
@@ -78,8 +79,8 @@ def dsum(
 
 def fixed(col: Column | str, scale: int) -> Column:
     """Round to ``scale`` decimals on the same lattice, as DOUBLE:
-    floor(x*10^s + 0.5) / 10^s; the oracle writes the same expression
-    out. Masks derived scores (ratios, logs, z-scores) at the output."""
+    floor(x*10^s + 0.5) / 10^s; ``o_fixed`` is its DuckDB twin. Masks
+    derived scores (ratios, logs, z-scores) at the output."""
     return _lattice(col, scale) / F.lit(float(10**scale))
 
 
@@ -119,12 +120,47 @@ def ols_fit(df: DataFrame, by: tuple = (), scale: int = 6) -> DataFrame:
     )
 
 
-# DuckDB-side equivalents for use inside oracle SQL strings.
-def o_dsum(expr: str, scale: int = 4) -> str:
+# DuckDB twins of the helpers above, rendered into oracle SQL strings.
+def o_scaled_int(expr: str, scale: int = 4) -> str:
+    """``scaled_int``: the lattice integer as DECIMAL(30,0)."""
+    return f"CAST(floor(({expr}) * {float(10**scale)} + 0.5) AS DECIMAL(30,0))"
+
+
+def o_dsum(expr: str, scale: int = 4, over: str | None = None) -> str:
+    """``dsum``; with ``over`` (a window name or ``(...)`` spec), the
+    same sum as a window aggregate."""
+    s = f"SUM({o_scaled_int(expr, scale)})"
+    if over is not None:
+        s = f"{s} OVER {over}"
+    return f"CAST({s} AS DOUBLE) / {float(10**scale)}"
+
+
+def o_fixed(expr: str, scale: int) -> str:
+    """``fixed``: round to ``scale`` decimals on the lattice."""
     m = float(10**scale)
+    return f"floor(({expr}) * {m} + 0.5) / {m}"
+
+
+def o_ols_fit(points: str, by: tuple = (), scale: int = 6) -> str:
+    """``ols_fit`` as a SELECT over relation ``points`` (columns ``x``
+    and ``y``): ``by``…, ``n``, ``slope``, ``intercept``, ``r2``."""
+    keys = "".join(f"{b}, " for b in by)
+    group = f" GROUP BY {', '.join(by)}" if by else ""
+    nd = "CAST(n AS DOUBLE)"
+    cov = f"({nd} * sxy - sx * sy)"
+    varx = f"({nd} * sxx - sx * sx)"
+    vary = f"({nd} * syy - sy * sy)"
+    slope = f"{cov} / {varx}"
+    sums = ", ".join(
+        f"{o_dsum(e, scale)} AS s{e.replace(' * ', '')}"
+        for e in ("x", "y", "x * x", "y * y", "x * y")
+    )
     return (
-        f"CAST(SUM(CAST(floor(({expr}) * {m} + 0.5) AS DECIMAL(30,0))) AS DOUBLE)"
-        f" / {m}"
+        f"SELECT {keys}n, {o_fixed(slope, scale)} AS slope,"
+        f" {o_fixed(f'(sy - ({slope}) * sx) / {nd}', scale)} AS intercept,"
+        f" {o_fixed(f'{cov} * {cov} / ({varx} * {vary})', scale)} AS r2"
+        f" FROM (SELECT {keys}CAST(COUNT(*) AS BIGINT) AS n, {sums}"
+        f" FROM {points}{group})"
     )
 
 

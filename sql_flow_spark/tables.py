@@ -1,10 +1,10 @@
 """Test-data table loading.
 
 The driver's synthetic TPC-H-ish tables (TESTDATA.md) are one parquet
-file per table. ``load_tables`` reads them lazily and registers temp
-views so operators can be written either via the DataFrame API or
-``spark.sql``; column pruning and predicate pushdown then happen
-per-query via Catalyst.
+file per table. ``load_tables`` reads them lazily and returns DataFrames
+(no temp views: a caller that runs ``spark.sql`` over the tables, like
+``cli sql``, registers its own); column pruning and predicate pushdown
+then happen per-query via Catalyst.
 
 Source metadata comes from one footer record per table
 (``TableFooter``): ``part_files`` lists the part files once, sorted,
@@ -197,7 +197,6 @@ def load_tables(
     spark: SparkSession,
     sf_dir: str,
     names: tuple[str, ...] = TABLE_NAMES,
-    register_views: bool = True,
     spread: bool = True,
 ) -> dict[str, DataFrame]:
     """Load parquet tables from ``sf_dir`` and return {name: DataFrame}.
@@ -285,7 +284,5 @@ def load_tables(
                 # unigram_logprob 1.14 -> 0.77 s, rrf_fusion
                 # 2.10 -> 1.59 s, kmeans 3.86 -> 3.31 s.
                 df = df.repartition(par, F.col(schema.names[0]))
-        if register_views:
-            df.createOrReplaceTempView(name)
         out[name] = df
     return out

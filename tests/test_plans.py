@@ -219,9 +219,7 @@ def test_ivf_trainer_plan_has_no_exchange(spark, sf_dir):
     from sql_flow_spark.functions.similarity import _IVF_TRAIN_SAMPLE
     from sql_flow_spark.tables import load_tables
 
-    e = load_tables(spark, sf_dir, ("embeddings",), register_views=False)[
-        "embeddings"
-    ]
+    e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     sample_df = (
         e.select("vec_id", "embedding")
         .orderBy(F.xxhash64(F.col("vec_id")), "vec_id")

@@ -4,6 +4,7 @@ core (the engine's central correctness trick)."""
 
 import ast
 import math
+import re
 from collections import Counter
 from decimal import Decimal
 from pathlib import Path
@@ -73,12 +74,16 @@ def _fixed_point_values(scale):
 
 @pytest.mark.parametrize(
     "helper,scale",
-    [("dsum", 4)] + [(h, s) for h in ("fixed", "scaled_int") for s in (4, 6, 8, 12)],
+    [("dsum", 4), ("dsum_over", 4), ("ols_fit", 6)]
+    + [(h, s) for h in ("fixed", "scaled_int") for s in (4, 6, 8, 12)],
 )
 def test_fixed_point_sum_matches_engines(spark, helper, scale):
     """The determinism contract itself: every registry fixed-point
-    helper equals its DuckDB spelling bit for bit (and the python
-    reference), on adversarial values."""
+    helper equals its DuckDB twin (``o_*``) bit for bit (and the
+    python reference), on adversarial values."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
     from sql_flow_spark import registry
 
     vals = _fixed_point_values(scale)
@@ -95,12 +100,47 @@ def test_fixed_point_sum_matches_engines(spark, helper, scale):
         assert got_spark == got_duck == pytest.approx(got_py, abs=0)
         return
 
+    if helper == "dsum_over":  # running sum per group
+        w = Window.partitionBy(F.col("i") % 7).orderBy("i").rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        s = registry.dsum("v", scale, over=w)
+        got_spark = [r.x for r in sdf.select("i", s.alias("x")).orderBy("i").collect()]
+        over = "(PARTITION BY i % 7 ORDER BY i ROWS UNBOUNDED PRECEDING)"
+        sql = f"SELECT {registry.o_dsum('v', scale, over=over)} FROM t ORDER BY i"
+        got_duck = [r[0] for r in con.execute(sql).fetchall()]
+        assert [x.hex() for x in got_spark] == [x.hex() for x in got_duck]
+        assert got_spark[-1] == _fixed_point_sum(vals[len(vals) - 1 :: -7], scale)
+        return
+
+    if helper == "ols_fit":
+        rng = np.random.RandomState(11)
+        pts = pd.DataFrame({
+            "g": rng.randint(0, 5, 2000),
+            "x": rng.uniform(-50, 50, 2000),
+            "y": rng.uniform(-50, 50, 2000),
+        })
+        pts["y"] += 0.5 * pts["x"] * pts["g"]
+        con.register("pts", pts)
+        got_spark = [
+            tuple(r)
+            for r in registry.ols_fit(spark.createDataFrame(pts), by=("g",))
+            .orderBy("g")
+            .collect()
+        ]
+        sql = f"SELECT * FROM ({registry.o_ols_fit('pts', by=('g',))}) ORDER BY g"
+        rel = con.sql(sql)
+        assert rel.columns == ["g", "n", "slope", "intercept", "r2"]
+        got_duck = rel.fetchall()
+        assert len(got_spark) == 5
+        assert [(g, n) + tuple(x.hex() for x in r) for g, n, *r in got_spark] == [
+            (g, n) + tuple(x.hex() for x in r) for g, n, *r in got_duck
+        ]
+        return
+
     col = getattr(registry, helper)("v", scale)
     got_spark = [r.x for r in sdf.orderBy("i").select(col.alias("x")).collect()]
-    lattice = f"floor(v * {m} + 0.5)"
-    expr = f"{lattice} / {m}" if helper == "fixed" else (
-        f"CAST({lattice} AS DECIMAL(30,0))"
-    )
+    expr = getattr(registry, f"o_{helper}")("v", scale)
     got_duck = [r[0] for r in con.execute(f"SELECT {expr} FROM t ORDER BY i").fetchall()]
     if helper == "fixed":
         assert [x.hex() for x in got_spark] == [x.hex() for x in got_duck]
@@ -156,14 +196,16 @@ def _is_call(node, name, on=None):
 
 def _sites(path, match):
     """(function, line) of every node in one module for which
-    ``match(node)`` holds; function is the innermost enclosing def."""
+    ``match(node)`` holds, once per count when it returns an int;
+    function is the innermost enclosing def."""
     sites = []
 
     def visit(node, fn):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             fn = node.name
-        if match(node):
-            sites.append((fn, node.lineno))
+        n = int(match(node))
+        if n:
+            sites.extend([(fn, node.lineno)] * n)
         for child in ast.iter_child_nodes(node):
             visit(child, fn)
 
@@ -195,10 +237,25 @@ def _is_fixed_point(node):
     )
 
 
+_SQL_SUM = re.compile(r"SUM\(\s*CAST\(\s*floor\(", re.IGNORECASE)
+
+
+def _sql_sums(node):
+    """Hand-written fixed-point sums, SUM(CAST(floor(..., in a string
+    literal or an f-string's constant part (the line is where the
+    literal starts); oracle SQL renders them with registry.o_dsum /
+    o_scaled_int."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return len(_SQL_SUM.findall(node.value))
+    return 0
+
+
 def test_fixed_point_idiom_lives_in_registry():
     """The fixed-point rule has one home: a new hand-rolled
-    floor(x*10^s + 0.5) in a builder fails here; use
-    registry.scaled_int / dsum / fixed, or allowlist it with a reason."""
+    floor(x*10^s + 0.5) in a builder, or SUM(CAST(floor(... in oracle
+    SQL, fails here; use registry.scaled_int / dsum / fixed (their
+    DuckDB twins o_scaled_int / o_dsum / o_fixed in SQL strings), or
+    allowlist it with a reason."""
     import sql_flow_spark
 
     root = Path(sql_flow_spark.__file__).parent
@@ -210,6 +267,7 @@ def test_fixed_point_idiom_lives_in_registry():
         for fn, line in _sites(path, _is_fixed_point):
             if (rel, fn) not in _FIXED_POINT_ALLOWLIST:
                 stray.append(f"{rel}:{line} in {fn}")
+        stray += [f"{rel}:{line} in {fn} (SQL sum)" for fn, line in _sites(path, _sql_sums)]
     assert not stray, "use registry.scaled_int / dsum / fixed:\n" + "\n".join(stray)
     for rel, fn in _FIXED_POINT_ALLOWLIST:  # no stale entries
         tree = ast.parse((root / rel).read_text())

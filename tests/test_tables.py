@@ -34,7 +34,7 @@ def _write_embeddings(path, n, dim, row_group_size=None, labels=False):
 
 
 def _vector_md(spark, sf_dir):
-    df = load_tables(spark, sf_dir, ("embeddings",), register_views=False)
+    df = load_tables(spark, sf_dir, ("embeddings",))
     return df["embeddings"].schema["embedding"].metadata
 
 
@@ -53,8 +53,7 @@ def test_in_place_rewrite_refreshes_metadata(spark, tmp_path):
     st = os.stat(table)
     _write_embeddings(part, 20, 8, labels=True)
     os.utime(table, ns=(st.st_atime_ns, st.st_mtime_ns))
-    df = load_tables(spark, str(tmp_path), ("embeddings",),
-                     register_views=False)["embeddings"]
+    df = load_tables(spark, str(tmp_path), ("embeddings",))["embeddings"]
     assert df.schema["embedding"].metadata == {"dim": 8, "nrows": 20}
     assert "label" in df.columns
     got = {(r.vec_id, r.label) for r in df.select("vec_id", "label").collect()}
@@ -80,9 +79,9 @@ def test_stored_schema_matches_inferred(spark, sf_dir, name):
     inferred load: names, types, nullability and field metadata."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     tables._FOOTERS.pop(path, None)
-    cold = load_tables(spark, sf_dir, (name,), register_views=False)[name]
+    cold = load_tables(spark, sf_dir, (name,))[name]
     assert tables._FOOTERS[path].schema is not None
-    warm = load_tables(spark, sf_dir, (name,), register_views=False)[name]
+    warm = load_tables(spark, sf_dir, (name,))[name]
     assert warm.schema.jsonValue() == cold.schema.jsonValue()
     if name == "events":
         assert warm.schema["ts"].dataType == TimestampType()
@@ -94,8 +93,7 @@ def test_missing_table_keeps_spark_error(spark, tmp_path):
     """A missing table raises Spark's own PATH_NOT_FOUND and leaves no
     record behind."""
     with pytest.raises(AnalysisException) as err:
-        load_tables(spark, str(tmp_path), ("embeddings",),
-                    register_views=False)
+        load_tables(spark, str(tmp_path), ("embeddings",))
     assert err.value.getCondition() == "PATH_NOT_FOUND"
     assert str(tmp_path / "embeddings.parquet") not in tables._FOOTERS
 
@@ -109,8 +107,7 @@ def test_nested_parts_keep_inferred_read(spark, tmp_path, job_ids):
     _write_embeddings(table / "k=1" / "part-0.parquet", 4, 2)
     for _ in range(2):
         with job_ids() as ids:
-            df = load_tables(spark, str(tmp_path), ("embeddings",),
-                             register_views=False)["embeddings"]
+            df = load_tables(spark, str(tmp_path), ("embeddings",))["embeddings"]
         assert ids
     assert df.columns == ["vec_id", "embedding", "k"]
     assert tables._FOOTERS[str(table)].schema is None
@@ -157,7 +154,6 @@ def test_packed_row_groups_get_spread_exchange(spark, tmp_path):
     row-group count alone is above the parallelism."""
     _write_layout(tmp_path / "embeddings.parquet", "row_groups",
                   spark.sparkContext.defaultParallelism)
-    df = load_tables(spark, str(tmp_path), ("embeddings",),
-                     register_views=False)["embeddings"]
+    df = load_tables(spark, str(tmp_path), ("embeddings",))["embeddings"]
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning(vec_id" in plan
